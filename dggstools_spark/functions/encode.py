@@ -126,23 +126,3 @@ def tile_key_expr(cellkey_col: str, res: int, tile_res: int,
     tile = (face * mt + F.expr(f"(({cellkey_col} div {m}) % {m}) div {d}")) * mt \
         + F.expr(f"({cellkey_col} % {m}) div {d}")
     return F.when(c >= 0, tile).otherwise(F.lit(-1).cast("long"))
-
-
-def kernel_encode(df, res: int, lon: str = "lon", lat: str = "lat",
-                  cfg: RHEALPixConfig = DEFAULT_CONFIG):
-    """``encode_sql.spark_encode``-shaped cellid encode via the
-    numpy-kernel Arrow UDF: adds ``cellid`` at ``res``, keeping every
-    input column.
-
-    WARNING — NOT oracle-parity-safe (r7 measured finding): the kernel
-    and the shared expression/DuckDB formula diverge on points lying
-    EXACTLY on a cell boundary (sf0.1 events event_id 51277,
-    lon = 40.0 exactly: kernel 'Q140…' vs formula 'Q132…' at res ≥ 2).
-    An r7 swap of ~35 oracle-checked query paths onto this helper
-    measured ~2x faster per encode but flipped six events-encode
-    hashes at sf0.1 and was fully reverted; the adversarial parity
-    test (tests/test_adversarial_encode.py) jitters ±EPS around
-    corners and cannot catch exact-boundary inputs.  Use only where
-    the UDF path is the declared contract (cell_counts, flagship) or
-    no oracle hash is at stake."""
-    return df.withColumn("cellid", cellid_from_lonlat_udf(res, cfg)(lon, lat))

@@ -17,14 +17,10 @@ All three pure built-in SQL with bit-exact DuckDB oracles.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES10: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES10: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -80,8 +76,7 @@ def _oracle_html_extract() -> str:
     """
 
 
-QUERIES10["html_extract"] = q_html_extract
-ORACLES10["html_extract"] = _oracle_html_extract()
+register("html_extract", q_html_extract, _oracle_html_extract())
 
 
 # --------------------------------------------------------------------------
@@ -104,8 +99,7 @@ def _oracle_vocab_topk() -> str:
     return vocab_topk_sql("documents", "text", v=VOCAB_V)
 
 
-QUERIES10["vocab_topk"] = q_vocab_topk
-ORACLES10["vocab_topk"] = _oracle_vocab_topk()
+register("vocab_topk", q_vocab_topk, _oracle_vocab_topk())
 
 
 # --------------------------------------------------------------------------
@@ -131,5 +125,4 @@ def _oracle_epoch_shuffle() -> str:
                                    n_shards=EPOCH_SHARDS)
 
 
-QUERIES10["epoch_shuffle"] = q_epoch_shuffle
-ORACLES10["epoch_shuffle"] = _oracle_epoch_shuffle()
+register("epoch_shuffle", q_epoch_shuffle, _oracle_epoch_shuffle())

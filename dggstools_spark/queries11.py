@@ -15,14 +15,10 @@ and quantized distances — CLAUDE.md constraint 13).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES11: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES11: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -43,8 +39,7 @@ def _oracle_lm_score() -> str:
     return lm_score_sql("documents", "text", "doc_id")
 
 
-QUERIES11["lm_score"] = q_lm_score
-ORACLES11["lm_score"] = _oracle_lm_score()
+register("lm_score", q_lm_score, _oracle_lm_score())
 
 
 def q_lm_score_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,8 +56,7 @@ def q_lm_score_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                     model_path=tempfile.mkdtemp(prefix="dggs_lm_model_"))
 
 
-QUERIES11["lm_score_sink"] = q_lm_score_sink
-ORACLES11["lm_score_sink"] = _oracle_lm_score()
+register("lm_score_sink", q_lm_score_sink, _oracle_lm_score())
 
 
 # --------------------------------------------------------------------------
@@ -88,8 +82,7 @@ def _oracle_dsir_select() -> str:
                            target_sql="lang = 'en'", k=DSIR_K)
 
 
-QUERIES11["dsir_select"] = q_dsir_select
-ORACLES11["dsir_select"] = _oracle_dsir_select()
+register("dsir_select", q_dsir_select, _oracle_dsir_select())
 
 
 # --------------------------------------------------------------------------
@@ -114,5 +107,4 @@ def _oracle_pq_topk() -> str:
     return pq_topk_sql("embeddings", PQ_TOPK_K, "vec_id % 50 = 0")
 
 
-QUERIES11["pq_topk"] = q_pq_topk
-ORACLES11["pq_topk"] = _oracle_pq_topk()
+register("pq_topk", q_pq_topk, _oracle_pq_topk())

@@ -13,15 +13,11 @@ two-stage retrieval + embedding cluster resolution —
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import EMB_DIM, EP_PLANES, EP_THRESHOLD, load
 from .queries6 import BM_TERMS
-
-QUERIES12: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES12: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -44,8 +40,7 @@ def _oracle_oov_rate() -> str:
     return oov_rate_sql("documents", "text", "doc_id", v=OOV_V)
 
 
-QUERIES12["oov_rate"] = q_oov_rate
-ORACLES12["oov_rate"] = _oracle_oov_rate()
+register("oov_rate", q_oov_rate, _oracle_oov_rate())
 
 
 # --------------------------------------------------------------------------
@@ -75,8 +70,7 @@ def _oracle_hybrid_rerank() -> str:
                              "vec_id = 0", HY_RECALL, HY_K)
 
 
-QUERIES12["hybrid_rerank"] = q_hybrid_rerank
-ORACLES12["hybrid_rerank"] = _oracle_hybrid_rerank()
+register("hybrid_rerank", q_hybrid_rerank, _oracle_hybrid_rerank())
 
 
 # --------------------------------------------------------------------------
@@ -114,5 +108,4 @@ def _oracle_embed_clusters() -> str:
     """
 
 
-QUERIES12["embed_clusters"] = q_embed_clusters
-ORACLES12["embed_clusters"] = _oracle_embed_clusters()
+register("embed_clusters", q_embed_clusters, _oracle_embed_clusters())

@@ -11,14 +11,10 @@
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .queries3 import load
-
-QUERIES13: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES13: "dict[str, str]" = {}
+from .registry import register
 
 
 def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,8 +30,7 @@ def _oracle_mixture_plan() -> str:
     return mixture_plan_sql("documents", "text", "source")
 
 
-QUERIES13["mixture_plan"] = q_mixture_plan
-ORACLES13["mixture_plan"] = _oracle_mixture_plan()
+register("mixture_plan", q_mixture_plan, _oracle_mixture_plan())
 
 
 # The synthetic corpus is already lowercase-alnum, so the query plants
@@ -64,8 +59,7 @@ def _oracle_text_normalize() -> str:
         f"(SELECT doc_id, {aug} AS text FROM documents)", "text", "doc_id")
 
 
-QUERIES13["text_normalize"] = q_text_normalize
-ORACLES13["text_normalize"] = _oracle_text_normalize()
+register("text_normalize", q_text_normalize, _oracle_text_normalize())
 
 
 def q_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,5 +75,4 @@ def _oracle_dup_profile() -> str:
     return dup_profile_sql("documents", "text", "source")
 
 
-QUERIES13["dup_profile"] = q_dup_profile
-ORACLES13["dup_profile"] = _oracle_dup_profile()
+register("dup_profile", q_dup_profile, _oracle_dup_profile())

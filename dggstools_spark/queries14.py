@@ -14,16 +14,12 @@
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import queries5
 from .functions import text as T
 from .queries3 import load
-
-QUERIES14: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES14: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -46,8 +42,7 @@ def _oracle_novelty_score() -> str:
     return novelty_score_sql("documents", "text", "doc_id", n=NOV_N)
 
 
-QUERIES14["novelty_score"] = q_novelty_score
-ORACLES14["novelty_score"] = _oracle_novelty_score()
+register("novelty_score", q_novelty_score, _oracle_novelty_score())
 
 
 # --------------------------------------------------------------------------
@@ -83,8 +78,7 @@ def _oracle_lang_confusion() -> str:
     """
 
 
-QUERIES14["lang_confusion"] = q_lang_confusion
-ORACLES14["lang_confusion"] = _oracle_lang_confusion()
+register("lang_confusion", q_lang_confusion, _oracle_lang_confusion())
 
 
 # --------------------------------------------------------------------------
@@ -125,5 +119,4 @@ def _oracle_cluster_keep() -> str:
                             T.quality_q20_duckdb("text"))
 
 
-QUERIES14["cluster_keep"] = q_cluster_keep
-ORACLES14["cluster_keep"] = _oracle_cluster_keep()
+register("cluster_keep", q_cluster_keep, _oracle_cluster_keep())

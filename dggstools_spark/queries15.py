@@ -10,14 +10,10 @@
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES15: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES15: "dict[str, str]" = {}
+from .registry import register
 
 
 def q_len_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,8 +29,7 @@ def _oracle_len_histogram() -> str:
     return len_histogram_sql("documents", "text")
 
 
-QUERIES15["len_histogram"] = q_len_histogram
-ORACLES15["len_histogram"] = _oracle_len_histogram()
+register("len_histogram", q_len_histogram, _oracle_len_histogram())
 
 
 # --------------------------------------------------------------------------
@@ -71,8 +66,7 @@ def _oracle_corpus_diff() -> str:
     return corpus_diff_sql("documents", b, "text", "doc_id")
 
 
-QUERIES15["corpus_diff"] = q_corpus_diff
-ORACLES15["corpus_diff"] = _oracle_corpus_diff()
+register("corpus_diff", q_corpus_diff, _oracle_corpus_diff())
 
 
 def q_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,5 +82,4 @@ def _oracle_fertility() -> str:
     return fertility_sql("documents", "text", "lang")
 
 
-QUERIES15["fertility"] = q_fertility
-ORACLES15["fertility"] = _oracle_fertility()
+register("fertility", q_fertility, _oracle_fertility())

@@ -15,16 +15,12 @@ offset explode + one hash equi-join on (face, row, col).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import encode_sql
 from .queries3 import CELL_RES, load
+from .registry import register
 from .sources import synth
-
-QUERIES16: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES16: "dict[str, str]" = {}
 
 
 def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,8 +55,7 @@ def _oracle_focal_mean() -> str:
     return focal_mean_sql(_cells_sql(), CELL_RES)
 
 
-QUERIES16["focal_mean"] = q_focal_mean
-ORACLES16["focal_mean"] = _oracle_focal_mean()
+register("focal_mean", q_focal_mean, _oracle_focal_mean())
 
 
 def q_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,8 +70,7 @@ def _oracle_morans_i() -> str:
     return morans_i_sql(_cells_sql(), CELL_RES)
 
 
-QUERIES16["morans_i"] = q_morans_i
-ORACLES16["morans_i"] = _oracle_morans_i()
+register("morans_i", q_morans_i, _oracle_morans_i())
 
 
 # --------------------------------------------------------------------------
@@ -118,8 +112,7 @@ def _oracle_focal_xface() -> str:
     return focal_mean_sql(_cells_xf_sql(), XF_RES, cross_face=True)
 
 
-QUERIES16["focal_xface"] = q_focal_xface
-ORACLES16["focal_xface"] = _oracle_focal_xface()
+register("focal_xface", q_focal_xface, _oracle_focal_xface())
 
 
 def q_morans_xface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,8 +127,7 @@ def _oracle_morans_xface() -> str:
     return morans_i_sql(_cells_xf_sql(), XF_RES, cross_face=True)
 
 
-QUERIES16["morans_xface"] = q_morans_xface
-ORACLES16["morans_xface"] = _oracle_morans_xface()
+register("morans_xface", q_morans_xface, _oracle_morans_xface())
 
 
 HOT_XF_K = 25
@@ -154,8 +146,7 @@ def _oracle_hotspots_xface() -> str:
     return hotspots_sql(_cells_xf_sql(), XF_RES, HOT_XF_K, cross_face=True)
 
 
-QUERIES16["hotspots_xface"] = q_hotspots_xface
-ORACLES16["hotspots_xface"] = _oracle_hotspots_xface()
+register("hotspots_xface", q_hotspots_xface, _oracle_hotspots_xface())
 
 
 def q_lisa_xface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,5 +163,4 @@ def _oracle_lisa_xface() -> str:
                            cross_face=True)
 
 
-QUERIES16["lisa_xface"] = q_lisa_xface
-ORACLES16["lisa_xface"] = _oracle_lisa_xface()
+register("lisa_xface", q_lisa_xface, _oracle_lisa_xface())

@@ -12,15 +12,11 @@ native session-window streaming.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import CELL_RES, load
 from .queries16 import _cells, _cells_sql
-
-QUERIES17: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES17: "dict[str, str]" = {}
+from .registry import register
 
 HOT_K = 25
 
@@ -37,8 +33,7 @@ def _oracle_hotspots() -> str:
     return hotspots_sql(_cells_sql(), CELL_RES, HOT_K)
 
 
-QUERIES17["hotspots"] = q_hotspots
-ORACLES17["hotspots"] = _oracle_hotspots()
+register("hotspots", q_hotspots, _oracle_hotspots())
 
 
 # --------------------------------------------------------------------------
@@ -119,8 +114,7 @@ def _oracle_stream_sessions() -> str:
     """
 
 
-QUERIES17["stream_sessions"] = q_stream_sessions
-ORACLES17["stream_sessions"] = _oracle_stream_sessions()
+register("stream_sessions", q_stream_sessions, _oracle_stream_sessions())
 
 
 # --------------------------------------------------------------------------
@@ -184,8 +178,8 @@ def _oracle_stream_sessions_append() -> str:
     """
 
 
-QUERIES17["stream_sessions_append"] = q_stream_sessions_append
-ORACLES17["stream_sessions_append"] = _oracle_stream_sessions_append()
+register("stream_sessions_append", q_stream_sessions_append,
+         _oracle_stream_sessions_append())
 
 
 # --------------------------------------------------------------------------
@@ -208,5 +202,4 @@ def _oracle_local_moran() -> str:
     return local_moran_sql(_cells_sql(), CELL_RES, LISA_K)
 
 
-QUERIES17["local_moran"] = q_local_moran
-ORACLES17["local_moran"] = _oracle_local_moran()
+register("local_moran", q_local_moran, _oracle_local_moran())

@@ -12,18 +12,14 @@
 
 from __future__ import annotations
 
-from typing import Callable
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import encode_sql
 from .queries3 import CELL_RES, load
 from .queries16 import _cells, _cells_sql
+from .registry import register
 from .sources import synth
-
-QUERIES18: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES18: "dict[str, str]" = {}
 
 
 # --------------------------------------------------------------------------
@@ -60,8 +56,7 @@ def _oracle_tile_pyramid() -> str:
     """
 
 
-QUERIES18["tile_pyramid"] = q_tile_pyramid
-ORACLES18["tile_pyramid"] = _oracle_tile_pyramid()
+register("tile_pyramid", q_tile_pyramid, _oracle_tile_pyramid())
 
 
 # --------------------------------------------------------------------------
@@ -92,8 +87,7 @@ def _oracle_bbox_cells() -> str:
     return bbox_cells_sql(_cells_sql(), CELL_RES, _CORNER_A, _CORNER_B)
 
 
-QUERIES18["bbox_cells"] = q_bbox_cells
-ORACLES18["bbox_cells"] = _oracle_bbox_cells()
+register("bbox_cells", q_bbox_cells, _oracle_bbox_cells())
 
 
 # --------------------------------------------------------------------------
@@ -154,5 +148,4 @@ def _oracle_zonal_stats() -> str:
     """
 
 
-QUERIES18["zonal_stats"] = q_zonal_stats
-ORACLES18["zonal_stats"] = _oracle_zonal_stats()
+register("zonal_stats", q_zonal_stats, _oracle_zonal_stats())

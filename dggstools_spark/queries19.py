@@ -24,16 +24,12 @@ SQL generators over the survivors CTE.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import queries5
 from .functions import text as T
 from .queries3 import load
-
-QUERIES19: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES19: "dict[str, str]" = {}
+from .registry import register
 
 
 def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,5 +140,4 @@ def _oracle_dedup_pipeline() -> str:
     """
 
 
-QUERIES19["dedup_pipeline"] = q_dedup_pipeline
-ORACLES19["dedup_pipeline"] = _oracle_dedup_pipeline()
+register("dedup_pipeline", q_dedup_pipeline, _oracle_dedup_pipeline())

@@ -5,20 +5,16 @@ queries5.py, also oracle-checked.)"""
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dggs.cells import HALF_SIDE
 from .functions import encode_sql
 from .operators import spatial_join
+from .queries3 import load
+from .registry import register
 from .sources import synth
 
 _S = float(HALF_SIDE)
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # --------------------------------------------------------------------------
@@ -324,23 +320,12 @@ def _oracle_media_features() -> str:
     """
 
 
-QUERIES2: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pip_polygons": q_pip_polygons,
-    "knn_cells": q_knn_cells,
-    "minhash": q_minhash,
-    "class_encode": q_class_encode,
-    "rmse": q_rmse,
-    "media_features": q_media_features,
-}
-
-ORACLES2: dict[str, str] = {
-    "media_features": _oracle_media_features(),
-    "pip_polygons": _oracle_pip_polygons(),
-    "knn_cells": _oracle_knn_cells(),
-    "minhash": _oracle_minhash(),
-    "class_encode": _ORACLE_CLASS_ENCODE,
-    "rmse": _oracle_rmse(),
-}
+register("pip_polygons", q_pip_polygons, _oracle_pip_polygons())
+register("knn_cells", q_knn_cells, _oracle_knn_cells())
+register("minhash", q_minhash, _oracle_minhash())
+register("class_encode", q_class_encode, _ORACLE_CLASS_ENCODE)
+register("rmse", q_rmse, _oracle_rmse())
+register("media_features", q_media_features, _oracle_media_features())
 
 
 # --------------------------------------------------------------------------
@@ -386,5 +371,4 @@ def _oracle_span_cells() -> str:
     return f"SELECT cellid, kind, count(*) AS n_spans FROM ({enc}) GROUP BY cellid, kind"
 
 
-QUERIES2["span_cells"] = q_span_cells
-ORACLES2["span_cells"] = _oracle_span_cells()
+register("span_cells", q_span_cells, _oracle_span_cells())

@@ -13,14 +13,10 @@ identical synthesis + the identical canonicalization chain
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES20: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES20: "dict[str, str]" = {}
+from .registry import register
 
 
 def synth_url_sql(id_col: str) -> str:
@@ -54,8 +50,7 @@ def _oracle_url_dedup() -> str:
     return url_dedup_sql("documents", synth_url_sql("doc_id"), "doc_id")
 
 
-QUERIES20["url_dedup"] = q_url_dedup
-ORACLES20["url_dedup"] = _oracle_url_dedup()
+register("url_dedup", q_url_dedup, _oracle_url_dedup())
 
 
 # --------------------------------------------------------------------------
@@ -84,8 +79,7 @@ def _oracle_semantic_dedup() -> str:
     return semantic_dedup_sql("embeddings", SD_THR)
 
 
-QUERIES20["semantic_dedup"] = q_semantic_dedup
-ORACLES20["semantic_dedup"] = _oracle_semantic_dedup()
+register("semantic_dedup", q_semantic_dedup, _oracle_semantic_dedup())
 
 
 # --------------------------------------------------------------------------
@@ -132,5 +126,4 @@ def _oracle_cell_trends() -> str:
     return trend_topk_sql(obs, "cellid", "day", "y", TREND_K)
 
 
-QUERIES20["cell_trends"] = q_cell_trends
-ORACLES20["cell_trends"] = _oracle_cell_trends()
+register("cell_trends", q_cell_trends, _oracle_cell_trends())

@@ -17,15 +17,11 @@ the PQ scale path.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
 from .queries20 import SD_DIM, SD_THR, TREND_K, TREND_RES
-
-QUERIES21: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES21: "dict[str, str]" = {}
+from .registry import register
 
 
 def q_cell_trends_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,8 +53,7 @@ def _oracle_cell_trends_dense() -> str:
     return trend_topk_dense_sql(obs, "cellid", "day", "y", TREND_K)
 
 
-QUERIES21["cell_trends_dense"] = q_cell_trends_dense
-ORACLES21["cell_trends_dense"] = _oracle_cell_trends_dense()
+register("cell_trends_dense", q_cell_trends_dense, _oracle_cell_trends_dense())
 
 
 # --------------------------------------------------------------------------
@@ -102,8 +97,7 @@ def _oracle_od_flows() -> str:
                         FLOWS_K)
 
 
-QUERIES21["od_flows"] = q_od_flows
-ORACLES21["od_flows"] = _oracle_od_flows()
+register("od_flows", q_od_flows, _oracle_od_flows())
 
 
 # --------------------------------------------------------------------------
@@ -141,8 +135,7 @@ def _oracle_cell_nbrs() -> str:
     return cell_neighbors_sql(cells, NBRS_RES, cross_face=True)
 
 
-QUERIES21["cell_nbrs"] = q_cell_nbrs
-ORACLES21["cell_nbrs"] = _oracle_cell_nbrs()
+register("cell_nbrs", q_cell_nbrs, _oracle_cell_nbrs())
 
 
 # --------------------------------------------------------------------------
@@ -165,5 +158,4 @@ def _oracle_semantic_pq() -> str:
     return semantic_dedup_pq_sql("embeddings", SD_THR)
 
 
-QUERIES21["semantic_pq"] = q_semantic_pq
-ORACLES21["semantic_pq"] = _oracle_semantic_pq()
+register("semantic_pq", q_semantic_pq, _oracle_semantic_pq())

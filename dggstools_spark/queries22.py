@@ -15,16 +15,12 @@ profiles, descriptive spatial statistics.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dggs.config import DEFAULT_CONFIG
 from .queries3 import _d, _oracle_diamond_ctes, _safe_diamonds, load
 from .queries21 import FLOWS_RES
-
-QUERIES22: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES22: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -87,8 +83,7 @@ def _oracle_overlay_area() -> str:
     """
 
 
-QUERIES22["overlay_area"] = q_overlay_area
-ORACLES22["overlay_area"] = _oracle_overlay_area()
+register("overlay_area", q_overlay_area, _oracle_overlay_area())
 
 
 # --------------------------------------------------------------------------
@@ -138,8 +133,7 @@ def _oracle_user_trips() -> str:
                           "cellid", TRIPS_K)
 
 
-QUERIES22["user_trips"] = q_user_trips
-ORACLES22["user_trips"] = _oracle_user_trips()
+register("user_trips", q_user_trips, _oracle_user_trips())
 
 
 # --------------------------------------------------------------------------
@@ -173,5 +167,4 @@ def _oracle_mean_center() -> str:
     return mean_center_sql(enc, "source", "px_m", "py_m")
 
 
-QUERIES22["mean_center"] = q_mean_center
-ORACLES22["mean_center"] = _oracle_mean_center()
+register("mean_center", q_mean_center, _oracle_mean_center())

@@ -14,15 +14,11 @@ flow network + distance-threshold spatial self-join.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
 from .queries22 import _flow_obs, _flow_obs_sql
-
-QUERIES23: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES23: "dict[str, str]" = {}
+from .registry import register
 
 RANK_ITERS = 5
 RANK_K = 30
@@ -53,8 +49,7 @@ def _oracle_cell_rank() -> str:
                          iters=RANK_ITERS, k=RANK_K)
 
 
-QUERIES23["cell_rank"] = q_cell_rank
-ORACLES23["cell_rank"] = _oracle_cell_rank()
+register("cell_rank", q_cell_rank, _oracle_cell_rank())
 
 
 # --------------------------------------------------------------------------
@@ -99,8 +94,7 @@ def _oracle_near_pairs() -> str:
                           k=NEAR_K)
 
 
-QUERIES23["near_pairs"] = q_near_pairs
-ORACLES23["near_pairs"] = _oracle_near_pairs()
+register("near_pairs", q_near_pairs, _oracle_near_pairs())
 
 
 # --------------------------------------------------------------------------
@@ -143,8 +137,7 @@ def _oracle_hll_count() -> str:
     """
 
 
-QUERIES23["hll_count"] = q_hll_count
-ORACLES23["hll_count"] = _oracle_hll_count()
+register("hll_count", q_hll_count, _oracle_hll_count())
 
 
 # --------------------------------------------------------------------------
@@ -228,5 +221,4 @@ def _oracle_path_cells() -> str:
     """
 
 
-QUERIES23["path_cells"] = q_path_cells
-ORACLES23["path_cells"] = _oracle_path_cells()
+register("path_cells", q_path_cells, _oracle_path_cells())

@@ -12,14 +12,10 @@ corpus-overlap estimation.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES24: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES24: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -82,8 +78,7 @@ def _oracle_change_matrix() -> str:
                              _epoch_b_sql(cellid, cellid_shift), CM_RES)
 
 
-QUERIES24["change_matrix"] = q_change_matrix
-ORACLES24["change_matrix"] = _oracle_change_matrix()
+register("change_matrix", q_change_matrix, _oracle_change_matrix())
 
 
 # --------------------------------------------------------------------------
@@ -153,8 +148,7 @@ def _oracle_hll_overlap() -> str:
     """
 
 
-QUERIES24["hll_overlap"] = q_hll_overlap
-ORACLES24["hll_overlap"] = _oracle_hll_overlap()
+register("hll_overlap", q_hll_overlap, _oracle_hll_overlap())
 
 
 # --------------------------------------------------------------------------
@@ -214,8 +208,7 @@ def _oracle_cell_visitors() -> str:
     """
 
 
-QUERIES24["cell_visitors"] = q_cell_visitors
-ORACLES24["cell_visitors"] = _oracle_cell_visitors()
+register("cell_visitors", q_cell_visitors, _oracle_cell_visitors())
 
 
 # --------------------------------------------------------------------------
@@ -268,8 +261,7 @@ def _oracle_stream_hll() -> str:
         "source", "text")
 
 
-QUERIES24["stream_hll"] = q_stream_hll
-ORACLES24["stream_hll"] = _oracle_stream_hll()
+register("stream_hll", q_stream_hll, _oracle_stream_hll())
 
 
 # --------------------------------------------------------------------------
@@ -311,8 +303,7 @@ def _oracle_cost_distance() -> str:
     return cost_distance_sql(cells, CD_RES, _CD_SRC, CD_ITERS)
 
 
-QUERIES24["cost_distance"] = q_cost_distance
-ORACLES24["cost_distance"] = _oracle_cost_distance()
+register("cost_distance", q_cost_distance, _oracle_cost_distance())
 
 
 # --------------------------------------------------------------------------
@@ -355,8 +346,7 @@ def _oracle_bloom_prefilter() -> str:
     return bloom_report_sql(a, b)
 
 
-QUERIES24["bloom_prefilter"] = q_bloom_prefilter
-ORACLES24["bloom_prefilter"] = _oracle_bloom_prefilter()
+register("bloom_prefilter", q_bloom_prefilter, _oracle_bloom_prefilter())
 
 
 # --------------------------------------------------------------------------
@@ -412,8 +402,7 @@ def _oracle_cm_topk() -> str:
     """
 
 
-QUERIES24["cm_topk"] = q_cm_topk
-ORACLES24["cm_topk"] = _oracle_cm_topk()
+register("cm_topk", q_cm_topk, _oracle_cm_topk())
 
 
 # --------------------------------------------------------------------------
@@ -464,8 +453,7 @@ def _oracle_morph_close() -> str:
     """
 
 
-QUERIES24["morph_close"] = q_morph_close
-ORACLES24["morph_close"] = _oracle_morph_close()
+register("morph_close", q_morph_close, _oracle_morph_close())
 
 
 # --------------------------------------------------------------------------
@@ -531,5 +519,4 @@ def _oracle_region_group() -> str:
     """
 
 
-QUERIES24["region_group"] = q_region_group
-ORACLES24["region_group"] = _oracle_region_group()
+register("region_group", q_region_group, _oracle_region_group())

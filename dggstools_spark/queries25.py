@@ -11,14 +11,10 @@ buffers.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES25: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES25: "dict[str, str]" = {}
+from .registry import register
 
 IDW_D_M = 1_000_000.0
 IDW_RES = 2
@@ -68,8 +64,7 @@ def _oracle_idw_interp() -> str:
     return idw_interp_sql(obs, qs, IDW_D_M, IDW_RES)
 
 
-QUERIES25["idw_interp"] = q_idw_interp
-ORACLES25["idw_interp"] = _oracle_idw_interp()
+register("idw_interp", q_idw_interp, _oracle_idw_interp())
 
 
 # --------------------------------------------------------------------------
@@ -118,8 +113,7 @@ def _oracle_buffer_cells() -> str:
     # not form a NULL group (caught by the sf1 gate, one seam point)
 
 
-QUERIES25["buffer_cells"] = q_buffer_cells
-ORACLES25["buffer_cells"] = _oracle_buffer_cells()
+register("buffer_cells", q_buffer_cells, _oracle_buffer_cells())
 
 
 # --------------------------------------------------------------------------
@@ -181,8 +175,7 @@ def _oracle_asof_status() -> str:
     """
 
 
-QUERIES25["asof_status"] = q_asof_status
-ORACLES25["asof_status"] = _oracle_asof_status()
+register("asof_status", q_asof_status, _oracle_asof_status())
 
 
 # --------------------------------------------------------------------------
@@ -240,5 +233,4 @@ def _oracle_range_events() -> str:
     """
 
 
-QUERIES25["range_events"] = q_range_events
-ORACLES25["range_events"] = _oracle_range_events()
+register("range_events", q_range_events, _oracle_range_events())

@@ -15,14 +15,10 @@ statistics + the cross-face k-ring.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES26: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES26: "dict[str, str]" = {}
+from .registry import register
 
 CD_RES = 3
 KR_RES = 2
@@ -54,8 +50,7 @@ def _oracle_cell_diversity() -> str:
     return class_diversity_sql(f"({enc})", "cellid", "event_type")
 
 
-QUERIES26["cell_diversity"] = q_cell_diversity
-ORACLES26["cell_diversity"] = _oracle_cell_diversity()
+register("cell_diversity", q_cell_diversity, _oracle_cell_diversity())
 
 
 def q_kring_xface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,8 +82,7 @@ def _oracle_kring_xface() -> str:
     return kring_cells_sql(f"(SELECT cellid FROM ({enc}))", KR_RES, KR_K)
 
 
-QUERIES26["kring_xface"] = q_kring_xface
-ORACLES26["kring_xface"] = _oracle_kring_xface()
+register("kring_xface", q_kring_xface, _oracle_kring_xface())
 
 
 # mode labeling shared shape: per (cellid, event_type) counts, label =
@@ -133,5 +127,4 @@ def _oracle_join_counts() -> str:
     return join_counts_sql(lab, JC_RES, "cls")
 
 
-QUERIES26["join_counts"] = q_join_counts
-ORACLES26["join_counts"] = _oracle_join_counts()
+register("join_counts", q_join_counts, _oracle_join_counts())

@@ -14,14 +14,10 @@
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES27: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES27: "dict[str, str]" = {}
+from .registry import register
 
 IVFPQ_K = 3
 IVFPQ_MOD = 23
@@ -48,8 +44,7 @@ def _oracle_ann_ivfpq() -> str:
                           nprobe=IVFPQ_NPROBE)
 
 
-QUERIES27["ann_ivfpq"] = q_ann_ivfpq
-ORACLES27["ann_ivfpq"] = _oracle_ann_ivfpq()
+register("ann_ivfpq", q_ann_ivfpq, _oracle_ann_ivfpq())
 
 
 # --------------------------------------------------------------------------
@@ -159,5 +154,4 @@ def _oracle_route_heat() -> str:
     """
 
 
-QUERIES27["route_heat"] = q_route_heat
-ORACLES27["route_heat"] = _oracle_route_heat()
+register("route_heat", q_route_heat, _oracle_route_heat())

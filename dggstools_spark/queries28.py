@@ -19,16 +19,13 @@ the groupBy/distinct is the constraint-2 lineage boundary and the
 from __future__ import annotations
 
 import math
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import encode_sql
 from .queries3 import load
+from .registry import register
 from .sources import synth
-
-QUERIES28: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES28: "dict[str, str]" = {}
 
 WS_RES = 3
 #: doubling rounds: 2^d must cover the longest flow path, which the
@@ -93,8 +90,7 @@ def _oracle_watershed() -> str:
     """
 
 
-QUERIES28["watershed"] = q_watershed
-ORACLES28["watershed"] = _oracle_watershed()
+register("watershed", q_watershed, _oracle_watershed())
 
 
 def q_slope_aspect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,8 +105,7 @@ def _oracle_slope_aspect() -> str:
     return slope_aspect_sql(_terrain_sql(), WS_RES)
 
 
-QUERIES28["slope_aspect"] = q_slope_aspect
-ORACLES28["slope_aspect"] = _oracle_slope_aspect()
+register("slope_aspect", q_slope_aspect, _oracle_slope_aspect())
 
 
 def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,5 +131,4 @@ def _oracle_ripley_k() -> str:
     return ripley_k_sql(cnt, RK_RES, RK_KMAX)
 
 
-QUERIES28["ripley_k"] = q_ripley_k
-ORACLES28["ripley_k"] = _oracle_ripley_k()
+register("ripley_k", q_ripley_k, _oracle_ripley_k())

@@ -19,17 +19,14 @@ Constraint-2 discipline as in queries28: the encoder output crosses a
 from __future__ import annotations
 
 import math
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import encode_sql
 from .queries3 import load
 from .queries28 import WS_RES, _terrain, _terrain_sql
+from .registry import register
 from .sources import synth
-
-QUERIES29: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES29: "dict[str, str]" = {}
 
 MK_RES = 2
 MK_K = 20
@@ -64,8 +61,7 @@ def _oracle_mk_trend() -> str:
     return mk_trend_sql(obs, "cellid", "day", "y", MK_K)
 
 
-QUERIES29["mk_trend"] = q_mk_trend
-ORACLES29["mk_trend"] = _oracle_mk_trend()
+register("mk_trend", q_mk_trend, _oracle_mk_trend())
 
 
 def q_g_function(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,8 +84,7 @@ def _oracle_g_function() -> str:
     return g_function_sql(occ, GF_RES, GF_KMAX)
 
 
-QUERIES29["g_function"] = q_g_function
-ORACLES29["g_function"] = _oracle_g_function()
+register("g_function", q_g_function, _oracle_g_function())
 
 
 def q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,8 +113,7 @@ def _oracle_flow_accum() -> str:
     """
 
 
-QUERIES29["flow_accum"] = q_flow_accum
-ORACLES29["flow_accum"] = _oracle_flow_accum()
+register("flow_accum", q_flow_accum, _oracle_flow_accum())
 
 
 # --------------------------------------------------------------------------
@@ -161,8 +155,7 @@ def _oracle_emerging_hotspots() -> str:
     return emerging_hotspots_sql(obs, EH_RES, EH_K)
 
 
-QUERIES29["emerging_hotspots"] = q_emerging_hotspots
-ORACLES29["emerging_hotspots"] = _oracle_emerging_hotspots()
+register("emerging_hotspots", q_emerging_hotspots, _oracle_emerging_hotspots())
 
 
 # --------------------------------------------------------------------------
@@ -256,8 +249,7 @@ def _oracle_flow_communities() -> str:
     """
 
 
-QUERIES29["flow_communities"] = q_flow_communities
-ORACLES29["flow_communities"] = _oracle_flow_communities()
+register("flow_communities", q_flow_communities, _oracle_flow_communities())
 
 
 # --------------------------------------------------------------------------
@@ -320,8 +312,7 @@ def _oracle_access_2sfca() -> str:
     """
 
 
-QUERIES29["access_2sfca"] = q_access_2sfca
-ORACLES29["access_2sfca"] = _oracle_access_2sfca()
+register("access_2sfca", q_access_2sfca, _oracle_access_2sfca())
 
 
 # --------------------------------------------------------------------------
@@ -368,8 +359,7 @@ def _oracle_cross_k() -> str:
                        XK_RES, XK_KMAX)
 
 
-QUERIES29["cross_k"] = q_cross_k
-ORACLES29["cross_k"] = _oracle_cross_k()
+register("cross_k", q_cross_k, _oracle_cross_k())
 
 
 # --------------------------------------------------------------------------
@@ -397,8 +387,7 @@ def _oracle_kcenter_sample() -> str:
                               "embedding", KC_ROUNDS)
 
 
-QUERIES29["kcenter_sample"] = q_kcenter_sample
-ORACLES29["kcenter_sample"] = _oracle_kcenter_sample()
+register("kcenter_sample", q_kcenter_sample, _oracle_kcenter_sample())
 
 
 # --------------------------------------------------------------------------
@@ -485,8 +474,7 @@ def _oracle_trip_balance() -> str:
     """
 
 
-QUERIES29["trip_balance"] = q_trip_balance
-ORACLES29["trip_balance"] = _oracle_trip_balance()
+register("trip_balance", q_trip_balance, _oracle_trip_balance())
 
 
 # --------------------------------------------------------------------------
@@ -561,8 +549,7 @@ def _oracle_region_shape() -> str:
     """
 
 
-QUERIES29["region_shape"] = q_region_shape
-ORACLES29["region_shape"] = _oracle_region_shape()
+register("region_shape", q_region_shape, _oracle_region_shape())
 
 
 # --------------------------------------------------------------------------
@@ -642,8 +629,7 @@ def _oracle_stream_topk() -> str:
     """
 
 
-QUERIES29["stream_topk"] = q_stream_topk
-ORACLES29["stream_topk"] = _oracle_stream_topk()
+register("stream_topk", q_stream_topk, _oracle_stream_topk())
 
 
 # --------------------------------------------------------------------------
@@ -703,8 +689,7 @@ def _oracle_areal_interp() -> str:
     """
 
 
-QUERIES29["areal_interp"] = q_areal_interp
-ORACLES29["areal_interp"] = _oracle_areal_interp()
+register("areal_interp", q_areal_interp, _oracle_areal_interp())
 
 
 # --------------------------------------------------------------------------
@@ -745,8 +730,7 @@ def _oracle_viewshed() -> str:
     """
 
 
-QUERIES29["viewshed"] = q_viewshed
-ORACLES29["viewshed"] = _oracle_viewshed()
+register("viewshed", q_viewshed, _oracle_viewshed())
 
 
 # --------------------------------------------------------------------------
@@ -798,8 +782,7 @@ def _oracle_theilsen_trend() -> str:
     """
 
 
-QUERIES29["theilsen_trend"] = q_theilsen_trend
-ORACLES29["theilsen_trend"] = _oracle_theilsen_trend()
+register("theilsen_trend", q_theilsen_trend, _oracle_theilsen_trend())
 
 
 # --------------------------------------------------------------------------
@@ -841,8 +824,7 @@ def _oracle_fj_function() -> str:
     return fj_function_sql(occ, _fj_occupied_faces(), FJ_RES, FJ_KMAX)
 
 
-QUERIES29["fj_function"] = q_fj_function
-ORACLES29["fj_function"] = _oracle_fj_function()
+register("fj_function", q_fj_function, _oracle_fj_function())
 
 
 # --------------------------------------------------------------------------
@@ -906,8 +888,8 @@ def _oracle_voronoi_territories() -> str:
     """
 
 
-QUERIES29["voronoi_territories"] = q_voronoi_territories
-ORACLES29["voronoi_territories"] = _oracle_voronoi_territories()
+register("voronoi_territories", q_voronoi_territories,
+         _oracle_voronoi_territories())
 
 
 # --------------------------------------------------------------------------
@@ -936,8 +918,7 @@ def _oracle_segregation() -> str:
                              _pts_counts_sql("supplier", "s_suppkey"))
 
 
-QUERIES29["segregation"] = q_segregation
-ORACLES29["segregation"] = _oracle_segregation()
+register("segregation", q_segregation, _oracle_segregation())
 
 
 def q_location_quotient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -956,5 +937,4 @@ def _oracle_location_quotient() -> str:
         _pts_counts_sql("supplier", "s_suppkey"), LQ_K)
 
 
-QUERIES29["location_quotient"] = q_location_quotient
-ORACLES29["location_quotient"] = _oracle_location_quotient()
+register("location_quotient", q_location_quotient, _oracle_location_quotient())

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,6 +26,7 @@ from .operators import metrics
 from .operators import spatial_join as spatial_join_mod
 from .operators.auid import subarea_pairs
 from .operators.raster import rescale_to_parent, tiles_to_cells
+from .registry import register
 from .sources import synth
 
 
@@ -39,29 +39,6 @@ def _docs_cells(spark: SparkSession, sf_dir: str, res: int,
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     return encode_sql.spark_encode(docs, "lon", "lat", res).select(
         *(keep or []), "cellid")
-
-
-def _docs_cells_udf(spark: SparkSession, sf_dir: str, res: int,
-                    keep: list[str] | None = None) -> DataFrame:
-    """_docs_cells via the numpy-kernel Arrow UDF encode.
-
-    WARNING — NOT oracle-parity-safe (r7 measured finding, DO NOT swap
-    oracle-checked queries onto this path): the kernel and the shared
-    expression/DuckDB formula DIVERGE on inputs that land EXACTLY on a
-    cell boundary — sf0.1 events has one (lon = 40.0 exactly →
-    kernel 'Q14…' vs formula 'Q13…' at res ≥ 2), which flipped six
-    events-encode queries' hashes when r7 briefly swapped them (the
-    adversarial parity test jitters ±EPS around corners but never
-    exactly 0, and sf0.01 happened to contain no boundary point).
-    cell_counts uses the UDF path by CONTRACT (its oracle has always
-    matched on the gated data), but any NEW swap risks a hash flip at
-    an unseen scale factor.  Kept for non-oracle/UX use only."""
-    from .functions.encode import cellid_from_lonlat_udf
-
-    docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
-    enc = cellid_from_lonlat_udf(res)
-    cols = [F.col(c) for c in (keep or [])]
-    return docs.select(*cols, enc("lon", "lat").alias("cellid"))
 
 
 def _oracle_docs_cells(res: int, keep: list[str]) -> str:
@@ -852,38 +829,18 @@ def _oracle_geodesic_area() -> str:
     """
 
 
-QUERIES3: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "extent": q_extent,
-    "nodata_stride": q_nodata_stride,
-    "rescale_modes": q_rescale_modes,
-    "subarea": q_subarea,
-    "line_error": q_line_error,
-    "cells_io": q_cells_io,
-    "merge_resume": q_merge_resume,
-    "resample_bilinear": q_resample_bilinear,
-    "resample_cubic": q_resample_cubic,
-    "all_touched": q_all_touched,
-    "area_error": q_area_error,
-    "ann_topk": q_ann_topk,
-    "embed_pairs": q_embed_pairs,
-    "media_codecs": q_media_codecs,
-    "geodesic_area": q_geodesic_area,
-}
-
-ORACLES3: dict[str, str] = {
-    "extent": _oracle_extent(),
-    "nodata_stride": _oracle_nodata_stride(),
-    "rescale_modes": _oracle_rescale_modes(),
-    "subarea": _oracle_subarea(),
-    "line_error": _oracle_line_error(),
-    "cells_io": _oracle_cells_io(),
-    "merge_resume": _oracle_merge_resume(),
-    "resample_bilinear": _oracle_resample_bilinear(),
-    "resample_cubic": _oracle_resample_cubic(),
-    "all_touched": _oracle_all_touched(),
-    "area_error": _oracle_area_error(),
-    "ann_topk": _oracle_ann_topk(),
-    "embed_pairs": _oracle_embed_pairs(),
-    "media_codecs": _ORACLE_MEDIA_CODECS,
-    "geodesic_area": _oracle_geodesic_area(),
-}
+register("extent", q_extent, _oracle_extent())
+register("nodata_stride", q_nodata_stride, _oracle_nodata_stride())
+register("rescale_modes", q_rescale_modes, _oracle_rescale_modes())
+register("subarea", q_subarea, _oracle_subarea())
+register("line_error", q_line_error, _oracle_line_error())
+register("cells_io", q_cells_io, _oracle_cells_io())
+register("merge_resume", q_merge_resume, _oracle_merge_resume())
+register("resample_bilinear", q_resample_bilinear, _oracle_resample_bilinear())
+register("resample_cubic", q_resample_cubic, _oracle_resample_cubic())
+register("all_touched", q_all_touched, _oracle_all_touched())
+register("area_error", q_area_error, _oracle_area_error())
+register("ann_topk", q_ann_topk, _oracle_ann_topk())
+register("embed_pairs", q_embed_pairs, _oracle_embed_pairs())
+register("media_codecs", q_media_codecs, _ORACLE_MEDIA_CODECS)
+register("geodesic_area", q_geodesic_area, _oracle_geodesic_area())

@@ -14,14 +14,10 @@ identical rounds as MATERIALIZED CTEs.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES30: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES30: "dict[str, str]" = {}
+from .registry import register
 
 BPE_ROUNDS = 6
 
@@ -49,8 +45,7 @@ def _oracle_bpe_merges() -> str:
             f'SELECT round, "left", "right", pair_count FROM mrg')
 
 
-QUERIES30["bpe_merges"] = q_bpe_merges
-ORACLES30["bpe_merges"] = _oracle_bpe_merges()
+register("bpe_merges", q_bpe_merges, _oracle_bpe_merges())
 
 
 def q_bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,8 +86,7 @@ def _oracle_bpe_stats() -> str:
     """
 
 
-QUERIES30["bpe_stats"] = q_bpe_stats
-ORACLES30["bpe_stats"] = _oracle_bpe_stats()
+register("bpe_stats", q_bpe_stats, _oracle_bpe_stats())
 
 
 # --------------------------------------------------------------------------
@@ -144,5 +138,4 @@ def _oracle_bpe_tokenize() -> str:
     """
 
 
-QUERIES30["bpe_tokenize"] = q_bpe_tokenize
-ORACLES30["bpe_tokenize"] = _oracle_bpe_tokenize()
+register("bpe_tokenize", q_bpe_tokenize, _oracle_bpe_tokenize())

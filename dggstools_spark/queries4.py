@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .dggs.config import DEFAULT_CONFIG
 from .functions import encode_sql
 from .queries3 import _docs_cells, _oracle_docs_cells, load
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -292,21 +293,11 @@ def _oracle_auid_roundtrip() -> str:
     """
 
 
-QUERIES4: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "tile_arrays": q_tile_arrays,
-    "grid": q_grid,
-    "is_optimal": q_is_optimal,
-    "stream_ingest": q_stream_ingest,
-    "auid_roundtrip": q_auid_roundtrip,
-}
-
-ORACLES4: dict[str, str] = {
-    "tile_arrays": _oracle_tile_arrays(),
-    "grid": _oracle_grid(),
-    "is_optimal": _oracle_is_optimal(),
-    "stream_ingest": _oracle_stream_ingest(),
-    "auid_roundtrip": _oracle_auid_roundtrip(),
-}
+register("tile_arrays", q_tile_arrays, _oracle_tile_arrays())
+register("grid", q_grid, _oracle_grid())
+register("is_optimal", q_is_optimal, _oracle_is_optimal())
+register("stream_ingest", q_stream_ingest, _oracle_stream_ingest())
+register("auid_roundtrip", q_auid_roundtrip, _oracle_auid_roundtrip())
 
 
 # --------------------------------------------------------------------------
@@ -341,8 +332,7 @@ def _oracle_token_stats() -> str:
     """
 
 
-QUERIES4["token_stats"] = q_token_stats
-ORACLES4["token_stats"] = _oracle_token_stats()
+register("token_stats", q_token_stats, _oracle_token_stats())
 
 
 # --------------------------------------------------------------------------
@@ -398,5 +388,4 @@ def _oracle_stream_stateful() -> str:
     """
 
 
-QUERIES4["stream_stateful"] = q_stream_stateful
-ORACLES4["stream_stateful"] = _oracle_stream_stateful()
+register("stream_stateful", q_stream_stateful, _oracle_stream_stateful())

@@ -31,13 +31,12 @@ Two SQL constructions make the AUID pipeline value-checkable in DuckDB:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dggs.config import DEFAULT_CONFIG
 from .operators import auid as auid_ops
 from .queries3 import _docs_cells, _oracle_docs_cells
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -217,15 +216,8 @@ def _oracle_auid_optimize() -> str:
     """
 
 
-QUERIES5: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "auid_groups": q_auid_groups,
-    "auid_optimize": q_auid_optimize,
-}
-
-ORACLES5: dict[str, str] = {
-    "auid_groups": _oracle_auid_groups(),
-    "auid_optimize": _oracle_auid_optimize(),
-}
+register("auid_groups", q_auid_groups, _oracle_auid_groups())
+register("auid_optimize", q_auid_optimize, _oracle_auid_optimize())
 
 
 # --------------------------------------------------------------------------
@@ -281,8 +273,7 @@ def _oracle_resample_area() -> str:
     """
 
 
-QUERIES5["resample_area"] = q_resample_area
-ORACLES5["resample_area"] = _oracle_resample_area()
+register("resample_area", q_resample_area, _oracle_resample_area())
 
 
 # --------------------------------------------------------------------------
@@ -320,8 +311,7 @@ def _oracle_cells_json() -> str:
     """.format(enc=enc)
 
 
-QUERIES5["cells_json"] = q_cells_json
-ORACLES5["cells_json"] = _oracle_cells_json()
+register("cells_json", q_cells_json, _oracle_cells_json())
 
 
 # --------------------------------------------------------------------------
@@ -368,8 +358,7 @@ def _oracle_winnow_pairs() -> str:
     """
 
 
-QUERIES5["winnow_pairs"] = q_winnow_pairs
-ORACLES5["winnow_pairs"] = _oracle_winnow_pairs()
+register("winnow_pairs", q_winnow_pairs, _oracle_winnow_pairs())
 
 
 # --------------------------------------------------------------------------
@@ -432,8 +421,7 @@ def _oracle_ivf_topk() -> str:
     """
 
 
-QUERIES5["ivf_topk"] = q_ivf_topk
-ORACLES5["ivf_topk"] = _oracle_ivf_topk()
+register("ivf_topk", q_ivf_topk, _oracle_ivf_topk())
 
 
 # --------------------------------------------------------------------------
@@ -504,8 +492,7 @@ def _oracle_res_policy() -> str:
     """
 
 
-QUERIES5["res_policy"] = q_res_policy
-ORACLES5["res_policy"] = _oracle_res_policy()
+register("res_policy", q_res_policy, _oracle_res_policy())
 
 
 # --------------------------------------------------------------------------
@@ -594,8 +581,7 @@ def _oracle_ivf_refined() -> str:
     """
 
 
-QUERIES5["ivf_refined"] = q_ivf_refined
-ORACLES5["ivf_refined"] = _oracle_ivf_refined()
+register("ivf_refined", q_ivf_refined, _oracle_ivf_refined())
 
 
 # --------------------------------------------------------------------------
@@ -662,8 +648,7 @@ def _oracle_simhash() -> str:
     """
 
 
-QUERIES5["simhash"] = q_simhash
-ORACLES5["simhash"] = _oracle_simhash()
+register("simhash", q_simhash, _oracle_simhash())
 
 
 # --------------------------------------------------------------------------
@@ -718,8 +703,7 @@ def _oracle_ngram_pairs(table: str = "documents") -> str:
     """
 
 
-QUERIES5["ngram_pairs"] = q_ngram_pairs
-ORACLES5["ngram_pairs"] = _oracle_ngram_pairs()
+register("ngram_pairs", q_ngram_pairs, _oracle_ngram_pairs())
 
 
 # --------------------------------------------------------------------------
@@ -756,8 +740,7 @@ def _oracle_dedup_clusters() -> str:
     """
 
 
-QUERIES5["dedup_clusters"] = q_dedup_clusters
-ORACLES5["dedup_clusters"] = _oracle_dedup_clusters()
+register("dedup_clusters", q_dedup_clusters, _oracle_dedup_clusters())
 
 
 # --------------------------------------------------------------------------
@@ -811,8 +794,7 @@ def _oracle_stream_dedup() -> str:
     """
 
 
-QUERIES5["stream_dedup"] = q_stream_dedup
-ORACLES5["stream_dedup"] = _oracle_stream_dedup()
+register("stream_dedup", q_stream_dedup, _oracle_stream_dedup())
 
 
 # --------------------------------------------------------------------------
@@ -852,5 +834,4 @@ def _oracle_salted_topk() -> str:
     """
 
 
-QUERIES5["salted_topk"] = q_salted_topk
-ORACLES5["salted_topk"] = _oracle_salted_topk()
+register("salted_topk", q_salted_topk, _oracle_salted_topk())

@@ -11,16 +11,12 @@ on any engine, any partitioning, any run" contract actually holds.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.sampling import (_HEX_DIGITS, _threshold_hex, hash_sample,
                                  stratified_sample, weighted_mixture)
 from .queries3 import load
-
-QUERIES6: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES6: "dict[str, str]" = {}
+from .registry import register
 
 
 def _md5_prefix_sql(salt: str) -> str:
@@ -51,8 +47,7 @@ def _oracle_hash_sample() -> str:
     """
 
 
-QUERIES6["hash_sample"] = q_hash_sample
-ORACLES6["hash_sample"] = _oracle_hash_sample()
+register("hash_sample", q_hash_sample, _oracle_hash_sample())
 
 
 # --------------------------------------------------------------------------
@@ -82,8 +77,7 @@ def _oracle_stratified_sample() -> str:
     """
 
 
-QUERIES6["stratified_sample"] = q_stratified_sample
-ORACLES6["stratified_sample"] = _oracle_stratified_sample()
+register("stratified_sample", q_stratified_sample, _oracle_stratified_sample())
 
 
 # --------------------------------------------------------------------------
@@ -115,8 +109,7 @@ def _oracle_weighted_mixture() -> str:
     """
 
 
-QUERIES6["weighted_mixture"] = q_weighted_mixture
-ORACLES6["weighted_mixture"] = _oracle_weighted_mixture()
+register("weighted_mixture", q_weighted_mixture, _oracle_weighted_mixture())
 
 
 # --------------------------------------------------------------------------
@@ -143,5 +136,4 @@ def _oracle_bm25_topk() -> str:
     return bm25_oracle_sql("documents", "text", "doc_id", BM_TERMS, BM_K)
 
 
-QUERIES6["bm25_topk"] = q_bm25_topk
-ORACLES6["bm25_topk"] = _oracle_bm25_topk()
+register("bm25_topk", q_bm25_topk, _oracle_bm25_topk())

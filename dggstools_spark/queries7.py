@@ -11,14 +11,10 @@ arithmetic, so all three are value-checked bit-exactly against DuckDB.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries3 import load
-
-QUERIES7: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES7: "dict[str, str]" = {}
+from .registry import register
 
 
 def _sh_sql(n: int, out: str, src: str = "tl") -> str:
@@ -74,8 +70,7 @@ def _oracle_decontaminate() -> str:
     """
 
 
-QUERIES7["decontaminate"] = q_decontaminate
-ORACLES7["decontaminate"] = _oracle_decontaminate()
+register("decontaminate", q_decontaminate, _oracle_decontaminate())
 
 
 # --------------------------------------------------------------------------
@@ -131,8 +126,7 @@ def _oracle_gopher_quality() -> str:
     """
 
 
-QUERIES7["gopher_quality"] = q_gopher_quality
-ORACLES7["gopher_quality"] = _oracle_gopher_quality()
+register("gopher_quality", q_gopher_quality, _oracle_gopher_quality())
 
 
 # --------------------------------------------------------------------------
@@ -208,5 +202,4 @@ def _oracle_ngram_sampled() -> str:
     """
 
 
-QUERIES7["ngram_sampled"] = q_ngram_sampled
-ORACLES7["ngram_sampled"] = _oracle_ngram_sampled()
+register("ngram_sampled", q_ngram_sampled, _oracle_ngram_sampled())

@@ -7,15 +7,11 @@ actual redacted text, not just the counts).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.text import token_count
 from .queries3 import load
-
-QUERIES8: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES8: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -59,8 +55,7 @@ def _oracle_pack_stats() -> str:
     """
 
 
-QUERIES8["pack_stats"] = q_pack_stats
-ORACLES8["pack_stats"] = _oracle_pack_stats()
+register("pack_stats", q_pack_stats, _oracle_pack_stats())
 
 
 # --------------------------------------------------------------------------
@@ -106,5 +101,4 @@ def _oracle_pii_scrub() -> str:
     """
 
 
-QUERIES8["pii_scrub"] = q_pii_scrub
-ORACLES8["pii_scrub"] = _oracle_pii_scrub()
+register("pii_scrub", q_pii_scrub, _oracle_pii_scrub())

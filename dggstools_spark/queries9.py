@@ -18,15 +18,11 @@ oracles.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.text import token_count
 from .queries3 import load
-
-QUERIES9: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {}
-ORACLES9: "dict[str, str]" = {}
+from .registry import register
 
 
 # --------------------------------------------------------------------------
@@ -83,8 +79,7 @@ def _oracle_passage_dedup() -> str:
     """
 
 
-QUERIES9["passage_dedup"] = q_passage_dedup
-ORACLES9["passage_dedup"] = _oracle_passage_dedup()
+register("passage_dedup", q_passage_dedup, _oracle_passage_dedup())
 
 
 # --------------------------------------------------------------------------
@@ -174,8 +169,7 @@ def _oracle_cross_dedup() -> str:
     """
 
 
-QUERIES9["cross_dedup"] = q_cross_dedup
-ORACLES9["cross_dedup"] = _oracle_cross_dedup()
+register("cross_dedup", q_cross_dedup, _oracle_cross_dedup())
 
 
 # --------------------------------------------------------------------------
@@ -203,5 +197,4 @@ def _oracle_corpus_stats() -> str:
         "n_tok", quantiles=CS_QUANTS)
 
 
-QUERIES9["corpus_stats"] = q_corpus_stats
-ORACLES9["corpus_stats"] = _oracle_corpus_stats()
+register("corpus_stats", q_corpus_stats, _oracle_corpus_stats())

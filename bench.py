@@ -1,7 +1,7 @@
 """Benchmark entry point (driver-run per round).
 
 Runs the registry queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS], plus the flagship spatial-join + tile-assignment
+on get_spark's local[N] session, plus the flagship spatial-join + tile-assignment
 throughput job over N synthesized interleaved docs (BASELINE.json metric:
 docs/sec).  Prints ONE JSON line.
 
@@ -191,7 +191,6 @@ def flagship(spark, n_docs: int) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
     flagship_only = "--flagship-only" in sys.argv
 
@@ -199,6 +198,7 @@ def main() -> None:
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     # warm the JVM + Python workers so per-query times reflect steady state
     # (incl. one Arrow pandas-UDF round trip — the first UDF query otherwise

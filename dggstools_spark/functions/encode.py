@@ -4,7 +4,8 @@ This is the north-rule-mandated path ("batched H3/S2-style cell encoding via
 pandas/Arrow UDFs, no per-row Python"): each UDF receives pandas Series
 backed by Arrow batches and calls the vectorized kernel once per batch.
 The expression path (encode_sql.spark_encode) must produce identical cellids;
-tests/test_spark_encode.py asserts the two agree."""
+tests/test_spark_paths.py::test_udf_and_expr_paths_agree asserts the two
+agree."""
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -48,17 +49,6 @@ def planar_from_lonlat_udf(cfg: RHEALPixConfig = DEFAULT_CONFIG):
         return pd.DataFrame({"x": x, "y": y})
 
     return _fwd
-
-
-def lonlat_from_planar_udf(cfg: RHEALPixConfig = DEFAULT_CONFIG):
-    """pandas UDF: planar (x, y) meters -> struct(lon, lat) degrees."""
-    @F.pandas_udf(_LL_SCHEMA)
-    def _inv(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        lon, lat = projection.inverse(x.to_numpy(), y.to_numpy(),
-                                      cfg.north_square, cfg.south_square)
-        return pd.DataFrame({"lon": lon, "lat": lat})
-
-    return _inv
 
 
 def cell_centroid_udf(cfg: RHEALPixConfig = DEFAULT_CONFIG, geodetic: bool = False):

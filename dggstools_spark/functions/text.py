@@ -109,13 +109,6 @@ def fingerprint(text: str) -> str:
     return f"md5(lower(trim({text})))"
 
 
-def shingle_minhash(text: str, seed: int) -> str:
-    """One MinHash band value: lexicographic min of md5(seed || token) over
-    whitespace tokens.  Expressed portably downstream via explode/unnest;
-    this helper only builds the per-token hash expression."""
-    return f"md5(concat('{seed}:', tok))"
-
-
 BPE_PIECE_PATTERN = "[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9 ]"
 
 

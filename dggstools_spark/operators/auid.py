@@ -102,8 +102,7 @@ def optimize_cells(df: DataFrame, n_side: int, cellid_col: str = "cellid",
 
 def subarea_pairs(fine: DataFrame, coarse: DataFrame,
                   fine_group: str = "group_a", coarse_group: str = "group_b",
-                  cellid_col: str = "cellid",
-                  broadcast_cov: bool = True) -> DataFrame:
+                  cellid_col: str = "cellid") -> DataFrame:
     """J6 relationally: for every (fine group, coarse group) pair, is the
     fine group's cell set a subarea of the coarse group's cover?  A fine
     cell is covered iff some coarse cell is a prefix of it (or equal) —
@@ -116,14 +115,10 @@ def subarea_pairs(fine: DataFrame, coarse: DataFrame,
     compare covered counts to group sizes.  No cross join of cell tables —
     only the tiny group-key domain is crossed.
 
-    ``broadcast_cov`` (default True) broadcasts the covered-count aggregate
-    into the final join — right whenever the (fine group x coarse group)
-    pair domain is modest (it turns the one remaining sort-merge join into
-    a broadcast hash join, PLANS.md).  That aggregate scales with the PAIR
-    domain, the same order as the domain side, so with very many groups on
-    both sides pass False and let AQE pick the join (a forced broadcast
-    could exceed the broadcast/driver memory ceiling where a shuffle join
-    completes)."""
+    The covered-count aggregate is broadcast into the final join, which
+    turns the one remaining sort-merge join into a broadcast hash join
+    (PLANS.md).  That aggregate scales with the (fine group x coarse group)
+    PAIR domain, so this assumes the pair domain is modest."""
     f = fine.select(fine_group, cellid_col).dropDuplicates()
     c = coarse.select(coarse_group, cellid_col).dropDuplicates()
     prefixes = f.select(
@@ -137,8 +132,7 @@ def subarea_pairs(fine: DataFrame, coarse: DataFrame,
     n_a = f.groupBy(fine_group).agg(F.count("*").alias("_na"))
     n_cov = hits.groupBy(fine_group, coarse_group).agg(F.count("*").alias("_nc"))
     domain = n_a.crossJoin(c.select(coarse_group).distinct())
-    cov = F.broadcast(n_cov) if broadcast_cov else n_cov
-    return (domain.join(cov, [fine_group, coarse_group], "left")
+    return (domain.join(F.broadcast(n_cov), [fine_group, coarse_group], "left")
             .select(fine_group, coarse_group,
                     (F.coalesce(F.col("_nc"), F.lit(0)) == F.col("_na"))
                     .cast("int").alias("is_subarea")))

@@ -74,7 +74,7 @@ def dsir_scores(df: DataFrame, text_col: str, id_col: str,
     # Materialize the B-row bucket stats (ADVICE r5): without the lineage
     # cut, `tot` and the weights join each re-derive stats from the full
     # scan+explode subtree — 3 corpus passes where 2 suffice (the same
-    # re-scan disease lm.materialize_model fixes).  stats is n_buckets
+    # re-scan disease lm_score's c12 checkpoint fixes).  stats is n_buckets
     # rows, so the checkpoint is ~free; after it, weight derivation is
     # driver-free arithmetic on a materialized 4096-row table.
     stats = toks.groupBy("b").agg(

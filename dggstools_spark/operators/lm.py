@@ -35,9 +35,9 @@ Scale design (100 TB):
 - the per-doc rollup is one more hash aggregate on doc_id.
 Total: two corpus-sized shuffles (bigram counts, doc rollup) + the join,
 over THREE corpus scans (score bigrams, model bigrams, vocab count) — the
-c12 table is localCheckpointed by default so the context-count rollup
-reads the materialized vocab²-bounded table instead of re-scanning the
-corpus (see ``materialize_model``).
+c12 table is localCheckpointed so the context-count rollup reads the
+materialized vocab²-bounded table instead of re-scanning the corpus (see
+``lm_score``).
 
 Reference parity: the reference engine has no LM scorer; this extends its
 F2 class-filter family to the LLM-pipeline tier (SURVEY.md §2 extension
@@ -70,7 +70,6 @@ def doc_bigrams(df: DataFrame, text_col: str, out: str = "bg") -> DataFrame:
 
 def lm_score(df: DataFrame, text_col: str, id_col: str,
              train_df: DataFrame | None = None,
-             materialize_model: bool = True,
              model_path: str | None = None) -> DataFrame:
     """(id, n_bigrams, sum_ppm, avg_ppm) per document: add-one-smoothed
     bigram likelihood in exact integer ppm (see module docstring).
@@ -79,28 +78,27 @@ def lm_score(df: DataFrame, text_col: str, id_col: str,
     text column); by default the model is trained on ``df`` itself —
     the CCNet self-scoring setup.
 
-    ``materialize_model`` localCheckpoints the bigram-count table after it
-    is built: without the cut, Catalyst recomputes the whole c12 subtree
+    The bigram-count table is localCheckpointed after it is built: without
+    the cut, Catalyst recomputes the whole c12 subtree
     (scan + explode + agg) a second time to derive the context counts —
     the plan audit showed 4 corpus scans where 3 suffice, and at 100 TB
     the extra scan dominates.  The count table itself is vocab²-bounded
     (≪ corpus), so materializing it is the cheap side of the trade.
-    Values are identical either way (the checkpoint only cuts lineage).
+    Values are unchanged (the checkpoint only cuts lineage).
 
     ``model_path`` (VERDICT r5 #5 / TODO_r6 #9) swaps the in-memory
     checkpoint for a PARQUET model sink + scan: the c12 table is written
     to ``model_path`` and read back, so vocab²-heavy corpora spill to
     durable storage instead of executor block-manager memory, the model
     survives executor loss, and downstream scoring reads a column-pruned
-    parquet scan.  Same values (the sink only cuts lineage); overrides
-    ``materialize_model``."""
+    parquet scan.  Same values (the sink only cuts lineage)."""
     train = train_df if train_df is not None else df
     train_bg = doc_bigrams(train.select(text_col), text_col)
     c12 = train_bg.groupBy("bg").agg(F.count("*").alias("c12"))
     if model_path is not None:
         c12.write.mode("overwrite").parquet(model_path)
         c12 = df.sparkSession.read.parquet(model_path)
-    elif materialize_model:
+    else:
         c12 = c12.localCheckpoint(eager=True)
     # context counts c(w1 ·) roll up from the bigram table (vocab-sized
     # input — never a second corpus pass)
@@ -131,18 +129,12 @@ def lm_score(df: DataFrame, text_col: str, id_col: str,
             .withColumn("avg_ppm", F.expr("sum_ppm div n_bigrams")))
 
 
-def lm_score_sql(table: str, text_col: str, id_col: str,
-                 train_where: str | None = None) -> str:
-    """DuckDB twin (shared-snippet rule): identical integer arithmetic,
-    `//` for Spark's `div`, bigram CTEs MATERIALIZED so the exploded form
-    is computed once (constraint-7 family).
-
-    ``train_where`` optionally restricts the TRAINING corpus to a SQL
-    predicate over ``table`` — the oracle for the cross-corpus
-    ``train_df`` path: model counts and vocabulary come from the filtered
-    slice, every document is scored, and unseen bigrams/contexts take the
-    add-one mass via LEFT JOIN + COALESCE (mirroring the Spark side)."""
-    tw = f"AND ({train_where})" if train_where else ""
+def lm_score_sql(table: str, text_col: str, id_col: str) -> str:
+    """DuckDB twin of self-trained lm_score (shared-snippet rule): identical
+    integer arithmetic, `//` for Spark's `div`, bigram CTEs MATERIALIZED so
+    the exploded form is computed once (constraint-7 family).  Unseen
+    bigrams/contexts take the add-one mass via LEFT JOIN + COALESCE,
+    mirroring the Spark side."""
     return f"""
     WITH d AS (SELECT {id_col}, string_split({text_col}, ' ') AS t
                FROM {table}
@@ -161,14 +153,14 @@ def lm_score_sql(table: str, text_col: str, id_col: str,
         FROM (SELECT string_split({text_col}, ' ') AS t
               FROM {table}
               WHERE {text_col} IS NOT NULL
-                AND len(string_split({text_col}, ' ')) >= 2 {tw})),
+                AND len(string_split({text_col}, ' ')) >= 2 )),
     c12 AS MATERIALIZED (SELECT bg, count(*) AS c12 FROM tbg GROUP BY bg),
     c1 AS MATERIALIZED (
         SELECT split_part(bg, ' ', 1) AS w1, sum(c12) AS c1
         FROM c12 GROUP BY 1),
     vocab AS (SELECT count(DISTINCT tok) AS V FROM (
         SELECT unnest(string_split({text_col}, ' ')) AS tok
-        FROM {table} WHERE {text_col} IS NOT NULL {tw})),
+        FROM {table} WHERE {text_col} IS NOT NULL )),
     scored AS (
         SELECT b.{id_col},
                ((COALESCE(c.c12, 0) + 1) * {LM_PPM})

@@ -283,37 +283,25 @@ def ivfpq_topk_sql(emb_table: str, topk: int, query_pred: str,
                    mod: int = 23, residue: int = 3, nprobe: int = 3,
                    m: int = PQ_M, dsub: int = PQ_DSUB, k: int = PQ_K,
                    seed_mod: int = PQ_SEED_MOD,
-                   seed_res: int = PQ_SEED_RES,
-                   assign_mode: str = "adc") -> str:
+                   seed_res: int = PQ_SEED_RES) -> str:
     """DuckDB twin of :func:`ivfpq_topk`: the ivf_topk oracle's
     cents/probes CTEs composed with the pq_topk oracle's
-    seeds/cb/sv/codes/LUT CTEs; the coarse quantizer is either the exact
-    assignment window or the ADC min (semantic_dedup_pq's gcodes/near
-    shape); the ADC scan is the same cid equi-join."""
+    seeds/cb/sv/codes/LUT CTEs; the coarse quantizer is the ADC min
+    (semantic_dedup_pq's gcodes/near shape; the Spark side's
+    ``assign_mode='exact'`` reference has no twin); the ADC scan is the
+    same cid equi-join."""
     from .similarity import DOT_DUCK, NRM_DUCK
 
     def sim(a, b):
         return (f"round(({DOT_DUCK.format(a=a, b=b)})"
                 f" / ({NRM_DUCK.format(v=a)} * {NRM_DUCK.format(v=b)}), 9)")
 
-    if assign_mode not in ("adc", "exact"):
-        raise ValueError(f"unknown assign_mode {assign_mode!r}")
     dq = _dq_duckdb(dsub)
     adc = " + ".join(
         f"l.lut[{j * k} + c.codes[{j + 1}] + 1]" for j in range(m))
-    if assign_mode == "exact":
-        assign_ctes = f"""
-    asim AS (SELECT e.{id_col}, c.cid,
-                    {sim(f'e.{vec_col}', 'c.cvec')} AS s
-             FROM {emb_table} e, cents c),
-    assign AS MATERIALIZED (
-        SELECT {id_col}, cid FROM (
-            SELECT *, row_number() OVER (PARTITION BY {id_col}
-                ORDER BY s DESC, cid) AS rn FROM asim) WHERE rn = 1),"""
-    else:
-        gadc = " + ".join(
-            f"l.lut[{j * k} + g.codes[{j + 1}] + 1]" for j in range(m))
-        assign_ctes = f"""
+    gadc = " + ".join(
+        f"l.lut[{j * k} + g.codes[{j + 1}] + 1]" for j in range(m))
+    assign_ctes = f"""
     gsv AS (
         SELECT cid AS gid, t.m,
                CASE WHEN len(cvec) >= {m * dsub}

@@ -40,8 +40,7 @@ def gopher_quality(df: DataFrame, text_col: str, id_col: str,
                    stopwords: tuple = STOPWORDS,
                    max_rep3_ppm: int = 180000,
                    max_top2_ppm: int = 200000,
-                   min_stop_ppm: int = 10000,
-                   cache_base: bool = False) -> DataFrame:
+                   min_stop_ppm: int = 10000) -> DataFrame:
     """Per-document repetition/quality report.
 
     Returns one row per document:
@@ -60,13 +59,10 @@ def gopher_quality(df: DataFrame, text_col: str, id_col: str,
     Scan shape: the three signal families need three different explodes
     (tokens / trigrams / bigrams), so the plan reads the (id, text)
     projection three times — three column-pruned parquet scans.  For a
-    one-scan plan over a 100 TB corpus, pass ``cache_base=True`` (lineage
-    cut on the narrow projection; the branches then read the materialized
-    copy) or point ``df`` at an already-cached/projected table.
+    one-scan plan over a 100 TB corpus, point ``df`` at an
+    already-cached/projected table.
     """
     base = df.select(id_col, text_col)
-    if cache_base:
-        base = base.localCheckpoint(eager=False)
     tok = tokens(base, text_col).select(
         id_col, F.col("tok"), F.length(text_col).alias("_chars"))
 

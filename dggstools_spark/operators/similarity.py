@@ -222,11 +222,6 @@ def ann_topk(cands: DataFrame, queries: DataFrame, k: int,
 # iterations for better list balance (deterministic too, pytest-pinned).
 # --------------------------------------------------------------------------
 
-def _sim_expr(a: str, b: str, dim: int | None = None) -> str:
-    dot = dot_spark(a, b, dim)
-    return f"round(({dot}) / ({nrm_spark(a, dim)} * {nrm_spark(b, dim)}), 9)"
-
-
 def ivf_centroids(cands: DataFrame, vec_col: str = "embedding",
                   id_col: str = "vec_id", mod: int = 23,
                   residue: int = 3) -> DataFrame:
@@ -270,74 +265,44 @@ def ivf_assign(cands: DataFrame, cents: DataFrame, vec_col: str = "embedding",
             .select(*out_cols))
 
 
-#: quantization scale for 'quantized' Lloyd means — a power of two, so the
+#: quantization scale for the Lloyd means — a power of two, so the
 #: x * MEAN_QUANT multiply is EXACT in doubles (pure exponent shift) and
 #: both engines round identical values
 MEAN_QUANT = 1 << 20
 
 
 def ivf_refine(cands: DataFrame, cents: DataFrame, iters: int = 2,
-               vec_col: str = "embedding", id_col: str = "vec_id",
-               mean_mode: str = "quantized",
-               deterministic_fold: bool | None = None) -> DataFrame:
+               vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """Optional Lloyd refinement: assign -> element-wise mean per cluster
     (posexplode + two hash aggs), keeping the seed centroid for any cluster
     that loses all members.  Each iteration is one broadcast join + two
     shuffles on (cid, pos).
 
-    ``mean_mode`` picks the mean aggregate — float addition is
-    non-associative, so the native avg's last ulp depends on partition
-    scheduling (CLAUDE.md constraint 13) and the choice is a
-    determinism/cost tradeoff:
-
-    - ``'quantized'`` (default): sum of round(x * 2^20) as BIGINT, divided
-      back — integer addition is associative+commutative, so the mean is
-      RUN-STABLE under native partial aggregation at native-agg cost (no
-      collect_list, no sort).  The 2^20 multiply is exact (power of two),
-      so both engines round identical doubles; ~1e-6 mean quantization is
-      irrelevant for cluster seeds.  This is the production default AND
-      oracle-expressible (q_ivf_refined).
-    - ``'native'``: plain avg — cheapest, last-ulp nondeterministic.
-    - ``'ordered_fold'``: id-ordered left fold via sort_array(collect_list)
-      — bit-exact vs DuckDB list_reduce, the round-3 oracle mode; costs a
-      per-(cid,pos) list build + sort.  Kept for the equivalence test.
-
-    ``deterministic_fold`` is the legacy boolean alias (True ->
-    'ordered_fold', False -> 'native')."""
-    if deterministic_fold is not None:
-        mean_mode = "ordered_fold" if deterministic_fold else "native"
-    if mean_mode not in ("quantized", "native", "ordered_fold"):
-        raise ValueError(f"unknown mean_mode {mean_mode!r}")
+    The mean is quantized: float addition is non-associative, so a native
+    avg's last ulp depends on partition scheduling (CLAUDE.md constraint
+    13).  Summing round(x * 2^20) as BIGINT and dividing back is
+    associative+commutative, so the mean is RUN-STABLE under native
+    partial aggregation at native-agg cost (no collect_list, no sort).  The
+    2^20 multiply is exact (power of two), so both engines round identical
+    doubles; ~1e-6 mean quantization is irrelevant for cluster seeds, and
+    the whole refinement is oracle-expressible (q_ivf_refined)."""
     for _ in range(iters):
         assigned = ivf_assign(cands, cents, vec_col, id_col)
         per_pos = assigned.select(
             "cid", F.col(id_col),
             F.posexplode(F.expr(
                 f"transform({vec_col}, x -> CAST(x AS DOUBLE))")).alias("_p", "_x"))
-        if mean_mode == "ordered_fold":
-            grouped = per_pos.groupBy("cid", "_p").agg(
-                F.array_sort(F.collect_list(
-                    F.struct(F.col(id_col).alias("k"), F.col("_x").alias("x")))).alias("_lst"))
-            means_pp = grouped.select(
-                "cid", "_p",
-                (F.expr("aggregate(_lst, CAST(0.0 AS DOUBLE), (a, e) -> a + e.x)")
-                 / F.size("_lst")).alias("_m"))
-        elif mean_mode == "quantized":
-            means_pp = per_pos.groupBy("cid", "_p").agg(
-                (F.sum(F.round(F.col("_x") * MEAN_QUANT).cast("bigint")).cast("double")
-                 / (F.lit(float(MEAN_QUANT)) * F.count("*"))).alias("_m"))
-        else:
-            means_pp = per_pos.groupBy("cid", "_p").agg(F.avg("_x").alias("_m"))
-        elem = "CAST(e._m AS FLOAT)" if mean_mode == "native" else "CAST(e._m AS DOUBLE)"
+        means_pp = per_pos.groupBy("cid", "_p").agg(
+            (F.sum(F.round(F.col("_x") * MEAN_QUANT).cast("bigint")).cast("double")
+             / (F.lit(float(MEAN_QUANT)) * F.count("*"))).alias("_m"))
         means = (means_pp.groupBy("cid")
                  .agg(F.array_sort(F.collect_list(F.struct("_p", "_m"))).alias("_pm"))
-                 .select("cid", F.expr(f"transform(_pm, e -> {elem})").alias("cvec")))
+                 .select("cid", F.expr("transform(_pm, e -> CAST(e._m AS DOUBLE))")
+                         .alias("cvec")))
         cents = cents.select("cid").join(means, "cid", "left") \
             .join(cents.select("cid", F.col("cvec").alias("_seed")), "cid") \
             .select("cid", F.coalesce(
-                "cvec",
-                F.col("_seed") if mean_mode == "native"
-                else F.expr("transform(_seed, x -> CAST(x AS DOUBLE))")).alias("cvec")) \
+                "cvec", F.expr("transform(_seed, x -> CAST(x AS DOUBLE))")).alias("cvec")) \
             .localCheckpoint(eager=True)  # cut the per-iteration lineage
     return cents
 
@@ -346,22 +311,18 @@ def ivf_topk(cands: DataFrame, queries: DataFrame, k: int,
              vec_col: str = "embedding", id_col: str = "vec_id",
              qid_col: str = "q_id", q_vec: str = "q_emb",
              mod: int = 23, residue: int = 3, nprobe: int = 3,
-             refine_iters: int = 0, mean_mode: str = "quantized",
-             dim: int | None = None) -> DataFrame:
+             refine_iters: int = 0, dim: int | None = None) -> DataFrame:
     """Approximate top-k cosine neighbors per query via inverted lists:
     probe the ``nprobe`` centroids nearest to the query, exact-rerank only
     their members.  Output (qid, id, sim, rank); self-pairs excluded.
     The whole construction is deterministic SQL and oracle-checked end to
-    end (q_ivf_topk with refine_iters=0, q_ivf_refined with 1): with the
-    default ``mean_mode='quantized'`` even the Lloyd means are run-stable
-    at native-agg cost (see ivf_refine — round 3 hard-wired the expensive
-    ordered fold here; the flag is now plumbed through)."""
+    end (q_ivf_topk with refine_iters=0, q_ivf_refined with 1): even the
+    Lloyd means are run-stable at native-agg cost (see ivf_refine)."""
     from pyspark.sql.window import Window
 
     cents = ivf_centroids(cands, vec_col, id_col, mod, residue)
     if refine_iters:
-        cents = ivf_refine(cands, cents, refine_iters, vec_col, id_col,
-                           mean_mode=mean_mode)
+        cents = ivf_refine(cands, cents, refine_iters, vec_col, id_col)
     assigned = ivf_assign(cands, cents, vec_col, id_col, keep_norm="_ncand")
 
     # probe selection: (query x centroid) BNLJ with per-side norms (see

@@ -26,12 +26,8 @@ from ..functions import encode_sql
 
 def assign_cells(points: DataFrame, res: int, lon: str = "lon", lat: str = "lat",
                  cfg: RHEALPixConfig = DEFAULT_CONFIG, out: str = "cellid",
-                 prefix_partitions: int | None = None,
-                 prefix_len: int = 3,
                  single_eval: bool = False) -> DataFrame:
-    """J1: Arrow-batched point->cell assignment; optionally repartitions by
-    the cell prefix so downstream joins/aggs on cell keys are co-located
-    (the Iceberg-truncate-transform layout at cluster scale).
+    """J1: Arrow-batched point->cell assignment.
 
     ``single_eval`` marks the UDF non-deterministic, which stops Catalyst
     from splitting it into a pushed ``IsNotNull`` filter + projection (two
@@ -41,10 +37,7 @@ def assign_cells(points: DataFrame, res: int, lon: str = "lon", lat: str = "lat"
     enc = cellid_from_lonlat_udf(res, cfg)
     if single_eval:
         enc = enc.asNondeterministic()
-    df = points.withColumn(out, enc(lon, lat))
-    if prefix_partitions:
-        df = df.repartition(prefix_partitions, F.substring(out, 1, prefix_len))
-    return df
+    return points.withColumn(out, enc(lon, lat))
 
 
 # --------------------------------------------------------------------------
@@ -144,14 +137,13 @@ def _est_row_width(schema) -> int:
 def points_in_polygons(points: DataFrame, polygons: DataFrame,
                        px: str = "px", py: str = "py",
                        poly_id: str = "poly_id", ring: str = "ring",
-                       broadcast_polys: bool = True,
                        narrow_shuffle: bool | None = None) -> DataFrame:
     """Ray-casting parity test, relationally: returns ``points`` columns +
     ``poly_id`` for every (point, polygon) containment pair.
 
     points x edges is pruned by a per-polygon bbox pre-filter before the
-    crossing predicate; the polygon side is broadcast when small (the usual
-    case: dimension-table-sized polygon sets against web-scale points).
+    crossing predicate; the polygon side is broadcast (the usual case:
+    dimension-table-sized polygon sets against web-scale points).
 
     Rows are identified by a synthetic row id, so duplicate point rows each
     report independently (grouping by point VALUES would merge them and
@@ -180,9 +172,7 @@ def points_in_polygons(points: DataFrame, polygons: DataFrame,
         F.least(F.min("y1"), F.min("y2")).alias("_bymin"),
         F.greatest(F.max("y1"), F.max("y2")).alias("_bymax"),
     )
-    edges = edges.join(bbox, poly_id)
-    if broadcast_polys:
-        edges = F.broadcast(edges)
+    edges = F.broadcast(edges.join(bbox, poly_id))
     pts = points.withColumn("_rid", F.monotonically_increasing_id())
     if px != "px" or py != "py":
         pts = pts.withColumn("px", F.col(px)).withColumn("py", F.col(py))

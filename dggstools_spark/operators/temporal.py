@@ -22,10 +22,9 @@ cost is exactly one sort-within-partitions of left+right together.
 
 Determinism contract: right rows must be unique per (key, t_right) —
 dedupe upstream (keep the max version id) or the carried state at equal
-timestamps is ORDER-DEPENDENT; the operator asserts uniqueness loudly
-when ``check_unique`` (cheap: one count vs count-distinct on the right
-side).  All comparisons are on integer timestamps (CLAUDE.md constraint
-5 family).
+timestamps is ORDER-DEPENDENT; the operator always asserts uniqueness
+loudly (cheap: one count vs count-distinct on the right side).  All
+comparisons are on integer timestamps (CLAUDE.md constraint 5 family).
 
 Oracle: the driver query's DuckDB twin uses DuckDB's NATIVE ``ASOF LEFT
 JOIN`` — an INDEPENDENT implementation of the same semantics, not a
@@ -43,20 +42,18 @@ from pyspark.sql import DataFrame, functions as F
 
 def asof_join(left: DataFrame, right: DataFrame, key: str,
               t_left: str, t_right: str, val_cols: "list[str]",
-              tolerance: int | None = None,
-              check_unique: bool = True) -> DataFrame:
+              tolerance: int | None = None) -> DataFrame:
     """Left rows + ``matched_t`` (BIGINT, NULL when no match) + the
     right ``val_cols`` as-of ``t_left`` (see module docstring)."""
     from pyspark.sql.window import Window
 
-    if check_unique:
-        n = right.select(key, t_right).count()
-        nd = right.select(key, t_right).distinct().count()
-        if n != nd:
-            raise ValueError(
-                f"asof_join: right side has {n - nd} duplicate "
-                f"({key}, {t_right}) rows — dedupe upstream or the "
-                f"carried state is order-dependent")
+    n = right.select(key, t_right).count()
+    nd = right.select(key, t_right).distinct().count()
+    if n != nd:
+        raise ValueError(
+            f"asof_join: right side has {n - nd} duplicate "
+            f"({key}, {t_right}) rows — dedupe upstream or the "
+            f"carried state is order-dependent")
     rv = F.struct(F.col(t_right).cast("bigint").alias("_rt"),
                   *[F.col(c) for c in val_cols])
     r2 = (right.select(F.col(key).alias("_k"),

@@ -21,26 +21,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def with_lineage(df: DataFrame, batch_key: str) -> DataFrame:
-    """Tag rows with their physical partition id (for the lineage agg)."""
-    return df.withColumn("_pid", F.spark_partition_id()) \
-             .withColumn("batch_key", F.lit(batch_key))
-
-
-def lineage_rows(df: DataFrame, batch_key: str, key_cols: list[str]) -> DataFrame:
-    """(batch_key, partition_id, n_rows, checksum) per physical partition —
-    an order-insensitive xor/sum checksum over the key columns, cheap enough
-    to run inline with the write."""
-    tagged = with_lineage(df, batch_key)
-    # xor-fold: order-insensitive and overflow-free (ANSI mode forbids a
-    # plain sum of 64-bit hashes)
-    return tagged.groupBy("batch_key", "_pid").agg(
-        F.count("*").alias("n_rows"),
-        F.expr(f"bit_xor(xxhash64({', '.join(key_cols)}))").alias("checksum"),
-    ).withColumnRenamed("_pid", "partition_id") \
-     .withColumn("written_at", F.lit(int(time.time())))
-
-
 def completed_batches(spark: SparkSession, root: str) -> set[str]:
     try:
         df = spark.read.parquet(f"{root}/_batches")
@@ -81,7 +61,9 @@ def checkpointed_write(df: DataFrame, root: str, batch_key: str,
 
 def _lineage_agg(tagged: DataFrame, key_cols: list[str]) -> DataFrame:
     """(batch_key, partition_id, n_rows, checksum, written_at) from a
-    batch_key-tagged DataFrame (one row per physical partition)."""
+    batch_key-tagged DataFrame (one row per physical partition).  The
+    checksum is an xor-fold: order-insensitive and overflow-free (ANSI mode
+    forbids a plain sum of 64-bit hashes)."""
     return tagged.withColumn("_pid", F.spark_partition_id()).groupBy(
         "batch_key", "_pid").agg(
         F.count("*").alias("n_rows"),
@@ -91,27 +73,19 @@ def _lineage_agg(tagged: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def run_batches(df: DataFrame, root: str, batch_col: str,
-                key_cols: list[str], serial: bool = False) -> dict[str, bool]:
+                key_cols: list[str]) -> dict[str, bool]:
     """Partition a DataFrame into batches by ``batch_col`` (e.g. the cell
     prefix) and checkpoint-write them; resumable from any point.
 
-    Default (non-failure) path: ONE partitioned write job covers every
-    pending batch (data partitioned by batch key, lineage + commit markers
-    from single aggregations) — no per-batch driver loop, so 10^4 tile
-    batches cost one shuffle, not 10^4 jobs.  A crash mid-write leaves all
-    pending batches uncommitted; the replay dynamic-partition-overwrites
-    exactly those, so convergence is deterministic.  ``serial=True`` keeps
-    the one-job-per-batch path (finer-grained resume when individual
-    batches are huge or flaky)."""
+    ONE partitioned write job covers every pending batch (data partitioned
+    by batch key, lineage + commit markers from single aggregations) — no
+    per-batch driver loop, so 10^4 tile batches cost one shuffle, not 10^4
+    jobs.  A crash mid-write leaves all pending batches uncommitted; the
+    replay dynamic-partition-overwrites exactly those, so convergence is
+    deterministic."""
     spark = df.sparkSession
     keys = sorted(str(r[0]) for r in df.select(batch_col).distinct().collect())
     done = completed_batches(spark, root)
-    if serial:
-        results = {}
-        for k in keys:
-            part = df.filter(F.col(batch_col) == k)
-            results[k] = checkpointed_write(part, root, k, key_cols)
-        return results
     pending = [k for k in keys if k not in done]
     if pending:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

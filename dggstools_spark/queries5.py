@@ -502,8 +502,8 @@ register("res_policy", q_res_policy, _oracle_res_policy())
 # native partial aggregation; the exact power-of-two multiply makes both
 # engines round identical doubles).  Round 3 used an id-ordered left fold
 # here (sort_array(collect_list) + aggregate, 8.85 s); the quantized form
-# keeps bit-stability at native hash-agg cost and is the production default
-# (operators/similarity.ivf_refine mean_mode).
+# keeps bit-stability at native hash-agg cost and is the only mean
+# operators/similarity.ivf_refine computes.
 # --------------------------------------------------------------------------
 
 IVF_DIM = 64

@@ -12,14 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "dggstools-spark", master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
+def get_spark(app_name: str = "dggstools-spark") -> SparkSession:
+    """local[N] session, N = $SPARK_GRAFT_CPUS or the CPUs this process may
+    run on (its affinity mask, not the host's core count)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{cpus}]")
         # every hot Python path is Arrow-batched (north rule: no per-row Python)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -27,7 +26,7 @@ def get_spark(app_name: str = "dggstools-spark", master: str | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         # naive parquet timestamps are interpreted as UTC, matching DuckDB
         .config("spark.sql.session.timeZone", "UTC")
         # Align Spark's whole-stage-codegen size cutoff with HotSpot's JIT
@@ -44,8 +43,6 @@ def get_spark(app_name: str = "dggstools-spark", master: str | None = None,
         # stages and runs the volcano operators, each of which stays
         # JIT-compiled.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        # keep parquet scans chunky enough for local[32]; on a cluster this is
-        # left to spark.sql.files.maxPartitionBytes default (128m)
         # local mode: the driver JVM hosts all executor threads — size the
         # heap for cpus concurrent hash-agg/shuffle tasks (measured: 8g
         # chokes local[32] into GC at ~16M-row aggregations)

@@ -1,0 +1,59 @@
+"""Oracle gate inside Tier-1 for the IVF/IVF-PQ, LM, Gopher, as-of,
+point-in-polygon, subarea and merge/resume leaves: each leaf's Spark result
+must equal its DuckDB ``oracle_sql()`` on row count, column-name set and
+``canonical_hash`` at sf0.01 — the compare ``scripts/check_entry.py`` runs
+for the whole registry."""
+
+import os
+import sys
+
+import pytest
+
+from dggstools_spark.queries import ORACLES, QUERIES, TABLES
+
+SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "scripts")
+
+LEAVES = ["ivf_topk", "ivf_refined", "ann_ivfpq", "lm_score", "lm_score_sink",
+          "gopher_quality", "asof_status", "pip_polygons", "zonal_stats",
+          "subarea", "merge_resume"]
+
+
+@pytest.fixture(scope="module")
+def canonical_hash():
+    # check_entry prepends a fixed path to sys.path at import; keep this
+    # checkout's package first
+    saved = list(sys.path)
+    sys.path.insert(0, SCRIPTS)
+    try:
+        from check_entry import canonical_hash
+    finally:
+        sys.path[:] = saved
+    return canonical_hash
+
+
+@pytest.fixture(scope="module")
+def sf01(sf_dir):
+    """The sf0.01 tables next to the suite's default sf0.001 ones."""
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+@pytest.fixture(scope="module")
+def duck(sf01):
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf01}/{t}.parquet')")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", LEAVES)
+def test_leaf_matches_oracle(spark, sf01, duck, canonical_hash, name):
+    sdf = QUERIES[name](spark, sf01).toPandas()
+    odf = duck.execute(ORACLES[name]).fetchdf()
+    assert len(sdf) == len(odf)
+    assert sorted(sdf.columns) == sorted(odf.columns)
+    assert canonical_hash(sdf) == canonical_hash(odf)

@@ -3,12 +3,11 @@
 - ``auid_per_group``: grouped pandas UDF building the canonical AUID per
   region (sorted cuids -> trie -> BP -> zlib -> blake2b, all stdlib inside
   executors; reference auids/common.py:180-213).
-- ``optimize_cells``: the A9 compaction as a DISTRIBUTED FIXPOINT in pure
-  DataFrame ops — per level, collapse complete sibling sets (all n_side^2
-  children present and none a prefix of a surviving deeper cell) into their
-  parent.  <= max_res iterations, each a hash agg + anti-join; replaces the
-  reference's single-node networkx walk (auids/rhpx.py:108-181, ~350 s at
-  res 9) with shuffle-bound work.
+- ``optimize_cells``: the A9 compaction in pure DataFrame ops, decided for
+  every trie node at once by an exact area sum: one eager input cut, then
+  two aggregates and a window over sibling groups, whatever the cellid depth;
+  replaces the reference's single-node networkx walk
+  (auids/rhpx.py:108-181, ~350 s at res 9) with shuffle-bound work.
 """
 
 from __future__ import annotations
@@ -49,55 +48,77 @@ def auid_per_group(df: DataFrame, group_col: str, cellid_col: str = "cellid",
         build, AUID_SCHEMA)
 
 
-def optimize_cells(df: DataFrame, n_side: int, cellid_col: str = "cellid",
-                   group_col: str | None = None) -> DataFrame:
-    """A9 distributed compaction of a cellid set (optionally per group).
+def optimize_cells(df: DataFrame, n_side: int, cellid_col: str = "cellid") -> DataFrame:
+    """A9 distributed compaction of a cellid set.
 
-    Semantics match dggs.auids.optimize_cuids (verified in tests): repeatedly
-    replace complete pure-leaf sibling sets by their parent; base cells never
-    collapse further."""
+    Semantics match dggs.auids.optimize_cuids (verified in tests): a trie
+    node collapses iff it has exactly n_side^2 children and each of them
+    collapses or is a pure leaf; base cells never collapse further.  That
+    recursion is decided for every node at once:
+
+    1. ``nodes``: one aggregate over every cell's prefixes gives each trie
+       node its in-set flag and its number of children;
+    2. ``cover``: each pure leaf (in the set, no children) adds its area
+       weight (n_side^2)^(16 - length) to every ancestor-or-self, and each
+       node with more than n_side^2 children poisons every
+       ancestor-or-self.  A node is complete (collapses, or is a pure leaf)
+       iff its weight sum equals its own weight and it is not poisoned —
+       without the poison, an over-full child plus an under-full sibling
+       could sum to a false "complete";
+    3. ``marked``: the result is every node that is in the set or complete
+       whose parent is not complete.  A parent is complete iff it has
+       exactly n_side^2 children, all complete, so a window over each
+       sibling group decides it; the root never is.
+
+    After the one eager input cut the plan is lazy with three shuffles
+    (two aggregates, one window), whatever the cellid depth.  Duplicate
+    cellids are absorbed by the first aggregate; null cellids are dropped.
+    A cellid longer than 16 chars fails the action, since its weight would
+    not be exact; weights fit BIGINT for n_side <= 4."""
     k = n_side * n_side
-    keys = ([group_col] if group_col else [])
 
-    # sever the input lineage first: the fixpoint references `cells` several
-    # times per level (children/deeper/parents/doomed), and an unmaterialized
-    # deep expression lineage (e.g. the expression cell encoder) would be
-    # inlined into every copy by CollapseProject — exponential plan blowup
-    cells = df.select(*keys, cellid_col).dropDuplicates(keys + [cellid_col]) \
-        .localCheckpoint(eager=True)
-    max_len = cells.agg(F.max(F.length(cellid_col))).first()[0] or 0
-    # walk levels deepest-first; collapses at level L create parents at L-1,
-    # which the next iteration re-examines — cascades terminate at the base
-    for length in range(max_len, 1, -1):
-        children = cells.filter(F.length(cellid_col) == length)
-        deeper = cells.filter(F.length(cellid_col) > length).select(
-            *keys, F.substring(cellid_col, 1, length).alias(cellid_col))
-        pure = children.join(deeper, keys + [cellid_col], "left_anti")
-        # collapse iff ALL siblings exist (k of them) and ALL are pure leaves
-        # — sibling counting is digit-agnostic, like the reference trie walk
-        totals = (children.groupBy(*keys, F.substring(cellid_col, 1, length - 1).alias("_p"))
-                  .agg(F.count("*").alias("_nt")))
-        pures = (pure.groupBy(*keys, F.substring(cellid_col, 1, length - 1).alias("_p"))
-                 .agg(F.count("*").alias("_np")))
-        parents = (
-            totals.join(pures, keys + ["_p"])
-            .filter((F.col("_nt") == k) & (F.col("_np") == k))
-            .select(*keys, F.col("_p").alias(cellid_col))
-        )
-        doomed = (
-            children.withColumn("_p", F.substring(cellid_col, 1, length - 1))
-            .join(parents.withColumnRenamed(cellid_col, "_p"), keys + ["_p"], "left_semi")
-            .drop("_p")
-        )
-        cells = (
-            cells.join(doomed, keys + [cellid_col], "left_anti")
-            .unionByName(parents)
-            .dropDuplicates(keys + [cellid_col])
-        )
-        # truncate lineage: the loop otherwise builds a plan whose depth is
-        # O(max_res) x (join + agg), which chokes the optimizer at scale
-        cells = cells.localCheckpoint(eager=True)
-    return cells
+    def weight(col: str) -> str:
+        return (f"CASE WHEN length({col}) > 16 THEN raise_error("
+                f"'optimize_cells: cellid longer than 16 chars') "
+                f"ELSE CAST(pow({k}, 16 - length({col})) AS BIGINT) END")
+
+    def prefixes(col: str, lo: str) -> str:
+        """{col}'s prefixes of lengths lo..length(col), one row each."""
+        return (f"explode(transform(sequence({lo}, length({col})),"
+                f" l -> substring({col}, 1, l)))")
+
+    # the one eager cut: the prefix explode and the aggregates reference the
+    # cellid several times, and CollapseProject would inline an
+    # unmaterialized deep expression lineage (e.g. the expression cell
+    # encoder) into every reference (CLAUDE.md constraint 2)
+    cells = df.select(F.col(cellid_col).alias("c")).localCheckpoint(eager=True)
+    # pure leaves and poisoned nodes reach every ancestor-or-self, any other
+    # node only itself (for its in-set flag)
+    reach = f"CASE WHEN n_ch = 0 OR n_ch > {k} THEN 1 ELSE length(n) END"
+    # one statement, so the driver parses and analyzes once: the same steps
+    # as a chain of DataFrame calls cost ~0.15 s more per call in round trips
+    return cells.sparkSession.sql(f"""
+    WITH nodes AS (
+        SELECT q AS n, max(length(c) = length(q)) AS in_set,
+               size(collect_set(CASE WHEN length(c) > length(q)
+                                     THEN substring(c, length(q) + 1, 1) END)) AS n_ch
+        FROM (SELECT c, {prefixes('c', '1')} AS q FROM {{cells}})
+        GROUP BY q),
+    cover AS (
+        SELECT q, max(in_set AND q = n) AS in_set,
+               coalesce(try_sum(CASE WHEN n_ch = 0 THEN {weight('n')} ELSE 0 END)
+                        = {weight('q')} AND NOT max(n_ch > {k}), false) AS complete
+        FROM (SELECT *, {prefixes('n', reach)} AS q FROM nodes)
+        GROUP BY q),
+    marked AS (
+        SELECT q, in_set, complete,
+               length(q) > 1 AND count(*) OVER sib = {k} AND min(complete) OVER sib
+                   AS parent_complete
+        FROM cover
+        WINDOW sib AS (PARTITION BY substring(q, 1, length(q) - 1)))
+    SELECT q AS `{cellid_col}` FROM marked
+    WHERE (in_set OR complete) AND NOT parent_complete
+    """, cells=cells)
 
 
 def subarea_pairs(fine: DataFrame, coarse: DataFrame,

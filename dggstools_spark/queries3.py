@@ -41,6 +41,18 @@ def _docs_cells(spark: SparkSession, sf_dir: str, res: int,
         *(keep or []), "cellid")
 
 
+def _docs_cells_seeded(spark: SparkSession, sf_dir: str, res: int,
+                       plen: int) -> DataFrame:
+    """The docs' cells plus all n_side^2 children of each cell's
+    ``plen``-char prefix, so complete sibling sets occur: one encode, one
+    explode, duplicates kept."""
+    k = DEFAULT_CONFIG.n_side ** 2
+    return _docs_cells(spark, sf_dir, res).select(F.explode(F.expr(
+        f"concat(array(cellid), transform(sequence(0, {k - 1}),"
+        f" d -> concat(substring(cellid, 1, {plen}), CAST(d AS STRING))))"))
+        .alias("cellid"))
+
+
 def _oracle_docs_cells(res: int, keep: list[str]) -> str:
     src = synth.duckdb_lonlat_select("documents", "doc_id", ["doc_id"] + keep)
     return encode_sql.duckdb_encode_select(f"({src})", "lon", "lat", res, keep)

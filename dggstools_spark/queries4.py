@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dggs.config import DEFAULT_CONFIG
 from .functions import encode_sql
-from .queries3 import _docs_cells, _oracle_docs_cells, load
+from .queries3 import _docs_cells, _docs_cells_seeded, _oracle_docs_cells, load
 from .registry import register
 
 
@@ -120,20 +120,12 @@ def _oracle_grid() -> str:
 OPT_RES = 3
 
 
-def _seeded_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cells = _docs_cells(spark, sf_dir, OPT_RES).dropDuplicates()
-    k = DEFAULT_CONFIG.n_side ** 2
-    seeded = cells.select(F.substring("cellid", 1, OPT_RES).alias("cellid")) \
-        .distinct().withColumn("cellid", F.explode(F.expr(
-            f"transform(sequence(0, {k - 1}), d -> concat(cellid, CAST(d AS STRING)))")))
-    return cells.unionByName(seeded).dropDuplicates(["cellid"]) \
-        .localCheckpoint(eager=True)
-
-
 def q_is_optimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.auid import is_optimal, optimize_cells
 
-    both = _seeded_cover(spark, sf_dir)
+    # three consumers below: cut once
+    both = _docs_cells_seeded(spark, sf_dir, OPT_RES, OPT_RES) \
+        .localCheckpoint(eager=True)
     raw_opt = is_optimal(both, DEFAULT_CONFIG.n_side)
     compacted = optimize_cells(both, DEFAULT_CONFIG.n_side)
     comp_opt = is_optimal(compacted, DEFAULT_CONFIG.n_side)

@@ -5,11 +5,14 @@ driver contract is value-checked (zero rows-only rows remain).
 
 Two SQL constructions make the AUID pipeline value-checkable in DuckDB:
 
-1. **Collapse unroll** (`_collapse_sql`): the distributed compaction
-   fixpoint (operators/auid.optimize_cells, reference auids/rhpx.py:108-181)
-   walks levels deepest-first, and the fixture depth is bounded, so the
-   whole fixpoint unrolls into a generated CTE chain — one
+1. **Collapse unroll** (`_collapse_sql`): the kernel's compaction
+   (dggs/auids.optimize_cuids, reference auids/rhpx.py:108-181) can be
+   walked level by level, deepest first, and the fixture depth is bounded,
+   so the walk unrolls into a generated CTE chain — one
    (children / deeper / pure / totals / parents / next-set) block per level.
+   It checks the kernel's semantics independently: the Spark operator
+   (operators/auid.optimize_cells) decides every level at once by an area
+   sum and shares no structure with the chain.
 
 2. **LCP serialization of the BP string**: an optimized cuid set is
    PREFIX-FREE (collapse only replaces complete pure-leaf sibling sets, and
@@ -35,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dggs.config import DEFAULT_CONFIG
 from .operators import auid as auid_ops
-from .queries3 import _docs_cells, _oracle_docs_cells
+from .queries3 import _docs_cells, _docs_cells_seeded, _oracle_docs_cells
 from .registry import register
 
 
@@ -54,14 +57,16 @@ def _lcp_case(a: str, b: str, max_k: int) -> str:
 
 
 def _collapse_sql(keys: list[str], max_len: int, k: int) -> str:
-    """CTE chain replicating optimize_cells on a set named ``s{max_len}``
-    (columns: *keys, cellid; already DISTINCT), producing ``s1``.
+    """CTE chain computing the kernel's compaction
+    (dggs.auids.optimize_cuids) on a set named ``s{max_len}`` (columns:
+    *keys, cellid; already DISTINCT), producing ``s1``.
 
-    One block per level L = max_len..2, deepest first, matching the
-    distributed fixpoint exactly: a level-L child collapses into its parent
-    iff all ``k`` siblings exist at level L and none is a proper prefix of a
-    surviving deeper cell; collapses cascade upward because level L-1 is
-    examined after level L."""
+    One block per level L = max_len..2, deepest first: a level-L child
+    collapses into its parent iff all ``k`` siblings exist at level L and
+    none is a proper prefix of a surviving deeper cell; collapses cascade
+    upward because level L-1 is examined after level L.  The walk is an
+    independent statement of the kernel's semantics, not a mirror of the
+    Spark operator (operators/auid.optimize_cells)."""
     kc = "".join(f"{c}, " for c in keys)  # "source, " or ""
 
     def keq(l: str, r: str) -> str:
@@ -191,13 +196,8 @@ AO_RES = 4  # length-5 cellids; seeds add length-4 ancestors' sibling sets
 def q_auid_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: distributed compaction of the docs' res-4 cell cover, seeded so
     complete sibling sets (and len-4/len-5 mixes) actually occur."""
-    cells = _docs_cells(spark, sf_dir, AO_RES).select("cellid")
-    k = DEFAULT_CONFIG.n_side ** 2
-    seeded = cells.select(F.substring("cellid", 1, 3).alias("cellid")).distinct() \
-        .withColumn("cellid", F.explode(F.expr(
-            f"transform(sequence(0, {k - 1}), d -> concat(cellid, CAST(d AS STRING)))")))
-    both = cells.unionByName(seeded).dropDuplicates(["cellid"])
-    return auid_ops.optimize_cells(both, DEFAULT_CONFIG.n_side)
+    return auid_ops.optimize_cells(
+        _docs_cells_seeded(spark, sf_dir, AO_RES, 3), DEFAULT_CONFIG.n_side)
 
 
 def _oracle_auid_optimize() -> str:

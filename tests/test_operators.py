@@ -153,6 +153,9 @@ GOLDEN_SETS = [
     (["R11", "R12", "R13", "R141", "R142", "R143", "R144"], 2),
     (["N1", "N2", "N3", "N4", "S", "O", "Q"], 2),
     (["R11", "R12", "R13", "R14", "R15", "R16", "R17", "R18", "R19"], 3),
+    # over-full trap: N0 has 5 children, N1 has 3; their pure-leaf areas sum
+    # to N's, but the kernel collapses nothing
+    (["N00", "N01", "N02", "N03", "N04", "N10", "N11", "N12", "N2", "N3"], 2),
 ]
 
 
@@ -165,6 +168,7 @@ def test_optimize_cells_matches_kernel(spark):
 
 
 def test_optimize_cells_random_equivalence(spark):
+    # digits drawn from 0..k, one past the alphabet, so over-full nodes occur
     rng = np.random.default_rng(5)
     for n_side in (2, 3):
         k = n_side * n_side
@@ -172,12 +176,49 @@ def test_optimize_cells_random_equivalence(spark):
         for _ in range(300):
             depth = rng.integers(1, 4)
             cid = "NOPQRS"[rng.integers(0, 6)] + "".join(
-                str(rng.integers(0, k)) for _ in range(depth))
+                str(rng.integers(0, k + 1)) for _ in range(depth))
             cuids.append(cid)
         df = spark.createDataFrame([(c,) for c in cuids], "cellid string")
         got = sorted(r.cellid for r in auid_ops.optimize_cells(df, n_side).collect())
         want = auids_core.optimize_cuids(cuids, n_side)
         assert got == want
+
+
+def test_optimize_cells_rejects_overlong_cellid(spark):
+    """A 17-char cellid would overflow its area weight: the action fails."""
+    df = spark.createDataFrame([("N" + "1" * 16,), ("N2",)], "cellid string")
+    with pytest.raises(Exception, match="longer than 16 chars"):
+        auid_ops.optimize_cells(df, 2).collect()
+
+
+def test_optimize_cells_job_count_independent_of_depth(spark):
+    """A max-length-3 and a max-length-8 input of similar size fire the same
+    number of Spark jobs: no per-level action."""
+    sc = spark.sparkContext
+
+    def cells(length):
+        # up to 27 complete n_side=3 sibling sets at the given length
+        rng = np.random.default_rng(length)
+        parents = {"NOPQRS"[rng.integers(0, 6)]
+                   + "".join(str(d) for d in rng.integers(0, 9, length - 2))
+                   for _ in range(27)}
+        return [p + str(d) for p in sorted(parents) for d in range(9)]
+
+    jobs = []
+    for length in (3, 8):
+        cuids = cells(length)
+        df = spark.createDataFrame([(c,) for c in cuids], "cellid string")
+        group = f"optimize_cells_len{length}"
+        sc.setJobGroup(group, group)
+        try:
+            got = sorted(r.cellid for r in auid_ops.optimize_cells(df, 3).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == auids_core.optimize_cuids(cuids, 3)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] == jobs[1], jobs
 
 
 def test_auid_per_group(spark):

@@ -1,8 +1,8 @@
 """Oracle gate inside Tier-1 for the IVF/IVF-PQ, LM, Gopher, as-of,
-point-in-polygon, subarea and merge/resume leaves: each leaf's Spark result
-must equal its DuckDB ``oracle_sql()`` on row count, column-name set and
-``canonical_hash`` at sf0.01 — the compare ``scripts/check_entry.py`` runs
-for the whole registry."""
+point-in-polygon, subarea, merge/resume and AUID compaction leaves: each
+leaf's Spark result must equal its DuckDB ``oracle_sql()`` on row count,
+column-name set and ``canonical_hash`` at sf0.01 — the compare
+``scripts/check_entry.py`` runs for the whole registry."""
 
 import os
 import sys
@@ -16,7 +16,7 @@ SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 
 LEAVES = ["ivf_topk", "ivf_refined", "ann_ivfpq", "lm_score", "lm_score_sink",
           "gopher_quality", "asof_status", "pip_polygons", "zonal_stats",
-          "subarea", "merge_resume"]
+          "subarea", "merge_resume", "auid_optimize", "is_optimal"]
 
 
 @pytest.fixture(scope="module")

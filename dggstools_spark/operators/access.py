@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .spatial_stats import kring_cells, kring_cells_sql
+from .spatial_stats import _kring_walk, kring_cells_sql
 
 Q9 = 1_000_000_000
 
@@ -45,11 +45,7 @@ def _reach(cells: DataFrame, res: int, kmax: int,
            cross_face: bool) -> DataFrame:
     """(cellid, nbr) pairs with graph distance ≤ kmax, INCLUDING the
     ring-0 self pair, over the given seed cells."""
-    seeds = cells.select("cellid").distinct()
-    kr = kring_cells(seeds, res, kmax, cross_face=cross_face)
-    return (kr.select("cellid", "nbr")
-            .unionByName(seeds.select(
-                "cellid", F.col("cellid").alias("nbr"))))
+    return _kring_walk(cells, res, kmax, cross_face).select("cellid", "nbr")
 
 
 def access_2sfca(pop: DataFrame, fac: DataFrame, res: int, kmax: int,
@@ -143,15 +139,10 @@ def voronoi_assign(cells: DataFrame, fac: DataFrame, res: int,
     if kmax < 1:
         raise ValueError(
             f"voronoi_assign: kmax must be >= 1, got {kmax}")
-    seeds = cells.select("cellid").distinct()
     fc = fac.select(F.col("cellid").alias("nbr"), "fac_id")
-    # kring pairs carry rings 1..kmax; the ring-0 self pair is unioned
-    # explicitly (a facility in the demand cell itself wins outright)
-    kr = (kring_cells(seeds, res, kmax, cross_face=cross_face)
-          .select("cellid", "nbr", "ring")
-          .unionByName(seeds.select(
-              "cellid", F.col("cellid").alias("nbr"),
-              F.lit(0).cast("int").alias("ring"))))
+    # the walk keeps the ring-0 self pair (a facility in the demand cell
+    # itself wins outright)
+    kr = _kring_walk(cells, res, kmax, cross_face)
     return (kr.join(fc, "nbr")
             .groupBy("cellid")
             .agg(F.min(F.struct(F.col("ring").alias("r"),

@@ -21,8 +21,9 @@ numerator nears 1e38).
 
 Scale design (100 TB): the input is the post-aggregation cell table
 (cells ≪ points).  kring_cells is the lazy coordinate walk over the
-OCCUPIED cells (r7 — see spatial_stats.kring_cells: slot-explode
-levels, min-ring aggregate, shuffle bounded at O(cells·kmax²));
+OCCUPIED cells (see spatial_stats.kring_cells: one chain of kmax
+move-or-stay slot explodes, one min-ring aggregate, shuffle bounded at
+O(cells·kmax²));
 the pair sum is one hash equi-join of that relation against the count
 table + one map-side-combining aggregate; the cumulative sum runs over
 kmax+1 rows.  No UDFs, no corpus-wide window.

@@ -815,21 +815,60 @@ def _nbr_slot_exprs(res: int, cross_face: bool) -> "list[str]":
 
 def _coord_neighbors(lat: DataFrame, res: int,
                      cross_face: bool) -> DataFrame:
-    """One queen step on NUMERIC lattice coordinates: ``lat`` =
-    (v, face, row, col) → every neighbor position (v, face, row, col),
-    payload ``v`` carried through.  The coordinate twin of
-    :func:`cell_neighbors` (same neighbor set, _nbr_slot_exprs form)
-    minus the per-step cellid string build/decode — kring composes k of
-    these, and string round-trips between levels made the composed plan
-    explode (see kring_cells)."""
-    slots = _nbr_slot_exprs(res, cross_face)
+    """One move-or-stay step of the k-ring walk on NUMERIC lattice
+    coordinates: ``lat`` = (v, face, row, col, ring) → every queen
+    neighbor position at ``ring + 1`` plus the position itself at
+    ``ring``, payload ``v`` carried through.  The moves are the
+    :func:`cell_neighbors` neighbor set (the _nbr_slot_exprs slots,
+    reused as they are); the stay is one more slot of the same explode,
+    so a step is one Generate with no cellid string build/decode."""
+    slots = _nbr_slot_exprs(res, cross_face) + [
+        "named_struct('f', face, 'r', row, 'c', col, 'a', -1)"]
     return (lat
-            .select("v", F.explode(F.expr(
+            .select("v", "ring", F.explode(F.expr(
                 "filter(array(" + ", ".join(slots)
                 + "), x -> x IS NOT NULL)")).alias("_x"))
             .select("v", F.col("_x.f").alias("face"),
                     F.col("_x.r").alias("row"),
-                    F.col("_x.c").alias("col")))
+                    F.col("_x.c").alias("col"),
+                    F.expr("ring + IF(_x.a < 0, 0, 1)").alias("ring")))
+
+
+def _kring_walk(cells: DataFrame, res: int, k: int,
+                cross_face: bool) -> DataFrame:
+    """(cellid, nbr, ring) with ring 0..k: :func:`kring_cells` plus each
+    seed's own (cellid, cellid, 0) pair, which the walk reaches by
+    staying k times.  A seed whose length is not res+1 or whose face
+    char is not in NOPQRS fails the action (``raise_error`` in the seed
+    projection: same plan, no extra job); a null seed is not checked."""
+    if k < 1:
+        raise ValueError(f"kring_cells: k must be >= 1, got {k}")
+    ok = (f"length(cellid) = {res + 1} AND substring(cellid, 1, 1)"
+          f" IN ('N', 'O', 'P', 'Q', 'R', 'S')")
+    lat0 = (with_lattice(cells.select("cellid").distinct(), res)
+            .select(F.expr(
+                        f"IF(cellid IS NULL OR ({ok}), cellid,"
+                        f" raise_error(concat('kring_cells: malformed"
+                        f" res-{res} seed cellid ', cellid)))").alias("v"),
+                    "face", "row", "col")
+            .localCheckpoint(eager=False))
+    # per-level dedup only for deep rings: at k <= 3 the un-deduped walk
+    # is <= 10^3 rows per seed feeding the final min(ring)'s MAP-SIDE
+    # partial aggregate (which bounds the shuffle at O(seeds·k²)
+    # regardless), and skipping the per-level exchanges measured ~25%
+    # faster warm / ~2x faster cold; from k = 4 the 10^k map-side
+    # blowup wins and the per-level aggregates pay for themselves
+    dedup = k >= 4
+    cur = lat0.withColumn("ring", F.lit(0))
+    for step in range(1, k + 1):
+        cur = _coord_neighbors(cur, res, cross_face)
+        if dedup or step == k:
+            cur = (cur.groupBy("v", "face", "row", "col")
+                   .agg(F.min("ring").alias("ring")))
+    return cur.select(F.col("v").alias("cellid"),
+                      F.expr(cellid_from_rowcol_sql(res, "div"))
+                      .alias("nbr"),
+                      "ring")
 
 
 def kring_cells(cells: DataFrame, res: int, k: int,
@@ -837,67 +876,34 @@ def kring_cells(cells: DataFrame, res: int, k: int,
     """(cellid, nbr, ring): every grid cell within queen GRAPH distance
     ``k`` of each input cell, with ``ring`` = exact minimum hop count
     (1..k) — the H3 `grid_disk`/`k_ring` surface on the rHEALPix lattice,
-    cross-face CORRECT (TODO_r7 #3; radius 1 = :func:`cell_neighbors`).
+    cross-face CORRECT (radius 1 = :func:`cell_neighbors`).
 
     Semantics: distance is minimum #steps in the queen adjacency graph
     (``cell_neighbors`` edges, seam-glued when ``cross_face``).  On a
     face interior this equals Chebyshev distance; across seams and at
     the 24 cube corners the planar closed form does not exist, so the
-    ring index is computed by breadth-first EXPANSION — exactly k rounds
-    of the radius-1 relation with an anti-join against already-reached
-    cells (min-distance by construction: a cell first reached in round r
-    has ring r).
+    ring index comes from a walk over the graph.
 
-    Scale shape (100 TB, r7 rewrite): the walk runs on NUMERIC lattice
-    coordinates — seeds are decoded to (face, row, col) once
-    (checkpointed: one eager job that also cuts the encode lineage,
-    CLAUDE.md constraint 2), each of the k levels is the offsets
-    explode + the O(sqrt) seam branch (broadcast 24-row gluing table)
-    + a distinct over (seed, face, row, col), and the nbr cellid
-    STRING is built exactly once from the min-ring aggregate at the
-    end.  Level size is O(seeds·k²) after dedup, never O(seeds·9^k).
-    The whole expansion is LAZY: a single min(ring) aggregate over the
-    per-level walk relations replaces the old per-round anti-join +
-    eager ``localCheckpoint`` (the k-round BFS issued k blocking jobs
-    of tiny shuffles; min walk length = graph distance, since a walk
-    of exactly r steps exists iff one of length dist does and no
-    shorter walk exists below dist).  Keeping the levels numeric is
-    what makes the lazy form cheap — a string-level composition
-    re-inlined build→decode→build digit expressions per level and
-    measured SLOWER than the BFS it replaced (plan text grew to
-    ~170 KB; codegen/planning dominated these cell-table queries)."""
-    if k < 1:
-        raise ValueError(f"kring_cells: k must be >= 1, got {k}")
-    lat0 = (with_lattice(cells.select("cellid").distinct(), res)
-            .select(F.col("cellid").alias("v"), "face", "row", "col")
-            .localCheckpoint(eager=False))
-    # per-level dedup only for deep rings: at k <= 3 the un-deduped walk
-    # cascade is <= 9^3 rows per seed feeding the final min(ring)'s
-    # MAP-SIDE partial aggregate (which bounds the shuffle at
-    # O(seeds·k²) regardless), and skipping the k distinct exchanges
-    # measured ~25% faster warm / ~2x faster cold; from k = 4 the 9^k
-    # map-side blowup wins and the distincts pay for themselves
-    dedup = k >= 4
-    cur = _coord_neighbors(lat0, res, cross_face)
-    if dedup:
-        cur = cur.distinct()
-    levels = [cur.withColumn("ring", F.lit(1).cast("int"))]
-    for r in range(2, k + 1):
-        cur = _coord_neighbors(cur, res, cross_face)
-        if dedup:
-            cur = cur.distinct()
-        levels.append(cur.withColumn("ring", F.lit(r).cast("int")))
-    allr = levels[0]
-    for lv in levels[1:]:
-        allr = allr.unionByName(lv)
-    best = (allr.groupBy("v", "face", "row", "col")
-            .agg(F.min("ring").alias("ring")))
-    return (best
-            .select(F.col("v").alias("cellid"),
-                    F.expr(cellid_from_rowcol_sql(res, "div"))
-                    .alias("nbr"),
-                    "ring")
-            .filter(F.col("nbr") != F.col("cellid")))
+    The walk is ONE chain of k move-or-stay steps on NUMERIC lattice
+    coordinates (v, face, row, col, ring).  Seeds are decoded to
+    (face, row, col) once, at ring 0, behind a lazy lineage cut.
+    Each step explodes the queen slots plus a stay
+    slot and adds 1 to ``ring`` on a move (:func:`_coord_neighbors`);
+    one min(ring) aggregate over (v, face, row, col) then yields the
+    exact graph distance: every walk reaching p makes at least dist(p)
+    moves, and a shortest path padded with k − dist stays makes exactly
+    dist(p).  The nbr cellid STRING is built once, from that aggregate.
+    From k = 4 each step ends in the same min(ring) aggregate, which
+    keeps a level at O(seeds·k²) rows instead of O(seeds·10^k).
+
+    There is no union of per-level relations: in a union L1 ∪ … ∪ Lk
+    with each Lr built on Lr−1, level r is derived k−r+1 times, so the
+    plan would hold k(k+1)/2 explodes of the 20-slot neighbor
+    expression, each analysed, optimized and compiled separately; the
+    chain holds k.  Keeping the levels numeric is what keeps the lazy form cheap —
+    a string-level composition re-inlines build→decode→build digit
+    expressions per level."""
+    return _kring_walk(cells, res, k, cross_face).filter(F.col("ring") > 0)
 
 
 def kring_cells_sql(source_sql: str, res: int, k: int,

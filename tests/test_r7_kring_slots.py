@@ -1,14 +1,16 @@
-"""Focused tests for the r7 kring/neighbor internals rewrite.
+"""Focused tests for the kring/neighbor internals.
 
-r7 replaced the broadcast-join seam branch of cell_neighbors /
-_xface_contrib with compiled CASE slot expressions (_nbr_slot_exprs)
-and rewrote kring_cells as a lazy numeric-coordinate walk.  These tests
-pin the rewritten internals against two independent references:
+cell_neighbors / _xface_contrib enumerate seam neighbors with compiled
+CASE slot expressions (_nbr_slot_exprs), and kring_cells is one lazy
+chain of k move-or-stay steps over numeric lattice coordinates (one
+slot explode per step, one min(ring) aggregate).  These tests pin those
+internals against two independent references:
 
 - the DuckDB twin (cell_neighbors_sql / kring_cells_sql keep the
-  original join-form SQL — the frozen oracle dialect), and
+  original join-form SQL and unrolled BFS — the frozen oracle dialect),
+  and
 - first-principles properties (symmetry, degree counts, ring-1 ==
-  radius-1 relation).
+  radius-1 relation, one Generate per step in the plan).
 """
 
 from __future__ import annotations
@@ -62,26 +64,60 @@ def test_cell_neighbors_symmetry_and_degree(spark):
     assert sum(1 for d in deg.values() if d == 7) == 24  # cube corners
 
 
-@pytest.mark.parametrize("k", [1, 2, 3])
-def test_kring_walk_matches_duckdb_bfs(spark, k):
+@pytest.mark.parametrize("res,k,cross_face,full", [
+    pytest.param(2, 1, True, False, id="1"),
+    pytest.param(2, 2, True, False, id="2"),
+    pytest.param(2, 3, True, False, id="3"),
+    pytest.param(1, 1, True, True, id="res1-full-k1"),
+    pytest.param(1, 2, True, True, id="res1-full-k2"),
+    pytest.param(1, 3, True, True, id="res1-full-k3"),
+    pytest.param(1, 4, True, True, id="res1-full-k4"),
+    pytest.param(2, 3, False, False, id="res2-k3-noseam"),
+])
+def test_kring_walk_matches_duckdb_bfs(spark, res, k, cross_face, full):
     """The lazy walk's min-ring equals the DuckDB unrolled-BFS twin on a
-    seeded subset (rings are exact min-hop graph distances)."""
-    res = 2
-    seeds = _full_lattice(spark, res).filter(
-        F.expr("substring(cellid, 2, 2) IN ('00', '44', '88', '08')"))
+    seeded subset or the full lattice (rings are exact min-hop graph
+    distances), on the per-step dedup path (k >= 4) and without seam
+    gluing too."""
+    seeds = _full_lattice(spark, res)
+    if not full:
+        seeds = seeds.filter(
+            F.expr("substring(cellid, 2, 2) IN ('00', '44', '88', '08')"))
     got = sorted((r.cellid, r.nbr, r.ring)
-                 for r in kring_cells(seeds, res, k).collect())
+                 for r in kring_cells(seeds, res, k, cross_face).collect())
     ids = [r.cellid for r in seeds.collect()]
     con = duckdb.connect()
     con.execute("CREATE TABLE seeds (cellid VARCHAR)")
     con.executemany("INSERT INTO seeds VALUES (?)", [(i,) for i in ids])
     want = sorted(map(tuple, con.execute(
-        kring_cells_sql("(SELECT cellid FROM seeds)", res, k)).fetchall()))
+        kring_cells_sql("(SELECT cellid FROM seeds)", res, k,
+                        cross_face)).fetchall()))
     assert got == want
 
 
+def test_kring_plan_has_one_generate_per_step(spark):
+    """The walk is one chain: the optimized plan of a k = 3 ring holds
+    exactly 3 Generate nodes (a union of per-level relations, each built
+    on the previous one, would hold 1 + 2 + 3 = 6)."""
+    seeds = _full_lattice(spark, 2).filter(F.expr("cellid = 'Q44'"))
+    plan = kring_cells(seeds, 2, 3)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    gens = [ln for ln in plan.splitlines()
+            if ln.lstrip(" :+-").startswith("Generate ")]
+    assert len(gens) == 3, plan
+
+
+@pytest.mark.parametrize("cellid", ["N4", "N444", "X44"])
+def test_kring_rejects_malformed_seed(spark, cellid):
+    """A res-2 seed of the wrong length or with a face char outside
+    NOPQRS fails the action instead of yielding no or wrong cells."""
+    seeds = spark.createDataFrame([(cellid,)], "cellid string")
+    with pytest.raises(Exception, match="malformed res-2 seed cellid"):
+        kring_cells(seeds, 2, 1).collect()
+
+
 def test_kring_dedup_threshold_equivalence(spark):
-    """k >= 4 flips the per-level distinct on — results must be
+    """k >= 4 flips the per-step min(ring) aggregate on — results must be
     identical to the k = 3 rings plus the new ring (the dedup is a pure
     execution-shape choice)."""
     res = 2

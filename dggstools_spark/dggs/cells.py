@@ -125,14 +125,18 @@ def cellids_to_face_rowcol(cellids, cfg: RHEALPixConfig = DEFAULT_CONFIG):
     arr = np.asarray(cellids, dtype=object)
     if arr.size == 0:
         return 0, np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
-    lengths = {len(c) for c in arr}
-    if len(lengths) != 1:
-        raise ValueError(f"cellids must share one resolution, got lengths {sorted(lengths)}")
-    length = lengths.pop()
+    # one join with a NUL after each id; the NUL positions give every
+    # row's length without per-row Python
+    joined = np.frombuffer(("\0".join(arr.tolist()) + "\0").encode("ascii"), np.uint8)
+    ends = np.flatnonzero(joined == 0)
+    lengths = np.diff(ends, prepend=-1) - 1
+    if len(ends) != len(arr) or lengths.min() != lengths.max() or lengths[0] == 0:
+        raise ValueError(f"cellids must be non-empty, NUL-free and share one "
+                         f"resolution, got lengths {np.unique(lengths).tolist()}")
+    length = int(lengths[0])
     res = length - 1
     n = cfg.n_side
-    joined = "".join(arr.tolist()).encode("ascii")
-    buf = np.frombuffer(joined, dtype=np.uint8).reshape(len(arr), length)
+    buf = joined.reshape(len(arr), length + 1)
     face = np.searchsorted(np.frombuffer(b"NOPQRS", dtype=np.uint8), buf[:, 0])
     row = np.zeros(len(arr), dtype=np.int64)
     col = np.zeros(len(arr), dtype=np.int64)

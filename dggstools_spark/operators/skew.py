@@ -14,11 +14,15 @@ Division of labor, measured in scripts/skew_demo.py (numbers in SCALE.md):
   the pushdown doesn't cover.
 - **Joins**: AQE skew-join splitting (enabled in session.py) splits a hot
   sort-merge partition at runtime.
-- **Writes / per-partition work**: ``salted_repartition`` — a partitionBy
-  write of a hot tile otherwise funnels through ONE task; salting by a
-  row-derived key splits it into n_salt tasks writing into the same
-  partition directory.  This is the "salted repartitioning on cell-prefix
-  keys" of the north rule.
+- **Cell-table writes**: ``cells_io.write_cells`` applies a
+  ``rebalance`` hint on ``cell_prefix`` before its partitionBy write:
+  each prefix lands in one task and one file, and AQE's rebalance splits
+  a hot prefix over several tasks (the adaptive half of the north rule).
+- **Other per-partition work**: ``salted_repartition`` — a hot key
+  otherwise funnels through ONE task; salting by a row-derived key splits
+  it into n_salt tasks.  This is the "salted repartitioning on cell-prefix
+  keys" of the north rule, for the work AQE's rebalance does not cover
+  (a custom partitionBy write, mapInPandas or applyInPandas per prefix).
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ rHEALPix cells, neighborhood operations become pure relational algebra on
 the (face, row, col) lattice — no geometry library, no spatial index.
 Cell → lattice uses the closed form of the cellid digit string: digit d
 at depth i contributes (d div 3, d mod 3) · 3^(res-1-i) to (row, col)
-(dggs/cells.cellids_to_face_rowcol:137-142 is the numpy twin; the SQL
+(the digit loop of dggs/cells.cellids_to_face_rowcol is the numpy twin; the SQL
 here is digit-for-digit the same fold, so both engines derive identical
 lattice coordinates).
 

@@ -1,10 +1,19 @@
 """Cell-table storage (SURVEY S3/S4/S6/S10 analogues).
 
-Layout: parquet partitioned by cell prefix (the Iceberg truncate-transform
-layout), so cell-keyed joins and rollups prune partitions, plus a JSON
-``_meta`` sidecar carrying the reference's gdf.attrs contract
-(/root/reference/dggstools/rhpx/rhpx_gdf_helper.py:149-186 and
-utils/storage.py:51-66 gpkg_metadata)."""
+Layout: ``data/cell_prefix=…/`` parquet partitioned by cell prefix (the
+Iceberg truncate-transform layout), so cell-keyed joins and rollups prune
+partitions, plus a JSON ``_meta.json`` sidecar carrying the reference's
+gdf.attrs contract (rhpx_gdf_helper.py:149-186 and utils/storage.py:51-66
+gpkg_metadata), the prefix length and the written schema.
+
+The store costs what its data costs: ``write_cells`` rebalances rows by
+prefix, so a prefix is one file rather than one file per write task, and
+``read_cells`` takes the schema from the sidecar (no schema-inference
+job) and, for a prefix read, opens the prefix directories it needs
+directly.  That read fires no directory-listing job while it opens at
+most 32 directories (``spark.sql.sources.parallelPartitionDiscovery
+.threshold``); above that Spark lists them in a parallel job
+(measurements in SCALE.md, Data layout)."""
 
 from __future__ import annotations
 
@@ -12,6 +21,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..dggs.config import RHEALPixConfig, DEFAULT_CONFIG
 
@@ -39,33 +49,57 @@ def build_attrs(res_idx: int, nbands: int, nodata: float | None,
 
 
 def write_cells(df: DataFrame, path: str, attrs: dict,
-                cellid_col: str = "cellid", prefix_len: int = 2,
-                mode: str = "overwrite") -> None:
-    """Write a cell table partitioned by cellid prefix + _meta sidecar."""
-    out = df.withColumn("cell_prefix", F.substring(cellid_col, 1, prefix_len))
-    out.write.mode(mode).partitionBy("cell_prefix").parquet(f"{path}/data")
+                prefix_len: int = 2) -> None:
+    """Overwrite a cell table at ``path``: parquet partitioned by the first
+    ``prefix_len`` chars of ``cellid`` (``data/cell_prefix=…/``) plus the
+    ``_meta.json`` sidecar (attrs, prefix_len and the written schema).
+
+    The rows are rebalanced by ``cell_prefix`` before the partitioned
+    write, so each prefix lands in one task and one file instead of one
+    file per (task, prefix) pair.  AQE's rebalance still splits a hot
+    prefix over several tasks and coalesces small ones.  The overwrite is
+    static whatever the session's partitionOverwriteMode, so no prefix of
+    an older table survives beside the new rows and the recorded schema."""
+    out = (df.withColumn("cell_prefix", F.substring("cellid", 1, prefix_len))
+           .hint("rebalance", "cell_prefix"))
+    (out.write.mode("overwrite").option("partitionOverwriteMode", "static")
+     .partitionBy("cell_prefix").parquet(f"{path}/data"))
     os.makedirs(path, exist_ok=True)
     with open(f"{path}/_meta.json", "w") as f:
-        json.dump({"attrs": attrs, "prefix_len": prefix_len}, f, indent=2)
+        json.dump({"attrs": attrs, "prefix_len": prefix_len,
+                   "schema": out.schema.jsonValue()}, f, indent=2)
 
 
 def read_cells(spark: SparkSession, path: str,
-               prefix: str | None = None,
-               cellid_col: str = "cellid") -> tuple[DataFrame, dict]:
-    """Read a cell table (+attrs).  ``prefix`` prunes partitions; a prefix
-    FINER than the stored partition prefix_len additionally row-filters on
-    the cellid (a bare startswith on the partition column would silently
-    return nothing: 'N1'.startswith('N12') is false for every partition)."""
-    df = spark.read.parquet(f"{path}/data")
+               prefix: str | None = None) -> tuple[DataFrame, dict]:
+    """Read a cell table (+attrs), optionally only the cells under ``prefix``.
+
+    The schema comes from the sidecar, so the read runs no footer job to
+    infer it; a sidecar without one (a table written before it was
+    recorded) pays one inference job.  With a ``prefix`` it lists
+    ``data/`` itself (os.listdir) and opens only the ``cell_prefix=…``
+    directories whose value starts with ``prefix[:prefix_len]``: no
+    partition pruning left to do, no listing job while at most 32
+    directories match (more fire Spark's parallel listing job), and a
+    prefix matching no directory gives an empty frame with the table's
+    columns.  A prefix FINER than the stored prefix_len also row-filters
+    on the cellid (a bare startswith on the partition value would return
+    nothing: 'N1'.startswith('N12') is false)."""
     with open(f"{path}/_meta.json") as f:
         meta = json.load(f)
-    if prefix:
-        plen = int(meta.get("prefix_len", 2))
-        if len(prefix) <= plen:
-            df = df.filter(F.col("cell_prefix").startswith(prefix))
-        else:
-            df = df.filter((F.col("cell_prefix") == prefix[:plen])
-                           & F.col(cellid_col).startswith(prefix))
+    plen = int(meta.get("prefix_len", 2))
+    data = f"{path}/data"
+    schema = (StructType.fromJson(meta["schema"]) if "schema" in meta
+              else spark.read.parquet(data).schema)
+    reader = spark.read.schema(schema).option("basePath", data)
+    if not prefix:
+        df = reader.parquet(data)
+    else:
+        dirs = sorted(f"{data}/{d}" for d in os.listdir(data)
+                      if d.startswith(f"cell_prefix={prefix[:plen]}"))
+        df = reader.parquet(*dirs) if dirs else spark.createDataFrame([], schema)
+        if len(prefix) > plen:
+            df = df.filter(F.col("cellid").startswith(prefix))
     return df.drop("cell_prefix"), meta["attrs"]
 
 

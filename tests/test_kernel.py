@@ -148,6 +148,11 @@ class TestCellEncoding:
         assert res == 3
         assert face.tolist() == [3, 3, 3]
 
+    @pytest.mark.parametrize("ids", [["N1", "N12"], ["", ""], ["N1", "", "N"]])
+    def test_face_rowcol_rejects_mixed_or_empty(self, ids):
+        with pytest.raises(ValueError, match="share one resolution"):
+            cellids_to_face_rowcol(ids, CFG3)
+
     def test_nside2(self):
         s = HALF_SIDE
         w = s / 2

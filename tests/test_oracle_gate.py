@@ -1,6 +1,7 @@
 """Oracle gate inside Tier-1 for the IVF/IVF-PQ, LM, Gopher, as-of,
-point-in-polygon, subarea, merge/resume, AUID compaction and k-ring
-(kring_xface and the point-pattern/accessibility leaves on it): each
+point-in-polygon, subarea, merge/resume, AUID compaction, k-ring
+(kring_xface and the point-pattern/accessibility leaves on it) and
+cell-store (cells_io: write, then prefix read) leaves: each
 leaf's Spark result must equal its DuckDB ``oracle_sql()`` on row count,
 column-name set and ``canonical_hash`` at sf0.01 — the compare
 ``scripts/check_entry.py`` runs for the whole registry."""
@@ -19,7 +20,7 @@ LEAVES = ["ivf_topk", "ivf_refined", "ann_ivfpq", "lm_score", "lm_score_sink",
           "gopher_quality", "asof_status", "pip_polygons", "zonal_stats",
           "subarea", "merge_resume", "auid_optimize", "is_optimal",
           "kring_xface", "ripley_k", "g_function", "cross_k", "fj_function",
-          "access_2sfca", "voronoi_territories"]
+          "access_2sfca", "voronoi_territories", "cells_io"]
 
 
 @pytest.fixture(scope="module")

@@ -106,12 +106,128 @@ def test_cells_io_roundtrip(spark, tmp_path):
     attrs = cells_io.build_attrs(res_idx=2, nbands=1, nodata=-9999.0)
     cells_io.write_cells(df, path, attrs)
     back, attrs2 = cells_io.read_cells(spark, path)
-    assert back.count() == df.dropDuplicates(["cellid"]).count() or back.count() == 27
+    assert sorted(back.collect()) == sorted(df.collect())
     assert attrs2["res_idx"] == 2
     assert attrs2["rhealpixdggs"]["n_side"] == 3
     pruned, _ = cells_io.read_cells(spark, path, prefix="Q1")
-    assert pruned.count() == df.filter(F.col("cellid").startswith("Q1")).count()
+    assert sorted(pruned.collect()) == sorted(
+        df.filter(F.col("cellid").startswith("Q1")).collect())
     assert cells_io.read_attrs(path)["nbands"] == 1
+
+
+def _all_prefix_table(spark, tmp_path):
+    """A cell table covering all 54 res-1 prefixes (more than Spark's
+    32-path parallel-listing threshold), written from 4 input partitions
+    that each hold every prefix."""
+    prefixes = [f + str(d) for f in "NOPQRS" for d in range(9)]
+    rows = [(prefixes[i % 54] + str(i // 54), float(i)) for i in range(216)]
+    df = spark.sparkContext.parallelize(rows, 4).toDF("cellid string, band1 double")
+    path = str(tmp_path / "cells54")
+    cells_io.write_cells(df, path, cells_io.build_attrs(2, 1, None), prefix_len=2)
+    return df, path
+
+
+def test_write_cells_one_file_per_prefix(spark, tmp_path):
+    """The rebalance by cell_prefix puts each prefix in one task, so the
+    partitioned write leaves one parquet file per prefix, not one per
+    (input task, prefix) pair."""
+    _, path = _all_prefix_table(spark, tmp_path)
+    per_dir = {}
+    for d in os.listdir(f"{path}/data"):
+        if d.startswith("cell_prefix="):
+            per_dir[d] = sum(n.endswith(".parquet")
+                             for n in os.listdir(f"{path}/data/{d}"))
+    assert len(per_dir) == 54
+    assert set(per_dir.values()) == {1}
+
+
+def _jobs_while(spark, group, fn):
+    """Run ``fn()`` inside job group ``group``; return (its result, the
+    number of Spark jobs it fired)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_cells_prefix_fires_no_job(spark, tmp_path):
+    """A prefix read takes its schema from the sidecar and opens only the
+    matching prefix directories, which it lists itself: building it runs
+    no schema-inference or listing job."""
+    df, path = _all_prefix_table(spark, tmp_path)
+    (pruned, _), jobs = _jobs_while(
+        spark, "read_cells_prefix", lambda: cells_io.read_cells(spark, path, prefix="Q1"))
+    assert jobs == 0
+    full, _ = cells_io.read_cells(spark, path)
+    want = full.filter(F.col("cellid").startswith("Q1"))
+    assert sorted(pruned.collect()) == sorted(want.collect())
+    assert len(want.collect()) == 4
+
+
+def test_read_cells_prefix_over_32_dirs_fires_listing_job(spark, tmp_path):
+    """The no-job prefix read holds up to 32 directories: prefix 'N' at
+    prefix_len 3 opens 81, and Spark lists those in one parallel job
+    (still no schema-inference job)."""
+    rows = [(f"N{a}{b}{c}", float(c)) for a in range(9) for b in range(9) for c in range(2)]
+    df = spark.createDataFrame(rows, "cellid string, band1 double")
+    path = str(tmp_path / "cells81")
+    cells_io.write_cells(df, path, cells_io.build_attrs(3, 1, None), prefix_len=3)
+    (back, _), jobs = _jobs_while(
+        spark, "read_cells_81", lambda: cells_io.read_cells(spark, path, prefix="N"))
+    assert jobs == 1
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_write_cells_overwrite_is_static(spark, tmp_path):
+    """A rewrite with fewer prefixes replaces the whole table even when
+    the session's partitionOverwriteMode is dynamic (merge_resume sets
+    it): no prefix directory of the older table survives."""
+    _, path = _all_prefix_table(spark, tmp_path)
+    small = spark.createDataFrame([("Q10", 1.0), ("Q11", 2.0)], "cellid string, band1 double")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        cells_io.write_cells(small, path, cells_io.build_attrs(2, 1, None), prefix_len=2)
+    finally:
+        spark.conf.set(key, before)
+    dirs = [d for d in os.listdir(f"{path}/data") if d.startswith("cell_prefix=")]
+    assert dirs == ["cell_prefix=Q1"]
+    back, _ = cells_io.read_cells(spark, path)
+    assert sorted(back.collect()) == sorted(small.collect())
+
+
+def test_read_cells_unmatched_prefix_is_empty(spark, tmp_path):
+    _, path = _all_prefix_table(spark, tmp_path)
+    for prefix in ("Q9", "Q91"):
+        none, _ = cells_io.read_cells(spark, path, prefix=prefix)
+        assert none.columns == ["cellid", "band1"]
+        assert none.count() == 0
+
+
+def test_read_cells_sidecar_without_schema(spark, tmp_path):
+    """A table whose sidecar records no schema (written before the schema
+    was recorded) still reads, by inference."""
+    import json
+
+    df, path = _all_prefix_table(spark, tmp_path)
+    with open(f"{path}/_meta.json") as f:
+        meta = json.load(f)
+    meta.pop("schema", None)
+    with open(f"{path}/_meta.json", "w") as f:
+        json.dump(meta, f)
+    back, attrs = cells_io.read_cells(spark, path)
+    assert attrs["res_idx"] == 2
+    assert sorted(back.collect()) == sorted(df.collect())
+    for prefix in ("Q", "Q1", "Q10"):
+        pruned, _ = cells_io.read_cells(spark, path, prefix=prefix)
+        assert sorted(pruned.collect()) == sorted(
+            df.filter(F.col("cellid").startswith(prefix)).collect()), prefix
 
 
 def test_media_feature_extraction(spark):

@@ -5,7 +5,8 @@
 2. span-sequence pass-through: the interleaved docs' span column survives the
    full encode+join+agg pipeline byte-identical (BASELINE input_hint
    per-row invariant).
-3. centroid UDF roundtrip through the planar UDFs.
+3. centroid UDF roundtrip through the planar UDFs, and its decode of a
+   batch mixing resolutions and nulls.
 """
 
 import pytest
@@ -65,6 +66,29 @@ def test_centroid_udf_roundtrip(spark, docs):
         .withColumn("cell2", reenc(F.col("c.x"), F.col("c.y")))
     )
     assert df.filter(F.col("cellid") != F.col("cell2")).count() == 0
+
+
+@pytest.mark.parametrize("geodetic", [False, True])
+def test_centroid_udf_mixed_resolution_batch(spark, geodetic):
+    """One Arrow batch mixing resolutions 0-5, an empty cellid and a null
+    decodes each cell exactly as a one-cell kernel call does; the empty
+    and null cells give no coordinates."""
+    import math
+
+    from dggstools_spark.dggs import cells
+
+    ids = ["N", "S8", "Q301", None, "O00000", "", "P1", "R12345", "N", None, "Q888"]
+    df = spark.createDataFrame([(i, c) for i, c in enumerate(ids)],
+                               "i int, cellid string").coalesce(1)
+    got = {r.i: (r.c[0], r.c[1]) for r in
+           df.select("i", cell_centroid_udf(geodetic=geodetic)("cellid").alias("c")).collect()}
+    decode = cells.cellid_to_lonlat_centroid if geodetic else cells.cellid_to_planar_centroid
+    for i, c in enumerate(ids):
+        if not c:
+            assert all(v is None or math.isnan(v) for v in got[i]), (c, got[i])
+            continue
+        x, y = decode([c])
+        assert got[i] == (float(x[0]), float(y[0])), c
 
 
 def test_planar_udf_matches_expr(spark, docs):

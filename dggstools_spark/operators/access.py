@@ -56,6 +56,7 @@ def access_2sfca(pop: DataFrame, fac: DataFrame, res: int, kmax: int,
     if kmax < 1:
         raise ValueError(f"access_2sfca: kmax must be >= 1, got {kmax}")
     cells = pop.select("cellid").unionByName(fac.select("cellid"))
+    # dedup: 2 consumers (the catchment sums of steps 1 and 2)
     rel = _reach(cells, res, kmax, cross_face).localCheckpoint(
         eager=True)
     # step 1: population within each facility's catchment

@@ -4,8 +4,8 @@
   region (sorted cuids -> trie -> BP -> zlib -> blake2b, all stdlib inside
   executors; reference auids/common.py:180-213).
 - ``optimize_cells``: the A9 compaction in pure DataFrame ops, decided for
-  every trie node at once by an exact area sum: one eager input cut, then
-  two aggregates and a window over sibling groups, whatever the cellid depth;
+  every trie node at once by an exact area sum: two aggregates and a
+  window over sibling groups in one lazy plan, whatever the cellid depth;
   replaces the reference's single-node networkx walk
   (auids/rhpx.py:108-181, ~350 s at res 9) with shuffle-bound work.
 """
@@ -70,9 +70,9 @@ def optimize_cells(df: DataFrame, n_side: int, cellid_col: str = "cellid") -> Da
        exactly n_side^2 children, all complete, so a window over each
        sibling group decides it; the root never is.
 
-    After the one eager input cut the plan is lazy with three shuffles
-    (two aggregates, one window), whatever the cellid depth.  Duplicate
-    cellids are absorbed by the first aggregate; null cellids are dropped.
+    The plan is lazy with three shuffles (two aggregates, one window),
+    whatever the cellid depth.  Duplicate cellids are absorbed by the
+    first aggregate; null cellids are dropped.
     A cellid longer than 16 chars fails the action, since its weight would
     not be exact; weights fit BIGINT for n_side <= 4."""
     k = n_side * n_side
@@ -87,11 +87,7 @@ def optimize_cells(df: DataFrame, n_side: int, cellid_col: str = "cellid") -> Da
         return (f"explode(transform(sequence({lo}, length({col})),"
                 f" l -> substring({col}, 1, l)))")
 
-    # the one eager cut: the prefix explode and the aggregates reference the
-    # cellid several times, and CollapseProject would inline an
-    # unmaterialized deep expression lineage (e.g. the expression cell
-    # encoder) into every reference (CLAUDE.md constraint 2)
-    cells = df.select(F.col(cellid_col).alias("c")).localCheckpoint(eager=True)
+    cells = df.select(F.col(cellid_col).alias("c"))
     # pure leaves and poisoned nodes reach every ancestor-or-self, any other
     # node only itself (for its in-set flag)
     reach = f"CASE WHEN n_ch = 0 OR n_ch > {k} THEN 1 ELSE length(n) END"

@@ -152,8 +152,7 @@ def bpe_apply(new_df: DataFrame, text_col: str,
     the same word key, so the chain runs as ONE job with a single
     Exchange followed by R in-partition sort+window cascades (r7: the
     old per-round eager localCheckpoint issued R blocking jobs)."""
-    seq = _with_nxt(init_seq(word_table(new_df, text_col))) \
-        .localCheckpoint(eager=False)
+    seq = _with_nxt(init_seq(word_table(new_df, text_col)))
     for row in merges.orderBy("round").collect():
         seq = apply_pair(seq, row.left, row.right)
     return seq.drop("_nxt")
@@ -171,12 +170,11 @@ def bpe_train(df: DataFrame, text_col: str,
 
     Per round: one 1-row aggregate read of the checkpointed table (the
     argmax is driver control flow — inherent to exact BPE) and one
-    window-cascade job materializing the rewritten table (the
-    checkpoint doubles as the lineage cut, CLAUDE.md constraint 2
-    family)."""
+    window-cascade job materializing the rewritten table."""
     if rounds < 1:
         raise ValueError(f"bpe_train: rounds must be >= 1, got {rounds}")
     spark = df.sparkSession
+    # dedup: 2 consumers (round 1's best-pair read and its rewrite)
     seq = _with_nxt(init_seq(word_table(df, text_col))) \
         .localCheckpoint(eager=False)
     rows = []
@@ -187,9 +185,9 @@ def bpe_train(df: DataFrame, text_col: str,
             raise ValueError(
                 f"bpe_train: no adjacent pairs left at round {rnd}")
         rows.append((rnd, b[0].l, b[0].r, b[0].pair_count))
-        # eager=False: the next round's 1-row best-pair read (or the
-        # caller's action) materializes the rewrite — same lineage cut,
-        # one fewer blocking job per round
+        # fixpoint round: the rewrite ends the round.  eager=False: the
+        # next round's 1-row best-pair read (or the caller's action)
+        # materializes it — one fewer blocking job per round
         seq = apply_pair(seq, b[0].l, b[0].r) \
             .localCheckpoint(eager=False)
     merges = spark.createDataFrame(

@@ -25,8 +25,8 @@ Scale shape (100 TB): R rounds, each ONE projection over the corpus
 the HOF fold per constraint 15; the flat variant measured two ~16.5 KB
 volcano-fallback methods and was slower) + a min-struct argmax
 aggregate; the running min-distance column makes each round O(N)
-instead of O(N·|chosen|).  localCheckpoint per round (constraint-2
-fixpoint discipline); the R driver-side 1-row reads are control flow,
+instead of O(N·|chosen|).  localCheckpoint per round (the state ends
+each fixpoint round); the R driver-side 1-row reads are control flow,
 the same budget as bpe_train.
 
 Reference parity: no counterpart; extends the ANN/curation family
@@ -66,6 +66,7 @@ def kcenter_select(emb: DataFrame, id_col: str, vec_col: str,
     base = (emb.select(F.col(id_col).alias("vec_id"),
                        F.col(vec_col).alias("embedding"))
             .withColumn("_n", F.expr(nrm_spark("embedding", dim)))
+            # dedup: 2 consumers (the seed pick and round 2's state)
             .localCheckpoint(eager=True))
     seed = base.orderBy("vec_id").limit(1).collect()[0]
     chosen = [(1, seed.vec_id, -1)]
@@ -81,6 +82,7 @@ def kcenter_select(emb: DataFrame, id_col: str, vec_col: str,
                  .select("vec_id", "embedding", "_n",
                          (d if state is None
                           else F.least(F.col("mind"), d)).alias("mind"))
+                 # fixpoint round: the state ends the round
                  .localCheckpoint(eager=True))
         # exclude already-chosen ids: when every remaining point is at
         # distance 0 (exact duplicates), the duplicate is picked, never

@@ -306,8 +306,8 @@ def bottomk_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     """
     from pyspark.sql.window import Window
 
-    # the sketch frame feeds several consumers (candidate self-join a/b
-    # sides + union sides a/b + sizes); without a lineage cut Spark
+    # dedup: 5 consumers.  The sketch frame feeds the candidate self-join
+    # a/b sides, the union sides a/b and sizes; without a cut Spark
     # re-derives the scan+shingle+window pipeline once per consumer (no
     # ReuseExchange — the subplans differ by alias), i.e. 5 corpus scans
     # at 100 TB.  One lazy localCheckpoint = one scan.  In a production
@@ -557,9 +557,10 @@ def dedup_clusters(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
     e = pairs.select(F.col(a).alias("_x"), F.col(b).alias("_y"))
     edges = e.unionByName(
         e.select(F.col("_y").alias("_x"), F.col("_x").alias("_y"))
-    ).distinct().localCheckpoint(eager=True)
-    # labels init is non-eager (r7): the first iteration's checkpoint
-    # job materializes it — one fewer blocking job
+    ).distinct().localCheckpoint(eager=True)  # dedup: every round reads it
+    # dedup: 2 consumers (round 1's neighbor-min and step joins).  Lazy:
+    # the first iteration's checkpoint job materializes it — one fewer
+    # blocking job
     labels = edges.select(F.col("_x").alias("_n")).distinct() \
         .withColumn("_lab", F.col("_n")).localCheckpoint(eager=False)
 
@@ -593,7 +594,7 @@ def dedup_clusters(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
         stepped = stepped.observe(
             obs, F.sum(F.when(F.col("_lab2") < F.col("_lab"), 1)
                        .otherwise(0)).alias("changed"))
-        stepped = stepped.localCheckpoint(eager=True)
+        stepped = stepped.localCheckpoint(eager=True)  # fixpoint round
         labels = stepped.select("_n", F.col("_lab2").alias("_lab"))
         if (obs.get.get("changed") or 0) == 0:
             converged = True
@@ -699,8 +700,8 @@ def winnow_pairs(df: DataFrame, text_col: str, id_col: str = "doc_id",
     entirely (unbounded self-join — never at scale)."""
     fps = winnow_fingerprints(df, text_col, id_col)
     if max_doc_freq == "auto":
-        # materialize: the stat jobs and the pair join otherwise each
-        # recompute the rolling-hash window pass
+        # dedup: 3 consumers (two stat jobs and the pair join), which
+        # otherwise each recompute the rolling-hash window pass
         fps = fps.localCheckpoint(eager=True)
         max_doc_freq = winnow_auto_cap(fps, id_col)
         last_winnow_cap["cap"] = max_doc_freq

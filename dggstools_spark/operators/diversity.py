@@ -102,9 +102,10 @@ def join_counts(cells: DataFrame, res: int, class_col: str,
     see module docstring.  ``cls_a <= cls_b`` canonical order."""
     from .spatial_stats import cell_neighbors
 
+    # dedup: 4 consumers (the neighbor enumeration, both label joins and
+    # the class totals)
     lab = (cells.select("cellid", F.col(class_col).alias("_cls"))
-           .localCheckpoint(eager=True))  # used 3x: edges, nbr labels,
-    # class totals (constraint-2 family: cellid may carry the encoder)
+           .localCheckpoint(eager=True))
     edges = (cell_neighbors(lab.select("cellid"), res, cross_face)
              .filter(F.col("cellid") < F.col("nbr")))
     pairs = (edges
@@ -117,6 +118,7 @@ def join_counts(cells: DataFrame, res: int, class_col: str,
                F.greatest("_ca", "_cb").alias("cls_b"))
            .groupBy("cls_a", "cls_b")
            .agg(F.count("*").alias("n_joins"))
+           # dedup: 2 consumers (the total and the per-pair rows)
            .localCheckpoint(eager=True))
     tot = (obs.agg(F.sum("n_joins").alias("_w"))
            .select(F.expr("CAST(_w AS BIGINT)").alias("_w")))

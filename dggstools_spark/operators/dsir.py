@@ -79,7 +79,7 @@ def dsir_scores(df: DataFrame, text_col: str, id_col: str,
     # driver-free arithmetic on a materialized 4096-row table.
     stats = toks.groupBy("b").agg(
         F.count("*").alias("r_cnt"), F.sum("tgt").alias("t_cnt"))
-    stats = stats.localCheckpoint(eager=True)
+    stats = stats.localCheckpoint(eager=True)  # dedup: 2 consumers
     tot = stats.agg(F.sum("r_cnt").alias("R"), F.sum("t_cnt").alias("T"))
     weights = (stats.crossJoin(F.broadcast(tot))
                .withColumn("w", F.expr(

@@ -39,9 +39,8 @@ def od_flows(obs: DataFrame, entity_col: str, t_col: str, tie_col: str,
     """(o_cell, d_cell, n_moves, n_entities, rank): top-``k`` corridors.
 
     ``obs`` must carry integer/orderable ``t_col`` and a ``tie_col``
-    unique per entity (see module docstring).  If ``obs`` contains the
-    expression cell-encoder, localCheckpoint it first (CLAUDE.md
-    constraint 2) — the lag window would re-inline the encoder tree."""
+    unique per entity (see module docstring).  ``obs`` may come straight
+    from the expression cell-encoder; no checkpoint is needed."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(entity_col).orderBy(t_col, tie_col)

@@ -24,8 +24,8 @@ iteration is ONE equi-join of the edge table with the rank vector on the
 source key plus one hash aggregate on the destination key — the standard
 edge-partitioned power iteration; both sides shuffle on natural keys and
 AQE broadcasts the rank vector while it fits.  Each iteration ends in a
-localCheckpoint: the loop is a lineage fixpoint (CLAUDE.md constraint 2)
-and the DuckDB twin needs AS MATERIALIZED per level for the same reason
+localCheckpoint, so a round's plan never holds the rounds before it; the
+DuckDB twin needs AS MATERIALIZED per level for the same reason
 (constraint 14).
 
 Reference parity: no counterpart (the reference has no graph layer);
@@ -63,6 +63,7 @@ def page_rank(edges: DataFrame, src: str, dst: str, w: str,
     e = (edges.groupBy(F.col(src).alias("u"), F.col(dst).alias("v"))
          .agg(F.sum(w).alias("_w")))
     outm = e.groupBy("u").agg(F.sum("_w").alias("_om"))  # "_W" would collide with "_w" under Spark case-insensitive resolution
+    # dedup: every iteration reads ew and nodes, and n_nodes reads nodes
     ew = e.join(outm, "u").localCheckpoint(eager=True)
     nodes = (e.select(F.col("u").alias("node"))
              .unionByName(e.select(F.col("v").alias("node")))
@@ -85,7 +86,7 @@ def page_rank(edges: DataFrame, src: str, dst: str, w: str,
             p.write.mode("overwrite").parquet(step)
             p = spark.read.parquet(step)
         else:
-            p = p.localCheckpoint(eager=True)
+            p = p.localCheckpoint(eager=True)  # fixpoint round
     out = p.select("node", F.col("p").alias("p_ppb"))
     rw = Window.orderBy(F.desc("p_ppb"), F.asc("node"))
     out = out.withColumn("rank", F.row_number().over(rw))
@@ -153,20 +154,22 @@ def cost_distance(cells: DataFrame, res: int, sources: DataFrame,
 
     Scale shape: one edge build (neighbor explode + one hash join), then
     per iteration ONE equi-join of the frontier with the edge table + one
-    min hash-aggregate, localCheckpoint per level (CLAUDE.md constraints
-    2/14 — same fixpoint family as pointer-jumping CC and page_rank)."""
+    min hash-aggregate, localCheckpoint per level (a fixpoint round; the
+    DuckDB twin's AS MATERIALIZED per level is constraint 14)."""
     from .spatial_stats import cell_neighbors
 
     # (r7 note: an eager=False variant — whole chain as one job — was
     # A/B-measured SLOWER here: 16 chained in-job persists beat the
     # small eager jobs' cost; kept eager.)
+    # dedup: 3 consumers (the neighbor enumeration, the edge weights and
+    # the source check)
     cw = (cells.select("cellid", F.col(w_col).cast("bigint").alias("_w"))
           .localCheckpoint(eager=True))
     edges = (cell_neighbors(cw.select("cellid"), res, cross_face)
              .select(F.col("cellid").alias("u"), F.col("nbr").alias("v"))
              .join(cw.select(F.col("cellid").alias("v"),
                              F.col("_w").alias("wv")), "v")
-             .localCheckpoint(eager=True))
+             .localCheckpoint(eager=True))  # dedup: every round reads it
     dist = (sources.select("cellid")
             .join(cw.select("cellid"), "cellid")  # sources must be cells
             .withColumn("dist", F.lit(0).cast("bigint")))
@@ -177,7 +180,7 @@ def cost_distance(cells: DataFrame, res: int, sources: DataFrame,
                         F.expr("du + wv").alias("dist")))
         dist = (dist.unionByName(cand)
                 .groupBy("cellid").agg(F.min("dist").alias("dist"))
-                .localCheckpoint(eager=True))
+                .localCheckpoint(eager=True))  # fixpoint round
     return dist
 
 
@@ -231,8 +234,8 @@ def cost_distance_sql(cells_sql: str, res: int, sources_pred: str,
 # round = one hash equi-join (edges ⋈ labels on the neighbor key) + one
 # (node, label) weight aggregate + one min-struct argmax aggregate +
 # one left join-back — all on natural keys, AQE broadcasts the label
-# vector while it fits; localCheckpoint per round (constraint 2
-# fixpoint discipline, same as page_rank / dedup_clusters).
+# vector while it fits; localCheckpoint per round (a fixpoint round, as
+# in page_rank / dedup_clusters).
 # --------------------------------------------------------------------------
 
 
@@ -250,10 +253,11 @@ def lpa_communities(edges: DataFrame, src: str, dst: str, w: str,
     sym = (e.unionByName(e.select(F.col("v").alias("u"),
                                   F.col("u").alias("v"), "w"))
            .groupBy("u", "v").agg(F.sum("w").alias("w"))
-           .localCheckpoint(eager=True))
+           .localCheckpoint(eager=True))  # dedup: the labels init and every round
     labels = (sym.select("u").union(sym.select("v")).distinct()
               .select(F.col("u").alias("node"),
                       F.col("u").alias("label"))
+              # dedup: 2 consumers (round 1's join and its join-back)
               .localCheckpoint(eager=True))
     for _ in range(iters):
         nl = (sym
@@ -268,7 +272,7 @@ def lpa_communities(edges: DataFrame, src: str, dst: str, w: str,
         labels = (labels.join(nl, "node", "left")
                   .select("node", F.coalesce("_new", "label")
                           .alias("label"))
-                  .localCheckpoint(eager=True))
+                  .localCheckpoint(eager=True))  # fixpoint round
     return labels
 
 

@@ -29,8 +29,8 @@ neighbor topology is the shared queen relation, seam-glued when
   rounds, each one hash self-equi-join over an N-row pointer table (vs
   the O(L) rounds of naive downstream propagation: the reason flow
   accumulation by wavefront does not scale and basin labeling by
-  doubling does).  ``localCheckpoint`` per round cuts the join lineage
-  (CLAUDE.md constraint 2 family).
+  doubling does).  ``localCheckpoint`` per round ends each fixpoint
+  round.
 
 - ``slope_aspect``: Horn's 3×3 finite-difference gradient —
   gx = (zNE + 2·zE + zSE) − (zNW + 2·zW + zSW), gy likewise N→S — with
@@ -193,13 +193,13 @@ def watershed(cells: DataFrame, res: int, doublings: int,
     # small eager jobs stay flat.  Kept EAGER: sweep-stability first.)
     p = (flow_dir(cells, res, cross_face)
          .select("cellid", F.col("nxt").alias("p"))
-         .localCheckpoint(eager=True))
+         .localCheckpoint(eager=True))  # dedup: 2 consumers (round 1's sides)
     for _ in range(doublings):
         step = p.select(F.col("cellid").alias("_m"),
                         F.col("p").alias("_p2"))
         p = (p.join(step, p["p"] == step["_m"])
              .select("cellid", F.col("_p2").alias("p"))
-             .localCheckpoint(eager=True))
+             .localCheckpoint(eager=True))  # fixpoint round
     return p.select("cellid", F.col("p").alias("pit"))
 
 
@@ -361,13 +361,13 @@ def flow_accum(cells: DataFrame, res: int, doublings: int,
          .unionByName(fd.select(F.col("cellid").alias("u"),
                                 F.col("nxt").alias("w")))
          .distinct()
-         .localCheckpoint(eager=True))
+         .localCheckpoint(eager=True))  # dedup: 2 consumers (round 1's sides)
     for _ in range(doublings):
         mid = r.select(F.col("u").alias("_m"), F.col("w").alias("_w2"))
         r = (r.join(mid, r["w"] == mid["_m"])
              .select("u", F.col("_w2").alias("w"))
              .distinct()
-             .localCheckpoint(eager=True))
+             .localCheckpoint(eager=True))  # fixpoint round
     return (r.groupBy(F.col("w").alias("cellid"))
             .agg(F.count("*").alias("acc")))
 

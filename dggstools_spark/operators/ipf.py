@@ -27,7 +27,7 @@ their targets ignored (documented; count them upstream if that matters).
 Scale shape (100 TB of events → an OD matrix ≪ event count): each round
 is two (groupBy + join-back) passes over the edge list — the same
 natural-key shuffles as page_rank, AQE broadcasts the margin vectors;
-localCheckpoint per round (constraint-2 fixpoint discipline).
+localCheckpoint per half-round (each ends a fixpoint round).
 
 Reference parity: no counterpart; extends the movement family
 (od_flows / graph.page_rank / flow_communities) with the
@@ -55,7 +55,7 @@ def ipf_balance(seed: DataFrame, row_targets: DataFrame,
     t = (seed.select("o", "d",
                      (F.col("t").cast("bigint") * Q6).alias("t_q6"))
          .join(rt, "o").join(ct, "d")
-         .localCheckpoint(eager=True))
+         .localCheckpoint(eager=True))  # dedup: 2 consumers (round 1's sum and join)
     for _ in range(rounds):
         rs = t.groupBy("o").agg(F.sum("t_q6").alias("_rs"))
         t = (t.join(rs, "o")
@@ -63,14 +63,14 @@ def ipf_balance(seed: DataFrame, row_targets: DataFrame,
                  f"CAST((CAST(t_q6 AS DECIMAL(38,0)) * (_ro * {Q6}))"
                  f" div _rs AS BIGINT)"))
              .drop("_rs")
-             .localCheckpoint(eager=True))
+             .localCheckpoint(eager=True))  # fixpoint round
         cs = t.groupBy("d").agg(F.sum("t_q6").alias("_cs"))
         t = (t.join(cs, "d")
              .withColumn("t_q6", F.expr(
                  f"CAST((CAST(t_q6 AS DECIMAL(38,0)) * (_cd * {Q6}))"
                  f" div _cs AS BIGINT)"))
              .drop("_cs")
-             .localCheckpoint(eager=True))
+             .localCheckpoint(eager=True))  # fixpoint round
     return t.select("o", "d", "t_q6")
 
 

@@ -99,6 +99,7 @@ def lm_score(df: DataFrame, text_col: str, id_col: str,
         c12.write.mode("overwrite").parquet(model_path)
         c12 = df.sparkSession.read.parquet(model_path)
     else:
+        # dedup: 2 consumers (the context counts and the bigram scores)
         c12 = c12.localCheckpoint(eager=True)
     # context counts c(w1 ·) roll up from the bigram table (vocab-sized
     # input — never a second corpus pass)

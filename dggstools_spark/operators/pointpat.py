@@ -162,12 +162,12 @@ def g_function(cells: DataFrame, res: int, kmax: int,
     nn = (kr.join(occ.select(F.col("cellid").alias("nbr")), "nbr")
           .groupBy("cellid")
           .agg(F.min("ring").alias("nn_ring")))
-    # hist carries everything both consumers need (the kmax-row
-    # histogram and, as Σ_c, the uncensored count) — cut it once
-    # (eager=False: persist-dedups the two references inside the one
-    # action) so the LAZY kring expansion (r7) isn't traversed twice
+    # dedup: 2 consumers.  hist carries everything both need (the
+    # kmax-row histogram and, as Σ_c, the uncensored count), so the lazy
+    # kring expansion is walked once.  Eager: at sf0.1 it beat no cut in
+    # 3 of 3 alternating pairs (3.95 s against 4.52 s median)
     hist = nn.groupBy("nn_ring").agg(F.count("*").alias("_c")) \
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     tot = (occ.agg(F.count("*").alias("n_total"))
            .crossJoin(hist.agg(
                F.coalesce(F.sum("_c"), F.lit(0)).cast("bigint")
@@ -387,6 +387,7 @@ def fj_function(cells: DataFrame, res: int, kmax: int,
     cell table with a ``cellid`` column — see the block comment above."""
     if kmax < 1:
         raise ValueError(f"fj_function: kmax must be >= 1, got {kmax}")
+    # dedup: 3 consumers (the face list, the k-ring seeds, the G join)
     occ = cells.select("cellid").distinct().localCheckpoint(eager=True)
     faces = sorted(r.f for r in occ.select(
         F.substring("cellid", 1, 1).alias("f")).distinct().collect())
@@ -398,8 +399,8 @@ def fj_function(cells: DataFrame, res: int, kmax: int,
     # occupied-seeded pairs (o, x, ring) read backwards give every
     # reference cell x its distance to each occupied cell within kmax.
     # The old second expansion over the FULL face lattice (the reference
-    # set, ≫ occupied cells in general) is thereby removed.  The
-    # relation feeds both F and G, so one lineage cut materializes it.
+    # set, ≫ occupied cells in general) is thereby removed.
+    # dedup: 2 consumers (F and G)
     kr_occ = kring_cells(occ, res, kmax, cross_face=cross_face) \
         .localCheckpoint(eager=True)
     # F: nearest occupied from every reference cell = min ring over the

@@ -56,7 +56,7 @@ def semantic_dedup(emb: DataFrame, threshold: float,
     docstring for the drop rule and the kept-set audit column."""
     cents = ivf_centroids(emb, vec_col, id_col, mod, residue)
     assign = ivf_assign(emb, cents, vec_col, id_col, keep_norm="_n") \
-        .localCheckpoint(eager=True)  # feeds pairs (twice) + the report
+        .localCheckpoint(eager=True)  # dedup: 3 consumers (pairs twice, report)
     return _pair_drop_report(assign, threshold, vec_col, id_col, dim)
 
 
@@ -188,7 +188,7 @@ def semantic_dedup_pq(emb: DataFrame, threshold: float,
                  .alias("cid")))
     assign = (near.join(emb.select(id_col, vec_col), id_col)
               .withColumn("_n", F.expr(nrm_spark(vec_col)))
-              .localCheckpoint(eager=True))  # pairs (twice) + report
+              .localCheckpoint(eager=True))  # dedup: 3 consumers (pairs twice, report)
     return _pair_drop_report(assign, threshold, vec_col, id_col, dim)
 
 

@@ -193,9 +193,10 @@ def ann_topk(cands: DataFrame, queries: DataFrame, k: int,
     qsig = queries.select(qid_col, q_vec).withColumn(
         "_qb", F.expr(signature_spark(q_vec, n_planes, dim))).withColumn(
         "_nq", F.expr(nrm_spark(q_vec)))
-    # materialize the (small, broadcast-bound) signed query side once, so
-    # the staged probe expansion references a plain column instead of
-    # re-inlining the signature expression per union branch
+    # dedup: one consumer per probe_frame union branch.  The (small,
+    # broadcast-bound) signed query side is computed once, so the staged
+    # probe expansion references a plain column instead of re-inlining
+    # the signature expression per union branch
     qsig = qsig.localCheckpoint(eager=False)
     qprobe = probe_frame(qsig, n_planes, probe_hamming).drop("_qb")
     pairs = csig.join(F.broadcast(qprobe), "bucket") \
@@ -303,7 +304,7 @@ def ivf_refine(cands: DataFrame, cents: DataFrame, iters: int = 2,
             .join(cents.select("cid", F.col("cvec").alias("_seed")), "cid") \
             .select("cid", F.coalesce(
                 "cvec", F.expr("transform(_seed, x -> CAST(x AS DOUBLE))")).alias("cvec")) \
-            .localCheckpoint(eager=True)  # cut the per-iteration lineage
+            .localCheckpoint(eager=True)  # fixpoint round
     return cents
 
 

@@ -96,6 +96,7 @@ def emerging_hotspots(obs: DataFrame, res: int, k: int,
 
     from .trend import mk_stats
 
+    # dedup: 2 consumers (mk_stats and the per-cell summary)
     gi = st_gi(obs, res).localCheckpoint(eager=True)
     mk = mk_stats(gi, "cellid", "day", "ratio_ppm")
     summ = (gi.groupBy("cellid")

@@ -177,7 +177,7 @@ def points_in_polygons(points: DataFrame, polygons: DataFrame,
     if px != "px" or py != "py":
         pts = pts.withColumn("px", F.col(px)).withColumn("py", F.col(py))
     if narrow_shuffle:
-        # materialize once: the rejoin references pts twice, and _rid must
+        # dedup: 2 consumers (the candidates and the rejoin); _rid must
         # not be recomputed (monotonically_increasing_id is
         # partition-layout-dependent)
         pts = pts.localCheckpoint(eager=False)
@@ -464,10 +464,9 @@ def knn_join_pruned(points: DataFrame, queries: DataFrame, k: int,
         )
         cand = pts.join(F.broadcast(neigh), ["_bci", "_bri"]).withColumn("dist_m", dist)
         topk = cand.withColumn("rank", F.row_number().over(wdw)).filter(F.col("rank") <= k)
-        # materialize: topk feeds the guarantee check, the survivors, and the
-        # next level's anti-join; without a cut each branch re-runs the
-        # candidate pipeline and re-inlines the caller's (possibly deep,
-        # e.g. expression-encoder) lineage
+        # dedup: 3 consumers (the guarantee check, the survivors and the
+        # next level's anti-join); without it each re-runs the candidate
+        # pipeline
         topk = topk.localCheckpoint(eager=True)
         per_q = topk.groupBy(qid).agg(F.count("*").alias("_n"),
                                       F.max("dist_m").alias("_dmax"))
@@ -483,7 +482,7 @@ def knn_join_pruned(points: DataFrame, queries: DataFrame, k: int,
             remaining = None
             break
         remaining = remaining.join(F.broadcast(ok_q), qid, "left_anti") \
-                             .localCheckpoint(eager=True)
+                             .localCheckpoint(eager=True)  # fixpoint round
     if remaining is not None:
         stats["fallback_n"] = n_unresolved
         fallback = knn_join_exact(points, remaining, k, px, py, qid, qx, qy)

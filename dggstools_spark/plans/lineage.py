@@ -41,15 +41,16 @@ def checkpointed_write(df: DataFrame, root: str, batch_key: str,
     spark = df.sparkSession
     if batch_key in completed_batches(spark, root):
         return False
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     tagged = df.withColumn("batch_key", F.lit(batch_key))
-    tagged.write.mode("overwrite").partitionBy("batch_key").parquet(f"{root}/data")
+    tagged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("batch_key").parquet(f"{root}/data")
     # lineage + marker from a read-back of the COMMITTED partition: the
     # (possibly expensive) upstream is evaluated exactly once, and
     # n_rows/checksum/partition_id describe what is actually on disk rather
     # than a separate re-evaluation of the pipeline
     written = spark.read.parquet(f"{root}/data") \
         .filter(F.col("batch_key") == batch_key)
+    # dedup: 2 consumers (the _lineage append and the row total)
     lin = _lineage_agg(written, key_cols).localCheckpoint(eager=True)
     lin.write.mode("append").parquet(f"{root}/_lineage")
     n = lin.agg(F.coalesce(F.sum("n_rows"), F.lit(0))).first()[0]
@@ -88,14 +89,15 @@ def run_batches(df: DataFrame, root: str, batch_col: str,
     done = completed_batches(spark, root)
     pending = [k for k in keys if k not in done]
     if pending:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         tagged = df.withColumn("batch_key", F.col(batch_col).cast("string")) \
                    .filter(F.col("batch_key").isin(pending))
-        tagged.write.mode("overwrite").partitionBy("batch_key").parquet(f"{root}/data")
+        tagged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("batch_key").parquet(f"{root}/data")
         # one upstream evaluation total: lineage + markers come from a cheap
         # columnar read-back of the committed files (see checkpointed_write)
         written = spark.read.parquet(f"{root}/data") \
             .filter(F.col("batch_key").isin(pending))
+        # dedup: 2 consumers (the _lineage append and the markers)
         lin = _lineage_agg(written, key_cols).localCheckpoint(eager=True)
         lin.write.mode("append").parquet(f"{root}/_lineage")
         markers = lin.groupBy("batch_key").agg(F.sum("n_rows").alias("n_rows")) \

@@ -7,10 +7,10 @@ statistics — the analytics layer the DGGS cell keying exists for.
   under queen weights, floor-mean centered, exact integer arithmetic in
   DECIMAL(38,0)/HUGEINT.
 
-Both run on the cell table produced by the expression-encode path (the
-groupBy is the constraint-2 lineage boundary; the oracle MATERIALIZEs the
-encode per constraint 7), and both reduce neighborhood topology to one
-offset explode + one hash equi-join on (face, row, col).
+Both run on the cell table produced by the expression-encode path (a
+groupBy of the encoded cellid; the oracle MATERIALIZEs the encode per
+constraint 7), and both reduce neighborhood topology to one offset
+explode + one hash equi-join on (face, row, col).
 """
 
 from __future__ import annotations
@@ -25,15 +25,9 @@ from .sources import synth
 
 def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
-    cells = (encode_sql.spark_encode(docs, "lon", "lat", CELL_RES)
-             .groupBy("cellid")
-             .agg(F.count("*").alias("v")))
-    # constraint-2 lineage cut: focal/moran reference this frame on BOTH
-    # sides of their neighbor join — without the cut, janino compiles the
-    # ~50k-node expression-encoder stage once per branch (minutes each).
-    # The cell table is aggregation output (cells ≪ points), so the
-    # checkpoint is tiny.
-    return cells.localCheckpoint(eager=True)
+    return (encode_sql.spark_encode(docs, "lon", "lat", CELL_RES)
+            .groupBy("cellid")
+            .agg(F.count("*").alias("v")))
 
 
 def _cells_sql() -> str:
@@ -88,8 +82,7 @@ XF_RES = 2
 def _cells_xf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (_cells(spark, sf_dir)
             .groupBy(F.substring("cellid", 1, XF_RES + 1).alias("cellid"))
-            .agg(F.sum("v").alias("v"))
-            .localCheckpoint(eager=True))
+            .agg(F.sum("v").alias("v")))
 
 
 def _cells_xf_sql() -> str:
@@ -103,7 +96,12 @@ def _cells_xf_sql() -> str:
 def q_focal_xface(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.spatial_stats import focal_mean
 
-    return focal_mean(_cells_xf(spark, sf_dir), XF_RES, cross_face=True)
+    # dedup: 2 consumers (both sides of the neighbor join).  A/B at sf0.1,
+    # local[4]: with the cut 1.07 s against 1.32 s without (median of 3
+    # alternating pairs, the cut faster in 3 of 3; 3 of 3 again in a
+    # second set)
+    cells = _cells_xf(spark, sf_dir).localCheckpoint(eager=True)
+    return focal_mean(cells, XF_RES, cross_face=True)
 
 
 def _oracle_focal_xface() -> str:

@@ -42,13 +42,13 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = fp.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
     surv = (fp.join(canon.select("doc_id"), "doc_id")
             .drop("_fp")
-            # constraint-2-adjacent: the survivors frame feeds pair gen,
-            # clustering AND the keep join — cut once, reuse thrice
+            # dedup: 3 consumers (pair gen, cluster_keep, the kept-set join)
             .localCheckpoint(eager=True))
     # stage 2-4: near-dup pairs -> clusters -> quality keep
     pairs = ngram_jaccard_pairs(surv, "text", "doc_id",
                                 threshold=queries5.NG_THRESHOLD,
                                 max_doc_freq=queries5.NG_MAX_DF)
+    # dedup: 2 consumers (cluster_keep and the drop_near anti-join)
     clusters = dedup_clusters(pairs).select("doc_id", "cluster_id") \
         .localCheckpoint(eager=True)
     keeps = cluster_keep(clusters, surv, "text", "doc_id",

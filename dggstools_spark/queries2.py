@@ -106,10 +106,9 @@ def q_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     pts = encode_sql.spark_encode(docs, "lon", "lat", 6, with_planar=True) \
         .select("doc_id", F.col("px_m").alias("px"), F.col("py_m").alias("py"))
-    # cut the expression-encoder lineage: the kNN operator references the
-    # point columns many times (block keys, distance, tie-breaks) and
-    # CollapseProject would inline the deep encode tree into each reference —
-    # whole-stage-codegen then spends ~45 s in janino compilation
+    # dedup: the density pre-pass and every level's candidate join read
+    # pts.  A/B at sf0.1, local[4]: with the cut 1.50 s against 1.93 s
+    # without (median of 3 alternating pairs, the cut faster in 3 of 3)
     pts = pts.localCheckpoint(eager=False)
     qx, qy = _query_points_sql("n_nationkey")
     qs = load(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 10).select(
@@ -204,12 +203,8 @@ FROM (SELECT source, min(doc_id) AS first_doc, count(*) AS n_docs
 # --------------------------------------------------------------------------
 
 def q_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOTE: control/test come from ONE aggregation pass instead of two aggs
-    # + metrics.rmse_bias join: duplicating the 20-step expression-encode
-    # lineage on both sides of a join makes CollapseProject inline the
-    # encode chain into itself -> exponential expression blowup.  (The
-    # general two-table case, metrics.rmse_bias, is fine: its inputs are
-    # materialized tables, not shared deep expression lineages.)
+    # control/test come from ONE aggregation pass instead of two aggs +
+    # metrics.rmse_bias join: one encode and one shuffle, not two of each
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     cells = encode_sql.spark_encode(docs, "lon", "lat", 6).select(
         "doc_id", "cellid",

@@ -105,10 +105,7 @@ def q_cell_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("cellid",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))"
                           " div 86400000").alias("day"),
-                   F.lit(1).cast("bigint").alias("y"))
-           # constraint-2: the encoder expression must not be re-inlined
-           # into both the per-bucket and per-key aggregates
-           .localCheckpoint(eager=True))
+                   F.lit(1).cast("bigint").alias("y")))
     return trend_topk(obs, "cellid", "day", "y", TREND_K)
 
 

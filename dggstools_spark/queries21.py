@@ -34,8 +34,7 @@ def q_cell_trends_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("cellid",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))"
                           " div 86400000").alias("day"),
-                   F.lit(1).cast("bigint").alias("y"))
-           .localCheckpoint(eager=True))  # constraint 2 (as cell_trends)
+                   F.lit(1).cast("bigint").alias("y")))
     return trend_topk_dense(obs, "cellid", "day", "y", TREND_K)
 
 
@@ -59,8 +58,8 @@ register("cell_trends_dense", q_cell_trends_dense, _oracle_cell_trends_dense())
 # --------------------------------------------------------------------------
 # q_od_flows — OD corridor matrix (events → res-2 cells → per-user lag
 # moves → top corridors).  The encode feeds a lag window partitioned by
-# user — localCheckpoint cuts the encoder lineage (constraint 2); the
-# (ts, event_id) order is TOTAL per user (constraint-5 tie discipline).
+# user; the (ts, event_id) order is TOTAL per user (constraint-5 tie
+# discipline).
 # --------------------------------------------------------------------------
 
 FLOWS_RES = 2
@@ -76,8 +75,7 @@ def q_od_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = (encode_sql.spark_encode(ev, "lon", "lat", FLOWS_RES)
            .select("cellid", "user_id", "event_id",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))")
-                   .alias("tms"))
-           .localCheckpoint(eager=True))
+                   .alias("tms")))
     return od_flows(obs, "user_id", "tms", "event_id", "cellid", FLOWS_K)
 
 
@@ -103,9 +101,7 @@ register("od_flows", q_od_flows, _oracle_od_flows())
 # --------------------------------------------------------------------------
 # q_cell_nbrs — Cell.neighbors over the cells the data actually occupies
 # (distinct res-2 cells of the encoded events): every queen neighbor,
-# cross-face correct.  The distinct-cell frame is localCheckpointed — the
-# neighbor op references cellid in ~2·res+1 digit expressions plus the
-# seam branch, each of which would re-inline the encoder (constraint 2).
+# cross-face correct.
 # --------------------------------------------------------------------------
 
 NBRS_RES = 2
@@ -118,8 +114,7 @@ def q_cell_nbrs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = synth.with_lonlat(load(spark, sf_dir, "events"), "event_id")
     cells = (encode_sql.spark_encode(ev, "lon", "lat", NBRS_RES)
-             .select("cellid").distinct()
-             .localCheckpoint(eager=True))
+             .select("cellid").distinct())
     return cell_neighbors(cells, NBRS_RES, cross_face=True)
 
 

@@ -88,7 +88,7 @@ register("overlay_area", q_overlay_area, _oracle_overlay_area())
 
 # --------------------------------------------------------------------------
 # q_user_trips — per-user movement profile over the od_flows obs frame
-# (same encode + localCheckpoint + total (ts, event_id) order).
+# (same encode + total (ts, event_id) order).
 # --------------------------------------------------------------------------
 
 TRIPS_K = 40
@@ -102,8 +102,7 @@ def _flow_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (encode_sql.spark_encode(ev, "lon", "lat", FLOWS_RES)
             .select("cellid", "user_id", "event_id",
                     F.expr("unix_millis(CAST(ts AS TIMESTAMP))")
-                    .alias("tms"))
-            .localCheckpoint(eager=True))
+                    .alias("tms")))
 
 
 def _flow_obs_sql() -> str:

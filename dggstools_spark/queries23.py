@@ -30,9 +30,12 @@ def q_cell_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # corridors without the top-k cut: the graph wants every edge, so k
     # is set to cover all pairs (res-2 cell count squared is the bound)
+    # dedup: 2 consumers (page_rank's edge table and node list).  A/B at
+    # sf0.1, local[4]: with the cut 2.94 s against 4.33 s without (median
+    # of 3 alternating pairs, the cut faster in 3 of 3)
     flows = od_flows(_flow_obs(spark, sf_dir), "user_id", "tms",
                      "event_id", "cellid", k=10_000_000) \
-        .localCheckpoint(eager=True)  # fixpoint input (constraint 2)
+        .localCheckpoint(eager=True)
     return page_rank(flows.select("o_cell", "d_cell", "n_moves"),
                      "o_cell", "d_cell", "n_moves",
                      iters=RANK_ITERS, k=RANK_K)
@@ -56,8 +59,7 @@ register("cell_rank", q_cell_rank, _oracle_cell_rank())
 # q_near_pairs — closest document pairs within NEAR_D_M planar meters.
 # res 2 gives block width ~1.11e6 m >= the 75 km threshold; the planar
 # point coordinates ride the with_planar encode (identical expression
-# text on both engines), localCheckpointed before the block join
-# (constraint 2: the join references px/py in block keys + distance).
+# text on both engines).
 # --------------------------------------------------------------------------
 
 NEAR_D_M = 75_000.0
@@ -74,8 +76,7 @@ def q_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (encode_sql.spark_encode(docs, "lon", "lat", NEAR_RES,
                                    with_planar=True)
            .select("doc_id", F.col("px_m").alias("px"),
-                   F.col("py_m").alias("py"))
-           .localCheckpoint(eager=True))
+                   F.col("py_m").alias("py")))
     return near_pairs(pts, NEAR_D_M, NEAR_RES, id_col="doc_id",
                       k=NEAR_K)
 
@@ -146,8 +147,7 @@ register("hll_count", q_hll_count, _oracle_hll_count())
 # and the supercover cost is O(bbox) per segment, so the bound is also
 # the scale guard) -> segment_cells supercover at PATH_RES -> cells
 # ranked by crossing count.  The planar points ride the with_planar
-# encode, localCheckpointed before the lag window (constraint 2); the
-# segment predicate is ONE shared snippet on both engines.
+# encode; the segment predicate is ONE shared snippet on both engines.
 # --------------------------------------------------------------------------
 
 PATH_RES = 4
@@ -170,8 +170,7 @@ def q_path_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("user_id", "event_id",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))")
                    .alias("tms"),
-                   F.col("px_m").alias("x2"), F.col("py_m").alias("y2"))
-           .localCheckpoint(eager=True))
+                   F.col("px_m").alias("x2"), F.col("py_m").alias("y2")))
     w = Window.partitionBy("user_id").orderBy("tms", "event_id")
     segs = (pts
             .withColumn("x1", F.lag("x2").over(w))

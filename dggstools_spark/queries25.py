@@ -30,16 +30,13 @@ def q_idw_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = (encode_sql.spark_encode(docs, "lon", "lat", IDW_RES,
                                    with_planar=True)
            .select(F.col("n_chars").alias("v"),
-                   F.col("px_m").alias("px"), F.col("py_m").alias("py"))
-           .localCheckpoint(eager=True))  # constraint 2: block keys +
-    # distances reference the encoded planar columns many times
+                   F.col("px_m").alias("px"), F.col("py_m").alias("py")))
     cust = synth.with_lonlat(load(spark, sf_dir, "customer"),
                              "c_custkey").filter(F.expr(_IDW_Q_PRED))
     qs = (encode_sql.spark_encode(cust, "lon", "lat", IDW_RES,
                                   with_planar=True)
           .select(F.col("c_custkey").alias("q_id"),
-                  F.col("px_m").alias("qx"), F.col("py_m").alias("qy"))
-          .localCheckpoint(eager=True))
+                  F.col("px_m").alias("qx"), F.col("py_m").alias("qy")))
     return idw_interp(obs, qs, IDW_D_M, IDW_RES)
 
 
@@ -86,8 +83,7 @@ def q_buffer_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr(_BUF_PRED))
     pts = (encode_sql.spark_encode(docs, "lon", "lat", 1,
                                    with_planar=True)
-           .select(F.col("px_m").alias("px"), F.col("py_m").alias("py"))
-           .localCheckpoint(eager=True))
+           .select(F.col("px_m").alias("px"), F.col("py_m").alias("py")))
     return buffer_cells(pts, BUF_D_M, BUF_RES)
 
 

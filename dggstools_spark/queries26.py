@@ -62,10 +62,7 @@ def q_kring_xface(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents").filter(F.expr(_KR_SEED_PRED)),
         "doc_id")
     seeds = (encode_sql.spark_encode(docs, "lon", "lat", KR_RES)
-             .select("cellid").distinct()
-             .localCheckpoint(eager=True))  # constraint 2: the lattice
-    # decode + k-ring joins reference cellid many times — cut the
-    # expression-encoder lineage first (the q_cell_nbrs rule)
+             .select("cellid").distinct())
     return kring_cells(seeds, KR_RES, KR_K)
 
 

@@ -91,9 +91,7 @@ def q_route_heat(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = (encode_sql.spark_encode(samples, "lon", "lat", RT_RES,
                                    with_planar=True)
            .select("seg_id", "i",
-                   F.col("px_m").alias("x2"), F.col("py_m").alias("y2"))
-           .localCheckpoint(eager=True))  # constraint 2: the lag window +
-    # SAT candidates reference the projected coordinates many times
+                   F.col("px_m").alias("x2"), F.col("py_m").alias("y2")))
     sw = Window.partitionBy("seg_id").orderBy("i")
     sub = (enc
            .withColumn("x1", F.lag("x2").over(sw))

@@ -11,9 +11,6 @@ G-function nearest-neighbor distribution, and flow accumulation.
 - ``flow_accum``: upstream drainage counts of the batch-32 terrain via
   transitive-closure squaring of the D8 flow pointer, ranked top-k — the
   stream-network statistic (operators/hydro.flow_accum).
-
-Constraint-2 discipline as in queries28: the encoder output crosses a
-``localCheckpoint`` before any multi-reference join.
 """
 
 from __future__ import annotations
@@ -43,9 +40,7 @@ def q_mk_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("cellid",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))"
                           " div 86400000").alias("day"),
-                   F.lit(1).cast("bigint").alias("y"))
-           .localCheckpoint(eager=True))  # constraint 2: the pair
-    # self-join + three per-key aggs reference cellid five times
+                   F.lit(1).cast("bigint").alias("y")))
     return mk_trend(obs, "cellid", "day", "y", MK_K)
 
 
@@ -69,8 +64,7 @@ def q_g_function(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     cells = (encode_sql.spark_encode(docs, "lon", "lat", GF_RES)
-             .select("cellid").distinct()
-             .localCheckpoint(eager=True))
+             .select("cellid").distinct())
     return g_function(cells, GF_RES, GF_KMAX)
 
 
@@ -136,9 +130,7 @@ def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))"
                           " div 86400000").alias("day"))
            .groupBy("cellid", "day")
-           .agg(F.count("*").cast("bigint").alias("v"))
-           .localCheckpoint(eager=True))  # constraint 2: lattice decode
-    # + focal join + totals + MK pair join all re-reference cellid
+           .agg(F.count("*").cast("bigint").alias("v")))
     return emerging_hotspots(obs, EH_RES, EH_K)
 
 
@@ -182,8 +174,7 @@ def _flow_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = (encode_sql.spark_encode(ev, "lon", "lat", LPA_RES)
            .select("cellid", "user_id", "event_id",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))")
-                   .alias("tms"))
-           .localCheckpoint(eager=True))  # constraint 2 before the lag
+                   .alias("tms")))
     w = Window.partitionBy("user_id").orderBy("tms", "event_id")
     return (obs.withColumn("o_cell", F.lag("cellid").over(w))
             .filter(F.col("o_cell").isNotNull()
@@ -275,7 +266,11 @@ def q_access_2sfca(spark: SparkSession, sf_dir: str) -> DataFrame:
     pop = (encode_sql.spark_encode(docs, "lon", "lat", AC_RES)
            .groupBy("cellid")
            .agg(F.count("*").cast("bigint").alias("pop"))
-           .localCheckpoint(eager=True))  # constraint 2 before kring
+           # dedup: 3 consumers (the k-ring seeds and both catchment
+           # steps); fac below has 2.  A/B at sf0.1, local[4]: with both
+           # cuts 1.74 s against 2.77 s without (median of 3 alternating
+           # pairs, the cuts faster in 3 of 3)
+           .localCheckpoint(eager=True))
     sup = synth.with_lonlat(load(spark, sf_dir, "supplier"), "s_suppkey")
     fac = (encode_sql.spark_encode(sup, "lon", "lat", AC_RES)
            .select(F.col("s_suppkey").alias("fac_id"), "cellid",
@@ -331,8 +326,7 @@ def _pts_counts(spark: SparkSession, sf_dir: str, table: str,
     pts = synth.with_lonlat(load(spark, sf_dir, table), id_col)
     return (encode_sql.spark_encode(pts, "lon", "lat", XK_RES)
             .groupBy("cellid")
-            .agg(F.count("*").cast("bigint").alias("n"))
-            .localCheckpoint(eager=True))  # constraint 2 before kring
+            .agg(F.count("*").cast("bigint").alias("n")))
 
 
 def _pts_counts_sql(table: str, id_col: str) -> str:
@@ -410,8 +404,7 @@ def _moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = (encode_sql.spark_encode(ev, "lon", "lat", IPF_RES)
            .select("cellid", "user_id", "event_id",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))")
-                   .alias("tms"))
-           .localCheckpoint(eager=True))  # constraint 2 before the lag
+                   .alias("tms")))
     w = Window.partitionBy("user_id").orderBy("tms", "event_id")
     return (obs.withColumn("o", F.lag("cellid").over(w))
             .filter(F.col("o").isNotNull()
@@ -440,6 +433,7 @@ def q_trip_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.ipf import ipf_balance
 
+    # dedup: 3 consumers (the seed and the row and column targets)
     mv = _moves(spark, sf_dir).localCheckpoint(eager=True)
     seed = (mv.filter("_half = 0").groupBy("o", "d")
             .agg(F.count("*").cast("bigint").alias("t")))
@@ -498,7 +492,7 @@ def q_region_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     mask = (encode_sql.spark_encode(docs, "lon", "lat", RS_RES)
-            .select("cellid").distinct().localCheckpoint(eager=True))
+            .select("cellid").distinct())
     pairs = (cell_neighbors(mask, RS_RES, cross_face=True)
              .join(mask.select(F.col("cellid").alias("nbr")), "nbr")
              .select(F.col("cellid").alias("a_id"),
@@ -508,6 +502,7 @@ def q_region_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select("cellid",
                        F.coalesce("region", F.col("cellid"))
                        .alias("region"))
+               # dedup: 2 consumers (region_shape's cell and neighbor sides)
                .localCheckpoint(eager=True))
     shp = region_shape(labeled, RS_RES)
     rw = Window.orderBy(F.desc("n_cells"), F.asc("region"))
@@ -707,6 +702,7 @@ def q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.hydro import viewshed
 
+    # dedup: 2 consumers (the tower pick and viewshed's lattice)
     terr = _terrain(spark, sf_dir).localCheckpoint(eager=True)
     rw = Window.orderBy(F.desc("z"), F.asc("cellid"))
     towers = (terr.withColumn("_r", F.row_number().over(rw))
@@ -753,8 +749,7 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("cellid",
                    F.expr("unix_millis(CAST(ts AS TIMESTAMP))"
                           " div 86400000").alias("day"),
-                   F.lit(1).cast("bigint").alias("y"))
-           .localCheckpoint(eager=True))  # constraint 2 (mk_trend rule)
+                   F.lit(1).cast("bigint").alias("y")))
     ts = theilsen(obs, "cellid", "day", "y")
     rw = Window.orderBy(F.desc("slope_q6"), F.asc("cellid"))
     return (ts.withColumn("rank", F.row_number().over(rw))
@@ -809,8 +804,7 @@ def q_fj_function(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     cells = (encode_sql.spark_encode(docs, "lon", "lat", FJ_RES)
-             .select("cellid").distinct()
-             .localCheckpoint(eager=True))
+             .select("cellid").distinct())
     return fj_function(cells, FJ_RES, FJ_KMAX)
 
 
@@ -848,12 +842,10 @@ def q_voronoi_territories(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     dem = (encode_sql.spark_encode(docs, "lon", "lat", VT_RES)
-           .select("cellid").distinct()
-           .localCheckpoint(eager=True))  # constraint 2 before kring
+           .select("cellid").distinct())
     sup = synth.with_lonlat(load(spark, sf_dir, "supplier"), "s_suppkey")
     fac = (encode_sql.spark_encode(sup, "lon", "lat", VT_RES)
-           .select(F.col("s_suppkey").alias("fac_id"), "cellid")
-           .localCheckpoint(eager=True))
+           .select(F.col("s_suppkey").alias("fac_id"), "cellid"))
     vor = voronoi_assign(dem, fac, VT_RES, VT_KMAX)
     terr = (vor.groupBy("fac_id")
             .agg(F.count("*").cast("bigint").alias("n_cells"),

@@ -150,7 +150,7 @@ def q_rescale_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = _docs_cells(spark, sf_dir, RESCALE_RES, keep=["doc_id"])
     cells = enc.groupBy("cellid").agg(
         F.min((F.col("doc_id") * 31) % 97).cast("double").alias("band1"))
-    # one lineage cut feeds five rollup branches (CLAUDE.md constraint 2)
+    # dedup: 5 consumers (one rollup branch per mode, in one action)
     cells = cells.localCheckpoint(eager=False)
     outs = {}
     for mode in ("avg", "min", "max", "mode", "first"):
@@ -209,12 +209,7 @@ def q_subarea(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("source", "group_a")
     coarse = _docs_cells(spark, sf_dir, SUB_COARSE_RES, keep=["lang"]) \
         .withColumnRenamed("lang", "group_b")
-    # lineage cut: subarea_pairs references each side several times and
-    # CollapseProject would inline the expression encoder into every copy
-    # (CLAUDE.md constraint 2)
-    fine = fine.dropDuplicates().localCheckpoint(eager=False)
-    coarse = coarse.dropDuplicates().localCheckpoint(eager=False)
-    return subarea_pairs(fine, coarse)
+    return subarea_pairs(fine.dropDuplicates(), coarse.dropDuplicates())
 
 
 def _oracle_subarea() -> str:
@@ -251,11 +246,6 @@ def q_line_error(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        with_planar=True) \
         .select("cellid", "px_m", "py_m", "cx_m", "cy_m")
     cells = _docs_cells(spark, sf_dir, LINE_RES)
-    # lineage cuts: assigned feeds the semi- AND anti-join branches, cells
-    # the distinct side of both — CollapseProject would inline the encode
-    # tree into each reference (CLAUDE.md constraint 2)
-    assigned = assigned.localCheckpoint(eager=False)
-    cells = cells.localCheckpoint(eager=False)
     out = metrics.line_error_planar(assigned, cells, LINE_RES)
     return out.select(
         F.round("mean_node_error_m").cast("bigint").alias("mean_err_m"),
@@ -333,7 +323,7 @@ def _oracle_cells_io() -> str:
     enc = _oracle_docs_cells(IO_RES, [])
     # AS MATERIALIZED: a predicate on cellid would otherwise be pushed into
     # the nested encode projections, inlining the ~50k-node cellid expression
-    # into the filter (the DuckDB edition of CLAUDE.md constraint 2)
+    # into the filter (CLAUDE.md constraint 7)
     return f"""
     WITH enc AS MATERIALIZED ({enc}),
     cells AS (SELECT cellid, count(*) AS n FROM enc
@@ -360,10 +350,8 @@ def q_merge_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = _docs_cells(spark, sf_dir, MERGE_RES, keep=["doc_id"])
     cells = enc.groupBy("cellid").agg(F.count("*").alias("n_docs")) \
         .withColumn("batch", F.substring("cellid", 1, 1))
-    # materialize once: the batch loop + resume re-reference cells many
-    # times (filter, count, lineage agg, write) and pushing the batch
-    # predicate through the encode lineage re-inlines the expression
-    # encoder per job (CLAUDE.md constraint 2)
+    # dedup: 6 consumers, each its own job (two isEmpty checks, two batch
+    # writes, run_batches' key scan and its write)
     cells = cells.localCheckpoint(eager=True)
     # phase 1: "the run that crashed" — only two batches complete
     for k in FIRST_BATCHES:

@@ -123,7 +123,7 @@ OPT_RES = 3
 def q_is_optimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.auid import is_optimal, optimize_cells
 
-    # three consumers below: cut once
+    # dedup: 2 consumers (is_optimal and optimize_cells, each its own job)
     both = _docs_cells_seeded(spark, sf_dir, OPT_RES, OPT_RES) \
         .localCheckpoint(eager=True)
     raw_opt = is_optimal(both, DEFAULT_CONFIG.n_side)

@@ -1,7 +1,9 @@
 """Oracle gate inside Tier-1 for the IVF/IVF-PQ, LM, Gopher, as-of,
 point-in-polygon, subarea, merge/resume, AUID compaction, k-ring
 (kring_xface and the point-pattern/accessibility leaves on it) and
-cell-store (cells_io: write, then prefix read) leaves: each
+cell-store (cells_io: write, then prefix read) leaves, and for every leaf
+that joins or iterates over expression-encoder output without a lineage
+cut (session.PLANNER_CONFS, CLAUDE.md constraint 2): each
 leaf's Spark result must equal its DuckDB ``oracle_sql()`` on row count,
 column-name set and ``canonical_hash`` at sf0.01 — the compare
 ``scripts/check_entry.py`` runs for the whole registry."""
@@ -20,7 +22,17 @@ LEAVES = ["ivf_topk", "ivf_refined", "ann_ivfpq", "lm_score", "lm_score_sink",
           "gopher_quality", "asof_status", "pip_polygons", "zonal_stats",
           "subarea", "merge_resume", "auid_optimize", "is_optimal",
           "kring_xface", "ripley_k", "g_function", "cross_k", "fj_function",
-          "access_2sfca", "voronoi_territories", "cells_io"]
+          "access_2sfca", "voronoi_territories", "cells_io",
+          # uncut encoder output
+          "knn_cells", "line_error", "focal_mean", "morans_i", "hotspots",
+          "local_moran", "bbox_cells", "focal_xface", "morans_xface",
+          "hotspots_xface", "lisa_xface", "cell_trends", "cell_trends_dense",
+          "od_flows", "cell_nbrs", "user_trips", "cell_rank", "near_pairs",
+          "path_cells", "cell_visitors", "morph_close", "region_group",
+          "idw_interp", "buffer_cells", "route_heat", "segregation",
+          "location_quotient", "watershed", "slope_aspect", "mk_trend",
+          "flow_accum", "emerging_hotspots", "flow_communities",
+          "trip_balance", "region_shape", "viewshed", "theilsen_trend"]
 
 
 @pytest.fixture(scope="module")

@@ -36,6 +36,25 @@ def test_checkpointed_write_resume(spark, tmp_path):
     assert spark.read.parquet(f"{root}/data").count() == 90
 
 
+def test_lineage_writes_leave_session_overwrite_mode(spark, tmp_path):
+    """checkpointed_write and run_batches overwrite their batch partitions
+    dynamically per write; the session's partitionOverwriteMode is left
+    as it was."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        df = spark.createDataFrame([("Q10", 1.0), ("Q21", 2.0)], "cellid string, band1 double")
+        assert lineage.checkpointed_write(df, str(tmp_path / "one"), "b0", ["cellid"])
+        assert spark.conf.get(key) == "static"
+        res = lineage.run_batches(df.withColumn("prefix", F.substring("cellid", 1, 2)),
+                                  str(tmp_path / "many"), "prefix", ["cellid"])
+        assert res == {"Q1": True, "Q2": True}
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_rmse_bias_zero_on_identity(spark):
     cells = spark.createDataFrame(
         [(f"Q{i}", float(i)) for i in range(9)], "cellid string, band1 double")
@@ -185,7 +204,7 @@ def test_read_cells_prefix_over_32_dirs_fires_listing_job(spark, tmp_path):
 
 def test_write_cells_overwrite_is_static(spark, tmp_path):
     """A rewrite with fewer prefixes replaces the whole table even when
-    the session's partitionOverwriteMode is dynamic (merge_resume sets
+    the session's partitionOverwriteMode is dynamic (a caller may set
     it): no prefix directory of the older table survives."""
     _, path = _all_prefix_table(spark, tmp_path)
     small = spark.createDataFrame([("Q10", 1.0), ("Q11", 2.0)], "cellid string, band1 double")

@@ -98,8 +98,10 @@ def test_kring_walk_matches_duckdb_bfs(spark, res, k, cross_face, full):
 def test_kring_plan_has_one_generate_per_step(spark):
     """The walk is one chain: the optimized plan of a k = 3 ring holds
     exactly 3 Generate nodes (a union of per-level relations, each built
-    on the previous one, would hold 1 + 2 + 3 = 6)."""
-    seeds = _full_lattice(spark, 2).filter(F.expr("cellid = 'Q44'"))
+    on the previous one, would hold 1 + 2 + 3 = 6).  The seed is a local
+    row, so no Generate of its own reaches the plan: kring no longer
+    cuts its seed lineage."""
+    seeds = spark.createDataFrame([("Q44",)], "cellid string")
     plan = kring_cells(seeds, 2, 3)._jdf.queryExecution() \
         .optimizedPlan().toString()
     gens = [ln for ln in plan.splitlines()

@@ -35,8 +35,9 @@ explode + window form, never nested higher-order functions; r7 shapes):
   partitioning (one Exchange per round; the old island-id form needed
   a second (word, island) partitioning), with the pair applied as
   literals (no broadcast crossJoin);
-- train rounds checkpoint eager=False (the next round's 1-row read
-  materializes them — lineage cut without a blocking job);
+- train rounds checkpoint eager=False (a lineage cut; AQE still runs
+  the round's shuffle stages when the cut is made, and the next round's
+  1-row read runs its last stage);
   ``bpe_apply`` chains all R rounds lazily into ONE job.
 
 Reference parity: no counterpart (the reference has no text pipeline);
@@ -185,9 +186,10 @@ def bpe_train(df: DataFrame, text_col: str,
             raise ValueError(
                 f"bpe_train: no adjacent pairs left at round {rnd}")
         rows.append((rnd, b[0].l, b[0].r, b[0].pair_count))
-        # fixpoint round: the rewrite ends the round.  eager=False: the
-        # next round's 1-row best-pair read (or the caller's action)
-        # materializes it — one fewer blocking job per round
+        # fixpoint round: the rewrite ends the round.  eager=False: AQE
+        # runs the rewrite's shuffle stages at the cut, and the next
+        # round's 1-row best-pair read (or the caller's action) runs
+        # its last stage
         seq = apply_pair(seq, b[0].l, b[0].r) \
             .localCheckpoint(eager=False)
     merges = spark.createDataFrame(

@@ -558,9 +558,9 @@ def dedup_clusters(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
     edges = e.unionByName(
         e.select(F.col("_y").alias("_x"), F.col("_x").alias("_y"))
     ).distinct().localCheckpoint(eager=True)  # dedup: every round reads it
-    # dedup: 2 consumers (round 1's neighbor-min and step joins).  Lazy:
-    # the first iteration's checkpoint job materializes it — one fewer
-    # blocking job
+    # dedup: 2 consumers (round 1's neighbor-min and step joins).  Lazy,
+    # but not job-free: AQE runs the distinct's shuffle stage at the cut,
+    # and the first iteration's checkpoint job runs the rest
     labels = edges.select(F.col("_x").alias("_n")).distinct() \
         .withColumn("_lab", F.col("_n")).localCheckpoint(eager=False)
 

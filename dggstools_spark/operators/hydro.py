@@ -63,7 +63,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .spatial_stats import (_offsets_sql, cell_neighbors,
+from .spatial_stats import (_NEIGHBOR_OFFSETS, cell_neighbors,
                             cell_neighbors_sql, lattice_select_sql,
                             seam_pred_sql, with_lattice)
 
@@ -254,6 +254,15 @@ def _horn_w(dr: int, dc: int) -> "tuple[int, int]":
     return dc * (2 - abs(dr)), dr * (2 - abs(dc))
 
 
+def _offsets_sql() -> str:
+    """explode of the 8 queen offsets (dr, dc), off-face ones included:
+    the Horn gradient left-joins every one and falls back to the cell's
+    own z where none matches."""
+    rows = ", ".join(f"struct({dr} AS dr, {dc} AS dc)"
+                     for dr, dc in _NEIGHBOR_OFFSETS)
+    return f"explode(array({rows}))"
+
+
 def slope_aspect(cells: DataFrame, res: int) -> DataFrame:
     """(cellid, gx, gy, slope_ppm, aspect_oct, on_seam): Horn gradient
     of a (cellid, z BIGINT) cell table (see module docstring)."""
@@ -262,7 +271,7 @@ def slope_aspect(cells: DataFrame, res: int) -> DataFrame:
                     F.col("face").alias("_f2"), F.col("z").alias("_zn"))
     ex = (lat
           .select("cellid", "z", "face", "row", "col",
-                  F.expr(_offsets_sql(False)).alias("o"))
+                  F.expr(_offsets_sql()).alias("o"))
           .withColumn("_r2", F.expr("row + o.dr"))
           .withColumn("_c2", F.expr("col + o.dc"))
           .withColumn("_f2", F.col("face"))

@@ -33,9 +33,10 @@ All compares are integers (ratio_ppm vs the exact 1e6 threshold), so
 the labels are engine-exact — no z-score doubles anywhere.
 
 Scale design (100 TB): obs arrives as the post-aggregation (cell, day)
-count table.  st_gi is one 9× offset explode + one (face,row,col,day)
-hash join + one agg + a day-keyed totals join-back (days ≪ cells·days:
-AQE broadcasts it); the MK stage adds the bounded per-key pair join
+count table.  st_gi is one queen-slot explode (spatial_stats
+._queen_explode, self included) + one (face,row,col,day) hash join +
+one agg + a day-keyed totals join-back (days ≪ cells·days: AQE
+broadcasts it); the MK stage adds the bounded per-key pair join
 (buckets-per-cell ≤ calendar days).  Interior queen adjacency with the
 focal family's on_seam flag semantics (seam cells aggregate fewer
 neighbors and are flagged).
@@ -48,7 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .spatial_stats import (_offsets_sql, _rowcol_terms, face_sql,
+from .spatial_stats import (_queen_explode, _rowcol_terms, face_sql,
                             seam_pred_sql, with_lattice)
 
 PPM = 1_000_000
@@ -61,13 +62,8 @@ def st_gi(obs: DataFrame, res: int) -> DataFrame:
     lat = (with_lattice(obs.select("cellid", "day", "v"), res)
            .withColumn("on_seam",
                        F.expr(seam_pred_sql(res)).cast("int")))
-    contrib = (lat
-               .select("face", "row", "col", "day", "v",
-                       F.expr(_offsets_sql(True)).alias("o"))
-               .select("face",
-                       (F.col("row") + F.col("o.dr")).alias("row"),
-                       (F.col("col") + F.col("o.dc")).alias("col"),
-                       "day", F.col("v").alias("nv")))
+    contrib = _queen_explode(lat.withColumnRenamed("v", "nv"), res,
+                             False, True, "day", "nv")
     tot = obs.groupBy("day").agg(F.sum("v").alias("_tv"),
                                  F.count("*").alias("_tn"))
     return (lat.join(contrib, ["face", "row", "col", "day"])

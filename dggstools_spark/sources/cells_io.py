@@ -9,9 +9,9 @@ gpkg_metadata), the prefix length and the written schema.
 The store costs what its data costs: ``write_cells`` rebalances rows by
 prefix, so a prefix is one file rather than one file per write task, and
 ``read_cells`` takes the schema from the sidecar (no schema-inference
-job) and, for a prefix read, opens the prefix directories it needs
-directly.  That read fires no directory-listing job while it opens at
-most 32 directories (``spark.sql.sources.parallelPartitionDiscovery
+job) and opens the prefix directories it needs directly (a full read
+is the prefix read that matches them all).  That read fires no
+directory-listing job while it opens at most 32 directories (``spark.sql.sources.parallelPartitionDiscovery
 .threshold``); above that Spark lists them in a parallel job
 (measurements in SCALE.md, Data layout)."""
 
@@ -76,11 +76,11 @@ def read_cells(spark: SparkSession, path: str,
 
     The schema comes from the sidecar, so the read runs no footer job to
     infer it; a sidecar without one (a table written before it was
-    recorded) pays one inference job.  With a ``prefix`` it lists
-    ``data/`` itself (os.listdir) and opens only the ``cell_prefix=…``
-    directories whose value starts with ``prefix[:prefix_len]``: no
-    partition pruning left to do, no listing job while at most 32
-    directories match (more fire Spark's parallel listing job), and a
+    recorded) pays one inference job.  It lists ``data/`` itself
+    (os.listdir) and opens only the ``cell_prefix=…`` directories whose
+    value starts with ``prefix[:prefix_len]`` (every one for a full
+    read): no partition pruning left to do, no listing job while at most
+    32 directories match (more fire Spark's parallel listing job), and a
     prefix matching no directory gives an empty frame with the table's
     columns.  A prefix FINER than the stored prefix_len also row-filters
     on the cellid (a bare startswith on the partition value would return
@@ -91,15 +91,13 @@ def read_cells(spark: SparkSession, path: str,
     data = f"{path}/data"
     schema = (StructType.fromJson(meta["schema"]) if "schema" in meta
               else spark.read.parquet(data).schema)
-    reader = spark.read.schema(schema).option("basePath", data)
-    if not prefix:
-        df = reader.parquet(data)
-    else:
-        dirs = sorted(f"{data}/{d}" for d in os.listdir(data)
-                      if d.startswith(f"cell_prefix={prefix[:plen]}"))
-        df = reader.parquet(*dirs) if dirs else spark.createDataFrame([], schema)
-        if len(prefix) > plen:
-            df = df.filter(F.col("cellid").startswith(prefix))
+    prefix = prefix or ""
+    dirs = sorted(f"{data}/{d}" for d in os.listdir(data)
+                  if d.startswith(f"cell_prefix={prefix[:plen]}"))
+    df = (spark.read.schema(schema).option("basePath", data).parquet(*dirs)
+          if dirs else spark.createDataFrame([], schema))
+    if len(prefix) > plen:
+        df = df.filter(F.col("cellid").startswith(prefix))
     return df.drop("cell_prefix"), meta["attrs"]
 
 

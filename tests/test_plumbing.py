@@ -134,14 +134,14 @@ def test_cells_io_roundtrip(spark, tmp_path):
     assert cells_io.read_attrs(path)["nbands"] == 1
 
 
-def _all_prefix_table(spark, tmp_path):
-    """A cell table covering all 54 res-1 prefixes (more than Spark's
-    32-path parallel-listing threshold), written from 4 input partitions
-    that each hold every prefix."""
-    prefixes = [f + str(d) for f in "NOPQRS" for d in range(9)]
-    rows = [(prefixes[i % 54] + str(i // 54), float(i)) for i in range(216)]
+def _all_prefix_table(spark, tmp_path, n=54):
+    """A cell table covering the first ``n`` res-1 prefixes (all 54 by
+    default: more than Spark's 32-path parallel-listing threshold),
+    written from 4 input partitions that each hold every prefix."""
+    prefixes = [f + str(d) for f in "NOPQRS" for d in range(9)][:n]
+    rows = [(prefixes[i % n] + str(i // n), float(i)) for i in range(4 * n)]
     df = spark.sparkContext.parallelize(rows, 4).toDF("cellid string, band1 double")
-    path = str(tmp_path / "cells54")
+    path = str(tmp_path / f"cells{n}")
     cells_io.write_cells(df, path, cells_io.build_attrs(2, 1, None), prefix_len=2)
     return df, path
 
@@ -174,30 +174,46 @@ def _jobs_while(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_read_cells_prefix_fires_no_job(spark, tmp_path):
+@pytest.mark.parametrize("case", ["prefix", "full"])
+def test_read_cells_prefix_fires_no_job(spark, tmp_path, case):
     """A prefix read takes its schema from the sidecar and opens only the
     matching prefix directories, which it lists itself: building it runs
-    no schema-inference or listing job."""
-    df, path = _all_prefix_table(spark, tmp_path)
-    (pruned, _), jobs = _jobs_while(
-        spark, "read_cells_prefix", lambda: cells_io.read_cells(spark, path, prefix="Q1"))
+    no schema-inference or listing job.  A full read is the same path
+    matching every directory: of a 10-prefix table it fires no job
+    either."""
+    if case == "prefix":
+        df, path = _all_prefix_table(spark, tmp_path)
+        prefix, want = "Q1", df.filter(F.col("cellid").startswith("Q1"))
+    else:
+        df, path = _all_prefix_table(spark, tmp_path, 10)
+        prefix, want = None, df
+    (got, _), jobs = _jobs_while(
+        spark, f"read_cells_{case}",
+        lambda: cells_io.read_cells(spark, path, prefix=prefix))
     assert jobs == 0
-    full, _ = cells_io.read_cells(spark, path)
-    want = full.filter(F.col("cellid").startswith("Q1"))
-    assert sorted(pruned.collect()) == sorted(want.collect())
-    assert len(want.collect()) == 4
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert len(want.collect()) == (4 if case == "prefix" else 40)
 
 
-def test_read_cells_prefix_over_32_dirs_fires_listing_job(spark, tmp_path):
+@pytest.mark.parametrize("case", ["prefix", "full"])
+def test_read_cells_prefix_over_32_dirs_fires_listing_job(spark, tmp_path, case):
     """The no-job prefix read holds up to 32 directories: prefix 'N' at
     prefix_len 3 opens 81, and Spark lists those in one parallel job
-    (still no schema-inference job)."""
-    rows = [(f"N{a}{b}{c}", float(c)) for a in range(9) for b in range(9) for c in range(2)]
-    df = spark.createDataFrame(rows, "cellid string, band1 double")
-    path = str(tmp_path / "cells81")
-    cells_io.write_cells(df, path, cells_io.build_attrs(3, 1, None), prefix_len=3)
+    (still no schema-inference job).  A full read of the 54-prefix
+    table opens 54 the same way and fires the same one job."""
+    if case == "prefix":
+        rows = [(f"N{a}{b}{c}", float(c))
+                for a in range(9) for b in range(9) for c in range(2)]
+        df = spark.createDataFrame(rows, "cellid string, band1 double")
+        path = str(tmp_path / "cells81")
+        cells_io.write_cells(df, path, cells_io.build_attrs(3, 1, None), prefix_len=3)
+        prefix = "N"
+    else:
+        df, path = _all_prefix_table(spark, tmp_path)
+        prefix = None
     (back, _), jobs = _jobs_while(
-        spark, "read_cells_81", lambda: cells_io.read_cells(spark, path, prefix="N"))
+        spark, f"read_cells_listing_{case}",
+        lambda: cells_io.read_cells(spark, path, prefix=prefix))
     assert jobs == 1
     assert sorted(back.collect()) == sorted(df.collect())
 

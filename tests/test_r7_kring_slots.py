@@ -1,7 +1,8 @@
 """Focused tests for the kring/neighbor internals.
 
-cell_neighbors / _xface_contrib enumerate seam neighbors with compiled
-CASE slot expressions (_nbr_slot_exprs), and kring_cells is one lazy
+cell_neighbors and every focal-family op enumerate queen neighbors
+through one explode of compiled CASE slot expressions (_queen_explode
+over _nbr_slot_exprs), and kring_cells is one lazy
 chain of k move-or-stay steps over numeric lattice coordinates (one
 slot explode per step, one min(ring) aggregate).  These tests pin those
 internals against two independent references:

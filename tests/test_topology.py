@@ -84,11 +84,9 @@ def test_edge_neighbors_geodesically_close():
 
 
 def test_xface_contrib_symmetric(spark):
-    # the contribution relation is symmetric: A contributes to B's
-    # position iff B contributes to A's position
-    from pyspark.sql import functions as F
-
-    from dggstools_spark.operators.spatial_stats import (_xface_contrib,
+    # the seam rows (a = 1) of the queen enumeration are symmetric: A
+    # contributes to B's position iff B contributes to A's position
+    from dggstools_spark.operators.spatial_stats import (_queen_explode,
                                                          with_lattice)
 
     res, E = 1, 3
@@ -96,7 +94,9 @@ def test_xface_contrib_symmetric(spark):
             for i, fc in enumerate("NOPQRS") for d in range(9)]
     df = spark.createDataFrame(rows, "cellid string, v long")
     lat = with_lattice(df, res)
-    contrib = _xface_contrib(lat, res)
+    contrib = (_queen_explode(lat.withColumnRenamed("v", "nv"), res, True,
+                              False, "nv")
+               .filter("a = 1"))
     # map nv back to its source cell (values are unique) to get pairs
     vmap = {v: c for c, v in rows}
     got = {(vmap[r.nv], f"{'NOPQRS'[r.face]}{r.row * 3 + r.col}")
@@ -126,21 +126,30 @@ def test_focal_mean_cross_face_full_sphere(spark):
             == sum(v * nw[c] for c, v in rows))
 
 
-def test_morans_cross_face_engine_parity(spark):
+@pytest.mark.parametrize("cross_face", [False, True])
+@pytest.mark.parametrize("op", ["focal_mean", "morans_i", "local_moran",
+                                "hotspots"])
+def test_focal_family_engine_parity(spark, op, cross_face):
+    """Every focal-family op equals its DuckDB twin on the full res-1
+    sphere, which holds every seam and cube-corner cell; the top-k ops
+    take k = 54, so every cell is compared."""
     import duckdb
 
-    from dggstools_spark.operators.spatial_stats import morans_i, \
-        morans_i_sql
+    from dggstools_spark.operators import spatial_stats
 
     rows = [(f"{fc}{d}", (i * 13 + d * 5) % 37)
             for i, fc in enumerate("NOPQRS") for d in range(9)]
     df = spark.createDataFrame(rows, "cellid string, v long")
-    s = morans_i(df, 1, cross_face=True).collect()[0]
-    assert s.w_pairs == 408  # 54*8 - 24 missing corner diagonals
+    k = (54,) if op in ("local_moran", "hotspots") else ()
+    got = getattr(spatial_stats, op)(df, 1, *k,
+                                     cross_face=cross_face).collect()
+    if op == "morans_i" and cross_face:
+        assert got[0].w_pairs == 408  # 54*8 - 24 missing corner diagonals
     con = duckdb.connect()
     con.execute("CREATE TABLE c AS SELECT * FROM (VALUES "
                 + ",".join(f"('{c}', {v})" for c, v in rows)
                 + ") t(cellid, v)")
-    o = con.execute(morans_i_sql("SELECT cellid, v FROM c", 1,
-                                 cross_face=True)).fetchall()[0]
-    assert tuple(s) == o
+    want = con.execute(getattr(spatial_stats, op + "_sql")(
+        "SELECT cellid, v FROM c", 1, *k, cross_face=cross_face)).fetchall()
+    assert len(got) == (1 if op == "morans_i" else 54)
+    assert sorted(tuple(r) for r in got) == sorted(want)

@@ -11,9 +11,10 @@ prefix, so a prefix is one file rather than one file per write task, and
 ``read_cells`` takes the schema from the sidecar (no schema-inference
 job) and opens the prefix directories it needs directly (a full read
 is the prefix read that matches them all).  That read fires no
-directory-listing job while it opens at most 32 directories (``spark.sql.sources.parallelPartitionDiscovery
-.threshold``); above that Spark lists them in a parallel job
-(measurements in SCALE.md, Data layout)."""
+directory-listing job while it opens at most 32 directories
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``); above
+that Spark lists them in a parallel job (measurements in SCALE.md,
+Data layout)."""
 
 from __future__ import annotations
 

@@ -22,10 +22,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def completed_batches(spark: SparkSession, root: str) -> set[str]:
-    try:
-        df = spark.read.parquet(f"{root}/_batches")
-    except Exception:
+    """Batch keys committed under ``root`` (a local path or any Hadoop-FS
+    URI); empty only when no marker table exists yet.  Any other read
+    error raises, so a corrupt marker never re-runs every batch."""
+    path = f"{root}/_batches"
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
         return set()
+    df = spark.read.parquet(path)
     return {r.batch_key for r in
             df.filter(F.col("status") == "done").select("batch_key").distinct().collect()}
 

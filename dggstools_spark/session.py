@@ -67,6 +67,15 @@ def get_spark(app_name: str = "dggstools-spark") -> SparkSession:
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config(map=PLANNER_CONFS)
+        # Python workers fork from worker_daemon, which stops the per-task
+        # re-read of pyspark.zip and the spark-core jar (0.12-0.19 s a task,
+        # CLAUDE.md constraint 23); the package dir on the workers' path
+        # makes that daemon, and the package's UDFs, importable from any
+        # cwd.  Both are static confs.  Delete the daemon setting once the
+        # interpreter is 3.13 or later (its zipimporter re-reads lazily).
+        .config("spark.python.daemon.module", "dggstools_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -36,6 +36,18 @@ def test_checkpointed_write_resume(spark, tmp_path):
     assert spark.read.parquet(f"{root}/data").count() == 90
 
 
+def test_completed_batches_absent_vs_unreadable(spark, tmp_path):
+    """No marker table means no batch is done; a marker table that cannot
+    be read raises instead of re-running every batch."""
+    assert lineage.completed_batches(spark, str(tmp_path / "fresh")) == set()
+    assert lineage.completed_batches(spark, (tmp_path / "fresh").as_uri()) == set()
+    bad = tmp_path / "bad" / "_batches"
+    bad.mkdir(parents=True)
+    (bad / "part-0.parquet").write_text("not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        lineage.completed_batches(spark, str(tmp_path / "bad"))
+
+
 def test_lineage_writes_leave_session_overwrite_mode(spark, tmp_path):
     """checkpointed_write and run_batches overwrite their batch partitions
     dynamically per write; the session's partitionOverwriteMode is left

@@ -16,15 +16,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: skewed doc points -> Arrow-batched rHEALPix cell encoding ->
     per-cell tile histogram, top tiles first (SURVEY §7.2)."""
     from dggstools_spark.queries import q_cell_counts
-    from dggstools_spark.session import PLANNER_CONFS
 
-    # a session not made by get_spark still needs the planner settings
-    # before any query joins on an encoded cellid (CLAUDE.md constraint 2).
     # The worker-daemon setting of get_spark is static, read when the
-    # context starts, so this session keeps PySpark's stock daemon and its
-    # per-task zip re-reads (constraint 23).
-    for key, value in PLANNER_CONFS.items():
-        spark.conf.set(key, value)
+    # context starts, so a session not made by get_spark keeps PySpark's
+    # stock daemon and its per-task zip re-reads (CLAUDE.md constraint 23).
     return q_cell_counts(spark, "/root/testdata/sf0.001").orderBy(
         F.col("n_docs").desc(), "cellid"
     ).limit(50)

@@ -208,16 +208,26 @@ def spark_encode(df, lon: str, lat: str, res: int,
                  out: str = "cellid",
                  with_planar: bool = False):
     """Spark DataFrame -> DataFrame with ``out`` cellid column, computed with
-    built-in expressions only (whole-stage codegen, no Python)."""
+    built-in expressions only (whole-stage codegen, no Python).
+
+    Each output leaves through a one-column ``unpivot``, whose Expand node
+    re-emits it as a new attribute: a filter, an inferred ``isnotnull`` or
+    a DPP/runtime-filter lineage walk on it stops above the Expand instead
+    of copying the ~50k-node encoder projection (CLAUDE.md constraint 2),
+    and column pruning still drops an output no caller reads."""
     from pyspark.sql import functions as F
 
     steps = encode_steps(lon, lat, res, cfg, out)
     if with_planar:
         steps = steps + extra_steps(res, cfg)
-    kept = {out} | ({"px_m", "py_m", "cx_m", "cy_m"} if with_planar else set())
+    kept = [out] + (["px_m", "py_m", "cx_m", "cy_m"] if with_planar else [])
     for name, expr in steps:
         df = df.withColumn(name, F.expr(expr))
-    return df.drop(*[name for name, _ in steps if name not in kept])
+    df = df.drop(*[name for name, _ in steps if name not in kept])
+    for c in kept:
+        df = df.unpivot([x for x in df.columns if x != c], [c],
+                        "_rhp_var", c).drop("_rhp_var")
+    return df
 
 
 def rowcol_cellid_sql(face_char: str, row: str, col: str, res: int,

@@ -96,12 +96,7 @@ def _cells_xf_sql() -> str:
 def q_focal_xface(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.spatial_stats import focal_mean
 
-    # dedup: 2 consumers (both sides of the neighbor join).  A/B at sf0.1,
-    # local[4]: with the cut 1.07 s against 1.32 s without (median of 3
-    # alternating pairs, the cut faster in 3 of 3; 3 of 3 again in a
-    # second set)
-    cells = _cells_xf(spark, sf_dir).localCheckpoint(eager=True)
-    return focal_mean(cells, XF_RES, cross_face=True)
+    return focal_mean(_cells_xf(spark, sf_dir), XF_RES, cross_face=True)
 
 
 def _oracle_focal_xface() -> str:

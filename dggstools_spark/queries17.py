@@ -24,12 +24,7 @@ HOT_K = 25
 def q_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.spatial_stats import hotspots
 
-    # dedup: 2 consumers (both sides of the neighbor join).  A/B at sf0.1,
-    # local[4]: with the cut 0.84 s against 1.03 s without (median of 3
-    # alternating pairs, the cut faster in 3 of 3; 3 of 3 again in a
-    # second set)
-    cells = _cells(spark, sf_dir).localCheckpoint(eager=True)
-    return hotspots(cells, CELL_RES, HOT_K)
+    return hotspots(_cells(spark, sf_dir), CELL_RES, HOT_K)
 
 
 def _oracle_hotspots() -> str:

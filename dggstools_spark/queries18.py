@@ -77,12 +77,7 @@ _CORNER_B = str(lonlat_to_cellid(np.array([44.0]), np.array([-20.0]),
 def q_bbox_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.spatial_stats import bbox_cells
 
-    # A/B: without this cut the cellid range filters are pushed through
-    # the groupBy into the encoder projection (the Spark twin of CLAUDE.md
-    # constraint 7) and planning ran out of a 6 GB heap at sf0.1; with it
-    # the leaf ran in 0.8 s (same-time run, local[4])
-    return bbox_cells(_cells(spark, sf_dir).localCheckpoint(eager=True),
-                      CELL_RES, _CORNER_A, _CORNER_B)
+    return bbox_cells(_cells(spark, sf_dir), CELL_RES, _CORNER_A, _CORNER_B)
 
 
 def _oracle_bbox_cells() -> str:

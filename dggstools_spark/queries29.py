@@ -63,8 +63,13 @@ def q_g_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pointpat import g_function
 
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
+    # dedup: 3 consumers (the k-ring seeds, the nearest-ring join and the
+    # total count).  A/B at sf0.1, local[4]: with the cut 3.17 s against
+    # 3.92 s without (median of 3 alternating pairs, the cut faster in 3
+    # of 3; 3 of 3 again in a second set, 4.15 against 5.15 s)
     cells = (encode_sql.spark_encode(docs, "lon", "lat", GF_RES)
-             .select("cellid").distinct())
+             .select("cellid").distinct()
+             .localCheckpoint(eager=True))
     return g_function(cells, GF_RES, GF_KMAX)
 
 
@@ -265,18 +270,12 @@ def q_access_2sfca(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     pop = (encode_sql.spark_encode(docs, "lon", "lat", AC_RES)
            .groupBy("cellid")
-           .agg(F.count("*").cast("bigint").alias("pop"))
-           # dedup: 3 consumers (the k-ring seeds and both catchment
-           # steps); fac below has 2.  A/B at sf0.1, local[4]: with both
-           # cuts 1.74 s against 2.77 s without (median of 3 alternating
-           # pairs, the cuts faster in 3 of 3)
-           .localCheckpoint(eager=True))
+           .agg(F.count("*").cast("bigint").alias("pop")))
     sup = synth.with_lonlat(load(spark, sf_dir, "supplier"), "s_suppkey")
     fac = (encode_sql.spark_encode(sup, "lon", "lat", AC_RES)
            .select(F.col("s_suppkey").alias("fac_id"), "cellid",
                    F.expr("CAST(s_suppkey % 50 + 1 AS BIGINT)")
-                   .alias("cap"))
-           .localCheckpoint(eager=True))
+                   .alias("cap")))
     acc = access_2sfca(pop, fac, AC_RES, AC_KMAX)
     rw = Window.orderBy(F.desc("access_q9"), F.asc("cellid"))
     return (acc.withColumn("rank", F.row_number().over(rw))

@@ -11,22 +11,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Optimizer rules that hang on the expression cell encoder (CLAUDE.md
-# constraint 2).  A join on an encoded key over a file source lets
-# InferFiltersFromConstraints push isnotnull(cellid) into the ~50k-node
-# encoder projection, and dynamic partition pruning and the runtime bloom
-# filter then walk that tree: planning `enc.join(enc.select("cellid")
-# .distinct(), "cellid")` took > 90 s or killed the JVM.  All three off, it
-# plans in under a second (tests/test_encoder_planning.py); any one of
-# them left on still hangs.  DPP only prunes partition columns, and no
-# query joins on one.
-PLANNER_CONFS = {
-    "spark.sql.optimizer.excludedRules":
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints",
-    "spark.sql.optimizer.dynamicPartitionPruning.enabled": "false",
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
-}
-
 
 def get_spark(app_name: str = "dggstools-spark") -> SparkSession:
     """local[N] session, N = $SPARK_GRAFT_CPUS or the CPUs this process may
@@ -66,7 +50,6 @@ def get_spark(app_name: str = "dggstools-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.host", "127.0.0.1")
-        .config(map=PLANNER_CONFS)
         # Python workers fork from worker_daemon, which stops the per-task
         # re-read of pyspark.zip and the spark-core jar (0.12-0.19 s a task,
         # CLAUDE.md constraint 23); the package dir on the workers' path

@@ -1,11 +1,15 @@
-"""Planning a join on the expression encoder's output stays fast.
+"""Planning a query over the expression encoder's output stays fast.
 
 The encoder is a ~50k-node projection.  Over a file source, a join on the
 encoded ``cellid`` used to hang the optimizer (constraint inference pushed
 ``isnotnull(cellid)`` into the encoder tree, then dynamic partition pruning
-and the runtime bloom filter walked it) or exit the JVM.  ``get_spark``
-turns those rules off.  The query is planned in a child process with a hard
-timeout, so a hang or a JVM exit fails this test only."""
+and the runtime bloom filter walked it) or exit the JVM, and a filter on
+``cellid`` above a groupBy (``bbox_cells``) was pushed into the tree the
+same way.  ``spark_encode`` now re-emits each output through the Expand
+node of a one-column unpivot, which no predicate or lineage walk on it
+passes, so both shapes plan under stock optimizer settings.  They are
+planned in a child process with a hard timeout, so a hang or a JVM exit
+fails this test only."""
 
 import json
 import os
@@ -13,39 +17,82 @@ import signal
 import subprocess
 import sys
 
+from pyspark.sql import functions as F
+
+from dggstools_spark.functions import encode_sql
+from dggstools_spark.sources import synth
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
 from dggstools_spark.functions import encode_sql
+from dggstools_spark.queries18 import q_bbox_cells
 from dggstools_spark.session import get_spark
 from dggstools_spark.sources import synth
 spark = get_spark("encoder-planning")
+for key in ("spark.sql.optimizer.excludedRules",
+            "spark.sql.optimizer.dynamicPartitionPruning.enabled",
+            "spark.sql.optimizer.runtime.bloomFilter.enabled"):
+    assert spark.conf.get(key, None) is None, key
 docs = synth.with_lonlat(spark.read.parquet({docs!r}), "doc_id")
+shapes = {{"bbox_cells": q_bbox_cells(spark, {sf_dir!r})}}
 for res in (1, 8):
     enc = encode_sql.spark_encode(docs, "lon", "lat", res)
-    q = enc.join(enc.select("cellid").distinct(), "cellid")
+    shapes[f"self_join_{{res}}"] = enc.join(enc.select("cellid").distinct(),
+                                           "cellid")
+for name, q in shapes.items():
     t0 = time.perf_counter()
     q._jdf.queryExecution().optimizedPlan()
-    print("PLAN_S:" + json.dumps([res, time.perf_counter() - t0]), flush=True)
+    print("PLAN_S:" + json.dumps([name, time.perf_counter() - t0]), flush=True)
 spark.stop()
 """
 
 
 def test_uncut_encoder_self_join_plans_fast(sf_dir):
-    code = CHILD.format(repo=REPO, docs=f"{sf_dir}/documents.parquet")
+    code = CHILD.format(repo=REPO, sf_dir=sf_dir,
+                        docs=f"{sf_dir}/documents.parquet")
     env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="2g")
     proc = subprocess.Popen([sys.executable, "-c", code], env=env, text=True,
-                            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+                            stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                             start_new_session=True)
     try:
-        out, _ = proc.communicate(timeout=180)
+        out, err = proc.communicate(timeout=180)
     except subprocess.TimeoutExpired:
         os.killpg(proc.pid, signal.SIGKILL)  # the JVM too
         proc.communicate()
-        raise AssertionError("encoder self-join did not plan within 180 s")
+        raise AssertionError("encoder queries did not plan within 180 s")
     times = dict(json.loads(line[len("PLAN_S:"):])
                  for line in out.splitlines() if line.startswith("PLAN_S:"))
-    assert sorted(times) == [1, 8], f"child exited {proc.returncode}: {out[-500:]}"
+    assert sorted(times) == ["bbox_cells", "self_join_1", "self_join_8"], \
+        f"child exited {proc.returncode}: {err[-1000:]}"
     assert all(t < 2.0 for t in times.values()), times
+
+
+def _nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def _filters_stop_at_barrier(q):
+    """Every Filter in q's optimized plan sits above the encoder's Expand
+    and names no encoder step (``_rhp_*``) or encoder function."""
+    filters = [n for n in _nodes(q._jdf.queryExecution().optimizedPlan())
+               if n.nodeName() == "Filter"]
+    assert filters
+    for f in filters:
+        cond = f.condition().toString()
+        assert "_rhp_" not in cond and "radians" not in cond.lower(), cond[:300]
+        assert any(n.nodeName() == "Expand" for n in _nodes(f)), cond[:300]
+
+
+def test_filters_on_encoder_outputs_stop_at_barrier(spark, sf_dir):
+    docs = synth.with_lonlat(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+    enc = encode_sql.spark_encode(docs, "lon", "lat", 8)
+    _filters_stop_at_barrier(enc.filter(F.col("cellid").startswith("Q")))
+    planar = encode_sql.spark_encode(docs, "lon", "lat", 8, with_planar=True)
+    _filters_stop_at_barrier(planar.filter(F.col("px_m") > 0))

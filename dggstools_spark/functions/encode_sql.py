@@ -214,7 +214,10 @@ def spark_encode(df, lon: str, lat: str, res: int,
     re-emits it as a new attribute: a filter, an inferred ``isnotnull`` or
     a DPP/runtime-filter lineage walk on it stops above the Expand instead
     of copying the ~50k-node encoder projection (CLAUDE.md constraint 2),
-    and column pruning still drops an output no caller reads."""
+    and column pruning still drops an output no caller reads.  The other
+    columns cross the Expand as aliases, so two reads of one encoded
+    frame plan alike and share an exchange; a filter on them also stops
+    there, so filter source columns before encoding."""
     from pyspark.sql import functions as F
 
     steps = encode_steps(lon, lat, res, cfg, out)
@@ -225,8 +228,8 @@ def spark_encode(df, lon: str, lat: str, res: int,
         df = df.withColumn(name, F.expr(expr))
     df = df.drop(*[name for name, _ in steps if name not in kept])
     for c in kept:
-        df = df.unpivot([x for x in df.columns if x != c], [c],
-                        "_rhp_var", c).drop("_rhp_var")
+        df = df.unpivot([F.col(x).alias(x) for x in df.columns if x != c],
+                        [c], "_rhp_var", c).drop("_rhp_var")
     return df
 
 

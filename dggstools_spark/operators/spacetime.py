@@ -92,6 +92,11 @@ def emerging_hotspots(obs: DataFrame, res: int, k: int,
 
     from .trend import mk_stats
 
+    # dedup: st_gi reads obs 3 times (lattice, neighbour contributions,
+    # per-day totals); the lattice read carries inferred null filters the
+    # other two lack, so it shares no exchange with them and the encoded
+    # input under obs would be computed twice
+    obs = obs.localCheckpoint(eager=True)
     # dedup: 2 consumers (mk_stats and the per-cell summary)
     gi = st_gi(obs, res).localCheckpoint(eager=True)
     mk = mk_stats(gi, "cellid", "day", "ratio_ppm")

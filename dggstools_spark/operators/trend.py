@@ -229,8 +229,12 @@ def mk_stats(obs: DataFrame, key_col: str, t_col: str,
                   F.col("y").alias("_ya"))
     b = pb.select(F.col(key_col), F.col(t_col).alias("_tb"),
                   F.col("y").alias("_yb"))
+    # coalesce(..., false) keeps the pair filter but is null-tolerant, so
+    # no isnotnull(t) is inferred onto this branch alone: both uses of
+    # pb then carry the same filters and share one exchange (one scan of
+    # obs) instead of computing obs twice
     s = (a.join(b, key_col)
-         .filter(F.col("_ta") < F.col("_tb"))
+         .filter(F.coalesce(F.col("_ta") < F.col("_tb"), F.lit(False)))
          .groupBy(key_col)
          .agg(F.sum(F.expr(
              "CASE WHEN _yb > _ya THEN 1"

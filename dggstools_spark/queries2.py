@@ -107,8 +107,9 @@ def q_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = encode_sql.spark_encode(docs, "lon", "lat", 6, with_planar=True) \
         .select("doc_id", F.col("px_m").alias("px"), F.col("py_m").alias("py"))
     # dedup: the density pre-pass and every level's candidate join read
-    # pts.  A/B at sf0.1, local[4]: with the cut 4.27 s against 6.29 s
-    # without (median of 3 alternating pairs, the cut faster in 3 of 3)
+    # pts.  A/B at sf0.1, local[4]: with the cut 3.07 s against 3.43 s
+    # without (median of 3 alternating pairs, the cut faster in 3 of 3;
+    # 2 of 3 in a first set that overlapped another job)
     pts = pts.localCheckpoint(eager=False)
     qx, qy = _query_points_sql("n_nationkey")
     qs = load(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 10).select(

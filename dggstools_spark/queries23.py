@@ -31,7 +31,7 @@ def q_cell_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corridors without the top-k cut: the graph wants every edge, so k
     # is set to cover all pairs (res-2 cell count squared is the bound)
     # dedup: 2 consumers (page_rank's edge table and node list).  A/B at
-    # sf0.1, local[4]: with the cut 6.30 s against 8.29 s without (median
+    # sf0.1, local[4]: with the cut 4.19 s against 5.47 s without (median
     # of 3 alternating pairs, the cut faster in 3 of 3)
     flows = od_flows(_flow_obs(spark, sf_dir), "user_id", "tms",
                      "event_id", "cellid", k=10_000_000) \

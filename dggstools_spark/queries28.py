@@ -112,9 +112,10 @@ def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy("cellid")
              .agg(F.count("*").alias("n"))
              # dedup: 3 consumers (the k-ring seeds and two count
-             # join-backs).  A/B at sf0.1, local[4]: with the cut 4.95 s
-             # against 6.41 s without (median of 3 alternating pairs, the
-             # cut faster in 3 of 3)
+             # join-backs).  A/B at sf0.1, local[4]: with the cut 2.90 s
+             # against 3.32 s without (median of 3 alternating pairs, the
+             # cut faster in 3 of 3; 2 of 3 in a first set that overlapped
+             # another job)
              .localCheckpoint(eager=True))
     return ripley_k(cells, RK_RES, RK_KMAX)
 

@@ -63,13 +63,8 @@ def q_g_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pointpat import g_function
 
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
-    # dedup: 3 consumers (the k-ring seeds, the nearest-ring join and the
-    # total count).  A/B at sf0.1, local[4]: with the cut 3.17 s against
-    # 3.92 s without (median of 3 alternating pairs, the cut faster in 3
-    # of 3; 3 of 3 again in a second set, 4.15 against 5.15 s)
     cells = (encode_sql.spark_encode(docs, "lon", "lat", GF_RES)
-             .select("cellid").distinct()
-             .localCheckpoint(eager=True))
+             .select("cellid").distinct())
     return g_function(cells, GF_RES, GF_KMAX)
 
 
@@ -270,7 +265,13 @@ def q_access_2sfca(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = synth.with_lonlat(load(spark, sf_dir, "documents"), "doc_id")
     pop = (encode_sql.spark_encode(docs, "lon", "lat", AC_RES)
            .groupBy("cellid")
-           .agg(F.count("*").cast("bigint").alias("pop")))
+           .agg(F.count("*").cast("bigint").alias("pop"))
+           # dedup: 3 consumers (the k-ring seeds and both catchment
+           # steps).  A/B at sf0.1, local[4], median of 3 alternating
+           # pairs: with this cut 3.27 s against 3.42 s without, the cut
+           # faster in 3 of 3 (one-leaf processes); a like cut on fac
+           # added nothing (3.52 s with both, faster in 1 of 3)
+           .localCheckpoint(eager=True))
     sup = synth.with_lonlat(load(spark, sf_dir, "supplier"), "s_suppkey")
     fac = (encode_sql.spark_encode(sup, "lon", "lat", AC_RES)
            .select(F.col("s_suppkey").alias("fac_id"), "cellid",

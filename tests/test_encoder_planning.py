@@ -9,7 +9,8 @@ same way.  ``spark_encode`` now re-emits each output through the Expand
 node of a one-column unpivot, which no predicate or lineage walk on it
 passes, so both shapes plan under stock optimizer settings.  They are
 planned in a child process with a hard timeout, so a hang or a JVM exit
-fails this test only."""
+fails this test only.  Two reads of one encoded frame still share one
+scan and one encoder pass."""
 
 import json
 import os
@@ -96,3 +97,30 @@ def test_filters_on_encoder_outputs_stop_at_barrier(spark, sf_dir):
     _filters_stop_at_barrier(enc.filter(F.col("cellid").startswith("Q")))
     planar = encode_sql.spark_encode(docs, "lon", "lat", 8, with_planar=True)
     _filters_stop_at_barrier(planar.filter(F.col("px_m") > 0))
+
+
+def _scan_count(spark, q):
+    """File scans in q's physical plan, AQE off so exchange reuse is
+    applied at planning (a ReusedExchange has no children)."""
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plan = q._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set(key, old)
+    return sum(1 for n in _nodes(plan) if n.nodeName().startswith("Scan"))
+
+
+def test_two_reads_of_encoder_output_share_one_scan(spark, sf_dir):
+    from dggstools_spark.operators.trend import mk_stats, theilsen
+
+    docs = synth.with_lonlat(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+    obs = encode_sql.spark_encode(docs, "lon", "lat", 2).select(
+        "cellid", (F.col("doc_id") % 7).alias("day"),
+        F.lit(1).cast("bigint").alias("y"))
+    # theilsen's self-join reads obs twice with the same filters; mk_stats
+    # adds the tie rollup, a third read with no filter on day
+    assert _scan_count(spark, theilsen(obs, "cellid", "day", "y")) == 1
+    assert _scan_count(spark, mk_stats(obs, "cellid", "day", "y")) == 1

@@ -3,8 +3,8 @@ point-in-polygon, subarea, merge/resume, AUID compaction, k-ring
 (kring_xface and the point-pattern/accessibility leaves on it) and
 cell-store (cells_io: write, then prefix read) leaves, and for every leaf
 that joins, filters or iterates over expression-encoder output without a
-lineage cut (the Generate barrier in encode_sql.spark_encode, CLAUDE.md
-constraint 2): each leaf's Spark result must equal its DuckDB
+lineage cut (the Expand (unpivot) barrier in encode_sql.spark_encode,
+CLAUDE.md constraint 2): each leaf's Spark result must equal its DuckDB
 ``oracle_sql()`` on row count, column-name set and ``canonical_hash`` at
 sf0.01 — the compare
 ``scripts/check_entry.py`` runs for the whole registry."""

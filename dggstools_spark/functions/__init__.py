@@ -1,6 +1,5 @@
 from . import encode_sql
 from . import encode
-from . import cellids
 from . import text
 
-__all__ = ["encode_sql", "encode", "cellids", "text"]
+__all__ = ["encode_sql", "encode", "text"]

@@ -21,32 +21,21 @@ def token_count(text: str) -> str:
             f"ELSE length(trim({text})) - length(replace(trim({text}), ' ', '')) + 1 END")
 
 
-def punct_ratio(text: str) -> str:
-    parts = " + ".join(occurrences(text, p) for p in (".", ",", "!", "?", ";"))
-    return f"CAST({parts} AS DOUBLE) / greatest(length({text}), 1)"
-
-
-def quality_q20(text: str) -> str:
-    """EXACT-INTEGER quality score in q20 fixed point (0..~2^20): the
-    integer mirror of quality_score with floor-quantized weights —
+def _quality_q20(text: str, idiv: str) -> str:
+    """EXACT-INTEGER quality score in q20 fixed point (0..~2^20): a
+    length/stopword/punctuation heuristic with floor-quantized weights —
     least(toks,64)*8192 + least(stop,8)*39321 + least(punct*4*2^20 div
     len, 209715).  Pure integer arithmetic end to end, so the value is
     bit-identical across engines and safe to hash/rank/argmax.
 
-    Exists because quality_score's round(x, 6) is NOT engine-portable at
-    exact .xxxxxx5 boundaries (CLAUDE.md constraint 17, found by the sf1
-    cluster_keep gate: Spark rounds the shortest decimal representation
-    HALF_UP, DuckDB rounds the binary double — 210 of 50k docs differed
-    by 1e-6; the tok term t/128 lands on those boundaries constantly).
-    Use THIS snippet wherever the score is hashed or compared.
+    It replaced a float score rounded with round(x, 6), which is NOT
+    engine-portable at exact .xxxxxx5 boundaries (CLAUDE.md constraint
+    17, found by the sf1 cluster_keep gate: Spark rounds the shortest
+    decimal representation HALF_UP, DuckDB rounds the binary double — 210
+    of 50k docs differed by 1e-6).
 
     Integer division is the one dialect split (Spark ``div`` vs DuckDB
-    ``//``), so this is a template: use quality_q20_spark /
-    quality_q20_duckdb."""
-    raise NotImplementedError("use quality_q20_spark / quality_q20_duckdb")
-
-
-def _quality_q20(text: str, idiv: str) -> str:
+    ``//``), so callers use quality_q20_spark / quality_q20_duckdb."""
     toks = token_count(text)
     stop = " + ".join(occurrences(f"lower({text})", f" {w} ")
                       for w in ("the", "and", "of", "a", "in"))
@@ -63,22 +52,6 @@ def quality_q20_spark(text: str) -> str:
 
 def quality_q20_duckdb(text: str) -> str:
     return _quality_q20(text, "//")
-
-
-def quality_score(text: str) -> str:
-    """Simple length/punct/stopword quality heuristic in [0, 1], rounded to
-    6 decimals.  WARNING (CLAUDE.md constraint 17): round(x, 6) straddles
-    engine rounding semantics when x sits exactly on a .xxxxxx5 boundary —
-    fine for display/filtering, NOT safe to hash or argmax across engines;
-    use quality_q20 for those."""
-    toks = token_count(text)
-    stop = " + ".join(occurrences(f"lower({text})", f" {w} ")
-                      for w in ("the", "and", "of", "a", "in"))
-    return (
-        f"round(least(1.0, CAST({toks} AS DOUBLE) / 64.0) * 0.5"
-        f" + least(1.0, CAST({stop} AS DOUBLE) / 8.0) * 0.3"
-        f" + least(1.0, {punct_ratio(text)} * 20.0) * 0.2, 6)"
-    )
 
 
 LANG_MARKERS = {

@@ -41,24 +41,18 @@ from .spatial_stats import _kring_walk, kring_cells_sql
 Q9 = 1_000_000_000
 
 
-def _reach(cells: DataFrame, res: int, kmax: int,
-           cross_face: bool) -> DataFrame:
-    """(cellid, nbr) pairs with graph distance ≤ kmax, INCLUDING the
-    ring-0 self pair, over the given seed cells."""
-    return _kring_walk(cells, res, kmax, cross_face).select("cellid", "nbr")
-
-
-def access_2sfca(pop: DataFrame, fac: DataFrame, res: int, kmax: int,
-                 cross_face: bool = True) -> DataFrame:
+def access_2sfca(pop: DataFrame, fac: DataFrame, res: int,
+                 kmax: int) -> DataFrame:
     """(cellid, access_q9, n_fac): 2SFCA accessibility of every demand
     cell.  ``pop`` = (cellid, pop BIGINT); ``fac`` = (fac_id, cellid,
     cap BIGINT).  See module docstring."""
     if kmax < 1:
         raise ValueError(f"access_2sfca: kmax must be >= 1, got {kmax}")
     cells = pop.select("cellid").unionByName(fac.select("cellid"))
-    # dedup: 2 consumers (the catchment sums of steps 1 and 2)
-    rel = _reach(cells, res, kmax, cross_face).localCheckpoint(
-        eager=True)
+    # (cellid, nbr) pairs within kmax rings, INCLUDING the ring-0 self
+    # pair.  dedup: 2 consumers (the catchment sums of steps 1 and 2)
+    rel = _kring_walk(cells, res, kmax, True).select(
+        "cellid", "nbr").localCheckpoint(eager=True)
     # step 1: population within each facility's catchment
     ratio = (fac
              .join(rel, "cellid")
@@ -79,16 +73,15 @@ def access_2sfca(pop: DataFrame, fac: DataFrame, res: int, kmax: int,
                  F.count("*").alias("n_fac")))
 
 
-def access_2sfca_ctes(pop_sql: str, fac_sql: str, res: int, kmax: int,
-                      cross_face: bool = True) -> str:
+def access_2sfca_ctes(pop_sql: str, fac_sql: str, res: int,
+                      kmax: int) -> str:
     """DuckDB CTE chain ending in ``acc`` (cellid, access_q9, n_fac) —
     the twin of :func:`access_2sfca` over ``pop_sql`` → (cellid, pop)
     and ``fac_sql`` → (fac_id, cellid, cap)."""
     if kmax < 1:
         raise ValueError(
             f"access_2sfca_ctes: kmax must be >= 1, got {kmax}")
-    kr = kring_cells_sql("(SELECT cellid FROM _seeds)", res, kmax,
-                         cross_face=cross_face)
+    kr = kring_cells_sql("(SELECT cellid FROM _seeds)", res, kmax)
     return f"""
     _pop AS MATERIALIZED ({pop_sql}),
     _fac AS MATERIALIZED ({fac_sql}),
@@ -133,7 +126,7 @@ def access_2sfca_ctes(pop_sql: str, fac_sql: str, res: int, kmax: int,
 
 
 def voronoi_assign(cells: DataFrame, fac: DataFrame, res: int,
-                   kmax: int, cross_face: bool = True) -> DataFrame:
+                   kmax: int) -> DataFrame:
     """(cellid, fac_id, ring): nearest-facility label for every demand
     cell within ``kmax`` rings of some facility.  ``cells`` = (cellid);
     ``fac`` = (fac_id, cellid)."""
@@ -143,7 +136,7 @@ def voronoi_assign(cells: DataFrame, fac: DataFrame, res: int,
     fc = fac.select(F.col("cellid").alias("nbr"), "fac_id")
     # the walk keeps the ring-0 self pair (a facility in the demand cell
     # itself wins outright)
-    kr = _kring_walk(cells, res, kmax, cross_face)
+    kr = _kring_walk(cells, res, kmax, True)
     return (kr.join(fc, "nbr")
             .groupBy("cellid")
             .agg(F.min(F.struct(F.col("ring").alias("r"),
@@ -153,14 +146,13 @@ def voronoi_assign(cells: DataFrame, fac: DataFrame, res: int,
 
 
 def voronoi_assign_ctes(cells_sql: str, fac_sql: str, res: int,
-                        kmax: int, cross_face: bool = True) -> str:
+                        kmax: int) -> str:
     """DuckDB CTE chain ending in ``vor`` (cellid, fac_id, ring) — the
     twin of :func:`voronoi_assign`."""
     if kmax < 1:
         raise ValueError(
             f"voronoi_assign_ctes: kmax must be >= 1, got {kmax}")
-    kr = kring_cells_sql("(SELECT cellid FROM _dem)", res, kmax,
-                         cross_face=cross_face)
+    kr = kring_cells_sql("(SELECT cellid FROM _dem)", res, kmax)
     return f"""
     _dem AS MATERIALIZED (SELECT DISTINCT cellid FROM ({cells_sql})),
     _fc AS MATERIALIZED (

@@ -149,8 +149,7 @@ def hot_bucket_stats(df: DataFrame, key: str, max_bucket: int) -> DataFrame:
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
-                      n_hashes: int = N_MINHASHES, band_size: int = BAND_SIZE,
-                      shingle_n: int = 3,
+                      band_size: int = BAND_SIZE,
                       max_bucket: int | None = 500) -> DataFrame:
     """Candidate near-dup pairs (a_id < b_id) sharing at least one LSH band.
 
@@ -158,7 +157,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     the cap are dropped from pair generation — standard LSH-dedup practice;
     a bucket that hot is boilerplate, not near-duplication signal.  Use
     hot_bucket_stats(lsh_bands(...), 'band_key', cap) to log dropped mass."""
-    bands = lsh_bands(df, text_col, id_col, n_hashes, band_size, shingle_n)
+    bands = lsh_bands(df, text_col, id_col, N_MINHASHES, band_size)
     bands = _cap_hot_keys(bands, "band_key", max_bucket)
     a = bands.select(F.col(id_col).alias("a_id"), "band_key")
     b = bands.select(F.col(id_col).alias("b_id"), "band_key")
@@ -171,10 +170,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
 
 
 def lsh_bands(df: DataFrame, text_col: str, id_col: str,
-              n_hashes: int = N_MINHASHES, band_size: int = BAND_SIZE,
-              shingle_n: int = 3) -> DataFrame:
-    """(id, band_key) rows: the banded-signature LSH keys."""
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n)
+              n_hashes: int = N_MINHASHES,
+              band_size: int = BAND_SIZE) -> DataFrame:
+    """(id, band_key) rows: the banded-signature LSH keys over word
+    3-gram MinHash signatures."""
+    sig = minhash_signatures(df, text_col, id_col, n_hashes)
     n_bands = n_hashes // band_size
     return sig.select(
         id_col,
@@ -186,9 +186,9 @@ def lsh_bands(df: DataFrame, text_col: str, id_col: str,
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
-                        shingle_n: int = 3, threshold: float = 0.5,
+                        threshold: float = 0.5,
                         max_doc_freq: int | None = 500) -> DataFrame:
-    """Exact Jaccard over word n-grams for pairs sharing >= 1 shingle.
+    """Exact Jaccard over word 3-grams for pairs sharing >= 1 shingle.
     Output: (a_id, b_id, jac_ppm).
 
     ``max_doc_freq`` caps shingle document frequency before the self-join
@@ -197,7 +197,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     pairs (conservative: Jaccard is underestimated, never inflated); doc
     sizes n_a/n_b still count every shingle.  Dropped mass:
     hot_bucket_stats(<distinct shingles>, 'shingle', cap)."""
-    sh = shingles(df.select(id_col, text_col), text_col, shingle_n) \
+    sh = shingles(df.select(id_col, text_col), text_col, 3) \
         .select(id_col, "shingle").distinct()
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     sh_capped = _cap_hot_keys(sh, "shingle", max_doc_freq)
@@ -529,9 +529,13 @@ def embedding_cosine_pairs(df: DataFrame, vec_col: str, id_col: str,
     )
 
 
+#: min-label rounds dedup_clusters runs before it gives up (logged)
+CC_MAX_ITERS = 30
+
+
 def dedup_clusters(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
-                   node_col: str = "doc_id", cluster_col: str = "cluster_id",
-                   max_iters: int = 30) -> DataFrame:
+                   node_col: str = "doc_id",
+                   cluster_col: str = "cluster_id") -> DataFrame:
     """Connected components over a near-dup pair graph -> one
     (node, cluster_id) row per node appearing in ``pairs``, with
     cluster_id = the component's MINIMUM member id (the canonical doc a
@@ -547,11 +551,12 @@ def dedup_clusters(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
     frame, lineage-cut per iteration, driver-side converged check (one
     count of a checkpointed frame).  The label-of-label hop is what makes
     long chains converge in O(log diameter) instead of O(diameter) rounds
-    (a neighbor-only walk would silently exceed ``max_iters`` on
+    (a neighbor-only walk would silently exceed ``CC_MAX_ITERS`` on
     pathological path graphs); bucketed pair generators emit near-clique
-    components, so 2-3 iterations are typical and ``max_iters=30`` bounds
-    chains of length ~2^30.  A non-converged exit logs a WARNING (labels
-    are then an upper bound, still per-component-consistent prefixes).
+    components, so 2-3 iterations are typical and the 30-round bound
+    covers chains of length ~2^30.  A non-converged exit logs a WARNING
+    (labels are then an upper bound, still per-component-consistent
+    prefixes).
     Isolated docs (no pair) are absent — they are trivially their own
     cluster.  Deterministic: the min label is order-free."""
     e = pairs.select(F.col(a).alias("_x"), F.col(b).alias("_y"))
@@ -568,7 +573,7 @@ def dedup_clusters(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
     # SLOWER — the doubled in-job plan outweighed the saved job; kept
     # the single round per action.)
     converged = False
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         nbr_min = (edges.join(
             labels.select(F.col("_n").alias("_y"), F.col("_lab").alias("_ylab")),
             "_y")
@@ -601,7 +606,8 @@ def dedup_clusters(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
             break
     if not converged:
         logger.warning("dedup_clusters: not converged after %d iterations "
-                       "(component diameter > ~2^%d?)", max_iters, max_iters)
+                       "(component diameter > ~2^%d?)", CC_MAX_ITERS,
+                       CC_MAX_ITERS)
     return labels.select(F.col("_n").alias(node_col),
                          F.col("_lab").alias(cluster_col))
 
@@ -642,29 +648,28 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str = "doc_id",
 last_winnow_cap: dict = {}
 
 
-def winnow_auto_cap(fps: DataFrame, id_col: str = "doc_id",
-                    q: float = 0.99, corpus_frac: float = 0.01,
-                    floor: int = 8) -> int:
+def winnow_auto_cap(fps: DataFrame, id_col: str = "doc_id") -> int:
     """Corpus-derived doc-frequency cap for winnow_pairs, replacing the
     flat 500 with the rule the SCALE.md round-3 study motivates: a
     genuinely copied passage's fingerprint sits in the extreme tail of the
     fingerprint doc-frequency distribution AND spans only a vanishing
     fraction of the corpus, so
 
-        cap = min( P_q(doc-frequency),  max(floor, corpus_frac * n_docs) )
+        cap = min( P_99(doc-frequency),  max(8, 0.01 * n_docs) )
 
     On long-tail web corpora the quantile governs — only the top
-    (1-q) boilerplate share is dropped.  On TEMPLATED corpora (the
+    1 % boilerplate share is dropped.  On TEMPLATED corpora (the
     synthetic tables: p50/p99 = 288/3,853 of 5,000 docs share a
     fingerprint) the quantile is useless and the absolute corpus-fraction
     bound governs, dropping template fingerprints — the study's "max
     plausible cluster size of a genuinely copied passage" reading.
-    ``floor`` keeps tiny corpora from capping below a real copy cluster.
+    The floor of 8 keeps tiny corpora from capping below a real copy
+    cluster.
     The quantile is the EXACT order statistic, not approx_percentile: the
     approx sketch's merge result varies with partitioning, so pair output
     near the cap boundary could differ across runs/cluster layouts
-    (ADVICE r4).  Exactness is cheap here because q is high — the value at
-    ascending rank ceil(q*n) is the MIN of the top ceil((1-q)*n)+1
+    (ADVICE r4).  Exactness is cheap here because q = 0.99 is high — the
+    value at ascending rank ceil(q*n) is the MIN of the top ceil((1-q)*n)+1
     frequencies, a TakeOrdered over ~1% of the distinct-fingerprint frame,
     no full sort, deterministic under any partitioning (order statistics
     are permutation-invariant).  Costs three tiny jobs over ``fps``
@@ -672,12 +677,12 @@ def winnow_auto_cap(fps: DataFrame, id_col: str = "doc_id",
     a materialized fps frame."""
     freq = fps.groupBy("fp").agg(F.count("*").alias("_df"))
     n_fp = freq.count()
-    k_desc = n_fp - max(1, int(math.ceil(q * n_fp))) + 1
+    k_desc = n_fp - max(1, int(math.ceil(0.99 * n_fp))) + 1
     qv = (freq.select("_df").sort(F.desc("_df")).limit(k_desc)
           .agg(F.min("_df")).first()[0]) if n_fp else None
     qv = qv or 1
     n_docs = fps.select(id_col).distinct().count()
-    return max(2, int(min(float(qv), max(float(floor), corpus_frac * n_docs))))
+    return max(2, int(min(float(qv), max(8.0, 0.01 * n_docs))))
 
 
 def winnow_pairs(df: DataFrame, text_col: str, id_col: str = "doc_id",
@@ -724,7 +729,7 @@ def winnow_pairs(df: DataFrame, text_col: str, id_col: str = "doc_id",
 def cross_corpus_dedup(existing: DataFrame, incoming: DataFrame,
                        text_col: str, id_col: str,
                        n_hashes: int = 4, band_size: int = 2,
-                       shingle_n: int = 3, threshold: float = 0.5,
+                       threshold: float = 0.5,
                        max_bucket: int | None = None) -> DataFrame:
     """Per incoming doc: (id_col, exact_dup, near_dup, kept) flags vs the
     existing snapshot.
@@ -753,20 +758,20 @@ def cross_corpus_dedup(existing: DataFrame, incoming: DataFrame,
     exact = (in_fp.join(ex_fp, "fp", "left_semi")
              .select(id_col).withColumn("_exact", F.lit(1)))
 
-    ex_bands = lsh_bands(existing, text_col, id_col, n_hashes, band_size,
-                         shingle_n).withColumnRenamed(id_col, "_ex_id")
+    ex_bands = lsh_bands(existing, text_col, id_col, n_hashes, band_size) \
+        .withColumnRenamed(id_col, "_ex_id")
     if max_bucket is not None:
         ex_bands = _cap_hot_keys(ex_bands, "band_key", max_bucket,
                                  min_bucket=1)
-    in_bands = lsh_bands(incoming, text_col, id_col, n_hashes, band_size,
-                         shingle_n).withColumnRenamed(id_col, "_in_id")
+    in_bands = lsh_bands(incoming, text_col, id_col, n_hashes, band_size) \
+        .withColumnRenamed(id_col, "_in_id")
     cand = (in_bands.join(ex_bands, "band_key")
             .select("_in_id", "_ex_id").distinct())
 
     # exact-Jaccard verification over distinct word shingles, candidates only
-    in_sh = shingles(incoming.select(id_col, text_col), text_col, shingle_n) \
+    in_sh = shingles(incoming.select(id_col, text_col), text_col, 3) \
         .select(F.col(id_col).alias("_in_id"), "shingle").distinct()
-    ex_sh = shingles(existing.select(id_col, text_col), text_col, shingle_n) \
+    ex_sh = shingles(existing.select(id_col, text_col), text_col, 3) \
         .select(F.col(id_col).alias("_ex_id"), "shingle").distinct()
     n_in = in_sh.groupBy("_in_id").agg(F.count("*").alias("_n_in"))
     n_ex = ex_sh.groupBy("_ex_id").agg(F.count("*").alias("_n_ex"))

@@ -94,8 +94,7 @@ def class_diversity_sql(source_sql: str, key_col: str,
     """
 
 
-def join_counts(cells: DataFrame, res: int, class_col: str,
-                cross_face: bool = True) -> DataFrame:
+def join_counts(cells: DataFrame, res: int, class_col: str) -> DataFrame:
     """(cls_a, cls_b, n_joins, expected_ppm): observed queen-adjacency
     join counts per unordered class pair over a labeled cell table
     (one row per cellid), plus the exact random-labeling expectation —
@@ -106,7 +105,7 @@ def join_counts(cells: DataFrame, res: int, class_col: str,
     # the class totals)
     lab = (cells.select("cellid", F.col(class_col).alias("_cls"))
            .localCheckpoint(eager=True))
-    edges = (cell_neighbors(lab.select("cellid"), res, cross_face)
+    edges = (cell_neighbors(lab.select("cellid"), res)
              .filter(F.col("cellid") < F.col("nbr")))
     pairs = (edges
              .join(lab.select(F.col("cellid"),
@@ -141,8 +140,7 @@ def join_counts(cells: DataFrame, res: int, class_col: str,
             .select("cls_a", "cls_b", "n_joins", "expected_ppm"))
 
 
-def join_counts_sql(source_sql: str, res: int, class_col: str,
-                    cross_face: bool = True) -> str:
+def join_counts_sql(source_sql: str, res: int, class_col: str) -> str:
     """DuckDB twin of :func:`join_counts` (same edges, same canonical
     pair order, same exact expectation arithmetic)."""
     from .spatial_stats import cell_neighbors_sql
@@ -150,7 +148,7 @@ def join_counts_sql(source_sql: str, res: int, class_col: str,
     # the neighbor enumeration reads the MATERIALIZED _lab CTE, not the
     # raw source, so an expression-encoder source is derived exactly once
     # (CLAUDE.md constraint 7/14 family)
-    nbr = cell_neighbors_sql("(SELECT cellid FROM _lab)", res, cross_face)
+    nbr = cell_neighbors_sql("(SELECT cellid FROM _lab)", res)
     return f"""
     WITH _lab AS MATERIALIZED (
         SELECT cellid, {class_col} AS _cls FROM ({source_sql})),

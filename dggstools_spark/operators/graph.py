@@ -11,7 +11,8 @@ integer parts-per-billion (BIGINT).  One iteration is
     p'(v) = (1e9 − d_ppb) // |V|  +  Σ_{u→v} (d_ppb · ((p(u) · w(u,v))
             div W(u))) div 1e9
 
-with W(u) = Σ_v w(u,v) the node's out-mass.  Every operation is integer
+with W(u) = Σ_v w(u,v) the node's out-mass and d_ppb = DAMPING_PPB
+(0.85 in ppb).  Every operation is integer
 multiply + truncated div — associative aggregation of exact terms, so the
 result is run-stable, partitioning-stable and bit-identical across
 engines (truncation loss is < |E| ppb per iteration, irrelevant for a
@@ -39,11 +40,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 PPB = 1_000_000_000
+DAMPING_PPB = 850_000_000
 
 
 def page_rank(edges: DataFrame, src: str, dst: str, w: str,
-              iters: int = 5, d_ppb: int = 850_000_000,
-              k: int | None = None,
+              iters: int = 5, k: int | None = None,
               state_path: str | None = None) -> DataFrame:
     """(node, p_ppb, rank): integer PageRank after ``iters`` power
     iterations over weighted ``edges`` (see module docstring).  Ranking
@@ -69,13 +70,13 @@ def page_rank(edges: DataFrame, src: str, dst: str, w: str,
              .unionByName(e.select(F.col("v").alias("node")))
              .distinct().localCheckpoint(eager=True))
     n_nodes = nodes.count()
-    base = (PPB - d_ppb) // n_nodes
+    base = (PPB - DAMPING_PPB) // n_nodes
     p = nodes.withColumn("p", F.lit(PPB // n_nodes).cast("bigint"))
     spark = edges.sparkSession
     for it in range(iters):
         contrib = (ew.join(p.withColumnRenamed("node", "u"), "u")
                    .select(F.col("v").alias("node"),
-                           F.expr(f"({d_ppb} * ((p * _w) div _om))"
+                           F.expr(f"({DAMPING_PPB} * ((p * _w) div _om))"
                                   f" div {PPB}").alias("_t"))
                    .groupBy("node").agg(F.sum("_t").alias("_c")))
         p = (nodes.join(contrib, "node", "left")
@@ -96,8 +97,7 @@ def page_rank(edges: DataFrame, src: str, dst: str, w: str,
 
 
 def page_rank_sql(edges_sql: str, src: str, dst: str, w: str,
-                  iters: int = 5, d_ppb: int = 850_000_000,
-                  k: int | None = None) -> str:
+                  iters: int = 5, k: int | None = None) -> str:
     """DuckDB twin of :func:`page_rank` — unrolled iteration CTEs, every
     level AS MATERIALIZED (CLAUDE.md constraint 14)."""
     ctes = [f"""e AS MATERIALIZED (
@@ -116,11 +116,11 @@ def page_rank_sql(edges_sql: str, src: str, dst: str, w: str,
     for i in range(iters):
         ctes.append(f"""p{i + 1} AS MATERIALIZED (
         SELECT n.node,
-               CAST(({PPB} - {d_ppb}) // (SELECT n FROM nn)
+               CAST(({PPB} - {DAMPING_PPB}) // (SELECT n FROM nn)
                     + coalesce(c._c, 0) AS BIGINT) AS p
         FROM nodes n LEFT JOIN (
             SELECT ew.v AS node,
-                   CAST(sum(({d_ppb} * ((p.p * ew._w) // ew._om))
+                   CAST(sum(({DAMPING_PPB} * ((p.p * ew._w) // ew._om))
                             // {PPB}) AS BIGINT) AS _c
             FROM ew JOIN p{i} p ON p.node = ew.u
             GROUP BY ew.v) c ON c.node = n.node)""")
@@ -135,15 +135,14 @@ def page_rank_sql(edges_sql: str, src: str, dst: str, w: str,
 
 
 def cost_distance(cells: DataFrame, res: int, sources: DataFrame,
-                  iters: int, w_col: str = "w",
-                  cross_face: bool = False) -> DataFrame:
+                  iters: int, w_col: str = "w") -> DataFrame:
     """Hop-bounded cost-distance (accumulated-cost surface) over the cell
     lattice: ``iters`` Bellman-Ford relaxations of
 
         dist(v) = min(dist(v), min_{u adj v} dist(u) + w(v))
 
-    under queen adjacency (operators/spatial_stats.cell_neighbors —
-    ``cross_face=True`` closes the seams via the cube gluing), with
+    under in-face queen adjacency (spatial_stats.cell_neighbors with
+    cross_face=False: face seams are barriers), with
     positive integer enter-costs ``w_col`` and dist(source) = 0.  Cells
     absent from ``cells`` are barriers (no edge).  After T iterations the
     result is the exact cost distance restricted to <= T-hop paths — the
@@ -165,7 +164,7 @@ def cost_distance(cells: DataFrame, res: int, sources: DataFrame,
     # the source check)
     cw = (cells.select("cellid", F.col(w_col).cast("bigint").alias("_w"))
           .localCheckpoint(eager=True))
-    edges = (cell_neighbors(cw.select("cellid"), res, cross_face)
+    edges = (cell_neighbors(cw.select("cellid"), res, False)
              .select(F.col("cellid").alias("u"), F.col("nbr").alias("v"))
              .join(cw.select(F.col("cellid").alias("v"),
                              F.col("_w").alias("wv")), "v")
@@ -185,14 +184,13 @@ def cost_distance(cells: DataFrame, res: int, sources: DataFrame,
 
 
 def cost_distance_sql(cells_sql: str, res: int, sources_pred: str,
-                      iters: int, w_col: str = "w",
-                      cross_face: bool = False) -> str:
+                      iters: int, w_col: str = "w") -> str:
     """DuckDB twin of :func:`cost_distance` — unrolled relaxation CTEs,
     AS MATERIALIZED per level (CLAUDE.md constraint 14); ``cells_sql``
     yields (cellid, w), ``sources_pred`` selects source cells."""
     from .spatial_stats import cell_neighbors_sql
 
-    nbr = cell_neighbors_sql(f"(SELECT cellid FROM cw)", res, cross_face)
+    nbr = cell_neighbors_sql(f"(SELECT cellid FROM cw)", res, False)
     ctes = [f"""cw AS MATERIALIZED (
         SELECT cellid, CAST({w_col} AS BIGINT) AS _w FROM ({cells_sql}))""",
             f"""edges AS MATERIALIZED (

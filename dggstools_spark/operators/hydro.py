@@ -73,18 +73,21 @@ PPM = 1_000_000
 # --------------------------------------------------------------------------
 # shared deterministic elevation surface (query-side helper): a gentle
 # planar gradient toward the face origin plus md5 noise —
-#     z = slope_w · (row + col) + md5_32(cellid) % noise_mod
+#     z = SLOPE_W · (row + col) + md5_32(cellid) % NOISE_MOD
 # (the sketch/dedup portable-hash idiom).  Strictly-positive flow drops
-# bound every flow path by the z RANGE: slope_w·2·(3^res − 1) + noise_mod.
+# bound every flow path by the z RANGE: SLOPE_W·2·(3^res − 1) + NOISE_MOD.
 # --------------------------------------------------------------------------
 
+SLOPE_W = 4
+NOISE_MOD = 4
 
-def elev_range(res: int, slope_w: int = 4, noise_mod: int = 4) -> int:
+
+def elev_range(res: int) -> int:
     """Upper bound on z_max − z_min (the watershed doubling budget)."""
-    return slope_w * 2 * (3 ** res - 1) + (noise_mod - 1)
+    return SLOPE_W * 2 * (3 ** res - 1) + (NOISE_MOD - 1)
 
 
-def elev_spark(res: int, slope_w: int = 4, noise_mod: int = 4) -> str:
+def elev_spark(res: int) -> str:
     """Spark SQL: deterministic BIGINT elevation from a `cellid` column."""
     terms = []
     for i in range(1, res + 1):
@@ -92,11 +95,11 @@ def elev_spark(res: int, slope_w: int = 4, noise_mod: int = 4) -> str:
         w = 3 ** (res - i)
         terms.append(f"(({d}) div 3) * {w} + (({d}) % 3) * {w}")
     noise = (f"CAST(conv(substring(md5(cellid), 1, 8), 16, 10) AS BIGINT)"
-             f" % {noise_mod}")
-    return f"CAST({slope_w} * ({' + '.join(terms)}) + {noise} AS BIGINT)"
+             f" % {NOISE_MOD}")
+    return f"CAST({SLOPE_W} * ({' + '.join(terms)}) + {noise} AS BIGINT)"
 
 
-def elev_duckdb(res: int, slope_w: int = 4, noise_mod: int = 4) -> str:
+def elev_duckdb(res: int) -> str:
     """DuckDB twin of :func:`elev_spark` (same digit fold, same md5-hex
     fold — sketch._pos_duckdb idiom, inlined so the snippet is
     self-contained over a bare `cellid` column)."""
@@ -108,8 +111,8 @@ def elev_duckdb(res: int, slope_w: int = 4, noise_mod: int = 4) -> str:
     fold = " + ".join(
         f"(instr('0123456789abcdef', substring(md5(cellid), {1 + j}, 1))"
         f" - 1) * {16 ** (7 - j)}" for j in range(8))
-    return (f"CAST({slope_w} * ({' + '.join(terms)})"
-            f" + CAST({fold} AS BIGINT) % {noise_mod} AS BIGINT)")
+    return (f"CAST({SLOPE_W} * ({' + '.join(terms)})"
+            f" + CAST({fold} AS BIGINT) % {NOISE_MOD} AS BIGINT)")
 
 
 # --------------------------------------------------------------------------

@@ -91,7 +91,7 @@ def cluster_keep(clusters: DataFrame, docs: DataFrame, text_col: str,
     evaluate to an INTEGER score (e.g. functions.text.quality_q20_spark)
     — float scores quantized via round() are not engine-portable at .5
     boundaries (CLAUDE.md constraint 17; the sf1 gate caught exactly
-    that with round(quality_score * 2^20))."""
+    that with a round(x, 6) float score)."""
     scored = docs.select(
         id_col,
         F.expr(f"CAST(({quality_sql}) AS BIGINT)").alias("_q20"))

@@ -43,8 +43,7 @@ from .spatial_stats import kring_cells, kring_cells_sql
 PPM = 1_000_000
 
 
-def ripley_k(cells: DataFrame, res: int, kmax: int,
-             cross_face: bool = True) -> DataFrame:
+def ripley_k(cells: DataFrame, res: int, kmax: int) -> DataFrame:
     """(r, pairs_r, cum_pairs, k_ppm) for r = 0..kmax over a
     (cellid, n) cell-count table (see module docstring)."""
     from pyspark.sql.window import Window
@@ -52,8 +51,7 @@ def ripley_k(cells: DataFrame, res: int, kmax: int,
     if kmax < 1:
         raise ValueError(f"ripley_k: kmax must be >= 1, got {kmax}")
     counts = cells.select("cellid", F.col("n").cast("long").alias("n"))
-    kr = kring_cells(counts.select("cellid"), res, kmax,
-                     cross_face=cross_face)
+    kr = kring_cells(counts.select("cellid"), res, kmax)
     per_ring = (kr
                 .join(counts, "cellid")
                 .join(counts.select(F.col("cellid").alias("nbr"),
@@ -84,14 +82,12 @@ def ripley_k(cells: DataFrame, res: int, kmax: int,
                            f" AS BIGINT)").alias("k_ppm")))
 
 
-def ripley_k_sql(source_sql: str, res: int, kmax: int,
-                 cross_face: bool = True) -> str:
+def ripley_k_sql(source_sql: str, res: int, kmax: int) -> str:
     """DuckDB twin of :func:`ripley_k` over ``source_sql`` → (cellid, n)
     (same kring expansion, same HUGEINT pair arithmetic)."""
     if kmax < 1:
         raise ValueError(f"ripley_k_sql: kmax must be >= 1, got {kmax}")
-    kr = kring_cells_sql("(SELECT cellid FROM _cnt)", res, kmax,
-                         cross_face=cross_face)
+    kr = kring_cells_sql("(SELECT cellid FROM _cnt)", res, kmax)
     return f"""
     WITH _cnt AS MATERIALIZED (
         SELECT cellid, CAST(n AS BIGINT) AS n FROM ({source_sql})),
@@ -150,15 +146,14 @@ def ripley_k_sql(source_sql: str, res: int, kmax: int,
 # --------------------------------------------------------------------------
 
 
-def g_function(cells: DataFrame, res: int, kmax: int,
-               cross_face: bool = True) -> DataFrame:
+def g_function(cells: DataFrame, res: int, kmax: int) -> DataFrame:
     """(r, n_le, n_total, n_censored, g_ppm) for r = 1..kmax over a
     cell table with a ``cellid`` column (occupied set = distinct ids);
     see the block comment above."""
     if kmax < 1:
         raise ValueError(f"g_function: kmax must be >= 1, got {kmax}")
     occ = cells.select("cellid").distinct()
-    kr = kring_cells(occ, res, kmax, cross_face=cross_face)
+    kr = kring_cells(occ, res, kmax)
     nn = (kr.join(occ.select(F.col("cellid").alias("nbr")), "nbr")
           .groupBy("cellid")
           .agg(F.min("ring").alias("nn_ring")))
@@ -187,13 +182,11 @@ def g_function(cells: DataFrame, res: int, kmax: int,
                     .alias("g_ppm")))
 
 
-def g_function_sql(source_sql: str, res: int, kmax: int,
-                   cross_face: bool = True) -> str:
+def g_function_sql(source_sql: str, res: int, kmax: int) -> str:
     """DuckDB twin of :func:`g_function` over ``source_sql`` → cellid."""
     if kmax < 1:
         raise ValueError(f"g_function_sql: kmax must be >= 1, got {kmax}")
-    kr = kring_cells_sql("(SELECT cellid FROM _occ)", res, kmax,
-                         cross_face=cross_face)
+    kr = kring_cells_sql("(SELECT cellid FROM _occ)", res, kmax)
     return f"""
     WITH _occ AS MATERIALIZED (
         SELECT DISTINCT cellid FROM ({source_sql})),
@@ -237,8 +230,8 @@ def g_function_sql(source_sql: str, res: int, kmax: int,
 # --------------------------------------------------------------------------
 
 
-def cross_k(cells_a: DataFrame, cells_b: DataFrame, res: int, kmax: int,
-            cross_face: bool = True) -> DataFrame:
+def cross_k(cells_a: DataFrame, cells_b: DataFrame, res: int,
+            kmax: int) -> DataFrame:
     """(r, pairs_r, cum_pairs, kx_ppm) for r = 0..kmax over two
     (cellid, n) cell-count tables — see the block comment above."""
     from pyspark.sql.window import Window
@@ -248,8 +241,7 @@ def cross_k(cells_a: DataFrame, cells_b: DataFrame, res: int, kmax: int,
     ca = cells_a.select("cellid", F.col("n").cast("long").alias("na"))
     cb = cells_b.select(F.col("cellid").alias("nbr"),
                         F.col("n").cast("long").alias("nb"))
-    kr = kring_cells(ca.select("cellid"), res, kmax,
-                     cross_face=cross_face)
+    kr = kring_cells(ca.select("cellid"), res, kmax)
     per_ring = (kr.join(ca, "cellid").join(cb, "nbr")
                 .groupBy(F.col("ring").alias("r"))
                 .agg(F.sum(F.expr(
@@ -279,14 +271,12 @@ def cross_k(cells_a: DataFrame, cells_b: DataFrame, res: int, kmax: int,
                            f" AS BIGINT)").alias("kx_ppm")))
 
 
-def cross_k_sql(a_sql: str, b_sql: str, res: int, kmax: int,
-                cross_face: bool = True) -> str:
+def cross_k_sql(a_sql: str, b_sql: str, res: int, kmax: int) -> str:
     """DuckDB twin of :func:`cross_k` over ``a_sql``/``b_sql`` →
     (cellid, n)."""
     if kmax < 1:
         raise ValueError(f"cross_k_sql: kmax must be >= 1, got {kmax}")
-    kr = kring_cells_sql("(SELECT cellid FROM _ca)", res, kmax,
-                         cross_face=cross_face)
+    kr = kring_cells_sql("(SELECT cellid FROM _ca)", res, kmax)
     return f"""
     WITH _ca AS MATERIALIZED (
         SELECT cellid, CAST(n AS BIGINT) AS na FROM ({a_sql})),
@@ -381,8 +371,7 @@ def _face_lattice_sql(faces: "list[str]", res: int) -> str:
             f" (SELECT unnest(generate_series(0, {n * n - 1})) AS _i) g")
 
 
-def fj_function(cells: DataFrame, res: int, kmax: int,
-                cross_face: bool = True) -> DataFrame:
+def fj_function(cells: DataFrame, res: int, kmax: int) -> DataFrame:
     """(r, f_le, f_tot, g_le, g_tot, j_ppm) for r = 1..kmax over a
     cell table with a ``cellid`` column — see the block comment above."""
     if kmax < 1:
@@ -401,7 +390,7 @@ def fj_function(cells: DataFrame, res: int, kmax: int,
     # The old second expansion over the FULL face lattice (the reference
     # set, ≫ occupied cells in general) is thereby removed.
     # dedup: 2 consumers (F and G)
-    kr_occ = kring_cells(occ, res, kmax, cross_face=cross_face) \
+    kr_occ = kring_cells(occ, res, kmax) \
         .localCheckpoint(eager=True)
     # F: nearest occupied from every reference cell = min ring over the
     # REVERSED occupied-seeded pairs, restricted to the face lattice
@@ -445,7 +434,7 @@ def fj_function(cells: DataFrame, res: int, kmax: int,
 
 
 def fj_function_sql(source_sql: str, faces: "list[str]", res: int,
-                    kmax: int, cross_face: bool = True) -> str:
+                    kmax: int) -> str:
     """DuckDB twin of :func:`fj_function` (``faces`` must match the
     occupied faces of ``source_sql`` — the query layer derives them
     identically on both sides)."""
@@ -453,10 +442,8 @@ def fj_function_sql(source_sql: str, faces: "list[str]", res: int,
         raise ValueError(
             f"fj_function_sql: kmax must be >= 1, got {kmax}")
     ref = _face_lattice_sql(faces, res)
-    kr_ref = kring_cells_sql("(SELECT cellid FROM _ref)", res, kmax,
-                             cross_face=cross_face)
-    kr_occ = kring_cells_sql("(SELECT cellid FROM _occ)", res, kmax,
-                             cross_face=cross_face)
+    kr_ref = kring_cells_sql("(SELECT cellid FROM _ref)", res, kmax)
+    kr_occ = kring_cells_sql("(SELECT cellid FROM _occ)", res, kmax)
     return f"""
     WITH _occ AS MATERIALIZED (
         SELECT DISTINCT cellid FROM ({source_sql})),

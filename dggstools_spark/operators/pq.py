@@ -186,9 +186,6 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, topk: int,
                vec_col: str = "embedding", id_col: str = "vec_id",
                q_vec: str = "q_emb", q_id: str = "q_id",
                mod: int = 23, residue: int = 3, nprobe: int = 3,
-               m: int = PQ_M, dsub: int = PQ_DSUB, k: int = PQ_K,
-               seed_mod: int = PQ_SEED_MOD,
-               seed_res: int = PQ_SEED_RES,
                assign_mode: str = "adc") -> DataFrame:
     """(q_id, vec_id, adc_q, rank): IVF + PQ composed — faiss's IndexIVFPQ
     shape (non-residual variant, by_residual=false): coarse-quantize the
@@ -232,21 +229,19 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, topk: int,
     if assign_mode not in ("adc", "exact"):
         raise ValueError(f"unknown assign_mode {assign_mode!r}")
     cents = ivf_centroids(emb, vec_col, id_col, mod, residue)
-    cb = pq_codebook(emb, vec_col, id_col, m, dsub, k, seed_mod, seed_res)
-    codes = pq_encode(emb, cb, vec_col, id_col, m, dsub)
+    cb = pq_codebook(emb, vec_col, id_col)
+    codes = pq_encode(emb, cb, vec_col, id_col)
     if assign_mode == "exact":
         assigned = ivf_assign(emb, cents, vec_col, id_col) \
             .select(id_col, "cid")
     else:
         ccodes = pq_encode(cents.select(F.col("cid").alias("gid"),
                                         F.col("cvec")),
-                           cb, vec_col="cvec", id_col="gid",
-                           m=m, dsub=dsub)
-        lut_all = pq_lut(emb, cb, vec_col=vec_col, id_col=id_col,
-                         m=m, dsub=dsub, k=k)
+                           cb, vec_col="cvec", id_col="gid")
+        lut_all = pq_lut(emb, cb, vec_col=vec_col, id_col=id_col)
         aadc = " + ".join(
-            f"element_at(lut, CAST({j * k} + element_at(codes, {j + 1})"
-            f" + 1 AS INT))" for j in range(m))
+            f"element_at(lut, CAST({j * PQ_K} + element_at(codes, {j + 1})"
+            f" + 1 AS INT))" for j in range(PQ_M))
         assigned = (lut_all.crossJoin(F.broadcast(ccodes))
                     .withColumn("_adc", F.expr(aadc))
                     .groupBy(id_col)
@@ -264,10 +259,10 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, topk: int,
               .filter(F.col("_rn") <= nprobe)
               .select(q_id, "cid"))
 
-    lut = pq_lut(queries, cb, q_vec, q_id, m, dsub, k)
+    lut = pq_lut(queries, cb, q_vec, q_id)
     adc = " + ".join(
-        f"element_at(lut, CAST({j * k} + element_at(codes, {j + 1}) + 1"
-        f" AS INT))" for j in range(m))
+        f"element_at(lut, CAST({j * PQ_K} + element_at(codes, {j + 1}) + 1"
+        f" AS INT))" for j in range(PQ_M))
     rw = Window.partitionBy(q_id).orderBy(F.asc("adc_q"), F.asc(id_col))
     return (lists.join(F.broadcast(probes), "cid")
             .filter(F.col(id_col) != F.col(q_id))
@@ -280,10 +275,8 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, topk: int,
 
 def ivfpq_topk_sql(emb_table: str, topk: int, query_pred: str,
                    vec_col: str = "embedding", id_col: str = "vec_id",
-                   mod: int = 23, residue: int = 3, nprobe: int = 3,
-                   m: int = PQ_M, dsub: int = PQ_DSUB, k: int = PQ_K,
-                   seed_mod: int = PQ_SEED_MOD,
-                   seed_res: int = PQ_SEED_RES) -> str:
+                   mod: int = 23, residue: int = 3,
+                   nprobe: int = 3) -> str:
     """DuckDB twin of :func:`ivfpq_topk`: the ivf_topk oracle's
     cents/probes CTEs composed with the pq_topk oracle's
     seeds/cb/sv/codes/LUT CTEs; the coarse quantizer is the ADC min
@@ -296,21 +289,21 @@ def ivfpq_topk_sql(emb_table: str, topk: int, query_pred: str,
         return (f"round(({DOT_DUCK.format(a=a, b=b)})"
                 f" / ({NRM_DUCK.format(v=a)} * {NRM_DUCK.format(v=b)}), 9)")
 
-    dq = _dq_duckdb(dsub)
+    dq = _dq_duckdb(PQ_DSUB)
     adc = " + ".join(
-        f"l.lut[{j * k} + c.codes[{j + 1}] + 1]" for j in range(m))
+        f"l.lut[{j * PQ_K} + c.codes[{j + 1}] + 1]" for j in range(PQ_M))
     gadc = " + ".join(
-        f"l.lut[{j * k} + g.codes[{j + 1}] + 1]" for j in range(m))
+        f"l.lut[{j * PQ_K} + g.codes[{j + 1}] + 1]" for j in range(PQ_M))
     assign_ctes = f"""
     gsv AS (
         SELECT cid AS gid, t.m,
-               CASE WHEN len(cvec) >= {m * dsub}
+               CASE WHEN len(cvec) >= {PQ_M * PQ_DSUB}
                     THEN list_transform(list_slice(cvec,
-                                                   t.m * {dsub} + 1,
-                                                   t.m * {dsub} + {dsub}),
+                                                   t.m * {PQ_DSUB} + 1,
+                                                   t.m * {PQ_DSUB} + {PQ_DSUB}),
                                         x -> CAST(x AS DOUBLE))
                     ELSE error('pq: vector shorter than m*dsub') END AS svec
-        FROM cents, range({m}) t(m)),
+        FROM cents, range({PQ_M}) t(m)),
     gcodes AS MATERIALIZED (
         SELECT gid, list(code ORDER BY m) AS codes FROM (
             SELECT gid, m, CAST(cid AS INT) AS code,
@@ -337,23 +330,23 @@ def ivfpq_topk_sql(emb_table: str, topk: int, query_pred: str,
             ORDER BY s DESC, cid) AS rn FROM psim) WHERE rn <= {nprobe}),
     seeds AS MATERIALIZED (
         SELECT {vec_col}, row_number() OVER (ORDER BY {id_col}) - 1 AS cid
-        FROM {emb_table} WHERE {id_col} % {seed_mod} = {seed_res}
-        QUALIFY row_number() OVER (ORDER BY {id_col}) <= {k}),
+        FROM {emb_table} WHERE {id_col} % {PQ_SEED_MOD} = {PQ_SEED_RES}
+        QUALIFY row_number() OVER (ORDER BY {id_col}) <= {PQ_K}),
     cb AS MATERIALIZED (
         SELECT t.m, cid,
-               list_transform(list_slice({vec_col}, t.m * {dsub} + 1,
-                                         t.m * {dsub} + {dsub}),
+               list_transform(list_slice({vec_col}, t.m * {PQ_DSUB} + 1,
+                                         t.m * {PQ_DSUB} + {PQ_DSUB}),
                               x -> CAST(x AS DOUBLE)) AS cvec
-        FROM seeds, range({m}) t(m)),
+        FROM seeds, range({PQ_M}) t(m)),
     sv AS (
         SELECT {id_col}, t.m,
-               CASE WHEN len({vec_col}) >= {m * dsub}
+               CASE WHEN len({vec_col}) >= {PQ_M * PQ_DSUB}
                     THEN list_transform(list_slice({vec_col},
-                                                   t.m * {dsub} + 1,
-                                                   t.m * {dsub} + {dsub}),
+                                                   t.m * {PQ_DSUB} + 1,
+                                                   t.m * {PQ_DSUB} + {PQ_DSUB}),
                                         x -> CAST(x AS DOUBLE))
                     ELSE error('pq: vector shorter than m*dsub') END AS svec
-        FROM {emb_table}, range({m}) t(m)),
+        FROM {emb_table}, range({PQ_M}) t(m)),
     pc AS MATERIALIZED (
         SELECT {id_col}, m, cid, {dq} AS dq
         FROM sv JOIN cb USING (m)),
@@ -364,7 +357,7 @@ def ivfpq_topk_sql(emb_table: str, topk: int, query_pred: str,
                                       ORDER BY dq, cid) AS rn
             FROM pc) WHERE rn = 1 GROUP BY {id_col}),
     lut_all AS MATERIALIZED (
-        SELECT {id_col} AS q_id, list(dq ORDER BY m * {k} + cid) AS lut
+        SELECT {id_col} AS q_id, list(dq ORDER BY m * {PQ_K} + cid) AS lut
         FROM pc GROUP BY {id_col}),
     {assign_ctes}
     lut AS (SELECT q_id, lut FROM lut_all JOIN qs USING (q_id)),

@@ -7,7 +7,7 @@ n-grams and the mass of the single most frequent bigram, plus cheap
 lexical stats (mean word length, stopword fraction).  A document failing
 any threshold is flagged low-quality.  No counterpart in the reference
 engine; LLM-pipeline layer, sits next to functions/text.py's lang-ID and
-quality_score (which are single-pass scalar signals — this operator covers
+quality_q20 (which are single-pass scalar signals — this operator covers
 the *distributional* signals that need explode + aggregate).
 
 Scale design (100 TB):
@@ -31,30 +31,26 @@ from pyspark.sql.window import Window
 
 from .dedup import shingles, tokens
 
-#: stopwords present in the synthetic corpus vocabulary; callers pass their
-#: own list for real corpora
+#: stopwords present in the synthetic corpus vocabulary
 STOPWORDS = ("the", "a", "of", "and", "in", "to")
 
 
-def gopher_quality(df: DataFrame, text_col: str, id_col: str,
-                   stopwords: tuple = STOPWORDS,
-                   max_rep3_ppm: int = 180000,
-                   max_top2_ppm: int = 200000,
-                   min_stop_ppm: int = 10000) -> DataFrame:
+def gopher_quality(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-document repetition/quality report.
 
     Returns one row per document:
       (id_col, n_toks, mean_len_ppm, stop_ppm, rep3_ppm, top2_ppm,
        quality_ok)
     where mean_len_ppm = round(1e6 * sum(len(tok)) / n_toks),
-    stop_ppm     = round(1e6 * n_stopword_toks / n_toks),
+    stop_ppm     = round(1e6 * n_stopword_toks / n_toks), stopwords
+                   from STOPWORDS,
     rep3_ppm     = round(1e6 * (1 - distinct_trigrams / trigrams))
                    (fraction of word trigrams that are repeats),
     top2_ppm     = round(1e6 * chars_in_most_frequent_bigram / chars)
                    (count * len(bigram) over the doc's total characters;
                    ties broken lexicographically for determinism),
-    quality_ok   = 1 iff rep3_ppm <= max_rep3_ppm AND top2_ppm <=
-                   max_top2_ppm AND stop_ppm >= min_stop_ppm.
+    quality_ok   = 1 iff rep3_ppm <= 180000 AND top2_ppm <= 200000
+                   AND stop_ppm >= 10000.
 
     Scan shape: the three signal families need three different explodes
     (tokens / trigrams / bigrams), so the plan reads the (id, text)
@@ -69,7 +65,7 @@ def gopher_quality(df: DataFrame, text_col: str, id_col: str,
     tok_stats = tok.groupBy(id_col).agg(
         F.count("*").alias("n_toks"),
         F.sum(F.length("tok")).alias("_sum_len"),
-        F.sum(F.col("tok").isin(*stopwords).cast("long")).alias("_n_stop"),
+        F.sum(F.col("tok").isin(*STOPWORDS).cast("long")).alias("_n_stop"),
         F.first("_chars").alias("_chars"),
     )
 
@@ -107,6 +103,6 @@ def gopher_quality(df: DataFrame, text_col: str, id_col: str,
     )
     return out.withColumn(
         "quality_ok",
-        ((F.col("rep3_ppm") <= max_rep3_ppm)
-         & (F.col("top2_ppm") <= max_top2_ppm)
-         & (F.col("stop_ppm") >= min_stop_ppm)).cast("int"))
+        ((F.col("rep3_ppm") <= 180000)
+         & (F.col("top2_ppm") <= 200000)
+         & (F.col("stop_ppm") >= 10000)).cast("int"))

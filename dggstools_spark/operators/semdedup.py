@@ -150,7 +150,6 @@ def semantic_dedup_sql(emb_table: str, threshold: float,
 
 def semantic_dedup_pq(emb: DataFrame, threshold: float,
                       vec_col: str = "embedding", id_col: str = "vec_id",
-                      mod: int = 23, residue: int = 3,
                       dim: int | None = None) -> DataFrame:
     """SemDeDup with the PQ/ADC assignment stage (TODO_r7 #4) — the scale
     path when cluster counts grow: the exact-cosine BroadcastNestedLoop
@@ -170,8 +169,9 @@ def semantic_dedup_pq(emb: DataFrame, threshold: float,
 
     m, dsub, k = PQ_M, PQ_DSUB, PQ_K
     # centroid ids ride as 'gid' through the PQ stages — the codebook's
-    # per-subspace centroid column is already named 'cid'
-    cents = (ivf_centroids(emb, vec_col, id_col, mod, residue)
+    # per-subspace centroid column is already named 'cid'.  Centroids are
+    # ivf_centroids' default residue class, id % 23 = 3
+    cents = (ivf_centroids(emb, vec_col, id_col)
              .select(F.col("cid").alias("gid"), "cvec"))
     cb = pq_codebook(emb, vec_col, id_col, m, dsub, k)
     ccodes = pq_encode(cents, cb, vec_col="cvec", id_col="gid",
@@ -193,7 +193,6 @@ def semantic_dedup_pq(emb: DataFrame, threshold: float,
 
 
 def semantic_dedup_pq_sql(emb_table: str, threshold: float,
-                          mod: int = 23, residue: int = 3,
                           vec_col: str = "embedding",
                           id_col: str = "vec_id") -> str:
     """DuckDB twin of :func:`semantic_dedup_pq` (same PQ construction as
@@ -208,7 +207,7 @@ def semantic_dedup_pq_sql(emb_table: str, threshold: float,
         f"l.lut[{j * k} + g.codes[{j + 1}] + 1]" for j in range(m))
     ctes = f"""cents AS MATERIALIZED (
         SELECT {id_col} AS gid, {vec_col} AS gvec FROM {emb_table}
-        WHERE {id_col} % {mod} = {residue}),
+        WHERE {id_col} % 23 = 3),
     seeds AS MATERIALIZED (
         SELECT {vec_col}, row_number() OVER (ORDER BY {id_col}) - 1 AS cid
         FROM {emb_table} WHERE {id_col} % {PQ_SEED_MOD} = {PQ_SEED_RES}

@@ -176,7 +176,7 @@ def hll_merge_estimate(regs: DataFrame, class_col: str) -> DataFrame:
 # (never drops a true member) at the standard (1 − e^(−K·n/BITS))^K rate.
 # --------------------------------------------------------------------------
 
-BLOOM_BITS = 1 << 17   #: default filter size (128 Kbit = 2048 words)
+BLOOM_BITS = 1 << 17   #: filter size (128 Kbit = 2048 words)
 BLOOM_K = 4            #: hash count (md5 yields 4 disjoint 8-hex slices)
 
 
@@ -192,11 +192,10 @@ def _pos_duckdb(mcol: str, i: int, bits: int) -> str:
     return f"CAST({fold} AS BIGINT) % {bits}"
 
 
-def bloom_build(df: DataFrame, key_col: str, bits: int = BLOOM_BITS,
-                k: int = BLOOM_K) -> DataFrame:
+def bloom_build(df: DataFrame, key_col: str) -> DataFrame:
     """(word_idx, word): the filter as BIGINT words — broadcast this."""
     pos = "explode(array(" + ", ".join(
-        _pos_spark(key_col, i, bits) for i in range(k)) + "))"
+        _pos_spark(key_col, i, BLOOM_BITS) for i in range(BLOOM_K)) + "))"
     return (df.select(F.expr(pos).alias("_p"))
             .select(F.expr("_p div 63").alias("word_idx"),
                     F.expr("shiftleft(CAST(1 AS BIGINT), "
@@ -205,15 +204,14 @@ def bloom_build(df: DataFrame, key_col: str, bits: int = BLOOM_BITS,
             .agg(F.expr("bit_or(_b)").alias("word")))
 
 
-def bloom_probe(df: DataFrame, filt: DataFrame, key_col: str,
-                bits: int = BLOOM_BITS, k: int = BLOOM_K) -> DataFrame:
+def bloom_probe(df: DataFrame, filt: DataFrame, key_col: str) -> DataFrame:
     """``df`` plus ``maybe`` (1 = possibly in the built set, 0 = provably
     absent).  One K-way position explode + a broadcast equi-join on
     word_idx + an all-bits-set aggregate keyed on every original column
     — no shuffle of ``df`` beyond that agg.  Input rows must be unique
     (probe distinct keys, or add a row id first)."""
     pos = "explode(array(" + ", ".join(
-        _pos_spark(key_col, i, bits) for i in range(k)) + "))"
+        _pos_spark(key_col, i, BLOOM_BITS) for i in range(BLOOM_K)) + "))"
     cols = df.columns
     probed = (df
               .withColumn("_p", F.expr(pos))
@@ -226,20 +224,19 @@ def bloom_probe(df: DataFrame, filt: DataFrame, key_col: str,
             .agg(F.min("_hit").alias("maybe")))
 
 
-def bloom_report_sql(a_keys_sql: str, b_keys_sql: str,
-                     bits: int = BLOOM_BITS, k: int = BLOOM_K) -> str:
+def bloom_report_sql(a_keys_sql: str, b_keys_sql: str) -> str:
     """DuckDB twin of build+probe+report over key subqueries ``a``/``b``
     (each yielding a column ``key``): one row (n_probes, n_pass, n_true,
     false_pos, fpr_ppm)."""
     apos = " UNION ALL ".join(
-        f"SELECT {_pos_duckdb('_m', i, bits)} AS _p FROM am"
-        for i in range(k))
-    bpos = ", ".join(_pos_duckdb("_m", i, bits) for i in range(k))
+        f"SELECT {_pos_duckdb('_m', i, BLOOM_BITS)} AS _p FROM am"
+        for i in range(BLOOM_K))
+    bpos = ", ".join(_pos_duckdb("_m", i, BLOOM_BITS) for i in range(BLOOM_K))
     hit = " + ".join(
         f"(SELECT CAST(coalesce((w.word >> CAST(_p{i} % 63 AS INT))"
         f" & 1 = 1, FALSE) AS INT) FROM words w"
-        f" WHERE w.word_idx = _p{i} // 63)" for i in range(k))
-    pcols = ", ".join(f"_ps[{i + 1}] AS _p{i}" for i in range(k))
+        f" WHERE w.word_idx = _p{i} // 63)" for i in range(BLOOM_K))
+    pcols = ", ".join(f"_ps[{i + 1}] AS _p{i}" for i in range(BLOOM_K))
     return f"""
     WITH am AS MATERIALIZED (SELECT md5(key) AS _m FROM ({a_keys_sql})),
     bm AS MATERIALIZED (SELECT key, md5(key) AS _m FROM ({b_keys_sql})),
@@ -251,7 +248,7 @@ def bloom_report_sql(a_keys_sql: str, b_keys_sql: str,
         SELECT key, {pcols} FROM (
             SELECT key, [{bpos}] AS _ps FROM bm)),
     probed AS MATERIALIZED (
-        SELECT key, CASE WHEN {hit} = {k} THEN 1 ELSE 0 END AS maybe
+        SELECT key, CASE WHEN {hit} = {BLOOM_K} THEN 1 ELSE 0 END AS maybe
         FROM bp),
     tru AS (SELECT DISTINCT b.key FROM ({b_keys_sql}) b
             JOIN ({a_keys_sql}) a USING (key))
@@ -279,27 +276,26 @@ CM_W = 8192   #: buckets per row
 CM_D = 4      #: hash rows (md5 yields 4 disjoint slices)
 
 
-def cm_build(df: DataFrame, key_col: str, w: int = CM_W,
-             d: int = CM_D) -> DataFrame:
+def cm_build(df: DataFrame, key_col: str) -> DataFrame:
     """(row_i, bucket, cnt): the sketch — one D-way explode + one hash
     aggregate with D·W combine state."""
     rows = ", ".join(
-        f"struct({i} AS row_i, {_pos_spark(key_col, i, w)} AS bucket)"
-        for i in range(d))
+        f"struct({i} AS row_i, {_pos_spark(key_col, i, CM_W)} AS bucket)"
+        for i in range(CM_D))
     return (df.select(F.expr(f"explode(array({rows}))").alias("_rb"))
             .groupBy(F.col("_rb.row_i").alias("row_i"),
                      F.col("_rb.bucket").alias("bucket"))
             .agg(F.count("*").alias("cnt")))
 
 
-def cm_estimate(probes: DataFrame, sketch: DataFrame, key_col: str,
-                w: int = CM_W, d: int = CM_D) -> DataFrame:
+def cm_estimate(probes: DataFrame, sketch: DataFrame,
+                key_col: str) -> DataFrame:
     """``probes`` plus ``cm_est`` (>= the key's true multiplicity).  D
     broadcast-joined bucket lookups + a min aggregate keyed on the probe
     columns (probe rows must be unique)."""
     rows = ", ".join(
-        f"struct({i} AS row_i, {_pos_spark(key_col, i, w)} AS bucket)"
-        for i in range(d))
+        f"struct({i} AS row_i, {_pos_spark(key_col, i, CM_W)} AS bucket)"
+        for i in range(CM_D))
     cols = probes.columns
     return (probes
             .withColumn("_rb", F.expr(f"explode(array({rows}))"))
@@ -310,16 +306,15 @@ def cm_estimate(probes: DataFrame, sketch: DataFrame, key_col: str,
             .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("cm_est")))
 
 
-def cm_report_sql(keys_sql: str, probes_sql: str, w: int = CM_W,
-                  d: int = CM_D) -> str:
+def cm_report_sql(keys_sql: str, probes_sql: str) -> str:
     """DuckDB twin: build over ``keys_sql`` (column ``key``), estimate
     for ``probes_sql`` (column ``key``, unique rows) → (key, cm_est)."""
     kpos = " UNION ALL ".join(
-        f"SELECT {_pos_duckdb('_m', i, w)} AS bucket, {i} AS row_i"
-        f" FROM km" for i in range(d))
+        f"SELECT {_pos_duckdb('_m', i, CM_W)} AS bucket, {i} AS row_i"
+        f" FROM km" for i in range(CM_D))
     ppos = " UNION ALL ".join(
-        f"SELECT key, {_pos_duckdb('_m', i, w)} AS bucket, {i} AS row_i"
-        f" FROM pm" for i in range(d))
+        f"SELECT key, {_pos_duckdb('_m', i, CM_W)} AS bucket, {i} AS row_i"
+        f" FROM pm" for i in range(CM_D))
     return f"""
     km AS MATERIALIZED (SELECT md5(key) AS _m FROM ({keys_sql})),
     pm AS MATERIALIZED (SELECT key, md5(key) AS _m FROM ({probes_sql})),

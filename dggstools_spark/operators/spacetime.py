@@ -83,11 +83,10 @@ def st_gi(obs: DataFrame, res: int) -> DataFrame:
                     "on_seam"))
 
 
-def emerging_hotspots(obs: DataFrame, res: int, k: int,
-                      min_days: int = 3) -> DataFrame:
+def emerging_hotspots(obs: DataFrame, res: int, k: int) -> DataFrame:
     """(cellid, n_days, hot_days, s, last_ratio_ppm, category, rank):
     top-``k`` cells by (hot_days desc, s desc, cellid) among cells with
-    ≥ ``min_days`` observed days — see module docstring."""
+    ≥ 3 observed days — see module docstring."""
     from pyspark.sql.window import Window
 
     from .trend import mk_stats
@@ -108,7 +107,7 @@ def emerging_hotspots(obs: DataFrame, res: int, k: int,
             .withColumn("last_ratio_ppm", F.col("_last.ratio_ppm")))
     w = Window.orderBy(F.desc("hot_days"), F.desc("s"), F.asc("cellid"))
     return (summ.join(mk, "cellid")
-            .filter(F.col("n_days") >= min_days)
+            .filter(F.col("n_days") >= 3)
             .withColumn("category", F.expr(f"""CASE
                 WHEN last_ratio_ppm > {PPM} AND hot_days = 1 THEN 'new'
                 WHEN last_ratio_ppm > {PPM} AND s > 0
@@ -169,8 +168,7 @@ def st_gi_ctes(obs_sql: str, res: int) -> str:
         JOIN _tot t USING (day))"""
 
 
-def emerging_hotspots_sql(obs_sql: str, res: int, k: int,
-                          min_days: int = 3) -> str:
+def emerging_hotspots_sql(obs_sql: str, res: int, k: int) -> str:
     """DuckDB twin of :func:`emerging_hotspots`."""
     from .trend import mk_stats_ctes
 
@@ -196,7 +194,7 @@ def emerging_hotspots_sql(obs_sql: str, res: int, k: int,
                    WHEN u.hot_days > 0 THEN 'historical'
                    ELSE 'never' END AS category
         FROM _summ u JOIN mk m USING (cellid)
-        WHERE u.n_days >= {min_days})
+        WHERE u.n_days >= 3)
     SELECT cellid, n_days, hot_days, s, last_ratio_ppm, category,
            CAST(rank AS INT) AS rank
     FROM (SELECT *, row_number() OVER (

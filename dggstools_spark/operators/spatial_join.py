@@ -1,7 +1,8 @@
 """Spatial join operators (SURVEY §2.3).
 
-J1  assign_cells      — point -> cell equi-key (the index-then-hash-join core)
 J2  rasterize_polygons/pip_join — center-in-polygon burn + doc<->polygon join
+    (pip_join keys the docs by the J1 point -> cell encoder, the
+    index-then-hash-join core)
 J5  knn_join          — cell-keyed kNN with prefix-block pruning + exact fallback
 
 Design: everything is DataFrame expressions; the only Python is the Arrow
@@ -21,23 +22,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..dggs.config import RHEALPixConfig, DEFAULT_CONFIG
 from ..dggs.cells import HALF_SIDE
 from ..functions.encode import cellid_from_lonlat_udf
-from ..functions import encode_sql
-
-
-def assign_cells(points: DataFrame, res: int, lon: str = "lon", lat: str = "lat",
-                 cfg: RHEALPixConfig = DEFAULT_CONFIG, out: str = "cellid",
-                 single_eval: bool = False) -> DataFrame:
-    """J1: Arrow-batched point->cell assignment.
-
-    ``single_eval`` marks the UDF non-deterministic, which stops Catalyst
-    from splitting it into a pushed ``IsNotNull`` filter + projection (two
-    Python evaluations per row when the column feeds an inner join).  Use it
-    when the cellid feeds joins; leave off when it feeds groupBy expressions
-    directly."""
-    enc = cellid_from_lonlat_udf(res, cfg)
-    if single_eval:
-        enc = enc.asNondeterministic()
-    return points.withColumn(out, enc(lon, lat))
 
 
 # --------------------------------------------------------------------------
@@ -88,121 +72,6 @@ def sat_edge_rect_sql(h: float) -> str:
         f"  OR greatest({_corner_side('-', '-', h)}, {_corner_side('+', '-', h)},"
         f"        {_corner_side('-', '+', h)}, {_corner_side('+', '+', h)}) < 0)"
     )
-
-
-#: estimated point-row bytes above which points_in_polygons picks the
-#: narrow-shuffle rejoin automatically (narrow_shuffle=None)
-NARROW_WIDTH_BYTES = 256
-
-
-def _est_row_width(schema) -> int:
-    """Cheap schema-only row-width estimate (bytes) — no data probe.
-    Scalar sizes follow Spark's DataType.defaultSize; variable-size types
-    use realistic payload guesses (Spark's own defaults assume 1-element
-    arrays and 100-byte binaries, useless for telling a wide
-    media/embedding payload from a narrow key table): binary counts as a
-    media blob (512 — a single blob column next to coordinates must tip
-    the narrow path), arrays as ~16 elements.  Strings are the honest
-    blind spot — schema-only, a 20-byte tag and a 20 KB document look
-    identical, so long-text tables should pass narrow_shuffle=True
-    explicitly."""
-    from pyspark.sql import types as T
-
-    def w(dt) -> int:
-        if isinstance(dt, (T.LongType, T.DoubleType, T.TimestampType,
-                           T.TimestampNTZType)):
-            return 8
-        if isinstance(dt, (T.IntegerType, T.FloatType, T.DateType)):
-            return 4
-        if isinstance(dt, T.ShortType):
-            return 2
-        if isinstance(dt, (T.BooleanType, T.ByteType)):
-            return 1
-        if isinstance(dt, T.DecimalType):
-            return 16
-        if isinstance(dt, T.StringType):
-            return 20
-        if isinstance(dt, T.BinaryType):
-            return 512
-        if isinstance(dt, T.ArrayType):
-            return 16 * w(dt.elementType)  # assume ~16 elements
-        if isinstance(dt, T.MapType):
-            return 16 * (w(dt.keyType) + w(dt.valueType))
-        if isinstance(dt, T.StructType):
-            return sum(w(f.dataType) for f in dt.fields)
-        return 16
-    return sum(w(f.dataType) for f in schema.fields)
-
-
-def points_in_polygons(points: DataFrame, polygons: DataFrame,
-                       px: str = "px", py: str = "py",
-                       poly_id: str = "poly_id", ring: str = "ring",
-                       narrow_shuffle: bool | None = None) -> DataFrame:
-    """Ray-casting parity test, relationally: returns ``points`` columns +
-    ``poly_id`` for every (point, polygon) containment pair.
-
-    points x edges is pruned by a per-polygon bbox pre-filter before the
-    crossing predicate; the polygon side is broadcast (the usual case:
-    dimension-table-sized polygon sets against web-scale points).
-
-    Rows are identified by a synthetic row id, so duplicate point rows each
-    report independently (grouping by point VALUES would merge them and
-    flip the crossing parity); only (poly_id, ring) travel from the polygon
-    side, so shared column names can't turn ambiguous.
-
-    ``narrow_shuffle=True`` is for WIDE point tables: the parity shuffle
-    then carries only (_rid, poly_id) and the surviving pairs re-join the
-    point table afterwards (AQE broadcasts them when the inside-set is
-    small, so the wide columns never shuffle).  Costs one localCheckpoint
-    of the point side — required anyway to pin the synthetic row ids
-    across the two branches.  False keeps the single-pass aggregate,
-    whose map-side partial agg is already one row per (point, polygon).
-
-    ``narrow_shuffle=None`` (default) decides from the SCHEMA: the narrow
-    path wins once the estimated point-row width (_est_row_width — no data
-    probe) exceeds NARROW_WIDTH_BYTES, i.e. when the point table carries
-    media blobs / embeddings / long text next to its coordinates.  Narrow
-    key tables keep the single-pass plan unchanged."""
-    if narrow_shuffle is None:
-        narrow_shuffle = _est_row_width(points.schema) > NARROW_WIDTH_BYTES
-    edges = polygon_edges(polygons.select(poly_id, ring), ring)
-    bbox = edges.groupBy(poly_id).agg(
-        F.least(F.min("x1"), F.min("x2")).alias("_bxmin"),
-        F.greatest(F.max("x1"), F.max("x2")).alias("_bxmax"),
-        F.least(F.min("y1"), F.min("y2")).alias("_bymin"),
-        F.greatest(F.max("y1"), F.max("y2")).alias("_bymax"),
-    )
-    edges = F.broadcast(edges.join(bbox, poly_id))
-    pts = points.withColumn("_rid", F.monotonically_increasing_id())
-    if px != "px" or py != "py":
-        pts = pts.withColumn("px", F.col(px)).withColumn("py", F.col(py))
-    if narrow_shuffle:
-        # dedup: 2 consumers (the candidates and the rejoin); _rid must
-        # not be recomputed (monotonically_increasing_id is
-        # partition-layout-dependent)
-        pts = pts.localCheckpoint(eager=False)
-    cand = pts if not narrow_shuffle else pts.select("_rid", "px", "py")
-    cand = cand.join(
-        edges,
-        (F.col("px") >= F.col("_bxmin")) & (F.col("px") <= F.col("_bxmax"))
-        & (F.col("py") >= F.col("_bymin")) & (F.col("py") <= F.col("_bymax")),
-    )
-    crossings = cand.filter(F.expr(CROSSING))
-    point_cols = [c for c in points.columns]
-    if narrow_shuffle:
-        pairs = (crossings.groupBy("_rid", poly_id)
-                 .agg(F.count("*").alias("_n_cross"))
-                 .filter(F.col("_n_cross") % 2 == 1)
-                 .select("_rid", poly_id))
-        return pts.join(pairs, "_rid").select(*point_cols, poly_id)
-    inside = (
-        crossings.groupBy("_rid", poly_id)
-        .agg(*[F.first(c).alias(c) for c in point_cols],
-             F.count("*").alias("_n_cross"))
-        .filter(F.col("_n_cross") % 2 == 1)
-        .select(*point_cols, poly_id)
-    )
-    return inside
 
 
 def rasterize_polygons(polygons: DataFrame, res: int,
@@ -274,9 +143,10 @@ def rasterize_polygons(polygons: DataFrame, res: int,
             .select(poly_id, "px", "py").distinct()
         )
         inside = inside.unionByName(touched).distinct()
-    # centroid -> cellid via the planar pandas UDF (handles cap faces);
-    # non-deterministic marking keeps the isNotNull filter from duplicating
-    # the Python evaluation (see assign_cells single_eval)
+    # centroid -> cellid via the planar pandas UDF (handles cap faces).
+    # Non-deterministic marking stops Catalyst from splitting the UDF into
+    # a pushed isNotNull filter plus a projection, which would evaluate
+    # the Python twice per row (pip_join marks its UDF the same way)
     from ..functions.encode import cellid_from_planar_udf
 
     enc = cellid_from_planar_udf(res, cfg).asNondeterministic()
@@ -291,7 +161,8 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int,
     """Full J2: docs -> cellid at ``res``; polygons -> covering cells; inner
     equi-join on cellid (the DGGS raison d'etre: PIP becomes a hash join)."""
     cells = rasterize_polygons(polygons, res, poly_id, ring, cfg)
-    docs = assign_cells(points, res, lon, lat, cfg, single_eval=True)
+    enc = cellid_from_lonlat_udf(res, cfg).asNondeterministic()
+    docs = points.withColumn("cellid", enc(lon, lat))
     return docs.filter(F.col("cellid").isNotNull()).join(F.broadcast(cells), "cellid")
 
 
@@ -321,23 +192,23 @@ def knn_join_exact(points: DataFrame, queries: DataFrame, k: int,
 #: record — every value is a count the algorithm already computes.
 last_knn_stats: dict = {}
 
+#: levels knn_join_pruned widens by per retry (n_side**2 x wider blocks)
+KNN_LEVEL_STEP = 2
+
 
 def choose_block_res(points: DataFrame, queries: DataFrame, k: int,
-                     px: str = "px", py: str = "py",
+                     n_q: int, px: str = "px", py: str = "py",
                      qid: str = "q_id", qx: str = "qx", qy: str = "qy",
-                     cfg: RHEALPixConfig = DEFAULT_CONFIG,
-                     fine_res: int = 6, safety: float = 2.0,
-                     frac: float = 0.9, n_q: int | None = None,
-                     level_step: int = 2) -> int:
+                     cfg: RHEALPixConfig = DEFAULT_CONFIG) -> int:
     """Density pre-pass for the kNN starting level.  Histogram the points
-    into blocks at ``fine_res`` — ONE codegen agg over the point table (at
+    into blocks at res 6 — ONE codegen agg over the point table (at
     cluster scale this is the per-prefix histogram the flagship pipeline
     already maintains, so it would be read, not recomputed) — then, per
     candidate level, join each query's 3x3 neighborhood against the
     rolled-up histogram (tiny broadcast joins; the full point table is never
-    rescanned) and pick the FINEST level where at least ``frac`` of the
-    queries see ``safety * k`` candidates, i.e. are expected to resolve at
-    level 0.
+    rescanned) and pick the FINEST level where at least 90 % of the ``n_q``
+    distinct queries see ``2 * k`` candidates, i.e. are expected to resolve
+    at level 0.
 
     Query-centric on purpose: a point-density statistic alone mispredicts
     when queries land in sparse regions (measured: median-occupied-block
@@ -346,11 +217,12 @@ def choose_block_res(points: DataFrame, queries: DataFrame, k: int,
     unresolved queries still expand level by level."""
     import math
 
-    # probed levels share the loop's parity (…, 4, 2 for level_step=2) so a
-    # straggler query still reaches level 0 inside the loop instead of the
-    # exact-fallback broadcast scan (measured: an off-parity choice of 1 sent
-    # one query to the fallback and cost 2x)
-    levels = list(range(fine_res, 0, -level_step))
+    fine_res = 6
+    # probed levels share the loop's parity (6, 4, 2) so a straggler query
+    # still reaches level 0 inside the loop instead of the exact-fallback
+    # broadcast scan (measured: an off-parity choice of 1 sent one query to
+    # the fallback and cost 2x)
+    levels = list(range(fine_res, 0, -KNN_LEVEL_STEP))
     hist_w = HALF_SIDE / cfg.n_side**fine_res
     hist = (points.groupBy(
         F.floor(F.col(px) / hist_w).cast("bigint").alias("_bc"),
@@ -358,7 +230,8 @@ def choose_block_res(points: DataFrame, queries: DataFrame, k: int,
         .agg(F.count("*").alias("_n")))
     # chain the rollups lazily and union them with a level tag: ONE probe job
     # total (plus nothing else — the point table is scanned exactly once)
-    shrink = cfg.n_side ** level_step  # block-index divisor between probed levels
+    # block-index divisor between probed levels
+    shrink = cfg.n_side ** KNN_LEVEL_STEP
     tagged = [hist.withColumn("_lvl", F.lit(fine_res))]
     for lvl in levels[1:]:
         hist = (hist.groupBy(
@@ -371,8 +244,6 @@ def choose_block_res(points: DataFrame, queries: DataFrame, k: int,
         all_h = all_h.unionByName(t)
 
     qs = queries.select(qid, qx, qy)
-    if n_q is None:
-        n_q = qs.count()
     lvl_w = F.lit(HALF_SIDE) / F.pow(F.lit(float(cfg.n_side)), F.col("_lvl"))
     neigh = (qs
              .withColumn("_lvl", F.explode(F.array(*[F.lit(l) for l in levels])))
@@ -384,13 +255,13 @@ def choose_block_res(points: DataFrame, queries: DataFrame, k: int,
     per = (all_h.join(F.broadcast(neigh), ["_lvl", "_bc", "_br"])
            .groupBy(qid, "_lvl").agg(F.sum("_n").alias("_cand"))
            .collect())  # tiny: |queries| x |levels| rows
-    need_n = safety * k
+    need_n = 2.0 * k
     sat: dict[int, int] = {}
     for r in per:
         if r["_cand"] >= need_n:
             sat[r["_lvl"]] = sat.get(r["_lvl"], 0) + 1
     for lvl in levels:  # finest first
-        if sat.get(lvl, 0) >= math.ceil(frac * n_q):
+        if sat.get(lvl, 0) >= math.ceil(0.9 * n_q):
             return lvl
     return 0
 
@@ -399,9 +270,7 @@ def knn_join_pruned(points: DataFrame, queries: DataFrame, k: int,
                     block_res: int | None = None,
                     px: str = "px", py: str = "py",
                     qid: str = "q_id", qx: str = "qx", qy: str = "qy",
-                    cfg: RHEALPixConfig = DEFAULT_CONFIG,
-                    level_step: int = 2,
-                    min_block_res: int = 0) -> DataFrame:
+                    cfg: RHEALPixConfig = DEFAULT_CONFIG) -> DataFrame:
     """Cell-keyed kNN with hierarchically widened neighborhoods.
 
     Level 0: candidates come from the query's 3x3 block neighborhood at
@@ -409,8 +278,8 @@ def knn_join_pruned(points: DataFrame, queries: DataFrame, k: int,
     candidates and its k-th distance is within one block width (the
     containment guarantee: the 3x3 square covers everything within w of the
     center block).  Unresolved queries — sparse regions, face edges — retry
-    at ``block_res - level_step`` (n_side^level_step x wider blocks), and so
-    on down to ``min_block_res``; resolved queries never rescan.  The metric
+    at ``block_res - KNN_LEVEL_STEP`` (n_side^2 x wider blocks), and so
+    on down to level 0; resolved queries never rescan.  The metric
     is PLANAR distance on the unfolded cube (the operator contract, shared
     with the DuckDB oracle), so lattice adjacency is metric-consistent at
     every level and no seam special-casing is needed.
@@ -444,13 +313,13 @@ def knn_join_pruned(points: DataFrame, queries: DataFrame, k: int,
     # over an empty remaining set
     n_unresolved = remaining.select(qid).distinct().count()
     if block_res is None:
-        block_res = choose_block_res(points, remaining, k, px, py, qid, qx, qy,
-                                     cfg, n_q=n_unresolved, level_step=level_step)
+        block_res = choose_block_res(points, remaining, k, n_unresolved,
+                                     px, py, qid, qx, qy, cfg)
     stats = {"block_res": block_res, "resolved_per_level": {}, "fallback_n": 0}
     global last_knn_stats
     last_knn_stats = stats
     parts: list[DataFrame] = []
-    for lvl in range(block_res, min_block_res - 1, -level_step):
+    for lvl in range(block_res, -1, -KNN_LEVEL_STEP):
         w_m = HALF_SIDE / cfg.n_side**lvl
         pts = points.withColumn("_bci", F.floor(F.col(px) / w_m).cast("bigint")) \
                     .withColumn("_bri", F.floor(F.col(py) / w_m).cast("bigint"))

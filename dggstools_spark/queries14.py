@@ -83,7 +83,7 @@ register("lang_confusion", q_lang_confusion, _oracle_lang_confusion())
 
 # --------------------------------------------------------------------------
 # q_cluster_keep — clusters from the ngram near-dup graph (same
-# construction as q_dedup_clusters), keep rule by quality_score.
+# construction as q_dedup_clusters), keep rule by quality_q20.
 # --------------------------------------------------------------------------
 
 

@@ -1,8 +1,10 @@
 """Replicates the driver's correctness gate locally:
 
-runs entry(spark), then every queries()[name] at sf0.01 and compares against
-oracle_sql()[name] via DuckDB — row count, column-name set, and an
-order-insensitive value hash (columns sorted by name, rows canonicalized).
+runs entry(spark) and compares its rows with the cell_counts oracle over the
+same documents file (top 50 by n_docs desc, cellid), then runs every
+queries()[name] at sf0.01 and compares against oracle_sql()[name] via DuckDB
+— row count, column-name set, and an order-insensitive value hash (columns
+sorted by name, rows canonicalized).
 
 Usage: python scripts/check_entry.py [sf_dir] [query ...]
 """
@@ -13,6 +15,7 @@ import hashlib
 import os
 import sys
 import time
+from urllib.parse import urlparse
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,9 +63,21 @@ def main() -> int:
     print("== entry(spark) smoke ==", flush=True)
     t0 = time.time()
     res = entry_mod.entry(spark)
-    rows = res.collect()
-    print(f"entry: {len(rows)} rows in {time.time() - t0:.1f}s; schema: {res.schema.simpleString()}")
-    assert len(rows) >= 0
+    edf = res.toPandas()
+    print(f"entry: {len(edf)} rows in {time.time() - t0:.1f}s; schema: {res.schema.simpleString()}")
+    # entry is the cell_counts leaf, top 50 by (n_docs desc, cellid), over
+    # the documents file it read; the oracle runs over that same file
+    econ = duckdb.connect()
+    files = [urlparse(f).path for f in res.inputFiles()]
+    econ.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet({files!r})")
+    eodf = econ.execute(
+        f"SELECT * FROM ({entry_mod.oracle_sql()['cell_counts']})"
+        " ORDER BY n_docs DESC, cellid LIMIT 50").fetchdf()
+    ok_entry = (len(edf) == len(eodf) > 0
+                and sorted(edf.columns) == sorted(eodf.columns)
+                and canonical_hash(edf) == canonical_hash(eodf))
+    print(f"entry: {'OK' if ok_entry else 'MISMATCH'} rows={len(edf)}/{len(eodf)}"
+          f" over {files}", flush=True)
 
     con = duckdb.connect()
     for t in TABLES:
@@ -99,6 +114,8 @@ def main() -> int:
                                    on=list(sorted(sdf.columns)))
                 diff = merged[merged["_merge"] != "both"]
                 print(diff.head(10).to_string())
+    if not ok_entry:
+        failures.insert(0, "entry")
     print("FAILURES:", failures or "none")
     return 1 if failures else 0
 

@@ -87,7 +87,7 @@ def test_lang_confusion_query_rows(spark, tmp_path):
 
 def test_quality_q20_cross_engine_exact(spark):
     """quality_q20 must be bit-identical Spark vs DuckDB — the integer
-    replacement for round(quality_score, 6), whose .xxxxxx5-boundary
+    replacement for a round(x, 6) float score, whose .xxxxxx5-boundary
     divergence the sf1 cluster_keep gate caught (CLAUDE.md c17)."""
     import duckdb
     from dggstools_spark.functions.text import (quality_q20_duckdb,

@@ -21,28 +21,6 @@ def _square_poly(spark, poly_id, x0, y0, side):
         [(poly_id, ring)], "poly_id int, ring array<struct<x double, y double>>")
 
 
-def test_points_in_polygons_square(spark):
-    polys = _square_poly(spark, 1, 0.0, 0.0, 10.0)
-    pts = spark.createDataFrame(
-        [(1, 5.0, 5.0), (2, 9.99, 0.01), (3, 10.01, 5.0), (4, -0.01, 5.0), (5, 5.0, 11.0)],
-        "pid int, px double, py double")
-    got = spatial_join.points_in_polygons(pts, polys)
-    inside = {r.pid for r in got.collect()}
-    assert inside == {1, 2}
-
-
-def test_points_in_polygons_lshape(spark):
-    # L-shape: unit square minus its top-right quadrant
-    ring = [{"x": 0.0, "y": 0.0}, {"x": 2.0, "y": 0.0}, {"x": 2.0, "y": 1.0},
-            {"x": 1.0, "y": 1.0}, {"x": 1.0, "y": 2.0}, {"x": 0.0, "y": 2.0}]
-    polys = spark.createDataFrame([(7, ring)], "poly_id int, ring array<struct<x double, y double>>")
-    pts = spark.createDataFrame(
-        [(1, 0.5, 0.5), (2, 1.5, 0.5), (3, 0.5, 1.5), (4, 1.5, 1.5)],
-        "pid int, px double, py double")
-    got = {r.pid for r in spatial_join.points_in_polygons(pts, polys).collect()}
-    assert got == {1, 2, 3}
-
-
 def test_rasterize_polygons_center_burn(spark):
     # square covering exactly a 3x3 block of res-2 cells on face Q:
     # Q face ul = (0, s/2); pick cells rows 2..4, cols 1..3 at res 2 (w = s/9)
@@ -60,6 +38,65 @@ def test_rasterize_polygons_center_burn(spark):
 
     cx, cy = cellid_to_planar_centroid(got)
     assert ((cx > x0) & (cx < x1) & (cy > y0) & (cy < y1)).all()
+
+
+def _lshape_q(spark):
+    """L-shaped polygon on face Q at res 2 (w = s/9): a 4x4 block of cells
+    minus its top-right 2x2 quadrant, edges on cell boundaries.  Returns
+    (polys, w, x0, yb): the block's lower-left corner is (x0, yb)."""
+    w = HALF_SIDE / 9
+    x0, yb = 1 * w, HALF_SIDE / 2 - 7 * w
+    ring = [(x0, yb), (x0 + 4 * w, yb), (x0 + 4 * w, yb + 2 * w),
+            (x0 + 2 * w, yb + 2 * w), (x0 + 2 * w, yb + 4 * w),
+            (x0, yb + 4 * w)]
+    polys = spark.createDataFrame(
+        [(7, "polyside", ring)],
+        "poly_id int, source string, ring array<struct<x double, y double>>")
+    return polys, w, x0, yb
+
+
+def _in_notch(cx, cy, w, x0, yb):
+    return (cx > x0 + 2 * w) & (cy > yb + 2 * w)
+
+
+def test_rasterize_polygons_lshape_notch(spark):
+    """Concave ring: the 12 lattice centres in the L's arms burn, the 4 in
+    its notch (inside the bbox, outside the polygon) do not."""
+    from dggstools_spark.dggs.cells import cellid_to_planar_centroid
+
+    polys, w, x0, yb = _lshape_q(spark)
+    got = sorted(r.cellid for r in
+                 spatial_join.rasterize_polygons(polys, 2).collect())
+    assert len(got) == 12 and all(c.startswith("Q") for c in got)
+    cx, cy = cellid_to_planar_centroid(got)
+    assert ((cx > x0) & (cx < x0 + 4 * w)
+            & (cy > yb) & (cy < yb + 4 * w)).all()
+    assert not _in_notch(cx, cy, w, x0, yb).any()
+
+
+def test_pip_join_duplicate_rows_and_notch(spark):
+    """Two identical doc rows both join (neither is merged away), a doc in
+    the L's notch joins nothing, and a column name shared with the polygon
+    table does not turn ambiguous."""
+    from dggstools_spark.dggs.cells import (cellid_to_lonlat_centroid,
+                                            cellid_to_planar_centroid,
+                                            planar_to_cellid)
+
+    polys, w, x0, yb = _lshape_q(spark)
+    arm, notch = planar_to_cellid(np.array([x0 + 0.5 * w, x0 + 3.5 * w]),
+                                  np.array([yb + 0.5 * w, yb + 3.5 * w]), 2)
+    cx, cy = cellid_to_planar_centroid([notch])
+    assert _in_notch(cx, cy, w, x0, yb).all()
+    lon, lat = cellid_to_lonlat_centroid([arm, notch])
+    docs = spark.createDataFrame(
+        [(1, float(lon[0]), float(lat[0]), "a"),
+         (1, float(lon[0]), float(lat[0]), "a"),
+         (2, float(lon[1]), float(lat[1]), "b")],
+        "doc_id int, lon double, lat double, source string")
+    got = spatial_join.pip_join(docs, polys, res=2).collect()
+    assert len(got) == 2  # both copies of doc 1; doc 2 sits in the notch
+    assert all(r.doc_id == 1 and r.source == "a" and r.poly_id == 7
+               and r.cellid == arm for r in got)
 
 
 def test_pip_join_assigns_docs(spark):
@@ -528,20 +565,6 @@ def test_salted_topk_matches_naive(spark):
     assert a == b == c and len(a) > 25
 
 
-def test_points_in_polygons_duplicates_and_shared_columns(spark):
-    """Duplicate point rows each report independently (value-grouping would
-    double the crossing parity and drop them), and a column name shared with
-    the polygon table must not turn ambiguous."""
-    polys = _square_poly(spark, 1, 0.0, 0.0, 10.0).withColumn(
-        "source", F.lit("polyside"))
-    pts = spark.createDataFrame(
-        [(1, 5.0, 5.0, "a"), (1, 5.0, 5.0, "a"), (2, 20.0, 20.0, "b")],
-        "pid int, px double, py double, source string")
-    got = spatial_join.points_in_polygons(pts, polys).collect()
-    assert len(got) == 2  # both duplicate copies, not zero
-    assert all(r.pid == 1 and r.source == "a" for r in got)
-
-
 def test_knn_adaptive_block_res_and_stats(spark):
     """block_res=None picks a level from the density pre-pass; results match
     the exact join and last_knn_stats records the expansion profile."""
@@ -602,38 +625,6 @@ def test_area_error_cross_class_overlap_burns_last(spark):
     assert abs(both.total_cells_area - 2 * last.total_cells_area) < 1e-6
     # burn-last: class 0 gets zero raster area -> bias is asymmetric
     assert last.total_cells_area > 0
-
-
-def test_pip_narrow_shuffle_matches_default(spark):
-    """narrow_shuffle=True returns the same containment pairs as the
-    single-pass aggregate, including duplicate point rows."""
-    from dggstools_spark.operators.spatial_join import points_in_polygons
-
-    ring = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
-    polys = spark.createDataFrame(
-        [(1, ring)], "poly_id int, ring array<struct<x double, y double>>")
-    pts = spark.createDataFrame(
-        [(1, 5.0, 5.0, "wide1"), (2, 15.0, 5.0, "wide2"),
-         (3, 5.0, 5.0, "wide3"), (3, 5.0, 5.0, "wide3")],  # dup row
-        "pid int, px double, py double, payload string")
-    a = sorted(tuple(r) for r in points_in_polygons(pts, polys).collect())
-    b = sorted(tuple(r) for r in
-               points_in_polygons(pts, polys, narrow_shuffle=True).collect())
-    assert a == b
-    assert len(a) == 3  # both copies of the dup row report
-
-    # auto mode (narrow_shuffle=None): schema-only width probe — the wide
-    # media/embedding payload flips to the narrow rejoin path, the narrow
-    # key table keeps the single-pass plan
-    from dggstools_spark.operators.spatial_join import (NARROW_WIDTH_BYTES,
-                                                        _est_row_width)
-    assert _est_row_width(pts.schema) <= NARROW_WIDTH_BYTES
-    wide = pts.withColumn("media", F.col("payload").cast("binary")) \
-              .withColumn("embedding", F.array(*[F.col("px")] * 2))
-    assert _est_row_width(wide.schema) > NARROW_WIDTH_BYTES
-    c = sorted(tuple(r) for r in points_in_polygons(wide, polys)
-               .select("pid", "px", "py", "payload", "poly_id").collect())
-    assert a == c
 
 
 def test_winnow_auto_cap_templated_corpus(spark):

@@ -29,7 +29,7 @@ def test_rowcol_of_matches_kernel(digits, face):
 # ------------------------------------------------ quality_q20 vs reference
 
 def _q20_ref(text: str) -> int:
-    """Pure-Python reference of functions/text.quality_q20 semantics."""
+    """Pure-Python reference of functions/text._quality_q20 semantics."""
     t = text.strip()
     toks = 0 if len(t) == 0 else t.count(" ") + 1
     low = text.lower()

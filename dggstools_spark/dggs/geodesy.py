@@ -22,8 +22,9 @@ from .projection import authalic_lat
 WGS84_B = WGS84_A * (1.0 - WGS84_F)
 
 
-def geodesic_distance(lon1, lat1, lon2, lat2, iterations: int = 200, tol: float = 1e-13):
-    """Vincenty inverse geodesic distance in meters (vectorized)."""
+def geodesic_distance(lon1, lat1, lon2, lat2):
+    """Vincenty inverse geodesic distance in meters (vectorized): at most
+    200 iterations, converged when lambda moves less than 1e-13 rad."""
     lon1 = np.radians(np.asarray(lon1, dtype=np.float64))
     lat1 = np.radians(np.asarray(lat1, dtype=np.float64))
     lon2 = np.radians(np.asarray(lon2, dtype=np.float64))
@@ -38,7 +39,7 @@ def geodesic_distance(lon1, lat1, lon2, lat2, iterations: int = 200, tol: float 
 
     lam = L.copy()
     converged = np.zeros_like(lam, dtype=bool)
-    for _ in range(iterations):
+    for _ in range(200):
         sin_lam, cos_lam = np.sin(lam), np.cos(lam)
         sin_sigma = np.sqrt(
             (cosU2 * sin_lam) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * cos_lam) ** 2
@@ -56,7 +57,7 @@ def geodesic_distance(lon1, lat1, lon2, lat2, iterations: int = 200, tol: float 
         lam_new = L + (1.0 - C) * f * sin_alpha * (
             sigma + C * sin_sigma * (cos_2sigma_m + C * cos_sigma * (-1.0 + 2.0 * cos_2sigma_m**2))
         )
-        converged = np.abs(lam_new - lam) < tol
+        converged = np.abs(lam_new - lam) < 1e-13
         lam = lam_new
         if np.all(converged):
             break

@@ -43,9 +43,9 @@ def authalic_lat(phi: np.ndarray) -> np.ndarray:
     return np.arcsin(ratio)
 
 
-def geodetic_lat(beta: np.ndarray, iterations: int = 6) -> np.ndarray:
-    """Authalic latitude (rad) -> geodetic latitude (rad), by Newton iteration
-    on q(phi) = q_p * sin(beta).
+def geodetic_lat(beta: np.ndarray) -> np.ndarray:
+    """Authalic latitude (rad) -> geodetic latitude (rad), by 6 Newton
+    iterations on q(phi) = q_p * sin(beta).
 
     The iteration needs a pole guard: q is QUADRATICALLY flat at the poles
     (dq/dphi ~ cos phi), so within ~1e-8 rad of a pole both the residual
@@ -60,7 +60,7 @@ def geodetic_lat(beta: np.ndarray, iterations: int = 6) -> np.ndarray:
     target = Q_P * np.sin(beta)
     phi = beta.copy()
     e2 = WGS84_E2
-    for _ in range(iterations):
+    for _ in range(6):
         s = np.clip(np.sin(phi), -1.0, 1.0)
         # dq/dphi = 2(1-e2) cos(phi) / (1 - e2 sin^2 phi)^2
         dq = 2.0 * (1.0 - e2) * np.cos(phi) / (1.0 - e2 * s * s) ** 2

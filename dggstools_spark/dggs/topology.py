@@ -46,14 +46,16 @@ _NORMALS = {0: (0.0, 1.0), 1: (1.0, 0.0), 2: (0.0, -1.0), 3: (-1.0, 0.0)}
 
 _CACHE: dict[tuple[int, int, int], dict] = {}
 
+#: resolution whose edge cells probe each seam (n_side**2 probes per edge)
+_DERIVE_RES = 2
 
-def edge_table(cfg: RHEALPixConfig = DEFAULT_CONFIG,
-               derive_res: int = 2) -> dict:
+
+def edge_table(cfg: RHEALPixConfig = DEFAULT_CONFIG) -> dict:
     """{(face, edge): (face2, edge2, flip)} for all 24 directed seams."""
     key = (cfg.n_side, cfg.north_square, cfg.south_square)
     if key in _CACHE:
         return _CACHE[key]
-    E = cfg.n_side ** derive_res
+    E = cfg.n_side ** _DERIVE_RES
     w = HALF_SIDE / E
     uls = _face_ul(cfg)
     table: dict = {}
@@ -85,7 +87,7 @@ def edge_table(cfg: RHEALPixConfig = DEFAULT_CONFIG,
                     np.array([lons[1] + 2.0 * dlon]),
                     np.array([lats[1] + 2.0 * dlat]),
                     cfg.north_square, cfg.south_square)
-                f2, r2, c2 = planar_to_face_rowcol(x, y, derive_res, cfg)
+                f2, r2, c2 = planar_to_face_rowcol(x, y, _DERIVE_RES, cfg)
                 hits.append((int(f2[0]), int(r2[0]), int(c2[0])))
             faces2 = {h[0] for h in hits}
             if len(faces2) != 1 or face in faces2 or min(faces2) < 0:

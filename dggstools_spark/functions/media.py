@@ -1,14 +1,14 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media rides as opaque ``binary`` columns with typed metadata structs; decode
-/ feature-extract / resize / frame-sample run as Arrow-batched ``mapInPandas``
-stages.  The codec layer is PLUGGABLE, sniffed from magic bytes:
+and feature extraction run as Arrow-batched ``mapInPandas`` stages.  The
+codec layer is PLUGGABLE, sniffed from magic bytes:
 
 - **PNM (P5 grayscale / P6 RGB, binary)** — real decoder, pure numpy header
   parse + frombuffer (no external libraries needed).
 - **WAV (RIFF PCM)** — real decoder via the stdlib ``wave`` module
   (16/8-bit PCM).
-- anything else falls back to ``deterministic_fake_decode`` (a seeded,
+- anything else falls back to a deterministic fake decode (a seeded,
   reproducible tensor from the raw bytes) so pipelines over formats whose
   codecs aren't installed here (JPEG/MP4/...) still exercise the real
   dataflow — schema, batch shape, partitioning, UDF signatures — and a real
@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, FloatType,
                                IntegerType, LongType, StringType, StructField,
                                StructType)
+
+#: length of every pooled feature vector (extract_features)
+FEAT_DIM = 64
 
 MEDIA_META = StructType([
     StructField("kind", StringType()),       # image | audio | video
@@ -50,19 +53,6 @@ def feature_schema(dtype: str = "float32") -> StructType:
 
 
 FEATURE_SCHEMA = feature_schema()
-
-
-def deterministic_fake_decode(blob: bytes, out_pixels: int = 64) -> np.ndarray:
-    """STUB codec: derive a deterministic float32 'image' from the raw bytes.
-
-    Replace with e.g. PIL/libvips/ffmpeg in a real deployment; the dataflow
-    (bytes in, fixed-shape float tensor out) is the contract that matters."""
-    if blob is None or len(blob) == 0:
-        return np.zeros(out_pixels, dtype=np.float32)
-    arr = np.frombuffer(blob, dtype=np.uint8)
-    reps = int(np.ceil(out_pixels / arr.size))
-    tiled = np.tile(arr, reps)[:out_pixels].astype(np.float32)
-    return (tiled - 127.5) / 127.5
 
 
 def decode_pnm(blob: bytes) -> tuple[np.ndarray, dict]:
@@ -202,11 +192,11 @@ def pool_signal(sig: np.ndarray, feat_dim: int) -> np.ndarray:
 
 def extract_features(df: DataFrame, blob_col: str = "blob",
                      id_col: str = "doc_id", ref_col: str = "media_ref",
-                     feat_dim: int = 64, dtype: str = "float32") -> DataFrame:
+                     dtype: str = "float32") -> DataFrame:
     """mapInPandas feature extraction: REAL codec decode (PNM/WAV via
     decode_media; anything else takes the fake fallback, flagged per row by
     ``fake_decoded`` so production truncation/garbage is observable) +
-    segment-mean pooling to ``feat_dim``.  Arrow batches in, Arrow batches
+    segment-mean pooling to ``FEAT_DIM``.  Arrow batches in, Arrow batches
     out; no per-row Python beyond the codec call itself (which a real codec
     also requires).  ``dtype='float64'`` keeps full precision for
     quantized oracle comparison; float32 is the storage default."""
@@ -219,7 +209,7 @@ def extract_features(df: DataFrame, blob_col: str = "blob",
                 kind, sig, _ = decode_media(b)
                 kinds.append(kind)
                 flags.append(int(kind == "opaque"))
-                pooled = pool_signal(sig, feat_dim)
+                pooled = pool_signal(sig, FEAT_DIM)
                 feats.append(pooled.astype(dtype).tolist())
             yield pd.DataFrame({
                 "doc_id": pdf[id_col].astype(str),
@@ -227,57 +217,8 @@ def extract_features(df: DataFrame, blob_col: str = "blob",
                 "kind": kinds,
                 "fake_decoded": np.asarray(flags, dtype=np.int32),
                 "feature": feats,
-                "feat_dim": feat_dim,
+                "feat_dim": FEAT_DIM,
             })
-
-    return df.mapInPandas(run, schema)
-
-
-def resize_images(df: DataFrame, blob_col: str = "blob",
-                  target: int = 16) -> DataFrame:
-    """STUB resize: decode (fake) -> downsample by striding -> re-encode as
-    binary.  Demonstrates the binary->binary mapInPandas shape."""
-    schema = StructType(df.schema.fields + [StructField("resized", BinaryType())])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for b in pdf[blob_col]:
-                px = deterministic_fake_decode(b, 256)
-                stride = max(1, 256 // target)
-                small = px[::stride][:target]
-                out.append(((small * 127.5) + 127.5).astype(np.uint8).tobytes())
-            pdf = pdf.copy()
-            pdf["resized"] = out
-            yield pdf
-
-    return df.mapInPandas(run, schema)
-
-
-def sample_frames(df: DataFrame, blob_col: str = "blob", every: int = 8,
-                  n_frames: int = 32) -> DataFrame:
-    """STUB video frame sampling: emits one row per sampled frame index —
-    the explode-shaped mapInPandas used for video pipelines."""
-    schema = StructType(df.schema.fields + [
-        StructField("frame_idx", IntegerType()),
-        StructField("frame", BinaryType()),
-    ])
-
-    frame_idxs = list(range(0, n_frames, every))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # row-replicate via index repeat (no iterrows): each input row
-            # fans out to len(frame_idxs) output rows
-            rep = pdf.loc[pdf.index.repeat(len(frame_idxs))].reset_index(drop=True)
-            rep["frame_idx"] = np.tile(np.asarray(frame_idxs, dtype=np.int32),
-                                       len(pdf))
-            rep["frame"] = [
-                ((deterministic_fake_decode((b or b"") + int(fi).to_bytes(2, "big"), 32)
-                  * 127.5) + 127.5).astype(np.uint8).tobytes()
-                for b, fi in zip(rep[blob_col], rep["frame_idx"])
-            ]
-            yield rep[[f.name for f in schema.fields]]
 
     return df.mapInPandas(run, schema)
 

@@ -112,14 +112,15 @@ WINNOW_B = 257     # polynomial base
 WINNOW_P = 1_000_003  # modulus (intermediates stay far below int64)
 
 
-def _horner(text: str, pos: str, k: int = WINNOW_K, b: int = WINNOW_B,
-            p: int = WINNOW_P) -> str:
-    """Engine-neutral unrolled polynomial hash of the k chars of ``text``
-    starting at 1-based position ``pos`` (mod after every step)."""
+def _horner(text: str, pos: str) -> str:
+    """Engine-neutral unrolled polynomial hash (base WINNOW_B, mod
+    WINNOW_P after every step) of the WINNOW_K chars of ``text`` starting
+    at 1-based position ``pos``."""
     expr = f"CAST(ascii(substring({text}, {pos}, 1)) AS BIGINT)"
-    for j in range(1, k):
-        expr = (f"(({expr}) * {b} + ascii(substring({text}, ({pos}) + {j}, 1)))"
-                f" % {p}")
+    for j in range(1, WINNOW_K):
+        expr = (f"(({expr}) * {WINNOW_B}"
+                f" + ascii(substring({text}, ({pos}) + {j}, 1)))"
+                f" % {WINNOW_P}")
     return expr
 
 
@@ -132,20 +133,21 @@ def _horner(text: str, pos: str, k: int = WINNOW_K, b: int = WINNOW_B,
 # same fingerprint set, plan-friendly.
 
 
-def winnow_hashes_duckdb(text: str, k: int = WINNOW_K) -> str:
-    """DuckDB: list of k-gram rolling hashes of ``text`` (range() end is
-    exclusive).  Keep this in its own MATERIALIZED CTE column — inlining it
-    into the window expression below re-computes the whole list PER WINDOW
-    POSITION (measured 38 s vs 0.2 s on 100 short docs)."""
-    h = _horner(f"lower({text})", "i", k)
-    return (f"CASE WHEN length({text}) < {k} THEN []"
-            f" ELSE list_transform(range(1, length({text}) - {k} + 2),"
+def winnow_hashes_duckdb(text: str) -> str:
+    """DuckDB: list of WINNOW_K-gram rolling hashes of ``text`` (range()
+    end is exclusive).  Keep this in its own MATERIALIZED CTE column —
+    inlining it into the window expression below re-computes the whole
+    list PER WINDOW POSITION (measured 38 s vs 0.2 s on 100 short docs)."""
+    h = _horner(f"lower({text})", "i")
+    return (f"CASE WHEN length({text}) < {WINNOW_K} THEN []"
+            f" ELSE list_transform(range(1, length({text}) - {WINNOW_K} + 2),"
             f" i -> {h}) END")
 
 
-def winnow_from_hashes_duckdb(h: str, w: int = WINNOW_W) -> str:
-    """DuckDB: distinct winnowing fingerprints from a MATERIALIZED hash
-    list column ``h`` (list_slice() end is inclusive)."""
+def winnow_from_hashes_duckdb(h: str) -> str:
+    """DuckDB: distinct winnowing fingerprints (window of WINNOW_W) from a
+    MATERIALIZED hash list column ``h`` (list_slice() end is inclusive)."""
+    w = WINNOW_W
     return (f"CASE WHEN len({h}) = 0 THEN []"
             f" WHEN len({h}) < {w} THEN [list_min({h})]"
             f" ELSE list_distinct(list_transform("
@@ -153,7 +155,7 @@ def winnow_from_hashes_duckdb(h: str, w: int = WINNOW_W) -> str:
             f" s -> list_min(list_slice({h}, s, s + {w} - 1)))) END")
 
 
-def winnow_fps_duckdb(text: str, k: int = WINNOW_K, w: int = WINNOW_W) -> str:
+def winnow_fps_duckdb(text: str) -> str:
     """One-shot composition for small inputs/tests; for table-scale oracle
     SQL use the two-stage form (hashes in a MATERIALIZED CTE first)."""
-    return winnow_from_hashes_duckdb(winnow_hashes_duckdb(text, k), w)
+    return winnow_from_hashes_duckdb(winnow_hashes_duckdb(text))

@@ -1,16 +1,18 @@
 """Deduplication operators for the training-data pipeline.
 
-- exact_dedup: hash-groupBy on a content fingerprint.
 - minhash_lsh: shingle -> per-seed MinHash (lexicographic min of md5, a
   portable uniform permutation) -> banded signatures -> bucket-join candidate
   pairs -> exact Jaccard verification.  Everything is explode/groupBy/join —
   no Python in the hot path, and the same construction is expressible in the
   DuckDB oracle.
-- simhash: 64-bit near-dup hash, relational by default (explode -> built-in
-  md5 -> 64 bit-count aggregates -> sign reassembly; all JVM-side) with the
-  original numpy pandas UDF kept as an equivalence-checked alternate.
+- simhash_ids: 64-bit near-dup hash, fully relational (explode -> built-in
+  md5 -> 64 bit-count aggregates -> sign reassembly; all JVM-side).  The
+  numpy pandas UDF it replaced stays as the test reference
+  (_simhash_pandas).
 - ngram_jaccard_pairs: exact n-gram Jaccard for candidate pairs that share at
   least one shingle (bounded self-join).
+
+Exact whole-doc dedup is query ``dedup_exact`` over ``text.fingerprint``.
 """
 
 import itertools
@@ -81,20 +83,6 @@ def shingles(df: DataFrame, text_col: str, n: int = 3, out: str = "shingle") -> 
     ).drop("_toks")
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Groups of byte-identical (normalized) content; keeps min id as
-    canonical.  NULL texts are excluded up front — md5(NULL) is NULL and
-    groupBy would otherwise merge all null-text docs into one bogus
-    duplicate group."""
-    return (
-        df.filter(F.col(text_col).isNotNull())
-        .withColumn("fp", F.md5(F.lower(F.trim(F.col(text_col)))))
-        .groupBy("fp")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("canonical_id"),
-             F.collect_list(id_col).alias("member_ids"))
-    )
-
-
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        n_hashes: int = N_MINHASHES, shingle_n: int = 3) -> DataFrame:
     """(id, h0..h{n-1}) MinHash signature per doc: h_i = min over shingles of
@@ -118,8 +106,7 @@ def _cap_hot_keys(df: DataFrame, key: str, max_bucket: int | None,
     Truncation is never silent: when ``max_bucket`` is set, an ``observe``
     node counts the dropped rows DURING the caller's own action (zero extra
     jobs) — read them with guard_metrics(), which also logs a WARNING for
-    any guard that dropped rows.  hot_bucket_stats remains the per-key
-    drill-down."""
+    any guard that dropped rows."""
     from pyspark.sql import Observation
     from pyspark.sql.window import Window
 
@@ -139,15 +126,6 @@ def _cap_hot_keys(df: DataFrame, key: str, max_bucket: int | None,
     return out.drop("_bn")
 
 
-def hot_bucket_stats(df: DataFrame, key: str, max_bucket: int) -> DataFrame:
-    """Dropped-mass report for the hot-bucket guard: one row per dropped key
-    (``key``, n_rows) with n_rows > max_bucket — log/persist this next to
-    the dedup output so truncation is never silent.  Total mass:
-    ``hot_bucket_stats(...).agg(F.count('*'), F.sum('n_rows'))``."""
-    return (df.groupBy(key).agg(F.count("*").alias("n_rows"))
-            .filter(F.col("n_rows") > max_bucket))
-
-
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       band_size: int = BAND_SIZE,
                       max_bucket: int | None = 500) -> DataFrame:
@@ -155,8 +133,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
 
     ``max_bucket`` caps band-bucket size (hot-bucket guard): buckets above
     the cap are dropped from pair generation — standard LSH-dedup practice;
-    a bucket that hot is boilerplate, not near-duplication signal.  Use
-    hot_bucket_stats(lsh_bands(...), 'band_key', cap) to log dropped mass."""
+    a bucket that hot is boilerplate, not near-duplication signal; the
+    dropped mass is read with guard_metrics() after the pairs' action."""
     bands = lsh_bands(df, text_col, id_col, N_MINHASHES, band_size)
     bands = _cap_hot_keys(bands, "band_key", max_bucket)
     a = bands.select(F.col(id_col).alias("a_id"), "band_key")
@@ -196,7 +174,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     create an O(n^2) group.  Dropping it biases n_inter DOWN for affected
     pairs (conservative: Jaccard is underestimated, never inflated); doc
     sizes n_a/n_b still count every shingle.  Dropped mass:
-    hot_bucket_stats(<distinct shingles>, 'shingle', cap)."""
+    guard_metrics()."""
     sh = shingles(df.select(id_col, text_col), text_col, 3) \
         .select(id_col, "shingle").distinct()
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
@@ -386,49 +364,20 @@ def _md5_halves(toks: "list[str]") -> "tuple":
     return hi, lo
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str, out: str = "simhash64",
-            impl: str = "relational") -> DataFrame:
-    """64-bit SimHash per doc (bit contract: value = sign_hi << 32 | sign_lo,
-    each half voted from the 32 bits of its md5-derived token hash;
-    _md5_halves documents the token hash).  Deterministic across engines and
-    library versions; q_simhash oracle-checks it.
-
-    ``impl='relational'`` (default, the 100-TB path) stays entirely JVM-side:
-    explode tokens -> built-in ``md5`` -> ``conv`` hex halves -> 64 bit-count
-    aggregates in ONE hash agg per doc (map-side combine; no per-token row
-    blowup beyond the token explode itself) -> sign reassembly, then a join
-    back on ``id_col`` to restore the caller's columns.  ``impl='pandas'``
-    is the original Arrow-UDF form (no shuffle, but a per-token Python
-    ``hashlib.md5`` loop — its throughput ceiling); kept as the equivalence
-    check (tests assert identical values) and for callers that cannot
-    afford the id join.
-
-    CONTRACT (relational impl only): ``id_col`` must be UNIQUE and
-    NON-NULL.  Duplicate ids would merge token votes across rows in the
-    per-id aggregate and then fan out via the join-back; a null id joins
-    nothing and yields a NULL hash — both silently diverge from the
-    pandas impl's per-row hash.  The pandas impl has no such requirement
-    (it never touches ``id_col``); use it when ids are not unique."""
-    if impl == "pandas":
-        return _simhash_pandas(df, text_col, out)
-    if impl != "relational":
-        raise ValueError(f"simhash impl must be 'relational' or 'pandas', got {impl!r}")
-    sig = simhash_ids(df, text_col, id_col, out)
-    res = df.join(sig, id_col, "left")
-    empty = F.col(text_col).isNull() | (F.col(text_col) == "")
-    return res.withColumn(
-        out, F.when(empty, F.lit(0).cast("long")).otherwise(F.col(out)))
-
-
 def simhash_ids(df: DataFrame, text_col: str, id_col: str,
                 out: str = "simhash64") -> DataFrame:
-    """(id, simhash64) via pure relational ops — the same construction the
-    DuckDB oracle uses (queries5._oracle_simhash).  NULL-text docs are
-    ABSENT from the output; EMPTY-STRING docs are PRESENT with the hash of
-    the single '' token Spark's split yields (md5('') votes) — which
-    differs from simhash()'s 0 for them, so filter BOTH null and empty
-    text before calling this directly (q_simhash does); simhash() itself
-    joins back and overrides both cases to 0.  Per doc and half:
+    """(id, simhash64) 64-bit SimHash per doc via pure relational ops — the
+    same construction the DuckDB oracle uses (queries5._oracle_simhash).
+    Bit contract: value = sign_hi << 32 | sign_lo, each half voted from the
+    32 bits of its md5-derived token hash (_md5_halves documents the token
+    hash), so it is deterministic across engines and library versions.
+
+    ``id_col`` must be UNIQUE: the votes aggregate per id, so duplicate ids
+    merge their tokens into one hash.  NULL-text docs are ABSENT from the
+    output; EMPTY-STRING docs are PRESENT with the hash of the single ''
+    token Spark's split yields (md5('') votes), so filter both null and
+    empty text first when they should not hash (q_simhash does).  Per doc
+    and half:
     vote_j = sum over tokens of (2*bit_j - 1) = 2*sum(bit_j) - n_tokens, so
     64 ``sum(shiftright(h, j) & 1)`` aggregates + one count reproduce every
     vote without exploding bit positions (no 32x row blowup, unlike the
@@ -460,6 +409,8 @@ def simhash_ids(df: DataFrame, text_col: str, id_col: str,
 
 
 def _simhash_pandas(df: DataFrame, text_col: str, out: str) -> DataFrame:
+    """Reference for simhash_ids: the original Arrow-UDF form, a per-token
+    Python ``hashlib.md5`` loop; tests assert identical values."""
     @F.pandas_udf(LongType())
     def _simhash(texts: pd.Series) -> pd.Series:
         out_vals = np.zeros(len(texts), dtype=np.int64)
@@ -633,7 +584,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str = "doc_id",
                    F.explode(F.expr(
                        f"sequence(1, length({text_col}) - {k} + 1)")).alias("_i")))
     hashed = pos.select(id_col, "_nh", "_i",
-                        F.expr(_horner(f"lower({text_col})", "_i", k)).alias("_h"))
+                        F.expr(_horner(f"lower({text_col})", "_i")).alias("_h"))
     wdw = Window.partitionBy(id_col).orderBy("_i").rowsBetween(0, w - 1)
     # window minima; tail positions whose window would run past the end are
     # dropped (i <= nh - w + 1), except a single window survives for docs

@@ -65,7 +65,7 @@ def dsir_scores(df: DataFrame, text_col: str, id_col: str,
 
     Contract: ``id_col`` must be unique and non-null — duplicate ids merge
     token multisets in the per-doc rollup (same contract as
-    dedup.simhash)."""
+    dedup.simhash_ids)."""
     toks = (tokens(df.filter(F.col(text_col).isNotNull())
                    .select(id_col, target.cast("int").alias("tgt"), text_col),
                    text_col)
@@ -99,10 +99,10 @@ def dsir_scores(df: DataFrame, text_col: str, id_col: str,
 
 
 def dsir_scores_sql(table: str, text_col: str, id_col: str,
-                    target_sql: str, n_buckets: int = DSIR_BUCKETS,
-                    k: int | None = None) -> str:
-    """DuckDB twin: same bucket hash (md5 hex prefix parsed portably), same
-    integer weights; ``target_sql`` is the boolean SQL predicate."""
+                    target_sql: str, k: int | None = None) -> str:
+    """DuckDB twin at DSIR_BUCKETS buckets: same bucket hash (md5 hex prefix
+    parsed portably), same integer weights; ``target_sql`` is the boolean
+    SQL predicate."""
     hex32 = " + ".join(
         f"(instr('0123456789abcdef', substring(m, {1 + i}, 1)) - 1)"
         f" * {16 ** (7 - i)}" for i in range(8))
@@ -112,14 +112,14 @@ def dsir_scores_sql(table: str, text_col: str, id_col: str,
                unnest(string_split({text_col}, ' ')) AS tok
         FROM {table} WHERE {text_col} IS NOT NULL),
     tb AS MATERIALIZED (
-        SELECT {id_col}, tgt, CAST({hex32} AS BIGINT) % {n_buckets} AS b
+        SELECT {id_col}, tgt, CAST({hex32} AS BIGINT) % {DSIR_BUCKETS} AS b
         FROM (SELECT {id_col}, tgt, md5(tok) AS m FROM toks)),
     stats AS MATERIALIZED (
         SELECT b, count(*) AS r_cnt, sum(tgt) AS t_cnt FROM tb GROUP BY b),
     tot AS (SELECT sum(r_cnt) AS R, sum(t_cnt) AS T FROM stats),
     weights AS MATERIALIZED (
-        SELECT b, CAST(((t_cnt + 1) * {DSIR_PPM}) // (T + {n_buckets})
-                       - ((r_cnt + 1) * {DSIR_PPM}) // (R + {n_buckets})
+        SELECT b, CAST(((t_cnt + 1) * {DSIR_PPM}) // (T + {DSIR_BUCKETS})
+                       - ((r_cnt + 1) * {DSIR_PPM}) // (R + {DSIR_BUCKETS})
                   AS BIGINT) AS w
         FROM stats, tot),
     doc AS (

@@ -147,12 +147,11 @@ def flow_dir(cells: DataFrame, res: int,
                     .alias("drop")))
 
 
-def flow_dir_ctes(cells_sql: str, res: int,
-                  cross_face: bool = True) -> str:
+def flow_dir_ctes(cells_sql: str, res: int) -> str:
     """DuckDB CTE chain ending in ``fdir`` (cellid, z, nxt, drop) — the
-    twin of :func:`flow_dir` over ``cells_sql`` → (cellid, z).  Every
-    level MATERIALIZED (CLAUDE.md constraints 7/14)."""
-    nb = cell_neighbors_sql("(SELECT cellid FROM _cz)", res, cross_face)
+    twin of :func:`flow_dir` with cross_face=True over ``cells_sql`` →
+    (cellid, z).  Every level MATERIALIZED (CLAUDE.md constraints 7/14)."""
+    nb = cell_neighbors_sql("(SELECT cellid FROM _cz)", res)
     return f"""
     _cz AS MATERIALIZED ({cells_sql}),
     _nb AS MATERIALIZED (SELECT cellid, nbr FROM ({nb})),
@@ -206,16 +205,15 @@ def watershed(cells: DataFrame, res: int, doublings: int,
     return p.select("cellid", F.col("p").alias("pit"))
 
 
-def watershed_ctes(cells_sql: str, res: int, doublings: int,
-                   cross_face: bool = True) -> str:
+def watershed_ctes(cells_sql: str, res: int, doublings: int) -> str:
     """DuckDB CTE chain ending in ``wshed`` (cellid, pit) — the twin of
-    :func:`watershed` (same doubling count, every level MATERIALIZED —
-    CLAUDE.md constraint 14: un-materialized doubling levels inline
-    exponentially)."""
+    :func:`watershed` with cross_face=True (same doubling count, every
+    level MATERIALIZED — CLAUDE.md constraint 14: un-materialized doubling
+    levels inline exponentially)."""
     if doublings < 1:
         raise ValueError(f"watershed_ctes: doublings must be >= 1,"
                          f" got {doublings}")
-    parts = [flow_dir_ctes(cells_sql, res, cross_face),
+    parts = [flow_dir_ctes(cells_sql, res),
              "_p0 AS MATERIALIZED (SELECT cellid, nxt AS p FROM fdir)"]
     for i in range(1, doublings + 1):
         parts.append(f"""_p{i} AS MATERIALIZED (
@@ -384,15 +382,14 @@ def flow_accum(cells: DataFrame, res: int, doublings: int,
             .agg(F.count("*").alias("acc")))
 
 
-def flow_accum_ctes(cells_sql: str, res: int, doublings: int,
-                    cross_face: bool = True) -> str:
+def flow_accum_ctes(cells_sql: str, res: int, doublings: int) -> str:
     """DuckDB CTE chain ending in ``faccum`` (cellid, acc) — the twin of
-    :func:`flow_accum` (same squaring rounds, every level MATERIALIZED —
-    CLAUDE.md constraint 14)."""
+    :func:`flow_accum` with cross_face=True (same squaring rounds, every
+    level MATERIALIZED — CLAUDE.md constraint 14)."""
     if doublings < 1:
         raise ValueError(f"flow_accum_ctes: doublings must be >= 1,"
                          f" got {doublings}")
-    parts = [flow_dir_ctes(cells_sql, res, cross_face),
+    parts = [flow_dir_ctes(cells_sql, res),
              """_r0 AS MATERIALIZED (
         SELECT cellid AS u, cellid AS w FROM fdir
         UNION
@@ -476,10 +473,10 @@ def viewshed(cells: DataFrame, res: int, towers: DataFrame,
 
 
 def viewshed_sql(cells_sql: str, res: int, towers_pred: str,
-                 radius: int, tower_h: int = 1) -> str:
-    """DuckDB twin of :func:`viewshed` over ``cells_sql`` → (cellid, z);
-    ``towers_pred`` is a boolean SQL predicate over the terrain row
-    (e.g. a cellid IN (...) list) selecting the towers."""
+                 radius: int) -> str:
+    """DuckDB twin of :func:`viewshed` with tower_h=1 over ``cells_sql`` →
+    (cellid, z); ``towers_pred`` is a boolean SQL predicate over the
+    terrain row (e.g. a cellid IN (...) list) selecting the towers."""
     if radius < 1:
         raise ValueError(
             f"viewshed_sql: radius must be >= 1, got {radius}")
@@ -490,7 +487,7 @@ def viewshed_sql(cells_sql: str, res: int, towers_pred: str,
     WITH _lat AS MATERIALIZED ({lat}),
     _tw AS MATERIALIZED (
         SELECT cellid AS tower, face AS _tf, row AS _tr, col AS _tc,
-               v + {tower_h} AS _tz
+               v + 1 AS _tz
         FROM _lat WHERE {towers_pred}),
     _ray AS MATERIALIZED (
         SELECT t.tower, t._tf, t._tr + o.dr * g.k AS _r,

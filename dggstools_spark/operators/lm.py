@@ -99,7 +99,10 @@ def lm_score(df: DataFrame, text_col: str, id_col: str,
         c12.write.mode("overwrite").parquet(model_path)
         c12 = df.sparkSession.read.parquet(model_path)
     else:
-        # dedup: 2 consumers (the context counts and the bigram scores)
+        # dedup: 2 consumers (the context counts and the bigram scores).
+        # Uncut, the plan scans the corpus 4 times against 3 with the cut
+        # (one in this job): the c1 rollup fuses into a second c12
+        # aggregate whose exchange is not reused (sf0.1, AQE on and off)
         c12 = c12.localCheckpoint(eager=True)
     # context counts c(w1 ·) roll up from the bigram table (vocab-sized
     # input — never a second corpus pass)

@@ -85,7 +85,7 @@ def mixture_plan_sql(table: str, text_col: str, group_col: str) -> str:
 def dup_profile(df: DataFrame, text_col: str, id_col: str,
                 group_col: str) -> DataFrame:
     """(group, n_docs, n_distinct, dup_ppm): exact-duplicate mass per
-    source over normalized fingerprints (dedup.exact_dedup's fp rule)."""
+    source over normalized fingerprints (text.fingerprint's rule)."""
     fp = (df.filter(F.col(text_col).isNotNull())
           .select(group_col,
                   F.md5(F.lower(F.trim(F.col(text_col)))).alias("fp")))

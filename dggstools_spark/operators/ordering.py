@@ -1,4 +1,4 @@
-"""Deterministic epoch shuffle: materializing a global training order.
+"""Deterministic epoch shuffle: the keys of a global training order.
 
 The last step of a training-data pipeline is writing the corpus in the
 order the trainer will read it.  A true global sort (one total order) is
@@ -8,9 +8,9 @@ giant range shuffle.  Standard practice instead is SHARDED order: each
 example is assigned a pseudo-random shard and a pseudo-random position
 within its shard; shards are written independently and the trainer
 interleaves them.  Statistically this IS a uniform shuffle (the
-composition of two hash draws), but the plan is one hash-partitioned
-shuffle + an in-partition sort — no sampling pass, no range exchange, and
-each shard file is written by exactly one task.
+composition of two hash draws).  This module defines the two draws
+(shard_of, epoch_key) and the value-check form epoch_shuffle_stats, which
+digests every shard's full sequence; query ``epoch_shuffle`` runs it.
 
 Determinism contract (same spirit as operators/sampling.py): both the
 shard and the in-shard position are pure functions of (seed, id), so the
@@ -47,30 +47,6 @@ def shard_of(id_col: str, seed: str, n_shards: int) -> Column:
     v = (F.expr(f"instr('{_HEX}', substring({sh}, 1, 1)) - 1") * 16
          + F.expr(f"instr('{_HEX}', substring({sh}, 2, 1)) - 1"))
     return (v % F.lit(n_shards)).cast("int")
-
-
-def epoch_shuffle(df: DataFrame, id_col: str, seed: str = "epoch0",
-                  n_shards: int = 16) -> DataFrame:
-    """The writable form: input rows + (shard, key), hash-repartitioned by
-    shard and sorted by (shard, key, id) within each partition — `.write.
-    partitionBy("shard")` then streams every shard to its file already in
-    final order; no global sort ever exists.
-
-    Hash partitioning puts each shard VALUE wholly inside one task (never
-    split), though a task may hold several shards (hash collision mod
-    n_shards) — the in-partition sort leads with `shard` so each shard's
-    run is still contiguous and ordered, and partitionBy-write emits
-    exactly one file per shard.  One shuffle, one in-partition sort
-    bounded by the task's shard total ~ N/n_shards.  Size n_shards so
-    that fits a task's spill budget at the target scale (100 TB / 10k
-    shards = 10 GB sorted spill runs per task); n_shards also bounds
-    write parallelism.
-    """
-    keyed = (df
-             .withColumn("shard", shard_of(id_col, seed, n_shards))
-             .withColumn("key", epoch_key(id_col, seed)))
-    return (keyed.repartition(n_shards, "shard")
-            .sortWithinPartitions("shard", "key", id_col))
 
 
 def epoch_shuffle_stats(df: DataFrame, id_col: str, seed: str = "epoch0",

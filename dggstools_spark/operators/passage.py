@@ -11,7 +11,7 @@ order.
 
 Reference framing: the reference engine (IAAA-Lab/dggstools) has no corpus
 hygiene; this extends the engine for LLM training-data pipelines, next to
-dedup.exact_dedup (whole-doc) and dedup.winnow_pairs (passage FINGERPRINT
+query dedup_exact (whole-doc) and dedup.winnow_pairs (passage FINGERPRINT
 pairs).  winnow_pairs *reports* copied passages between doc pairs;
 passage_dedup *rewrites* the corpus, which is the production step.
 

@@ -378,19 +378,18 @@ def ivfpq_topk_sql(emb_table: str, topk: int, query_pred: str,
 
 
 def pq_topk_sql(emb_table: str, topk: int, query_pred: str,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                m: int = PQ_M, dsub: int = PQ_DSUB, k: int = PQ_K,
-                seed_mod: int = PQ_SEED_MOD,
-                seed_res: int = PQ_SEED_RES) -> str:
-    """DuckDB twin of the full pq_topk pipeline; ``query_pred`` selects the
-    query rows (e.g. 'vec_id % 50 = 0')."""
+                vec_col: str = "embedding", id_col: str = "vec_id") -> str:
+    """DuckDB twin of the full pq_topk pipeline at the module's PQ_*
+    settings; ``query_pred`` selects the query rows (e.g.
+    'vec_id % 50 = 0')."""
+    m, dsub, k = PQ_M, PQ_DSUB, PQ_K
     dq = _dq_duckdb(dsub)
     adc = " + ".join(
         f"l.lut[{j * k} + c.codes[{j + 1}] + 1]" for j in range(m))
     return f"""
     WITH seeds AS MATERIALIZED (
         SELECT {vec_col}, row_number() OVER (ORDER BY {id_col}) - 1 AS cid
-        FROM {emb_table} WHERE {id_col} % {seed_mod} = {seed_res}
+        FROM {emb_table} WHERE {id_col} % {PQ_SEED_MOD} = {PQ_SEED_RES}
         QUALIFY row_number() OVER (ORDER BY {id_col}) <= {k}),
     cb AS MATERIALIZED (
         SELECT t.m, cid,

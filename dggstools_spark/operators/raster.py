@@ -85,11 +85,11 @@ def cells_to_tiles(cells: DataFrame, cellid_col: str = "cellid",
 def assemble_tile_arrays(tile_rows: DataFrame, res: int,
                          value_col: str = "band1",
                          tile_col: str = "tile",
-                         nodata: float = float("nan"),
                          cfg: RHEALPixConfig = DEFAULT_CONFIG) -> DataFrame:
     """Grouped-map pandas UDF scattering each tile's pixels into a dense 2-D
     array (array<array<double>>) — the distributed analogue of the
-    reference's np.full + scatter loop (rhpx_gdf_helper.py:308-316)."""
+    reference's np.full + scatter loop (rhpx_gdf_helper.py:308-316).
+    Pixels without a cell are NaN."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
@@ -110,7 +110,7 @@ def assemble_tile_arrays(tile_rows: DataFrame, res: int,
         side = n ** depth
         base_r = (pdf["row"].to_numpy() % side)
         base_c = (pdf["col"].to_numpy() % side)
-        arr = np.full((side, side), nodata, dtype=np.float64)
+        arr = np.full((side, side), np.nan, dtype=np.float64)
         arr[base_r, base_c] = pdf[value_col].to_numpy(dtype=np.float64)
         return pd.DataFrame({
             "tile": [tile], "height": [side], "width": [side],

@@ -123,10 +123,10 @@ def _report_sql(assign_ctes: str, threshold: float, vec_col: str,
 
 
 def semantic_dedup_sql(emb_table: str, threshold: float,
-                       mod: int = 23, residue: int = 3,
                        vec_col: str = "embedding",
                        id_col: str = "vec_id") -> str:
-    """DuckDB twin (shared construction with the ivf_topk oracle family:
+    """DuckDB twin of :func:`semantic_dedup` at its default residue class
+    id % 23 = 3 (shared construction with the ivf_topk oracle family:
     residue centroids, top-1 assignment window, round(.,9) sims)."""
     from .similarity import DOT_DUCK, NRM_DUCK
 
@@ -137,7 +137,7 @@ def semantic_dedup_sql(emb_table: str, threshold: float,
 
     ctes = f"""cents AS MATERIALIZED (
         SELECT {id_col} AS cid, {vec_col} AS cvec FROM {emb_table}
-        WHERE {id_col} % {mod} = {residue}),
+        WHERE {id_col} % 23 = 3),
     asim AS (SELECT e.{id_col}, e.{vec_col}, c.cid,
                     {sim(f'e.{vec_col}', 'c.cvec')} AS s
              FROM {emb_table} e, cents c),

@@ -75,7 +75,7 @@ def region_shape(labeled: DataFrame, res: int) -> DataFrame:
 def region_shape_sql(labeled_sql: str, res: int) -> str:
     """DuckDB twin of :func:`region_shape` over ``labeled_sql`` →
     (cellid, region)."""
-    row_sql, col_sql = _rowcol_terms(res, "//")
+    row_sql, col_sql = _rowcol_terms(res)
     offs = " UNION ALL ".join(f"SELECT {dr} AS dr, {dc} AS dc"
                               for dr, dc in _ROOK)
     return f"""

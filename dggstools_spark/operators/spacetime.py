@@ -133,7 +133,7 @@ def st_gi_ctes(obs_sql: str, res: int) -> str:
     """CTE chain ending in ``gi`` (cellid, day, v, n_window, focal_sum,
     ratio_ppm, on_seam) — the twin of :func:`st_gi` over ``obs_sql`` →
     (cellid, day, v)."""
-    row_sql, col_sql = _rowcol_terms(res, "//")
+    row_sql, col_sql = _rowcol_terms(res)
     offs = " UNION ALL ".join(
         f"SELECT {dr} AS dr, {dc} AS dc"
         for dr in (-1, 0, 1) for dc in (-1, 0, 1))

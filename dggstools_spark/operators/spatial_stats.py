@@ -59,14 +59,14 @@ _NEIGHBOR_OFFSETS = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)
                      if not (dr == 0 and dc == 0)]
 
 
-def _rowcol_terms(res: int, idiv: str) -> "tuple[str, str]":
-    """(row_sql, col_sql) from a same-res `cellid` string column — the
-    digit fold of cellids_to_face_rowcol as flat SQL (res terms each)."""
+def _rowcol_terms(res: int) -> "tuple[str, str]":
+    """DuckDB (row_sql, col_sql) from a same-res `cellid` string column —
+    the digit fold of cellids_to_face_rowcol as flat SQL (res terms each)."""
     row_terms, col_terms = [], []
     for i in range(1, res + 1):
         digit = f"CAST(substring(cellid, {i + 1}, 1) AS BIGINT)"
         w = 3 ** (res - i)
-        row_terms.append(f"(({digit}) {idiv} 3) * {w}")
+        row_terms.append(f"(({digit}) // 3) * {w}")
         col_terms.append(f"(({digit}) % 3) * {w}")
     return " + ".join(row_terms), " + ".join(col_terms)
 
@@ -112,7 +112,7 @@ def lattice_select_sql(source_sql: str, res: int,
                        value_col: str = "v") -> str:
     """DuckDB twin of with_lattice over ``source_sql`` → (cellid, v,
     face, row, col)."""
-    row_sql, col_sql = _rowcol_terms(res, "//")
+    row_sql, col_sql = _rowcol_terms(res)
     # src MATERIALIZED: cellid is referenced ~2·res+1 times below — if the
     # source contains the expression encoder, DuckDB would inline the
     # ~50k-node tree into every digit reference (CLAUDE.md constraint 7)
@@ -563,9 +563,7 @@ def bbox_cells(cells: DataFrame, res: int, corner_a: str,
     # lattice decode, as every sibling op does.
     lat = with_lattice(cells.select("cellid",
                                     F.col(value_col).alias("v")), res)
-    ra, rb = sorted((_rowcol_of(corner_a)[0], _rowcol_of(corner_b)[0]))
-    ca, cb = sorted((_rowcol_of(corner_a, col=True)[0],
-                     _rowcol_of(corner_b, col=True)[0]))
+    (ra, rb), (ca, cb) = _corner_ranges(corner_a, corner_b)
     return (lat
             .filter(F.col("cellid").startswith(prefix))
             .filter((F.col("row") >= ra) & (F.col("row") <= rb)
@@ -573,22 +571,21 @@ def bbox_cells(cells: DataFrame, res: int, corner_a: str,
             .select("cellid", "v", "row", "col"))
 
 
-def _rowcol_of(cellid: str, col: bool = False) -> "tuple[int]":
-    """Driver-side (row,) or (col,) of a cellid — the same digit fold."""
-    acc = 0
-    for ch in cellid[1:]:
-        d = int(ch)
-        acc = acc * 3 + (d % 3 if col else d // 3)
-    return (acc,)
+def _corner_ranges(corner_a: str, corner_b: str) -> "tuple":
+    """((row_lo, row_hi), (col_lo, col_hi)) spanned by two same-res corner
+    cellids, from the kernel's lattice decode."""
+    from ..dggs.cells import cellids_to_face_rowcol
+
+    _, _, row, col = cellids_to_face_rowcol([corner_a, corner_b])
+    return (tuple(sorted(int(r) for r in row)),
+            tuple(sorted(int(c) for c in col)))
 
 
 def bbox_cells_sql(source_sql: str, res: int, corner_a: str,
                    corner_b: str, value_col: str = "v") -> str:
     """DuckDB twin of bbox_cells."""
     prefix = _lcp(corner_a, corner_b)
-    ra, rb = sorted((_rowcol_of(corner_a)[0], _rowcol_of(corner_b)[0]))
-    ca, cb = sorted((_rowcol_of(corner_a, col=True)[0],
-                     _rowcol_of(corner_b, col=True)[0]))
+    (ra, rb), (ca, cb) = _corner_ranges(corner_a, corner_b)
     lat = lattice_select_sql(source_sql, res, value_col)
     return f"""
     WITH lat AS MATERIALIZED ({lat})
@@ -773,10 +770,10 @@ def erode_cells(cells: DataFrame, res: int,
             .select("cellid"))
 
 
-def erode_cells_sql(source_sql: str, res: int,
-                    cross_face: bool = True) -> str:
-    """DuckDB twin of erode_cells (same neighbor enumeration)."""
-    nbr = cell_neighbors_sql(source_sql, res, cross_face)
+def erode_cells_sql(source_sql: str, res: int) -> str:
+    """DuckDB twin of erode_cells with cross_face=True (same neighbor
+    enumeration)."""
+    nbr = cell_neighbors_sql(source_sql, res)
     return f"""
     WITH _mp AS MATERIALIZED ({nbr}),
     _mr AS (SELECT cellid, count(*) AS _req FROM _mp GROUP BY cellid),

@@ -23,7 +23,7 @@ runs on Spark and DuckDB):
 Scale design (100 TB): the canonical form is a chain of 7 codegen'd
 regexp_replace projections (zero shuffles); the dedup itself is ONE
 map-side-combining hash aggregate on the canonical string — the same
-shape as dedup.exact_dedup, whose 100-TB arguments apply verbatim.
+shape as query dedup_exact, whose 100-TB arguments apply verbatim.
 Reference parity: no counterpart (the reference has no corpus layer);
 extends the F5 dedup family (SURVEY §2) to the URL tier.
 """

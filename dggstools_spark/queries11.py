@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries3 import load
+from .queries3 import _run_dir, load
 from .registry import register
 
 
@@ -47,13 +47,11 @@ def q_lm_score_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     count table is written to parquet and scanned back instead of
     localCheckpointed — the vocab²-heavy-corpus path.  Values identical
     to lm_score (the sink only cuts lineage), so the oracle is shared."""
-    import tempfile
-
     from .operators.lm import lm_score
 
     docs = load(spark, sf_dir, "documents")
     return lm_score(docs, "text", "doc_id",
-                    model_path=tempfile.mkdtemp(prefix="dggs_lm_model_"))
+                    model_path=_run_dir("q_lm_score_sink"))
 
 
 register("lm_score_sink", q_lm_score_sink, _oracle_lm_score())

@@ -134,7 +134,7 @@ register("stream_sessions", q_stream_sessions, _oracle_stream_sessions())
 # `stream_sessions` pins the full session set; this pins the closed subset).
 # --------------------------------------------------------------------------
 
-SESS_WM_S = 1800  # session_stream's default watermark: 30 minutes
+SESS_WM_S = 1800  # session_stream's watermark: 30 minutes
 
 
 def q_stream_sessions_append(spark: SparkSession, sf_dir: str) -> DataFrame:

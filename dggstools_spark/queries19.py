@@ -17,7 +17,7 @@ aggregate, order-insensitive by construction, and still pins the exact
 end-to-end keep SET — a changed/extra/missing id moves the sum except
 with ~2^-56 collision odds).  Exact integers on both engines
 (DECIMAL(38,0) / HUGEINT), emitted as a string.  Every stage reuses the
-already-gated operator (exact_dedup rule / ngram_jaccard_pairs /
+already-gated operator (text.fingerprint rule / ngram_jaccard_pairs /
 dedup_clusters / cluster_keep) and the oracle composes the same shared
 SQL generators over the survivors CTE.
 """

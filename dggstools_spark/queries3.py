@@ -11,6 +11,7 @@ bit-identical across engines; outputs are quantized to integers.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 
@@ -282,13 +283,19 @@ def _oracle_line_error() -> str:
 IO_RES = 3
 
 #: per-tag run dirs for queries whose RESULT DataFrame lazily reads files
-#: the query wrote (cells_io, merge_resume): a fixed /tmp path could be
-#: clobbered by a concurrent run between query build and the driver's
-#: collect (same hazard class the streaming queries fixed in r4).  The
-#: previous run's dir (same process) is removed on the next call; the
+#: the query wrote (cells_io, merge_resume, lm_score_sink): a fixed /tmp
+#: path could be clobbered by a concurrent run between query build and the
+#: driver's collect (same hazard class the streaming queries fixed in r4).
+#: The previous run's dir (same process) is removed on the next call; the
 #: current one must outlive the returned DataFrame, so it stays on disk
-#: until then.
+#: until then, or until the interpreter exits.
 _RUN_DIRS: dict = {}
+
+
+@atexit.register
+def _remove_run_dirs() -> None:
+    for d in _RUN_DIRS.values():
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _run_dir(tag: str) -> str:

@@ -181,10 +181,11 @@ def _stream_tmpdirs(tag: str) -> "tuple[str, str, Callable[[], None]]":
             lambda: shutil.rmtree(base, ignore_errors=True))
 
 
-def _finish_stream(q, timeout: int = 180) -> None:
-    """availableNow queries normally self-terminate; stop a straggler so a
-    timed-out run can't keep writing into a dir we're about to delete."""
-    if not q.awaitTermination(timeout):
+def _finish_stream(q) -> None:
+    """availableNow queries normally self-terminate; stop a straggler after
+    180 s so a timed-out run can't keep writing into a dir we're about to
+    delete."""
+    if not q.awaitTermination(180):
         q.stop()
 
 

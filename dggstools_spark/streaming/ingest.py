@@ -25,77 +25,72 @@ def read_doc_stream(spark: SparkSession, path: str,
 
 
 def tile_counts_stream(docs: DataFrame, res: int = 8, tile_res: int = 4,
-                       window: str = "1 minute", watermark: str = "2 minutes",
+                       window: str = "1 minute",
                        cfg: RHEALPixConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Streaming per-tile windowed counts with late-data watermark."""
+    """Streaming per-tile windowed counts with a 2-minute late-data
+    watermark."""
     enc = cellid_from_lonlat_udf(res, cfg)
     assigned = (
         docs.withColumn("cellid", enc("lon", "lat"))
         .withColumn("tile", F.substring("cellid", 1, tile_res + 1))
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "2 minutes")
     )
     return assigned.groupBy(
         F.window("event_time", window).alias("win"), "tile"
     ).agg(F.count("*").alias("n_docs"))
 
 
-def run_to_sink(counts: DataFrame, out_path: str, checkpoint: str,
-                available_now: bool = True):
-    """Write the stream (append mode needs the watermark above); with
-    ``available_now`` processes everything currently available then stops —
-    the deterministic mode used in tests."""
-    writer = (
+def run_to_sink(counts: DataFrame, out_path: str, checkpoint: str):
+    """Write the stream (append mode needs the watermark above) with the
+    availableNow trigger: process everything currently available, then
+    stop — the deterministic mode used in tests."""
+    return (
         counts.writeStream.outputMode("append")
         .format("parquet").option("path", out_path)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True).start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def dedup_stream(docs: DataFrame, text_col: str = "text",
-                 key_cols: list[str] | None = None,
-                 watermark: str = "10 minutes") -> DataFrame:
-    """Streaming exact dedup: drop re-arrivals of the same (keys..., content
-    hash) across micro-batches, then count survivors per key — the
-    continuous-ingest twin of dedup.exact_dedup.
+def dedup_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Streaming exact dedup: drop re-arrivals of the same (source, content
+    hash) across micro-batches, then count survivors per source — the
+    continuous-ingest form of exact whole-doc dedup.
 
     Uses ``dropDuplicatesWithinWatermark`` (Spark >= 3.5), whose state is
     genuinely watermark-bounded: a key's state is evicted once the
     watermark passes its event time plus the delay, so a re-arrival whose
-    event time differs by MORE than ``watermark`` may survive — the
-    standard streaming-dedup contract, and exactly what unbounded
+    event time differs by MORE than the 10-minute watermark may survive —
+    the standard streaming-dedup contract, and exactly what unbounded
     continuous ingest needs.  (Plain ``dropDuplicates`` on a subset that
     omits the event-time column keeps state forever — it only looked
     bounded in finite availableNow runs; ADVICE r3.)  Chained stateful ops
     (dedup -> agg) are fine on Spark >= 3.4 with the watermark set.  The
-    dedup key includes the grouping keys so per-key counts are
-    deterministic even when identical content appears under two keys."""
-    keys = key_cols or ["source"]
+    dedup key includes the grouping key so per-source counts are
+    deterministic even when identical content appears under two sources."""
     hashed = (docs.withColumn("_h", F.md5(F.col(text_col)))
-              .withWatermark("event_time", watermark)
-              .dropDuplicatesWithinWatermark([*keys, "_h"]))
-    return hashed.groupBy(*keys).agg(F.count("*").alias("n_unique"))
+              .withWatermark("event_time", "10 minutes")
+              .dropDuplicatesWithinWatermark(["source", "_h"]))
+    return hashed.groupBy("source").agg(F.count("*").alias("n_unique"))
 
 
-def session_stream(events: DataFrame, key_col: str, ts_col: str = "event_time",
-                   gap: str = "5 minutes",
-                   watermark: str = "30 minutes") -> DataFrame:
+def session_stream(events: DataFrame, key_col: str,
+                   ts_col: str = "event_time") -> DataFrame:
     """Streaming SESSION-WINDOW aggregation (Spark's native session_window,
     the third windowing family next to tumbling ingest and
     applyInPandasWithState): events merge into a session while each
-    arrives before the previous window's end (ts < prev + gap); a gap of
-    inactivity >= ``gap`` closes the session.  Returns one row per
-    (key, session): start/end, event count.
+    arrives before the previous window's end (ts < prev + 5 minutes); a
+    gap of inactivity >= 5 minutes closes the session.  Returns one row
+    per (key, session): start/end, event count.
 
     Scale design: session windows are a keyed stateful aggregation —
     state is per-open-session (bounded by active keys), merged by Spark's
-    session-window state store; the watermark bounds how long a session
-    can stay open to late data.  The deterministic test/oracle mode runs
-    availableNow + complete output (same contract as tile_counts_stream)."""
+    session-window state store; the 30-minute watermark bounds how long a
+    session can stay open to late data.  The deterministic test/oracle
+    mode runs availableNow + complete output (same contract as
+    tile_counts_stream)."""
     return (events
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.session_window(F.col(ts_col), gap).alias("win"),
-                     F.col(key_col))
+            .withWatermark(ts_col, "30 minutes")
+            .groupBy(F.session_window(F.col(ts_col), "5 minutes")
+                     .alias("win"), F.col(key_col))
             .agg(F.count("*").alias("n_events")))

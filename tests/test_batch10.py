@@ -2,11 +2,8 @@
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from dggstools_spark.operators.boiler import html_extract
-from dggstools_spark.operators.ordering import (epoch_shuffle,
-                                                epoch_shuffle_stats)
+from dggstools_spark.operators.ordering import epoch_shuffle_stats
 from dggstools_spark.operators.vocab import vocab_topk
 
 
@@ -64,23 +61,6 @@ def test_vocab_topk_tie_break_lexicographic(spark):
 
 
 # ------------------------------------------------------------ epoch shuffle
-
-def test_epoch_shuffle_partitions_sorted(spark):
-    df = _docs(spark, [(i, "t") for i in range(300)])
-    out = epoch_shuffle(df, "doc_id", seed="e0", n_shards=4)
-    rows = (out.withColumn("pid", F.spark_partition_id())
-            .select("pid", "shard", "key").collect())
-    by_pid = {}
-    shard_pids = {}
-    for r in rows:
-        by_pid.setdefault(r.pid, []).append((r.shard, r.key))
-        shard_pids.setdefault(r.shard, set()).add(r.pid)
-    for s, pids in shard_pids.items():
-        assert len(pids) == 1, f"shard {s} split across partitions {pids}"
-    for pid, items in by_pid.items():
-        assert items == sorted(items), \
-            "within-partition order must be (shard, key)"
-
 
 def test_epoch_shuffle_deterministic_and_seed_sensitive(spark):
     df = _docs(spark, [(i, "t") for i in range(200)])

@@ -1,23 +1,12 @@
 """Tile pyramid + bbox range query + zonal stats (round 5, batch 19)."""
 
-from dggstools_spark.operators.spatial_stats import (_rowcol_of, bbox_cells,
-                                                     with_lattice)
+from dggstools_spark.operators.spatial_stats import bbox_cells, with_lattice
 
 import pytest
 
 
 def _cells(spark, rows):
     return spark.createDataFrame(rows, "cellid string, v long")
-
-
-def test_rowcol_of_matches_kernel():
-    from dggstools_spark.dggs.cells import cellids_to_face_rowcol
-
-    ids = ["Q41660", "N00000", "S88888"]
-    _, _, r, c = cellids_to_face_rowcol(ids)
-    for i, cid in enumerate(ids):
-        assert _rowcol_of(cid)[0] == int(r[i])
-        assert _rowcol_of(cid, col=True)[0] == int(c[i])
 
 
 def test_bbox_cells_inclusive_range(spark):

@@ -4,7 +4,8 @@ point-in-polygon, subarea, merge/resume, AUID compaction, k-ring
 cell-store (cells_io: write, then prefix read) leaves, and for every leaf
 that joins, filters or iterates over expression-encoder output without a
 lineage cut (the Expand (unpivot) barrier in encode_sql.spark_encode,
-CLAUDE.md constraint 2): each leaf's Spark result must equal its DuckDB
+CLAUDE.md constraint 2), and for the exact-dedup, SimHash and epoch-shuffle
+leaves, which have no second implementation: each leaf's Spark result must equal its DuckDB
 ``oracle_sql()`` on row count, column-name set and ``canonical_hash`` at
 sf0.01 — the compare
 ``scripts/check_entry.py`` runs for the whole registry."""
@@ -33,7 +34,9 @@ LEAVES = ["ivf_topk", "ivf_refined", "ann_ivfpq", "lm_score", "lm_score_sink",
           "idw_interp", "buffer_cells", "route_heat", "segregation",
           "location_quotient", "watershed", "slope_aspect", "mk_trend",
           "flow_accum", "emerging_hotspots", "flow_communities",
-          "trip_balance", "region_shape", "viewshed", "theilsen_trend"]
+          "trip_balance", "region_shape", "viewshed", "theilsen_trend",
+          # the only paths for exact dedup, SimHash and the epoch order
+          "dedup_exact", "simhash", "epoch_shuffle"]
 
 
 @pytest.fixture(scope="module")

@@ -1,6 +1,10 @@
-"""Tests for lineage/checkpointed writes, metrics, cell IO, media stubs."""
+"""Tests for lineage/checkpointed writes, metrics, cell IO, media features,
+run directories."""
 
 import os
+import signal
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -308,15 +312,6 @@ def test_media_features_real_codec_path(spark):
     assert abs(wav.feature[1] - ((3 * 13) % 2003 - 1001) / 32768.0) < 1e-12
 
 
-def test_media_resize_and_frames(spark):
-    df = spark.createDataFrame([("d1", b"0123456789abcdef")], "doc_id string, blob binary")
-    rs = media.resize_images(df, target=4).collect()[0]
-    assert len(rs.resized) == 4
-    fr = media.sample_frames(df, every=8, n_frames=32).collect()
-    assert [r.frame_idx for r in fr] == [0, 8, 16, 24]
-    assert all(len(r.frame) == 32 for r in fr)
-
-
 def test_pnm_wav_real_decoders_roundtrip():
     """The real codecs (no Spark): P5/P6 PNM and 16/8-bit WAV roundtrips."""
     import io
@@ -454,6 +449,39 @@ def test_read_cells_fine_prefix(spark, tmp_path):
     assert {r.cellid for r in fine.collect()} == {"N120", "N121"}
     coarse, _ = cells_io.read_cells(spark, path, prefix="N")
     assert coarse.count() == 3
+
+
+RUN_DIR_CHILD = r"""
+import sys
+sys.path.insert(0, {repo!r})
+from dggstools_spark.queries import QUERIES
+from dggstools_spark.session import get_spark
+spark = get_spark("run-dirs")
+for name in ("cells_io", "merge_resume", "lm_score_sink"):
+    QUERIES[name](spark, {sf_dir!r}).collect()
+print("COLLECTED")
+"""
+
+
+def test_run_dirs_removed_at_exit(sf_dir, tmp_path):
+    """The leaves whose result lazily reads files they wrote (cells_io,
+    merge_resume, lm_score_sink) leave no dggs_* directory behind once
+    the process that built and collected them exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = RUN_DIR_CHILD.format(repo=repo, sf_dir=sf_dir)
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_CPUS="2",
+               SPARK_DRIVER_MEMORY="2g")
+    proc = subprocess.Popen([sys.executable, "-c", code], env=env, text=True,
+                            stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                            start_new_session=True)
+    try:
+        out, err = proc.communicate(timeout=300)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)  # the JVM too
+        proc.communicate()
+        raise AssertionError("run-dir leaves did not finish within 300 s")
+    assert "COLLECTED" in out, f"child exited {proc.returncode}: {err[-1000:]}"
+    assert sorted(p.name for p in tmp_path.glob("dggs_*")) == []
 
 
 def test_cells_to_tiles_empty_keeps_schema(spark):

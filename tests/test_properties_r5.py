@@ -15,15 +15,19 @@ from hypothesis import given, settings, strategies as st  # noqa: E402
 @settings(max_examples=200, deadline=None)
 @given(st.text(alphabet="012345678", min_size=1, max_size=10),
        st.sampled_from("NOPQRS"))
-def test_rowcol_of_matches_kernel(digits, face):
+def test_lattice_sql_matches_kernel(digits, face):
+    """The DuckDB lattice fold (lattice_select_sql) gives the kernel's
+    (face, row, col) for any cellid."""
+    import duckdb
+
     from dggstools_spark.dggs.cells import cellids_to_face_rowcol
-    from dggstools_spark.operators.spatial_stats import _rowcol_of
+    from dggstools_spark.operators.spatial_stats import lattice_select_sql
 
     cid = face + digits
     _, f, r, c = cellids_to_face_rowcol([cid])
-    assert _rowcol_of(cid)[0] == int(r[0])
-    assert _rowcol_of(cid, col=True)[0] == int(c[0])
-    assert "NOPQRS".index(face) == int(f[0])
+    sql = lattice_select_sql(f"SELECT '{cid}' AS cellid, 0 AS v", len(digits))
+    got = duckdb.sql(f"SELECT face, row, col FROM ({sql})").fetchone()
+    assert got == (int(f[0]), int(r[0]), int(c[0]))
 
 
 # ------------------------------------------------ quality_q20 vs reference

@@ -116,6 +116,17 @@ def wait_for_quiet(max_wait_s: int = 120, tol: float = 1.3) -> float:
         t = parallel_burn()
 
 
+def codegen_totals(spark) -> "tuple[int, float]":
+    """(classes janino compiled, their summed compile ms) in this JVM so
+    far, from Spark's CodegenMetrics ``compilationTime`` histogram.  Read
+    on the driver: no Spark job runs.  The histogram's reservoir keeps
+    every sample until 1028 compiles, so the ms sum is exact up to there
+    and a sample beyond."""
+    h = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+         .CodegenMetrics.METRIC_COMPILATION_TIME())
+    return int(h.getCount()), float(sum(h.getSnapshot().getValues()))
+
+
 def materialize_docs(spark, n_docs: int) -> str:
     """Write the interleaved doc table once (the benchmark's stand-in for the
     10^12-doc Iceberg table); reused across runs with the same size."""
@@ -257,6 +268,10 @@ def main() -> None:
         psis_cpu.append(round((read_psi_total("cpu") - pc0) / (dt * 1e6) * 100, 1))
         psis_io.append(round((read_psi_total("io") - pi0) / (dt * 1e6) * 100, 1))
 
+    # classes compiled over the flagship runs, the first call's untimed
+    # warm-ups included: with the codegen cache sized to the working set
+    # (CLAUDE.md constraint 24) the runs after the first add nothing
+    compiles0, compile_ms0 = codegen_totals(spark)
     for _ in range(n_runs):
         one_flagship_run()
     # bounded clean-run seeking (TODO_r4 item 6): if EVERY counted run was
@@ -268,6 +283,9 @@ def main() -> None:
     while min(steals) >= 1.0 and extra < n_runs:
         one_flagship_run()
         extra += 1
+    compiles1, compile_ms1 = codegen_totals(spark)
+    result["codegen_compiles"] = compiles1 - compiles0
+    result["codegen_compile_ms"] = round(compile_ms1 - compile_ms0, 1)
     t_flag = min(runs)
     queries["flagship_tile_assignment"] = round(t_flag, 3)
     result["flagship_cold_sec"] = round(runs[0], 3)

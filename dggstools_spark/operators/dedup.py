@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
+from ..functions import text as T
+
 N_MINHASHES = 8
 BAND_SIZE = 2  # 4 bands of 2 hashes each
 
@@ -703,7 +705,7 @@ def cross_corpus_dedup(existing: DataFrame, incoming: DataFrame,
     side streams — nothing is broadcast or collected.  Candidate volume is
     bounded by band-bucket products exactly as in minhash_lsh_pairs.
     """
-    fp = F.md5(F.lower(F.trim(F.col(text_col))))
+    fp = F.expr(T.fingerprint(text_col))
     ex_fp = existing.select(fp.alias("fp")).distinct()
     in_fp = incoming.select(F.col(id_col), fp.alias("fp"))
     exact = (in_fp.join(ex_fp, "fp", "left_semi")

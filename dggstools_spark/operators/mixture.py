@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..functions import text as T
+
 MIX_PPM = 1_000_000
 
 
@@ -88,7 +90,7 @@ def dup_profile(df: DataFrame, text_col: str, id_col: str,
     source over normalized fingerprints (text.fingerprint's rule)."""
     fp = (df.filter(F.col(text_col).isNotNull())
           .select(group_col,
-                  F.md5(F.lower(F.trim(F.col(text_col)))).alias("fp")))
+                  F.expr(T.fingerprint(text_col)).alias("fp")))
     return (fp.groupBy(group_col)
             .agg(F.count("*").alias("n_docs"),
                  F.countDistinct("fp").alias("n_distinct"))
@@ -99,7 +101,7 @@ def dup_profile(df: DataFrame, text_col: str, id_col: str,
 def dup_profile_sql(table: str, text_col: str, group_col: str) -> str:
     """DuckDB twin of dup_profile."""
     return f"""
-    WITH fp AS (SELECT {group_col}, md5(lower(trim({text_col}))) AS fp
+    WITH fp AS (SELECT {group_col}, {T.fingerprint(text_col)} AS fp
                 FROM {table} WHERE {text_col} IS NOT NULL)
     SELECT {group_col},
            CAST(count(*) AS BIGINT) AS n_docs,

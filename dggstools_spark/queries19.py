@@ -38,7 +38,7 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # stage 1: exact dedup — keep the min id of every fingerprint group
-    fp = docs.withColumn("_fp", F.md5(F.lower(F.trim(F.col("text")))))
+    fp = docs.withColumn("_fp", F.expr(T.fingerprint("text")))
     canon = fp.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
     surv = (fp.join(canon.select("doc_id"), "doc_id")
             .drop("_fp")
@@ -95,7 +95,7 @@ def _oracle_dedup_pipeline() -> str:
     return f"""
     WITH RECURSIVE raw AS (SELECT doc_id, text FROM documents
                            WHERE text IS NOT NULL),
-    fp AS (SELECT doc_id, text, md5(lower(trim(text))) AS _fp FROM raw),
+    fp AS (SELECT doc_id, text, {T.fingerprint('text')} AS _fp FROM raw),
     surv AS MATERIALIZED (
         SELECT doc_id, text FROM fp
         WHERE doc_id IN (SELECT min(doc_id) FROM fp GROUP BY _fp)),

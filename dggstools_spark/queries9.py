@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.text import token_count
+from .functions.text import fingerprint, token_count
 from .queries3 import load
 from .registry import register
 
@@ -151,7 +151,7 @@ def _oracle_cross_dedup() -> str:
              WHERE i.n_int * 1000000
                    >= {thr_ppm} * (sa.n_sh + sb.n_sh - i.n_int)),
     fps AS MATERIALIZED (
-        SELECT doc_id, md5(lower(trim(text))) AS fp FROM documents),
+        SELECT doc_id, {fingerprint('text')} AS fp FROM documents),
     exact AS (SELECT DISTINCT a.doc_id
               FROM fps a JOIN fps b ON a.fp = b.fp
               WHERE a.doc_id % 10 >= 8 AND b.doc_id % 10 < 8)

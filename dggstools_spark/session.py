@@ -43,6 +43,16 @@ def get_spark(app_name: str = "dggstools-spark") -> SparkSession:
         # stages and runs the volcano operators, each of which stays
         # JIT-compiled.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # Spark reuses a compiled class only while its source text is in
+        # this cache, and the default holds 100.  One round of auid_optimize,
+        # voronoi_territories and cell_counts_expr compiles 105 distinct
+        # classes, so every warm round recompiled 53-61 of them (janino,
+        # then a fresh JIT); here a warm round compiles none.  4096 holds
+        # one pass over all 155 leaves at sf0.001 (2882 distinct classes;
+        # at the default such a pass compiles 4637, and a second pass as
+        # many again).  Cost of a full pass held: +28 MB metaspace, +3.4 MB
+        # class space (CLAUDE.md constraint 24).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # local mode: the driver JVM hosts all executor threads — size the
         # heap for cpus concurrent hash-agg/shuffle tasks (measured: 8g
         # chokes local[32] into GC at ~16M-row aggregations)

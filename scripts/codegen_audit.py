@@ -23,6 +23,14 @@ METRIC_GENERATED_METHOD_BYTECODE_SIZE histogram:
                 added column/filter away from crossing (VERDICT r5 #3) —
                 the split-candidate list to watch before they regress
 
+The histogram records a method only when its class is compiled, and the
+session keeps compiled classes (spark.sql.codegen.cache.maxEntries, CLAUDE.md
+constraint 24): a class already in the cache is reused and not recorded
+again.  The fresh JVM per query keeps this audit complete.  A sweep that
+shares one session sees each distinct class once, so a Tier-1 codegen
+check (ROADMAP item 6) must count a class whether or not it was already
+cached — e.g. by reading each stage's generated code, not this histogram.
+
 Usage: python scripts/codegen_audit.py [query ...]   (writes
 CODEGEN_AUDIT.json; default set = the flat-fold and wide-stage suspects
 plus the flagship plan; `--all` sweeps the ENTIRE registry)

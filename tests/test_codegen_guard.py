@@ -92,3 +92,31 @@ def test_negative_control_bnlj_flat_sim_raises(spark, sf_dir):
             a.crossJoin(b).filter(cond).count()
     assert "CompileException" in str(ei.value) or "64 KB" in str(ei.value) \
         or "grows beyond" in str(ei.value)
+
+
+#: the three ``registry`` benchmark leaves (105 distinct classes a round)
+REUSE_LEAVES = ["auid_optimize", "voronoi_territories", "cell_counts_expr"]
+
+
+def test_codegen_cache_keeps_a_registry_round(spark, sf_dir):
+    """A second run of the same leaves compiles no class (CLAUDE.md
+    constraint 24): Spark reuses generated code only while its source is
+    in ``spark.sql.codegen.cache.maxEntries``.  At the default of 100 a
+    round of these leaves evicts its own classes and recompiles half of
+    them every time; the session sizes the cache for one pass over the
+    whole registry (2882 distinct classes at sf0.001)."""
+    from bench import codegen_totals
+    from dggstools_spark.queries import QUERIES
+
+    def one_pass() -> int:
+        before = codegen_totals(spark)[0]
+        for name in REUSE_LEAVES:
+            QUERIES[name](spark, sf_dir).write.format("noop") \
+                .mode("overwrite").save()
+        return codegen_totals(spark)[0] - before
+
+    first = one_pass()
+    second = one_pass()
+    assert second == 0, (
+        f"second pass recompiled {second} classes (first pass: {first})")
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 2882

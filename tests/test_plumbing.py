@@ -497,8 +497,9 @@ def test_deploy_zip_freshness_gate(tmp_path):
     """The py-files zip build is deterministic, and ensure_fresh detects +
     repairs any divergence from the source tree (the round-1/2 stale-deploy
     failure mode)."""
-    import sys
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts"))
     import make_pyfiles_zip as mz
 
     p = str(tmp_path / "a.zip")

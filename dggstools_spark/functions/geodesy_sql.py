@@ -14,10 +14,7 @@ operator (a pandas UDF over the kernel) against this SQL.
 from __future__ import annotations
 
 from ..dggs.config import AUTHALIC_RADIUS, Q_P, WGS84_E, WGS84_E2
-
-
-def _lit(v: float) -> str:
-    return f"CAST({float(v)!r} AS DOUBLE)"
+from .encode_sql import double_sql
 
 
 def _sinb(lat_deg: str) -> str:
@@ -25,9 +22,9 @@ def _sinb(lat_deg: str) -> str:
     the same Snyder 3-12 text the cell encoder uses."""
     e, e2, qp = WGS84_E, WGS84_E2, Q_P
     s = f"sin(radians({lat_deg}))"
-    return (f"least(greatest({_lit(1 - e2)} * (({s}) / (1.0 - {_lit(e2)} * ({s}) * ({s}))"
-            f" - {_lit(1.0 / (2 * e))} * ln((1.0 - {_lit(e)} * ({s})) / (1.0 + {_lit(e)} * ({s}))))"
-            f" / {_lit(qp)}, -1.0), 1.0)")
+    return (f"least(greatest({double_sql(1 - e2)} * (({s}) / (1.0 - {double_sql(e2)} * ({s}) * ({s}))"
+            f" - {double_sql(1.0 / (2 * e))} * ln((1.0 - {double_sql(e)} * ({s})) / (1.0 + {double_sql(e)} * ({s}))))"
+            f" / {double_sql(qp)}, -1.0), 1.0)")
 
 
 def vertex_xyz(lon_deg: str, lat_deg: str, tag: str) -> list[tuple[str, str]]:
@@ -65,5 +62,5 @@ def polygon_area_steps(verts: list[tuple[str, str]],
     terms = [_tri_excess(tags[0], tags[i], tags[i + 1])
              for i in range(1, len(tags) - 1)]
     total = " + ".join(f"({t})" for t in terms)
-    steps.append((out, f"abs({total}) * {_lit(AUTHALIC_RADIUS**2)}"))
+    steps.append((out, f"abs({total}) * {double_sql(AUTHALIC_RADIUS**2)}"))
     return steps

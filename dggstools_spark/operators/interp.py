@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..dggs.cells import HALF_SIDE
 from ..dggs.config import DEFAULT_CONFIG, RHEALPixConfig
+from ..functions.encode_sql import double_sql
 
 #: weight scale: wq = round(WQ / d2);  d2 clamped to >= 1 m²
 WQ = 1_000_000_000_000.0
@@ -43,7 +44,7 @@ PPM = 1_000_000
 
 def _wq_sql() -> str:
     """Shared weight snippet over columns d2 (m², double)."""
-    return (f"CAST(round(CAST({WQ!r} AS DOUBLE)"
+    return (f"CAST(round({double_sql(WQ)}"
             f" / greatest(d2, 1.0)) AS BIGINT)")
 
 
@@ -77,7 +78,7 @@ def idw_interp(obs: DataFrame, queries: DataFrame, d_m: float, res: int,
     pairs = (o.join(q, ["_bc", "_br"])
              .withColumn("d2", F.expr(
                  "(ox - _qx) * (ox - _qx) + (oy - _qy) * (oy - _qy)"))
-             .filter(F.expr(f"d2 <= CAST({d_m * d_m!r} AS DOUBLE)"))
+             .filter(F.expr(f"d2 <= {double_sql(d_m * d_m)}"))
              .withColumn("wq", F.expr(_wq_sql())))
     return (pairs.groupBy(q_id)
             .agg(F.count("*").alias("n_obs"),
@@ -115,7 +116,7 @@ def idw_interp_sql(obs_sql: str, queries_sql: str, d_m: float, res: int,
         FROM q JOIN ({offs}) f ON TRUE
         JOIN o ON o.bc = q.qbc + f.dc AND o.br = q.qbr + f.dr),
     pw AS (SELECT {q_id}, v, {_wq_sql()} AS wq FROM pr
-           WHERE d2 <= CAST({d_m * d_m!r} AS DOUBLE))
+           WHERE d2 <= {double_sql(d_m * d_m)})
     SELECT {q_id},
            CAST(count(*) AS BIGINT) AS n_obs,
            CAST(sum(CAST(wq AS HUGEINT) * v)

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..dggs.config import RHEALPixConfig, DEFAULT_CONFIG
 from ..dggs.cells import HALF_SIDE
-from ..functions.encode_sql import rowcol_cellid_sql
+from ..functions.encode_sql import double_sql, rowcol_cellid_sql
 
 
 def tiles_to_cells(tiles: DataFrame, res: int, face_col: str = "face",
@@ -186,18 +186,16 @@ def grid(spark: SparkSession, res: int, faces: str = "NOPQRS",
     for d in dfs[1:]:
         out = out.unionByName(d)
     # planar centroid by lattice arithmetic (expression-only)
-    w = HALF_SIDE / n_cells
+    w = double_sql(HALF_SIDE / n_cells)
     from ..dggs.cells import _face_ul
 
     uls = _face_ul(cfg)
     face_idx = "CASE face WHEN 'N' THEN 0 WHEN 'O' THEN 1 WHEN 'P' THEN 2 WHEN 'Q' THEN 3 WHEN 'R' THEN 4 ELSE 5 END"
-    # float() strips the numpy scalar: repr(np.float64) under numpy>=2 is
-    # 'np.float64(...)', which is not SQL
-    ulx = " ".join([f"WHEN {i} THEN {float(uls[i, 0])!r}" for i in range(6)])
-    uly = " ".join([f"WHEN {i} THEN {float(uls[i, 1])!r}" for i in range(6)])
+    ulx = " ".join([f"WHEN {i} THEN {double_sql(uls[i, 0])}" for i in range(6)])
+    uly = " ".join([f"WHEN {i} THEN {double_sql(uls[i, 1])}" for i in range(6)])
     return (
-        out.withColumn("x", F.expr(f"CASE ({face_idx}) {ulx} END + (col + 0.5) * {w!r}"))
-        .withColumn("y", F.expr(f"CASE ({face_idx}) {uly} END - (row + 0.5) * {w!r}"))
+        out.withColumn("x", F.expr(f"CASE ({face_idx}) {ulx} END + (CAST(col AS DOUBLE) + 0.5) * {w}"))
+        .withColumn("y", F.expr(f"CASE ({face_idx}) {uly} END - (CAST(row AS DOUBLE) + 0.5) * {w}"))
     )
 
 

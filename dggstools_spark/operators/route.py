@@ -46,12 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..dggs.geodesy import AUTHALIC_RADIUS
-
-
-def _d(x: float) -> str:
-    """Double literal, CAST for DuckDB's DECIMAL-typing of wide literals
-    (CLAUDE.md constraint 8)."""
-    return f"CAST({float(x)!r} AS DOUBLE)"
+from ..functions.encode_sql import double_sql
 
 
 def slerp_steps(step_m: float, max_n: int,
@@ -66,12 +61,12 @@ def slerp_steps(step_m: float, max_n: int,
         ("_vx", f"cos(radians({lat2})) * cos(radians({lon2}))"),
         ("_vy", f"cos(radians({lat2})) * sin(radians({lon2}))"),
         ("_vz", f"sin(radians({lat2}))"),
-        ("_th", f"acos(least({_d(1.0)}, greatest({_d(-1.0)},"
+        ("_th", f"acos(least({double_sql(1.0)}, greatest({double_sql(-1.0)},"
                 f" _ux * _vx + _uy * _vy + _uz * _vz)))"),
         ("_st", "sin(_th)"),
-        ("n_steps", f"CAST(least({_d(float(max_n))}, greatest({_d(1.0)},"
-                    f" ceil(_th * {_d(AUTHALIC_RADIUS)}"
-                    f" / {_d(step_m)}))) AS BIGINT)"),
+        ("n_steps", f"CAST(least({double_sql(float(max_n))}, greatest({double_sql(1.0)},"
+                    f" ceil(_th * {double_sql(AUTHALIC_RADIUS)}"
+                    f" / {double_sql(step_m)}))) AS BIGINT)"),
     ]
 
 
@@ -79,8 +74,8 @@ def slerp_point_exprs(t: str) -> "tuple[str, str]":
     """(lon_expr, lat_expr) of the slerp point at fraction ``t`` (a SQL
     expression), referencing the slerp_steps frame columns.  The θ≈0
     guard uses linear weights (exact for coincident endpoints)."""
-    w1 = (f"(CASE WHEN _st < 1e-12 THEN {_d(1.0)} - ({t})"
-          f" ELSE sin(({_d(1.0)} - ({t})) * _th) / _st END)")
+    w1 = (f"(CASE WHEN _st < 1e-12 THEN {double_sql(1.0)} - ({t})"
+          f" ELSE sin(({double_sql(1.0)} - ({t})) * _th) / _st END)")
     w2 = (f"(CASE WHEN _st < 1e-12 THEN ({t})"
           f" ELSE sin(({t}) * _th) / _st END)")
     x = f"({w1} * _ux + {w2} * _vx)"

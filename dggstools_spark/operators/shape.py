@@ -34,7 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .spatial_stats import _rowcol_terms, face_sql, with_lattice
+from ..functions.encode_sql import decode_rowcol_sql
+from .spatial_stats import face_sql, with_lattice
 
 PPM = 1_000_000
 
@@ -75,7 +76,7 @@ def region_shape(labeled: DataFrame, res: int) -> DataFrame:
 def region_shape_sql(labeled_sql: str, res: int) -> str:
     """DuckDB twin of :func:`region_shape` over ``labeled_sql`` →
     (cellid, region)."""
-    row_sql, col_sql = _rowcol_terms(res)
+    row_sql, col_sql = decode_rowcol_sql("cellid", res)
     offs = " UNION ALL ".join(f"SELECT {dr} AS dr, {dc} AS dc"
                               for dr, dc in _ROOK)
     return f"""

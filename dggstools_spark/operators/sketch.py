@@ -41,6 +41,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.encode_sql import double_sql
+
 HLL_B = 8                      #: bucket bits; m = 256 registers
 HLL_M = 1 << HLL_B
 _REM_BITS = 32 - HLL_B          #: bits in v
@@ -56,10 +58,10 @@ _LIN = [0] + [round(HLL_M * math.log(HLL_M / v)) for v in range(1, HLL_M + 1)]
 
 def _est_sql() -> str:
     """Estimate from (_s, _v0) — shared emitter (the numerator constant
-    rides a CAST(.. AS DOUBLE), CLAUDE.md constraint 8: a bare wide
+    is written by ``double_sql``, CLAUDE.md constraint 8: a bare wide
     decimal literal overflows DuckDB's DECIMAL typing)."""
     lin = ", ".join(str(x) for x in _LIN[1:])
-    c = f"CAST({_C!r} AS DOUBLE)"
+    c = double_sql(_C)
     return (f"CAST(CASE WHEN {c} / _s <= {2.5 * HLL_M!r} AND _v0 > 0"
             f" THEN element_at(array({lin}), CAST(_v0 AS INT))"
             f" ELSE round({c} / _s) END AS BIGINT)")

@@ -49,8 +49,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .spatial_stats import (_queen_explode, _rowcol_terms, face_sql,
-                            seam_pred_sql, with_lattice)
+from ..functions.encode_sql import decode_rowcol_sql
+from .spatial_stats import _queen_explode, face_sql, seam_pred_sql, with_lattice
 
 PPM = 1_000_000
 
@@ -133,7 +133,7 @@ def st_gi_ctes(obs_sql: str, res: int) -> str:
     """CTE chain ending in ``gi`` (cellid, day, v, n_window, focal_sum,
     ratio_ppm, on_seam) — the twin of :func:`st_gi` over ``obs_sql`` →
     (cellid, day, v)."""
-    row_sql, col_sql = _rowcol_terms(res)
+    row_sql, col_sql = decode_rowcol_sql("cellid", res)
     offs = " UNION ALL ".join(
         f"SELECT {dr} AS dr, {dc} AS dc"
         for dr in (-1, 0, 1) for dc in (-1, 0, 1))

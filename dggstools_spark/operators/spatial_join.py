@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..dggs.config import RHEALPixConfig, DEFAULT_CONFIG
 from ..dggs.cells import HALF_SIDE
 from ..functions.encode import cellid_from_lonlat_udf
+from ..functions.encode_sql import double_sql
 
 
 # --------------------------------------------------------------------------
@@ -539,21 +540,20 @@ def segment_cells_ctes(segs_sql: str, res: int,
     gx0 = float(-2.0 * HALF_SIDE)
     gy0 = float(1.5 * HALF_SIDE)
     sat = sat_edge_rect_sql(w / 2.0)
-    d = lambda x: f"CAST({float(x)!r} AS DOUBLE)"  # noqa: E731
     return f"""
     segs AS MATERIALIZED ({segs_sql}),
     scis AS (SELECT *,
-                unnest(range(CAST(floor((least(x1, x2) - {d(gx0)}) / {d(w)}) AS BIGINT),
-                             CAST(floor((greatest(x1, x2) - {d(gx0)}) / {d(w)}) AS BIGINT) + 1)) AS ci
+                unnest(range(CAST(floor((least(x1, x2) - {double_sql(gx0)}) / {double_sql(w)}) AS BIGINT),
+                             CAST(floor((greatest(x1, x2) - {double_sql(gx0)}) / {double_sql(w)}) AS BIGINT) + 1)) AS ci
              FROM segs),
     sris AS (SELECT *,
-                unnest(range(CAST(floor(({d(gy0)} - greatest(y1, y2)) / {d(w)}) AS BIGINT),
-                             CAST(floor(({d(gy0)} - least(y1, y2)) / {d(w)}) AS BIGINT) + 1)) AS ri
+                unnest(range(CAST(floor(({double_sql(gy0)} - greatest(y1, y2)) / {double_sql(w)}) AS BIGINT),
+                             CAST(floor(({double_sql(gy0)} - least(y1, y2)) / {double_sql(w)}) AS BIGINT) + 1)) AS ri
              FROM scis),
     scand AS (SELECT seg_id, px, py FROM (
                 SELECT seg_id, x1, y1, x2, y2,
-                       {d(gx0)} + (ci + 0.5) * {d(w)} AS px,
-                       {d(gy0)} - (ri + 0.5) * {d(w)} AS py
+                       {double_sql(gx0)} + (ci + 0.5) * {double_sql(w)} AS px,
+                       {double_sql(gy0)} - (ri + 0.5) * {double_sql(w)} AS py
                 FROM sris)
               WHERE {sat})
     """
@@ -599,7 +599,7 @@ def buffer_cells(points: DataFrame, d_m: float, res: int,
             .withColumn("cy", F.lit(gy0) - (F.col("ri") + 0.5) * w)
             .filter(F.expr(
                 f"(cx - _px) * (cx - _px) + (cy - _py) * (cy - _py)"
-                f" <= CAST({d_m * d_m!r} AS DOUBLE)")))
+                f" <= {double_sql(d_m * d_m)}")))
     enc = cellid_from_planar_udf(res, cfg).asNondeterministic()
     return (cand.select(enc("cx", "cy").alias("cellid"))
             .filter(F.col("cellid").isNotNull())
@@ -618,19 +618,18 @@ def buffer_cells_ctes(points_sql: str, d_m: float, res: int,
     k = math.ceil(d_m / w)
     gx0 = float(-2.0 * HALF_SIDE)
     gy0 = float(1.5 * HALF_SIDE)
-    d = lambda x: f"CAST({float(x)!r} AS DOUBLE)"  # noqa: E731
     return f"""
     bpts AS MATERIALIZED (
         SELECT {px} AS _px, {py} AS _py FROM ({points_sql})),
     bcis AS (SELECT _px, _py,
-                CAST(floor((_px - {d(gx0)}) / {d(w)}) AS BIGINT) + i.i AS ci,
-                CAST(floor(({d(gy0)} - _py) / {d(w)}) AS BIGINT) + j.j AS ri
+                CAST(floor((_px - {double_sql(gx0)}) / {double_sql(w)}) AS BIGINT) + i.i AS ci,
+                CAST(floor(({double_sql(gy0)} - _py) / {double_sql(w)}) AS BIGINT) + j.j AS ri
              FROM bpts, range({-k}, {k + 1}) i(i), range({-k}, {k + 1}) j(j)),
     bcand AS (SELECT cx, cy FROM (
                 SELECT _px, _py,
-                       {d(gx0)} + (ci + 0.5) * {d(w)} AS cx,
-                       {d(gy0)} - (ri + 0.5) * {d(w)} AS cy
+                       {double_sql(gx0)} + (ci + 0.5) * {double_sql(w)} AS cx,
+                       {double_sql(gy0)} - (ri + 0.5) * {double_sql(w)} AS cy
                 FROM bcis)
               WHERE (cx - _px) * (cx - _px) + (cy - _py) * (cy - _py)
-                    <= CAST({float(d_m * d_m)!r} AS DOUBLE))
+                    <= {double_sql(d_m * d_m)})
     """

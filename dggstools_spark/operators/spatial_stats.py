@@ -5,10 +5,12 @@ The analytics layer a DGGS engine exists to enable: once data is keyed by
 rHEALPix cells, neighborhood operations become pure relational algebra on
 the (face, row, col) lattice — no geometry library, no spatial index.
 Cell → lattice uses the closed form of the cellid digit string: digit d
-at depth i contributes (d div 3, d mod 3) · 3^(res-1-i) to (row, col)
-(the digit loop of dggs/cells.cellids_to_face_rowcol is the numpy twin; the SQL
-here is digit-for-digit the same fold, so both engines derive identical
-lattice coordinates).
+at depth i contributes (floor(d / 3), d % 3) · 3^(res-1-i) to (row, col),
+and lattice → cell folds (row, col) back into digits the same way (the
+digit loop of dggs/cells.cellids_to_face_rowcol is the numpy twin).  Both
+directions are the one codec of functions/encode_sql
+(``decode_rowcol_sql`` / ``rowcol_cellid_sql``), and both engines run its
+text, so they derive identical lattice coordinates and cellids.
 
 - ``focal_mean``: queen-adjacency (3×3) moving average of a cell value —
   the classic raster focal/smoothing op (reference rescale is the parent
@@ -52,6 +54,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.encode_sql import decode_rowcol_sql, rowcol_cellid_sql
+
 PPM = 1_000_000
 
 #: queen adjacency (excl. self)
@@ -59,60 +63,31 @@ _NEIGHBOR_OFFSETS = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)
                      if not (dr == 0 and dc == 0)]
 
 
-def _rowcol_terms(res: int) -> "tuple[str, str]":
-    """DuckDB (row_sql, col_sql) from a same-res `cellid` string column —
-    the digit fold of cellids_to_face_rowcol as flat SQL (res terms each)."""
-    row_terms, col_terms = [], []
-    for i in range(1, res + 1):
-        digit = f"CAST(substring(cellid, {i + 1}, 1) AS BIGINT)"
-        w = 3 ** (res - i)
-        row_terms.append(f"(({digit}) // 3) * {w}")
-        col_terms.append(f"(({digit}) % 3) * {w}")
-    return " + ".join(row_terms), " + ".join(col_terms)
-
-
 def face_sql() -> str:
     """0..5 face index from the cellid head char (portable)."""
     return "instr('NOPQRS', substring(cellid, 1, 1)) - 1"
 
 
-def _rowcol_terms_ascii(res: int) -> "tuple[str, str]":
-    """Spark-side twin of _rowcol_terms reading digits via ascii()-48
-    instead of CAST(substring AS BIGINT) — identical values for the
-    '0'..'8' digit alphabet, but TOTAL under ANSI mode: a lazily
-    composed plan (kring_cells r7) can push a later level's decode
-    predicate into the same Filter as an earlier level's range check,
-    and subexpression elimination then evaluates the decode on builder
-    outputs carrying chr(48+negative) placeholder digits that the range
-    check is about to drop — CAST throws there, ascii() just yields a
-    negative that fails the range check as intended.  DuckDB twins keep
-    the original text (frozen oracle SQL)."""
-    row_terms, col_terms = [], []
-    for i in range(1, res + 1):
-        digit = f"(ascii(substring(cellid, {i + 1}, 1)) - 48)"
-        w = 3 ** (res - i)
-        row_terms.append(f"(({digit}) div 3) * {w}")
-        col_terms.append(f"(({digit}) % 3) * {w}")
-    # BIGINT like the CAST-based original — with_lattice's row/col reach
-    # query outputs (schema-hashed by the oracle gate)
-    return (f"CAST({' + '.join(row_terms)} AS BIGINT)",
-            f"CAST({' + '.join(col_terms)} AS BIGINT)")
+#: the cellid head char of a 0..5 ``face`` column (inverse of face_sql)
+FACE_CHAR_SQL = "substring('NOPQRS', face + 1, 1)"
 
 
 def with_lattice(cells: DataFrame, res: int) -> DataFrame:
-    """Add (face, row, col) lattice coordinates to a same-res cell table."""
-    row_sql, col_sql = _rowcol_terms_ascii(res)
+    """Add (face, row, col) lattice coordinates to a same-res cell table.
+    row and col are BIGINT (they reach query outputs, schema-hashed by
+    the oracle gate)."""
+    row_sql, col_sql = decode_rowcol_sql("cellid", res)
     return (cells
             .withColumn("face", F.expr(face_sql()).cast("int"))
-            .withColumn("row", F.expr(row_sql))
-            .withColumn("col", F.expr(col_sql)))
+            .withColumn("row", F.expr(row_sql).cast("bigint"))
+            .withColumn("col", F.expr(col_sql).cast("bigint")))
 
 
 def lattice_select_sql(source_sql: str, res: int,
                        value_col: str = "v") -> str:
     """DuckDB twin of with_lattice over ``source_sql`` → (cellid, v,
     face, row, col)."""
-    row_sql, col_sql = _rowcol_terms(res)
+    row_sql, col_sql = decode_rowcol_sql("cellid", res)
     # src MATERIALIZED: cellid is referenced ~2·res+1 times below — if the
     # source contains the expression encoder, DuckDB would inline the
     # ~50k-node tree into every digit reference (CLAUDE.md constraint 7)
@@ -595,24 +570,6 @@ def bbox_cells_sql(source_sql: str, res: int, corner_a: str,
     """
 
 
-def cellid_from_rowcol_sql(res: int, idiv: str, face: str = "face",
-                           row: str = "row", col: str = "col") -> str:
-    """Inverse of the lattice digit fold: SQL building the res-``res``
-    cellid string from (face, row, col) expressions — digit at depth i is
-    3·row_i + col_i where row_i/col_i are the base-3 digits of row/col.
-    Flat per-digit concat (res terms), shared emitter for both engines
-    (``idiv`` = 'div' for Spark, '//' for DuckDB; CAST(. AS STRING) and
-    substring/concat behave identically — the synth_url_sql convention)."""
-    digits = []
-    for i in range(1, res + 1):
-        w = 3 ** (res - i)
-        digits.append(
-            f"CAST(((({row}) {idiv} {w}) % 3) * 3"
-            f" + ((({col}) {idiv} {w}) % 3) AS STRING)")
-    return (f"concat(substring('NOPQRS', ({face}) + 1, 1), "
-            + ", ".join(digits) + ")")
-
-
 def cell_neighbors(cells: DataFrame, res: int,
                    cross_face: bool = True) -> DataFrame:
     """(cellid, nbr, across): every queen neighbor of every input cell —
@@ -640,7 +597,8 @@ def cell_neighbors(cells: DataFrame, res: int,
     lat = with_lattice(cells.select("cellid"), res)
     return (_queen_explode(lat, res, cross_face, False, "cellid")
             .select("cellid",
-                    F.expr(cellid_from_rowcol_sql(res, "div")).alias("nbr"),
+                    F.expr(rowcol_cellid_sql(FACE_CHAR_SQL, "row", "col",
+                                             res)).alias("nbr"),
                     F.col("a").alias("across")))
 
 
@@ -652,9 +610,9 @@ def cell_neighbors_sql(source_sql: str, res: int,
     E = 3 ** res
     offs = " UNION ALL ".join(
         f"SELECT {dr} AS dr, {dc} AS dc" for dr, dc in _NEIGHBOR_OFFSETS)
-    nbr_int = cellid_from_rowcol_sql(res, "//", row="row + o.dr",
-                                     col="col + o.dc")
-    nbr_x = cellid_from_rowcol_sql(res, "//")
+    nbr_int = rowcol_cellid_sql(FACE_CHAR_SQL, "row + o.dr", "col + o.dc",
+                                res)
+    nbr_x = rowcol_cellid_sql(FACE_CHAR_SQL, "row", "col", res)
     xsql = (f"""
     UNION ALL
     SELECT nv AS cellid, {nbr_x} AS nbr, 1 AS across
@@ -831,8 +789,8 @@ def _kring_walk(cells: DataFrame, res: int, k: int,
             cur = (cur.groupBy("v", "face", "row", "col")
                    .agg(F.min("ring").alias("ring")))
     return cur.select(F.col("v").alias("cellid"),
-                      F.expr(cellid_from_rowcol_sql(res, "div"))
-                      .alias("nbr"),
+                      F.expr(rowcol_cellid_sql(FACE_CHAR_SQL, "row", "col",
+                                               res)).alias("nbr"),
                       "ring")
 
 

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dggs.config import DEFAULT_CONFIG
-from .queries3 import _d, _oracle_diamond_ctes, _safe_diamonds, load
+from .functions.encode_sql import double_sql
+from .queries3 import _oracle_diamond_ctes, _safe_diamonds, load
 from .queries21 import FLOWS_RES
 from .registry import register
 
@@ -37,11 +38,11 @@ def _b_diamond_sql(key: str) -> "tuple[str, str, str]":
     from .dggs.cells import HALF_SIDE
 
     s = float(HALF_SIDE)
-    cx = (f"({_d(-1.5 * s)} + ((CAST({key} AS BIGINT) * 4817) % 30011)"
-          f" / 30011.0 * {_d(3.0 * s)})")
-    cy = (f"({_d(-0.15 * s)} + ((CAST({key} AS BIGINT) * 2957) % 7001)"
-          f" / 7001.0 * {_d(0.3 * s)})")
-    rad = f"((0.08 + (CAST({key} AS BIGINT) % 4) * 0.06) * {_d(s)})"
+    cx = (f"({double_sql(-1.5 * s)} + ((CAST({key} AS BIGINT) * 4817) % 30011)"
+          f" / 30011.0 * {double_sql(3.0 * s)})")
+    cy = (f"({double_sql(-0.15 * s)} + ((CAST({key} AS BIGINT) * 2957) % 7001)"
+          f" / 7001.0 * {double_sql(0.3 * s)})")
+    rad = f"((0.08 + (CAST({key} AS BIGINT) % 4) * 0.06) * {double_sql(s)})"
     return cx, cy, rad
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .functions.encode_sql import double_sql
 from .queries3 import load
 from .queries22 import _flow_obs, _flow_obs_sql
 from .registry import register
@@ -155,7 +156,7 @@ PATH_MAX_SEG_M = 1_500_000.0
 PATH_K = 40
 
 _SEG_PRED = (f"(x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1)"
-             f" <= CAST({PATH_MAX_SEG_M ** 2!r} AS DOUBLE)")
+             f" <= {double_sql(PATH_MAX_SEG_M ** 2)}")
 
 
 def q_path_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .functions.encode_sql import double_sql
 from .queries3 import load
 from .registry import register
 
@@ -63,7 +64,7 @@ RT_MAX_N = 64
 RT_K = 40
 _RT_USER_PRED = "user_id % 97 = 0"
 _RT_SUB_PRED = (f"(x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1)"
-                f" <= CAST({(3.0 * RT_STEP_M) ** 2!r} AS DOUBLE)")
+                f" <= {double_sql((3.0 * RT_STEP_M) ** 2)}")
 
 
 def q_route_heat(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,7 @@ from .dggs.config import DEFAULT_CONFIG
 #: module — so queries16+ can import it without circling through queries.py)
 CELL_RES = 5
 from .functions import encode_sql
+from .functions.encode_sql import double_sql
 from .operators import metrics
 from .operators import spatial_join as spatial_join_mod
 from .operators.auid import subarea_pairs
@@ -510,20 +511,15 @@ def _oracle_resample_cubic() -> str:
 AT_RES = 4
 
 
-def _d(x: float) -> str:
-    """Float literal pinned to DOUBLE (DuckDB types wide decimals DECIMAL)."""
-    return f"CAST({float(x)!r} AS DOUBLE)"
-
-
 def _safe_diamond_sql(key: str) -> tuple[str, str, str]:
     from .dggs.cells import HALF_SIDE
 
     s = float(HALF_SIDE)
-    cx = (f"({_d(-1.7 * s)} + ((CAST({key} AS BIGINT) * 7919) % 40000)"
-          f" / 40000.0 * {_d(3.4 * s)})")
-    cy = (f"({_d(-0.2 * s)} + ((CAST({key} AS BIGINT) * 104729) % 9000)"
-          f" / 9000.0 * {_d(0.4 * s)})")
-    rad = f"((0.05 + (CAST({key} AS BIGINT) % 5) * 0.04) * {_d(s)})"
+    cx = (f"({double_sql(-1.7 * s)} + ((CAST({key} AS BIGINT) * 7919) % 40000)"
+          f" / 40000.0 * {double_sql(3.4 * s)})")
+    cy = (f"({double_sql(-0.2 * s)} + ((CAST({key} AS BIGINT) * 104729) % 9000)"
+          f" / 9000.0 * {double_sql(0.4 * s)})")
+    rad = f"((0.05 + (CAST({key} AS BIGINT) % 5) * 0.04) * {double_sql(s)})"
     return cx, cy, rad
 
 
@@ -572,15 +568,15 @@ def _oracle_diamond_ctes(res: int, table: str = "region",
                     greatest(cy + rad, cy, cy - rad) AS ymax
              FROM {p}dia),
     {p}cis AS (SELECT poly_id, ymin, ymax,
-                   unnest(range(CAST(floor((xmin - {_d(gx0)}) / {_d(w)}) AS BIGINT),
-                                CAST(floor((xmax - {_d(gx0)}) / {_d(w)}) AS BIGINT) + 1)) AS ci
+                   unnest(range(CAST(floor((xmin - {double_sql(gx0)}) / {double_sql(w)}) AS BIGINT),
+                                CAST(floor((xmax - {double_sql(gx0)}) / {double_sql(w)}) AS BIGINT) + 1)) AS ci
             FROM {p}bbox),
     {p}ris AS (SELECT poly_id, ci,
-                   unnest(range(CAST(floor(({_d(gy0)} - ymax) / {_d(w)}) AS BIGINT),
-                                CAST(floor(({_d(gy0)} - ymin) / {_d(w)}) AS BIGINT) + 1)) AS ri
+                   unnest(range(CAST(floor(({double_sql(gy0)} - ymax) / {double_sql(w)}) AS BIGINT),
+                                CAST(floor(({double_sql(gy0)} - ymin) / {double_sql(w)}) AS BIGINT) + 1)) AS ri
             FROM {p}cis),
-    {p}cand AS (SELECT poly_id, {_d(gx0)} + (ci + 0.5) * {_d(w)} AS px,
-                    {_d(gy0)} - (ri + 0.5) * {_d(w)} AS py
+    {p}cand AS (SELECT poly_id, {double_sql(gx0)} + (ci + 0.5) * {double_sql(w)} AS px,
+                    {double_sql(gy0)} - (ri + 0.5) * {double_sql(w)} AS py
              FROM {p}ris),
     {p}inside AS (SELECT c.poly_id, px, py
                FROM {p}cand c JOIN {p}edges e ON c.poly_id = e.poly_id
@@ -635,7 +631,7 @@ def _oracle_area_error() -> str:
     -- burn-overwrite: a cell covered by several polygons keeps ONE class —
     -- the last-drawn (highest poly_id) wins, mirroring metrics.area_error
     ras AS (
-      SELECT class, count(*) * {_d(cell_area)} AS _ras
+      SELECT class, count(*) * {double_sql(cell_area)} AS _ras
       FROM (SELECT px, py, CAST(max(poly_id) % 2 AS INT) AS class
             FROM inside GROUP BY px, py)
       GROUP BY class),

@@ -97,8 +97,8 @@ def _oracle_grid() -> str:
         uly = float(uls[face_idx[f], 1])
         blocks.append(f"""
         SELECT {cellid} AS cellid,
-               CAST({ulx!r} AS DOUBLE) + (col + 0.5) * CAST({w!r} AS DOUBLE) AS x,
-               CAST({uly!r} AS DOUBLE) - (row + 0.5) * CAST({w!r} AS DOUBLE) AS y
+               {encode_sql.double_sql(ulx)} + (col + 0.5) * {encode_sql.double_sql(w)} AS x,
+               {encode_sql.double_sql(uly)} - (row + 0.5) * {encode_sql.double_sql(w)} AS y
         FROM (SELECT CAST(i // {n_cells} AS BIGINT) AS row,
                      CAST(i % {n_cells} AS BIGINT) AS col
               FROM range({n_cells * n_cells}) t(i))""")

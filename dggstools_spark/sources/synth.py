@@ -35,15 +35,15 @@ def lonlat_steps(id_col: str, prefix: str = "_syn") -> list[tuple[str, str]]:
             "lon",
             f"CASE WHEN {hot} THEN"
             f" CAST(({c} * 137) % 360 AS DOUBLE) - 180.0 + 0.5"
-            f"  + (CAST(floor({h} / 24.0) AS BIGINT) % 2000) / 1000.0 - 1.0"
-            f" ELSE (CAST(floor({h} / 7.0) AS BIGINT) % 360000) / 1000.0 - 180.0 END",
+            f"  + (CAST(floor({h} / 24) AS BIGINT) % 2000) / 1000 - 1.0"
+            f" ELSE (CAST(floor({h} / 7) AS BIGINT) % 360000) / 1000 - 180.0 END",
         ),
         (
             "lat",
             f"CASE WHEN {hot} THEN"
             f" CAST(({c} * 61) % 140 AS DOUBLE) - 70.0 + 0.5"
-            f"  + (CAST(floor({h} / 48000.0) AS BIGINT) % 2000) / 1000.0 - 1.0"
-            f" ELSE (CAST(floor({h} / 2520000.0) AS BIGINT) % 170000) / 1000.0 - 85.0 END",
+            f"  + (CAST(floor({h} / 48000) AS BIGINT) % 2000) / 1000 - 1.0"
+            f" ELSE (CAST(floor({h} / 2520000) AS BIGINT) % 170000) / 1000 - 85.0 END",
         ),
     ]
     return steps

@@ -46,7 +46,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 TIME_BUDGET_S = 15.0  # the fixed budget the levered variant must hold
@@ -158,7 +159,7 @@ def main() -> int:
             out[f"{name}/{variant}"] = rec
             print(json.dumps({f"{name}/{variant}": rec}), flush=True)
 
-    with open("/root/repo/LEVERS_sf1.json", "w") as f:
+    with open(os.path.join(REPO, "LEVERS_sf1.json"), "w") as f:
         json.dump(out, f, indent=2)
     print("wrote LEVERS_sf1.json")
     return 0

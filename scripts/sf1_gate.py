@@ -20,7 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_entry import canonical_hash  # noqa: E402
@@ -120,7 +121,7 @@ def _git_rev() -> str:
 
     try:
         return subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+            ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True, timeout=10).stdout.strip()
     except Exception:
         return "unknown"
@@ -229,7 +230,7 @@ def main() -> int:
 
     # merge into the existing artifact so partial reruns (a named subset)
     # refresh their own rows without clobbering the rest of the gate
-    out_path = "/root/repo/CORRECTNESS_sf1.json"
+    out_path = os.path.join(REPO, "CORRECTNESS_sf1.json")
     merged: dict = {}
     try:
         with open(out_path) as f:

@@ -26,7 +26,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.sf1_gate import SF1_DIR, build_sf1, _git_rev  # noqa: E402
 

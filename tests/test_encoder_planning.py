@@ -18,6 +18,7 @@ import signal
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from dggstools_spark.functions import encode_sql
@@ -124,3 +125,130 @@ def test_two_reads_of_encoder_output_share_one_scan(spark, sf_dir):
     # adds the tie rollup, a third read with no filter on day
     assert _scan_count(spark, theilsen(obs, "cellid", "day", "y")) == 1
     assert _scan_count(spark, mk_stats(obs, "cellid", "day", "y")) == 1
+
+
+# Counts DecimalType expressions in a plan, subqueries included, inside the
+# JVM: one py4j call per plan instead of several per expression node.
+_DECIMAL_COUNTER = r"""
+public class DecimalExprCount {
+  public int count(Object root) {
+    java.util.ArrayDeque stack = new java.util.ArrayDeque();
+    stack.push(root);
+    int n = 0;
+    while (!stack.isEmpty()) {
+      Object o = stack.pop();
+      scala.collection.Iterator it;
+      if (o instanceof org.apache.spark.sql.catalyst.plans.QueryPlan) {
+        org.apache.spark.sql.catalyst.plans.QueryPlan p =
+            (org.apache.spark.sql.catalyst.plans.QueryPlan) o;
+        it = p.expressions().iterator();
+        while (it.hasNext()) stack.push(it.next());
+        it = p.children().iterator();
+        while (it.hasNext()) stack.push(it.next());
+      } else if (o instanceof org.apache.spark.sql.catalyst.expressions.Expression) {
+        org.apache.spark.sql.catalyst.expressions.Expression e =
+            (org.apache.spark.sql.catalyst.expressions.Expression) o;
+        try {
+          if (e.dataType() instanceof org.apache.spark.sql.types.DecimalType) n++;
+        } catch (Exception untyped) { }  // a window spec has no type
+        it = e.children().iterator();
+        while (it.hasNext()) stack.push(it.next());
+        if (e instanceof org.apache.spark.sql.catalyst.expressions.PlanExpression)
+          stack.push(((org.apache.spark.sql.catalyst.expressions.PlanExpression) e).plan());
+      }
+    }
+    return n;
+  }
+}
+"""
+
+_EXACT = "exact DECIMAL(38,0) integer arithmetic"
+_DIAMOND = ("leaf-local literal left for later: queries3._safe_diamond_sql"
+            " (`/ 40000.0`, `0.05 + .. * 0.04`)")
+_POLYGON = ("leaf-local literal left for later: queries2 polygon generator"
+            " (bare half-side, `/ 40000.0 * 4.0`)")
+_BM25 = ("leaf-local literal left for later: BM25 idf and length terms"
+         " (`+ 0.5`, `0.75 *`) in operators/text_rank")
+
+#: leaf -> (decimal expressions in its optimized plan at sf0.001, reason).
+#: A leaf not listed must have none.
+DECIMAL_ALLOWED = {
+    "all_touched": (176, _DIAMOND),
+    "area_error": (132, _DIAMOND),
+    "areal_interp": (270, f"{_EXACT}; {_DIAMOND}"),
+    "bm25_topk": (12, _BM25),
+    "cell_diversity": (16, _EXACT),
+    "change_matrix": (60, "leaf-local literal left for later:"
+                          " `floor(p_partkey / 81.0)` raster input"),
+    "cross_k": (31, _EXACT),
+    "dedup_pipeline": (3, _EXACT),
+    "geodesic_area": (56, "leaf-local literal left for later: polygon"
+                          " vertices `-150.0 + .. / 10.0` (queries3)"),
+    "hybrid_rerank": (12, _BM25),
+    "idw_interp": (6, _EXACT),
+    "join_counts": (8, _EXACT),
+    "knn_cells": (4, "leaf-local literal left for later: query points"
+                     " (queries2._query_points_sql)"),
+    "location_quotient": (8, _EXACT),
+    "mean_center": (25, _EXACT),
+    "morans_i": (8, _EXACT),
+    "morans_xface": (8, _EXACT),
+    "overlay_area": (176, f"{_DIAMOND}; the queries22 diamonds"),
+    "passage_dedup": (4, "leaf-local literal left for later:"
+                         " `ceil(size(toks) / 8.0)`"),
+    "pip_polygons": (276, _POLYGON),
+    "ripley_k": (29, _EXACT),
+    "segregation": (19, _EXACT),
+    "span_cells": (14, "leaf-local literal left for later: span jitter"
+                       " `/ 1000.0 * 0.02` (queries2)"),
+    "zonal_stats": (276, _POLYGON),
+}
+
+
+@pytest.fixture(scope="module")
+def decimal_exprs(spark):
+    """df -> number of DecimalType expressions in its optimized plan (no
+    Spark job)."""
+    jvm = spark._jvm
+    compiler = jvm.org.codehaus.janino.SimpleCompiler()
+    compiler.setParentClassLoader(
+        jvm.java.lang.Thread.currentThread().getContextClassLoader())
+    compiler.cook(_DECIMAL_COUNTER)
+    counter = (compiler.getClassLoader().loadClass("DecimalExprCount")
+               .newInstance())
+    return lambda df: counter.count(df._jdf.queryExecution().optimizedPlan())
+
+
+def test_encoder_and_lattice_plans_hold_no_decimal(spark, sf_dir,
+                                                   decimal_exprs):
+    from dggstools_spark.operators.spatial_stats import (kring_cells,
+                                                         with_lattice)
+
+    docs = synth.with_lonlat(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+    cells = encode_sql.spark_encode(docs, "lon", "lat", 4).select("cellid")
+    plans = {
+        "spark_encode": encode_sql.spark_encode(docs, "lon", "lat", 8),
+        "with_planar": encode_sql.spark_encode(docs, "lon", "lat", 8,
+                                               with_planar=True),
+        "with_lattice": with_lattice(cells, 4),
+        "kring_cells": kring_cells(cells, 4, 2),
+    }
+    counts = {name: decimal_exprs(df) for name, df in plans.items()}
+    assert counts == dict.fromkeys(plans, 0)
+
+
+def test_registry_decimal_expressions_within_allow_list(spark, sf_dir,
+                                                        decimal_exprs):
+    """Every leaf's optimized plan at sf0.001 holds no more decimal
+    expressions than DECIMAL_ALLOWED grants it (builds each leaf, no
+    action)."""
+    from dggstools_spark.queries import QUERIES
+
+    over = {}
+    for name, fn in QUERIES.items():
+        n = decimal_exprs(fn(spark, sf_dir))
+        if n > DECIMAL_ALLOWED.get(name, (0,))[0]:
+            over[name] = n
+    assert not over, over
+    assert len(DECIMAL_ALLOWED) <= 24

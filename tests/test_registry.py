@@ -12,7 +12,7 @@ from dggstools_spark.registry import REGISTERED, register
 # sha256 of "\n".join(QUERIES)
 ORDER_SHA256 = "417f63df6a9bd1b9d0eccdd9f398ef4383608084fb6c33e16d84343a85310c62"
 # sha256 over name + "\0" + ORACLES[name] + "\0" for every name in order
-ORACLES_SHA256 = "54e0004ee959cfcbd62b699ced9e9556313047b24049f85f445e6f29497fed36"
+ORACLES_SHA256 = "a84829d4f0883260e82969c6ff2b49d549520cb29a963e01d7c10b8d51678a20"
 
 
 def test_registry_shape():

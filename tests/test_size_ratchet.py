@@ -12,7 +12,7 @@ from pathlib import Path
 PKG = Path(__file__).resolve().parents[1] / "dggstools_spark"
 
 #: settable options: parameters with a default value (def and lambda)
-MAX_DEFAULTED_PARAMS = 476
+MAX_DEFAULTED_PARAMS = 473
 #: ``.localCheckpoint(...)`` call sites
 MAX_LOCAL_CHECKPOINTS = 63
 #: ``os.environ`` reads

@@ -108,3 +108,98 @@ def test_interleaved_docs_shape(docs):
     assert offsets == sorted(offsets)
     kinds = {s.kind for s in row.spans}
     assert kinds <= {"text", "image", "audio"}
+
+
+def _boundary_points(seed: int = 15) -> "pd.DataFrame":
+    """Points on cell edges at every resolution 0-15 (upper-left vertices
+    and left/top edge midpoints of random cells, mapped back to lon/lat),
+    each also moved by one ulp in lon and in lat; the lon/lat grid lines
+    where the encoder's cap and face decisions switch; random points."""
+    import numpy as np
+    import pandas as pd
+
+    from dggstools_spark.dggs import projection
+    from dggstools_spark.dggs.cells import (HALF_SIDE, cellid_to_ul_vertex,
+                                            lonlat_to_cellid)
+
+    rng = np.random.default_rng(seed)
+    lons, lats = [], []
+    for res in range(16):
+        lon = rng.uniform(-180, 180, 40)
+        lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 40)))
+        x, y = cellid_to_ul_vertex(lonlat_to_cellid(lon, lat, res))
+        w = HALF_SIDE / 3**res
+        for ex, ey in ((x, y), (x, y - w / 2), (x + w / 2, y)):
+            elon, elat = projection.inverse(ex, ey)
+            lons.append(elon)
+            lats.append(elat)
+    glon, glat = np.meshgrid(np.arange(-180.0, 181.0, 45.0),
+                             [-90.0, -41.9, 0.0, 41.9, 90.0])
+    lons += [glon.ravel(), rng.uniform(-180, 180, 2000)]
+    lats += [glat.ravel(), np.degrees(np.arcsin(rng.uniform(-1, 1, 2000)))]
+    lon, lat = np.concatenate(lons), np.concatenate(lats)
+    up, down = np.inf, -np.inf
+    lon = np.concatenate([lon, np.nextafter(lon, up), np.nextafter(lon, down),
+                          lon, lon])
+    lat = np.concatenate([lat, lat, lat, np.nextafter(lat, up),
+                          np.nextafter(lat, down)])
+    lat = np.clip(lat, -90.0, 90.0)
+    return pd.DataFrame({"id": np.arange(len(lon)), "lon": lon, "lat": lat})
+
+
+def _bits(col) -> "np.ndarray":
+    import numpy as np
+
+    return col.to_numpy(dtype=np.float64).view(np.int64)
+
+
+def test_spark_and_duckdb_encoders_agree_on_cell_edges(spark):
+    """The one encoder text gives the same cellids, and bit-equal planar
+    outputs, on Spark and on DuckDB at every resolution, on points exactly
+    on and one ulp either side of cell edges.
+
+    Spark's sin and ln (Java) and DuckDB's (C library) differ in the last
+    bit on some inputs, which no SQL text can change.  So the check runs
+    on the points where both engines agree on the transcendental prefix
+    of the steps (longitude in radians, sin(lat), sin of the authalic
+    latitude), and at least 95 % of the points must be such points."""
+    import duckdb
+    import numpy as np
+
+    pdf = _boundary_points()
+    pts = spark.createDataFrame(pdf).cache()
+    con = duckdb.connect()
+    con.register("pts", pdf)
+    prefix = [s for s in encode_sql.encode_steps("lon", "lat", 0)
+              if s[0] in ("_rhp_lam", "_rhp_s", "_rhp_sinb")]
+    names = [n for n, _ in prefix]
+    inner, sdf = "SELECT * FROM pts", pts
+    for name, expr in prefix:
+        inner = f"SELECT *, {expr} AS {name} FROM ({inner})"
+        sdf = sdf.withColumn(name, F.expr(expr))
+    duck_pre = con.execute(
+        f"SELECT id, {', '.join(names)} FROM ({inner}) ORDER BY id").fetchdf()
+    spark_pre = sdf.select("id", *names).toPandas().sort_values("id")
+    same = np.logical_and.reduce(
+        [_bits(duck_pre[n]) == _bits(spark_pre[n]) for n in names])
+    assert same.mean() >= 0.95, same.mean()
+    ids = set(pdf["id"][same])
+
+    planar = ["px_m", "py_m", "cx_m", "cy_m"]
+    for res in range(16):
+        duck = con.execute(encode_sql.duckdb_encode_select(
+            "pts", "lon", "lat", res, ["id"], with_planar=True)).fetchdf()
+        full = (encode_sql.spark_encode(pts, "lon", "lat", res, with_planar=True)
+                .select("id", "cellid", *planar).toPandas())
+        plain = (encode_sql.spark_encode(pts, "lon", "lat", res)
+                 .select("id", "cellid").toPandas())
+        duck, full, plain = (d[d["id"].isin(ids)].sort_values("id")
+                             .reset_index(drop=True)
+                             for d in (duck, full, plain))
+        assert len(duck) == len(full) == len(plain) == len(ids)
+        for got in (full, plain):
+            bad = (got["cellid"] != duck["cellid"]).to_numpy()
+            assert not bad.any(), (res, duck[bad].head(3).to_dict("records"))
+        for c in planar:
+            assert np.array_equal(_bits(full[c]), _bits(duck[c])), (res, c)
+    pts.unpersist()

@@ -15,6 +15,7 @@ import numpy as np
 
 from .config import AUTHALIC_RADIUS, RHEALPixConfig, DEFAULT_CONFIG
 from . import projection
+from .expr import evaluate
 
 PI = np.pi
 HALF_SIDE = (PI / 2.0) * AUTHALIC_RADIUS  # side length of a resolution-0 cell (m)
@@ -44,37 +45,14 @@ def _face_ul(cfg: RHEALPixConfig) -> np.ndarray:
 
 def planar_to_face_rowcol(x: np.ndarray, y: np.ndarray, res: int,
                           cfg: RHEALPixConfig = DEFAULT_CONFIG):
-    """Planar meters -> (face index 0..5 or -1 if outside, row, col) at ``res``."""
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    s = HALF_SIDE
-    n_cells = cfg.n_side**res
-    w = s / n_cells
-
-    face = np.full(x.shape, -1, dtype=np.int64)
-
-    # equatorial band (y in [-s/2, s/2]); right/top edges inclusive via clamp
-    eq = (y >= -0.5 * s) & (y <= 0.5 * s) & (x >= -2.0 * s) & (x <= 2.0 * s)
-    eq_face = 1 + np.clip(np.floor((x + 2.0 * s) / s), 0, 3).astype(np.int64)
-    face = np.where(eq, eq_face, face)
-
-    # north cap
-    n_left = -2.0 * s + cfg.north_square * s
-    north = (y > 0.5 * s) & (y <= 1.5 * s) & (x >= n_left) & (x <= n_left + s)
-    face = np.where(north, 0, face)
-
-    # south cap
-    s_left = -2.0 * s + cfg.south_square * s
-    south = (y < -0.5 * s) & (y >= -1.5 * s) & (x >= s_left) & (x <= s_left + s)
-    face = np.where(south, 5, face)
-
-    uls = _face_ul(cfg)
-    safe_face = np.where(face >= 0, face, 0)
-    ulx = uls[safe_face, 0]
-    uly = uls[safe_face, 1]
-    col = np.clip(np.floor((x - ulx) / w), 0, n_cells - 1).astype(np.int64)
-    row = np.clip(np.floor((uly - y) / w), 0, n_cells - 1).astype(np.int64)
-    return face, row, col
+    """Planar meters -> (face index 0..5 or -1 if outside, row, col) at
+    ``res``: meters / authalic radius, then the shared planar suffix steps
+    (the text ``encode_sql.duckdb_planar_encode_select`` runs)."""
+    env = evaluate(projection.planar_meter_steps("x", "y")
+                   + projection.planar_suffix_steps(res, cfg),
+                   {"x": np.asarray(x, dtype=np.float64),
+                    "y": np.asarray(y, dtype=np.float64)})
+    return env["_rhp_face"], env["_rhp_row"], env["_rhp_col"]
 
 
 def _assemble_cellids(face: np.ndarray, row: np.ndarray, col: np.ndarray, res: int,
@@ -112,8 +90,8 @@ def planar_to_cellid(x: np.ndarray, y: np.ndarray, res: int,
 def lonlat_to_cellid(lon: np.ndarray, lat: np.ndarray, res: int,
                      cfg: RHEALPixConfig = DEFAULT_CONFIG) -> np.ndarray:
     """lon/lat degrees -> cellid strings at resolution ``res``."""
-    x, y = projection.forward(lon, lat, cfg.north_square, cfg.south_square)
-    return planar_to_cellid(x, y, res, cfg)
+    face, row, col = projection.lonlat_face_rowcol(lon, lat, res, cfg)
+    return _assemble_cellids(face, row, col, res, cfg)
 
 
 # --------------------------------------------------------------------------
@@ -257,8 +235,7 @@ def unpack_cellkey(key: np.ndarray, res: int,
 def lonlat_to_cellkey(lon: np.ndarray, lat: np.ndarray, res: int,
                       cfg: RHEALPixConfig = DEFAULT_CONFIG) -> np.ndarray:
     """lon/lat degrees -> packed int64 cell key at ``res`` (-1 off-cube)."""
-    x, y = projection.forward(lon, lat, cfg.north_square, cfg.south_square)
-    face, row, col = planar_to_face_rowcol(x, y, res, cfg)
+    face, row, col = projection.lonlat_face_rowcol(lon, lat, res, cfg)
     return pack_cellkey(face, row, col, res, cfg)
 
 

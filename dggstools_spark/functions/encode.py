@@ -3,9 +3,10 @@
 This is the north-rule-mandated path ("batched H3/S2-style cell encoding via
 pandas/Arrow UDFs, no per-row Python"): each UDF receives pandas Series
 backed by Arrow batches and calls the vectorized kernel once per batch.
-The expression path (encode_sql.spark_encode) must produce identical cellids;
-tests/test_spark_paths.py::test_udf_and_expr_paths_agree asserts the two
-agree."""
+The kernel evaluates the same step list (dggs/projection.py) that the
+expression path (encode_sql.spark_encode) renders as SQL, so the two give
+identical cellids, cell edges included; tests/test_spark_paths.py checks
+them against each other and against DuckDB."""
 
 import pandas as pd
 from pyspark.sql import functions as F

@@ -1,44 +1,39 @@
 """rHEALPix cell encoding as portable ANSI-SQL steps.
 
-The same step list drives two engines:
+The steps are the one cell-assignment formula of ``dggs/projection.py``
+(``forward_steps`` and ``planar_suffix_steps``), rendered as SQL text by
+``dggs/expr.py``; the numpy kernel evaluates the same steps, so the
+kernel, Spark and DuckDB assign every point the same cell.  Only the
+cellid string tail (``chr``/``concat``) is SQL-only.  The text drives
+two engines:
 
 - **Spark**: ``spark_encode(df, ...)`` applies each step with
   ``withColumn(F.expr(...))`` — the whole encode stays inside whole-stage
   codegen (JVM, no Python workers).  This is the fast path used when a plain
   expression is allowed; the pandas-UDF path (functions/encode.py) is the
-  north-rule-mandated Arrow path and must agree with it bit-for-bit.
+  north-rule-mandated Arrow path.
 - **DuckDB**: ``duckdb_encode_select(...)`` folds the steps into nested
   SELECTs — the independent oracle for the driver's correctness gate.
 
-Only functions with identical semantics in both engines are used:
-radians/sin/ln/sqrt/abs/floor/least/greatest/chr/concat/CASE/%/casts
-(sin and ln can still differ in the last bit: each engine has its own
-math library).  Float constants are inlined through :func:`double_sql`,
-which both engines read as the same DOUBLE; integer constants in integer
-contexts are integer literals (CLAUDE.md constraint 8).  So Spark plans
-the encoder in DOUBLE and BIGINT only, as DuckDB does.  Formula source:
-Calabretta & Roukema 2007 + Gibb/Raichev/Speth 2013 (see dggs/projection.py,
-the numpy implementation of the same math).
+The text uses only exact IEEE operations (``+ - * /``, ``sqrt``,
+``floor``, ``abs``, ``least``/``greatest``, ``%``, ``CASE``, casts): no
+math library, so both engines compute the same bits.  Float constants are
+inlined through :func:`double_sql`, which both engines read as the same
+DOUBLE; integer constants in integer contexts are integer literals
+(CLAUDE.md constraint 8).  So Spark plans the encoder in DOUBLE and
+BIGINT only, as DuckDB does.  Formula source: Calabretta & Roukema 2007 +
+Gibb/Raichev/Speth 2013 (see dggs/projection.py).
 """
 
 from __future__ import annotations
 
 import math
 
-from ..dggs.config import RHEALPixConfig, DEFAULT_CONFIG, WGS84_E, WGS84_E2, Q_P
+from ..dggs import projection
+from ..dggs.config import AUTHALIC_RADIUS, RHEALPixConfig, DEFAULT_CONFIG
+from ..dggs.expr import double_sql, sql_steps
 
 PI = math.pi
-
-
-def double_sql(v: float) -> str:
-    """``v`` as a DOUBLE literal that both engines read as the same double:
-    the shortest round-trip digits with an exponent, inside
-    ``CAST(.. AS DOUBLE)`` (CLAUDE.md constraint 8).  Without the exponent
-    both engines parse a DECIMAL, and DuckDB's DECIMAL-to-DOUBLE cast
-    misrounds about one 17-digit value in ten; DuckDB has no ``D``
-    suffix."""
-    r = repr(float(v))
-    return f"CAST({r if 'e' in r else r + 'e0'} AS DOUBLE)"
 
 
 def encode_steps(lon: str, lat: str, res: int,
@@ -47,125 +42,19 @@ def encode_steps(lon: str, lat: str, res: int,
     """Ordered (column_name, sql_expression) steps computing ``out`` =
     rHEALPix cellid at resolution ``res`` from lon/lat degree columns.
     Intermediate columns are prefixed with ``_rhp_``."""
-    n = cfg.n_side
-    ns, ss = cfg.north_square, cfg.south_square
-    e, e2, qp = WGS84_E, WGS84_E2, Q_P
-    steps: list[tuple[str, str]] = []
-
-    # longitude wrapped to [-pi, pi); SQL % keeps the dividend's sign, so the
-    # double-mod form is needed for inputs below -180 (numpy % is nonnegative)
-    steps.append(("_rhp_lam",
-                  f"(((radians({lon}) + {double_sql(PI)}) % {double_sql(2 * PI)} + {double_sql(2 * PI)})"
-                  f" % {double_sql(2 * PI)}) - {double_sql(PI)}"))
-    steps.append(("_rhp_s", f"sin(radians({lat}))"))
-    # sin(authalic lat) = q(sin phi)/q_p  (Snyder 3-12)
-    steps.append((
-        "_rhp_sinb",
-        f"least(greatest({double_sql(1 - e2)} * (_rhp_s / (1.0 - {double_sql(e2)} * _rhp_s * _rhp_s)"
-        f" - {double_sql(1.0 / (2 * e))} * ln((1.0 - {double_sql(e)} * _rhp_s) / (1.0 + {double_sql(e)} * _rhp_s)))"
-        f" / {double_sql(qp)}, -1.0), 1.0)",
-    ))
-    steps.append(("_rhp_sigma", "sqrt(greatest(3.0 * (1.0 - abs(_rhp_sinb)), 0.0))"))
-    steps.append((
-        "_rhp_lamc",
-        f"{double_sql(-3 * PI / 4)} + least(greatest(floor((_rhp_lam + {double_sql(PI)}) / {double_sql(PI / 2)}), 0), 3) * {double_sql(PI / 2)}",
-    ))
-    polar = f"abs(_rhp_sinb) > {double_sql(2.0 / 3.0)}"
-    steps.append((
-        "_rhp_hx",
-        f"CASE WHEN {polar} THEN _rhp_lamc + (_rhp_lam - _rhp_lamc) * _rhp_sigma ELSE _rhp_lam END",
-    ))
-    steps.append((
-        "_rhp_hy",
-        f"CASE WHEN {polar} THEN (CASE WHEN _rhp_sinb >= 0 THEN 1.0 ELSE -1.0 END)"
-        f" * {double_sql(PI / 4)} * (2.0 - _rhp_sigma) ELSE {double_sql(3 * PI / 8)} * _rhp_sinb END",
-    ))
-    # cap rearrangement (exact 90-degree rotations; see dggs/projection.py)
-    steps.append((
-        "_rhp_i",
-        f"CAST(least(greatest(floor((_rhp_hx + {double_sql(PI)}) / {double_sql(PI / 2)}), 0), 3) AS INT)",
-    ))
-    north = f"_rhp_hy > {double_sql(PI / 4)}"
-    south = f"_rhp_hy < {double_sql(-PI / 4)}"
-    steps.append((
-        "_rhp_j",
-        f"CASE WHEN {north} THEN ((_rhp_i - {ns}) % 4 + 4) % 4"
-        f" WHEN {south} THEN (4 - (((_rhp_i - {ss}) % 4 + 4) % 4)) % 4 ELSE 0 END",
-    ))
-    steps.append(("_rhp_dx", f"_rhp_hx - ({double_sql(-3 * PI / 4)} + CAST(_rhp_i AS DOUBLE) * {double_sql(PI / 2)})"))
-    steps.append((
-        "_rhp_dy",
-        f"CASE WHEN {north} THEN _rhp_hy - {double_sql(PI / 2)}"
-        f" WHEN {south} THEN _rhp_hy + {double_sql(PI / 2)} ELSE 0.0 END",
-    ))
-    steps.append((
-        "_rhp_rx",
-        "CASE _rhp_j WHEN 0 THEN _rhp_dx WHEN 1 THEN -_rhp_dy WHEN 2 THEN -_rhp_dx ELSE _rhp_dy END",
-    ))
-    steps.append((
-        "_rhp_ry",
-        "CASE _rhp_j WHEN 0 THEN _rhp_dy WHEN 1 THEN _rhp_dx WHEN 2 THEN -_rhp_dy ELSE -_rhp_dx END",
-    ))
-    steps.append((
-        "_rhp_px",
-        f"CASE WHEN {north} THEN {double_sql(-3 * PI / 4 + ns * PI / 2)} + _rhp_rx"
-        f" WHEN {south} THEN {double_sql(-3 * PI / 4 + ss * PI / 2)} + _rhp_rx ELSE _rhp_hx END",
-    ))
-    steps.append((
-        "_rhp_py",
-        f"CASE WHEN {north} THEN {double_sql(PI / 2)} + _rhp_ry"
-        f" WHEN {south} THEN {double_sql(-PI / 2)} + _rhp_ry ELSE _rhp_hy END",
-    ))
-    steps += planar_suffix_steps(res, cfg, out)
-    return steps
+    return (sql_steps(projection.forward_steps(lon, lat, cfg))
+            + planar_suffix_steps(res, cfg, out))
 
 
 def planar_suffix_steps(res: int, cfg: RHEALPixConfig = DEFAULT_CONFIG,
                         out: str = "cellid") -> list[tuple[str, str]]:
     """The planar->cellid tail of encode_steps: given _rhp_px/_rhp_py
     (unfolded-cube planar RADIANS), derive face / lattice digits / the
-    cellid string.  Factored out (byte-identical emitted text) so planar
-    sources — lattice centers from the rasterize snap, meter coordinates
-    divided by the authalic radius — can encode without the lon/lat
-    front half (segment_cells oracle)."""
+    cellid string.  Factored out so planar sources — lattice centers from
+    the rasterize snap, meter coordinates divided by the authalic radius —
+    can encode without the lon/lat front half (segment_cells oracle)."""
     n = cfg.n_side
-    ns, ss = cfg.north_square, cfg.south_square
-    steps: list[tuple[str, str]] = []
-    # face: 0=N 1=O 2=P 3=Q 4=R 5=S  (radian planar units, base side pi/2)
-    s0 = PI / 2
-    n_lo, n_hi = -PI + ns * s0, -PI + (ns + 1) * s0
-    s_lo, s_hi = -PI + ss * s0, -PI + (ss + 1) * s0
-    steps.append((
-        "_rhp_face",
-        f"CASE WHEN _rhp_py >= {double_sql(-PI / 4)} AND _rhp_py <= {double_sql(PI / 4)}"
-        f" THEN 1 + CAST(least(greatest(floor((_rhp_px + {double_sql(PI)}) / {double_sql(s0)}), 0), 3) AS INT)"
-        f" WHEN _rhp_py > {double_sql(PI / 4)} AND _rhp_py <= {double_sql(3 * PI / 4)}"
-        f" AND _rhp_px >= {double_sql(n_lo)} AND _rhp_px <= {double_sql(n_hi)} THEN 0"
-        f" WHEN _rhp_py < {double_sql(-PI / 4)} AND _rhp_py >= {double_sql(-3 * PI / 4)}"
-        f" AND _rhp_px >= {double_sql(s_lo)} AND _rhp_px <= {double_sql(s_hi)} THEN 5"
-        f" ELSE -1 END",
-    ))
-    steps.append((
-        "_rhp_ulx",
-        f"CASE _rhp_face WHEN 0 THEN {double_sql(n_lo)} WHEN 1 THEN {double_sql(-PI)}"
-        f" WHEN 2 THEN {double_sql(-PI / 2)} WHEN 3 THEN 0.0 WHEN 4 THEN {double_sql(PI / 2)}"
-        f" ELSE {double_sql(s_lo)} END",
-    ))
-    steps.append((
-        "_rhp_uly",
-        f"CASE _rhp_face WHEN 0 THEN {double_sql(3 * PI / 4)} WHEN 5 THEN {double_sql(-PI / 4)}"
-        f" ELSE {double_sql(PI / 4)} END",
-    ))
-    n_cells = n**res
-    w = s0 / n_cells
-    steps.append((
-        "_rhp_col",
-        f"CAST(least(greatest(floor((_rhp_px - _rhp_ulx) / {double_sql(w)}), 0), {n_cells - 1}) AS BIGINT)",
-    ))
-    steps.append((
-        "_rhp_row",
-        f"CAST(least(greatest(floor((_rhp_uly - _rhp_py) / {double_sql(w)}), 0), {n_cells - 1}) AS BIGINT)",
-    ))
+    steps = sql_steps(projection.planar_suffix_steps(res, cfg))
     face_char = ("CASE _rhp_face WHEN 0 THEN 'N' WHEN 1 THEN 'O' WHEN 2 THEN 'P'"
                  " WHEN 3 THEN 'Q' WHEN 4 THEN 'R' ELSE 'S' END")
     digit_parts = []
@@ -181,8 +70,6 @@ def planar_suffix_steps(res: int, cfg: RHEALPixConfig = DEFAULT_CONFIG,
     steps.append((out, f"CASE WHEN _rhp_face >= 0 THEN {cellid} ELSE NULL END"))
     return steps
 
-
-from ..dggs.config import AUTHALIC_RADIUS
 
 #: extra derived columns available after the encode steps (planar meters and
 #: the planar centroid of the assigned cell) — shared by kNN / PIP oracles.
@@ -225,8 +112,11 @@ def spark_encode(df, lon: str, lat: str, res: int,
     Each output leaves through a one-column ``unpivot``, whose Expand node
     re-emits it as a new attribute: a filter, an inferred ``isnotnull`` or
     a DPP/runtime-filter lineage walk on it stops above the Expand instead
-    of copying the ~50k-node encoder projection (CLAUDE.md constraint 2),
-    and column pruning still drops an output no caller reads.  The other
+    of copying the encoder projection into a predicate, where every nested
+    step is inlined (CLAUDE.md constraint 2: the optimized plan holds
+    474-790 expression nodes at res 1-15, the fully inlined cellid
+    expression 28-335 MB of text), and column pruning still drops an
+    output no caller reads.  The other
     columns cross the Expand as aliases, so two reads of one encoded
     frame plan alike and share an exchange; a filter on them also stops
     there, so filter source columns before encoding."""
@@ -313,8 +203,7 @@ def duckdb_planar_encode_select(source_sql: str, pxm: str, pym: str,
     planar_suffix_steps tail (byte-identical digit text to the lon/lat
     path).  ``source_sql``: table name or parenthesized subquery."""
     inner = f"SELECT * FROM {source_sql}"
-    steps = ([("_rhp_px", f"{pxm} / {double_sql(AUTHALIC_RADIUS)}"),
-              ("_rhp_py", f"{pym} / {double_sql(AUTHALIC_RADIUS)}")]
+    steps = (sql_steps(projection.planar_meter_steps(pxm, pym))
              + planar_suffix_steps(res, cfg, out))
     for name, expr in steps:
         inner = f"SELECT *, {expr} AS {name} FROM ({inner})"

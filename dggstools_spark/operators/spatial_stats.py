@@ -89,8 +89,9 @@ def lattice_select_sql(source_sql: str, res: int,
     face, row, col)."""
     row_sql, col_sql = decode_rowcol_sql("cellid", res)
     # src MATERIALIZED: cellid is referenced ~2·res+1 times below — if the
-    # source contains the expression encoder, DuckDB would inline the
-    # ~50k-node tree into every digit reference (CLAUDE.md constraint 7)
+    # source contains the expression encoder, DuckDB would inline the whole
+    # encoder (fully inlined, 28-335 MB of SQL text at res 1-15) into every
+    # digit reference (CLAUDE.md constraint 7)
     return f"""
     WITH _src AS MATERIALIZED ({source_sql})
     SELECT cellid, {value_col} AS v,

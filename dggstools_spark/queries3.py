@@ -330,8 +330,9 @@ def q_cells_io(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_cells_io() -> str:
     enc = _oracle_docs_cells(IO_RES, [])
     # AS MATERIALIZED: a predicate on cellid would otherwise be pushed into
-    # the nested encode projections, inlining the ~50k-node cellid expression
-    # into the filter (CLAUDE.md constraint 7)
+    # the nested encode projections, inlining the whole cellid expression
+    # (fully inlined, 28-335 MB of SQL text at res 1-15) into the filter
+    # (CLAUDE.md constraint 7)
     return f"""
     WITH enc AS MATERIALIZED ({enc}),
     cells AS (SELECT cellid, count(*) AS n FROM enc

@@ -175,7 +175,8 @@ def _oracle_auid_groups() -> str:
     k = DEFAULT_CONFIG.n_side ** 2
     max_len = AG_RES + 1
     # MATERIALIZED: the collapse CTEs filter on length(cellid), which DuckDB
-    # would otherwise push into the ~50k-node encode projection (CLAUDE.md
+    # would otherwise push into the nested encode projections, inlining the
+    # whole cellid expression (28-335 MB of SQL text at res 1-15; CLAUDE.md
     # constraint 7)
     return f"""
     WITH s{max_len} AS MATERIALIZED (

@@ -1,4 +1,5 @@
-"""Janino de-compilation regression guard (TODO_r5 #3 / VERDICT r4 #3).
+"""Generated-code guards: janino de-compilation, the HotSpot JIT limit and
+the codegen cache.
 
 CLAUDE.md constraint 15: one extra flat expression can push a generated
 whole-stage method past janino's 64KB budget; Spark catches the
@@ -25,6 +26,12 @@ A NEGATIVE CONTROL proves the mechanism bites: the BNLJ-with-flat-sim
 shape that measurably blows the budget (the documented reason ivf_assign
 uses an interpreted HOF dot instead — SCALE.md round-4 grid) must RAISE
 under the strict conf.
+
+Constraint 16's cliff is silent too: a method in (8000, 65535] bytes
+compiles, and ``hugeMethodLimit`` runs its stage as volcano operators.
+The JIT guard reads the largest method of every whole-stage stage of the
+leaves nearest the cliff (``JIT_LEAVES``) and fails above 8000 B; a
+seeded over-limit projection is its negative control.
 """
 
 import contextlib
@@ -120,3 +127,92 @@ def test_codegen_cache_keeps_a_registry_round(spark, sf_dir):
     assert second == 0, (
         f"second pass recompiled {second} classes (first pass: {first})")
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 2882
+
+
+#: leaves whose largest generated method sits nearest HotSpot's 8000 B JIT
+#: limit (voronoi_territories, access_2sfca) and the encoder's smaller
+#: shapes; CODEGEN_AUDIT.json holds their sf0.1 audit rows
+JIT_LEAVES = ["voronoi_territories", "access_2sfca", "mean_center",
+              "cell_counts_expr"]
+#: HotSpot JIT-compiles no method over this many bytecode bytes (CLAUDE.md
+#: constraint 16); a stage past it runs as volcano operators
+JIT_LIMIT = 8000
+
+
+def _plan_nodes(plan):
+    """Every node of an executed physical plan: adaptive plans, query
+    stages, reused exchanges and subqueries included."""
+    yield plan
+    name = plan.getClass().getSimpleName()
+    kids = [plan.executedPlan()] if name == "AdaptiveSparkPlanExec" else []
+    if name.endswith("QueryStageExec"):
+        kids.append(plan.plan())
+    if name == "ReusedExchangeExec":
+        kids.append(plan.child())
+    for seq in (plan.children(), plan.subqueries()):
+        kids += [seq.apply(i) for i in range(seq.size())]
+    for k in kids:
+        yield from _plan_nodes(k)
+
+
+def _stage_method_bytes(spark, df) -> list[int]:
+    """Run ``df``, then the largest generated method (bytecode bytes) of
+    each whole-stage-codegen stage of its final plan.  The stage's source
+    goes through ``CodeGenerator.compile``, which returns the byte-code
+    stats of a class already in the codegen cache too (constraint 24), so
+    the sizes do not depend on what ran before."""
+    df.toPandas()
+    gen = (spark.sparkContext._jvm.org.apache.spark.sql.catalyst.expressions
+           .codegen.CodeGenerator)
+    return [gen.compile(n.doCodeGen()._2())._2().maxMethodCodeSize()
+            for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "WholeStageCodegenExec"]
+
+
+def _assert_jit_sized(sizes: list[int], what: str) -> None:
+    assert sizes, f"{what}: no whole-stage-codegen stage"
+    assert max(sizes) <= JIT_LIMIT, (
+        f"{what}: a generated method of {max(sizes)} B > {JIT_LIMIT} B; the "
+        f"stage silently runs as volcano operators (constraint 16)")
+
+
+@pytest.fixture(scope="module")
+def jit_leaf_bytes(spark, sf_dir):
+    from dggstools_spark.queries import QUERIES
+
+    return {q: _stage_method_bytes(spark, QUERIES[q](spark, sf_dir))
+            for q in JIT_LEAVES}
+
+
+def test_generated_methods_fit_the_jit_limit(jit_leaf_bytes):
+    """Each stage of the guarded leaves stays JIT-compiled: its largest
+    generated method is at most 8000 bytecode bytes."""
+    for q, sizes in jit_leaf_bytes.items():
+        _assert_jit_sized(sizes, q)
+
+
+def test_generated_method_sizes_match_the_audit(jit_leaf_bytes):
+    """Generated code does not depend on the data scale: the largest stage
+    method at sf0.001 equals the sf0.1 row of scripts/codegen_audit.py in
+    CODEGEN_AUDIT.json (re-run the audit on a change that moves it)."""
+    import json
+    from pathlib import Path
+
+    audit = json.loads((Path(__file__).resolve().parents[1]
+                        / "CODEGEN_AUDIT.json").read_text())
+    assert ({q: max(s) for q, s in jit_leaf_bytes.items()}
+            == {q: audit[q]["max_bytes"] for q in JIT_LEAVES})
+
+
+def test_negative_control_over_limit_projection_fails(spark):
+    """A seeded projection of 100 flat terms generates one method far over
+    the limit (14467 B measured); the check must fail on it."""
+    from functools import reduce
+    from operator import add
+
+    df = spark.range(4).select(reduce(
+        add, [F.sqrt(F.col("id") + k) * (k + 0.5) for k in range(100)]).alias("v"))
+    sizes = _stage_method_bytes(spark, df)
+    assert max(sizes) > JIT_LIMIT
+    with pytest.raises(AssertionError, match="volcano"):
+        _assert_jit_sized(sizes, "seeded projection")

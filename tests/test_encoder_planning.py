@@ -1,6 +1,8 @@
 """Planning a query over the expression encoder's output stays fast.
 
-The encoder is a ~50k-node projection.  Over a file source, a join on the
+The encoder's optimized plan holds 474-790 expression nodes at res 1-15,
+but copied into a predicate every nested step is inlined (28-335 MB of
+text for the cellid expression).  Over a file source, a join on the
 encoded ``cellid`` used to hang the optimizer (constraint inference pushed
 ``isnotnull(cellid)`` into the encoder tree, then dynamic partition pruning
 and the runtime bloom filter walked it) or exit the JVM, and a filter on

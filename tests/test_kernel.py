@@ -92,6 +92,34 @@ class TestProjection:
         assert counts.min() > 700 and counts.max() < 1200
 
 
+@pytest.mark.skipif(np.finfo(np.longdouble).eps > 1e-18,
+                    reason="needs an extended-precision long double reference")
+def test_sinb_polynomial_within_5e16_of_long_double():
+    """The frozen SINB_COEFFS, evaluated in float64 by the shared steps
+    (Horner in lat**2, then the [-1, 1] clamp), stay within 5e-16 of
+    sin(authalic latitude) = q(sin phi) / q_p computed in long double, on
+    a dense latitude grid, its exact integers and the poles."""
+    from dggstools_spark.dggs.expr import evaluate
+
+    ld = np.longdouble
+    pi = ld("3.14159265358979323846264338327950288")
+    f = 1 / ld("298.257222101")
+    e2 = 2 * f - f * f
+    e = np.sqrt(e2)
+
+    def q(s):
+        return (1 - e2) * (s / (1 - e2 * s * s)
+                           - 1 / (2 * e) * np.log((1 - e * s) / (1 + e * s)))
+
+    lat = np.concatenate([np.linspace(-90.0, 90.0, 1_000_001),
+                          np.arange(-90.0, 91.0),
+                          np.random.default_rng(5).uniform(-90, 90, 200_000)])
+    want = q(np.sin(lat.astype(ld) * pi / 180)) / q(ld(1))
+    got = evaluate(projection.forward_steps("lon", "lat", CFG3),
+                   {"lon": np.zeros_like(lat), "lat": lat})["_rhp_sinb"]
+    assert np.abs(got.astype(ld) - want).max() <= 5e-16
+
+
 class TestCellEncoding:
     def test_origin_is_Q3(self):
         # reference rhpxutils.py:168-170: planar (0,0) falls on the Q3 cell

@@ -12,7 +12,7 @@ from dggstools_spark.registry import REGISTERED, register
 # sha256 of "\n".join(QUERIES)
 ORDER_SHA256 = "417f63df6a9bd1b9d0eccdd9f398ef4383608084fb6c33e16d84343a85310c62"
 # sha256 over name + "\0" + ORACLES[name] + "\0" for every name in order
-ORACLES_SHA256 = "a84829d4f0883260e82969c6ff2b49d549520cb29a963e01d7c10b8d51678a20"
+ORACLES_SHA256 = "12ba0f5f6e4d7ef2ad984b9d72d4c8315f62000172d5b379571c7b87d932c6e4"
 
 
 def test_registry_shape():

@@ -17,6 +17,10 @@ MAX_DEFAULTED_PARAMS = 473
 MAX_LOCAL_CHECKPOINTS = 63
 #: ``os.environ`` reads
 MAX_ENV_READS = 2
+#: ``{x!r}`` interpolations in f-strings (SQL text) outside ``double_sql``
+#: and ``raise`` messages: a repr'd float in SQL is a DECIMAL literal that
+#: DuckDB can misround (CLAUDE.md constraint 8); write it with double_sql
+MAX_BARE_FLOAT_INTERPOLATIONS = 39
 
 
 def _counts() -> "tuple[int, int, int]":
@@ -38,6 +42,21 @@ def _counts() -> "tuple[int, int, int]":
     return defaults, checkpoints, env
 
 
+def _bare_float_interpolations() -> int:
+    n = 0
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        skip = {id(x) for node in ast.walk(tree)
+                if isinstance(node, ast.Raise)
+                or (isinstance(node, ast.FunctionDef) and node.name == "double_sql")
+                for x in ast.walk(node)}
+        n += sum(isinstance(v, ast.FormattedValue) and v.conversion == ord("r")
+                 for node in ast.walk(tree)
+                 if isinstance(node, ast.JoinedStr) and id(node) not in skip
+                 for v in node.values)
+    return n
+
+
 def test_package_does_not_grow_options_cuts_or_env_reads():
     defaults, checkpoints, env = _counts()
     assert defaults <= MAX_DEFAULTED_PARAMS, (
@@ -52,3 +71,10 @@ def test_counter_sees_the_package():
     # guards the ratchet against passing vacuously on an empty walk
     defaults, checkpoints, env = _counts()
     assert defaults > 0 and checkpoints > 0 and env > 0
+
+
+def test_sql_does_not_grow_bare_float_interpolations():
+    n = _bare_float_interpolations()
+    assert 0 < n <= MAX_BARE_FLOAT_INTERPOLATIONS, (
+        f"{n} {{x!r}} interpolations in SQL f-strings > pin "
+        f"{MAX_BARE_FLOAT_INTERPOLATIONS}; use encode_sql.double_sql")

@@ -7,8 +7,8 @@
    per-row invariant).
 3. centroid UDF roundtrip through the planar UDFs, and its decode of a
    batch mixing resolutions and nulls.
-4. the expression encoder gives the same cells and bit-equal planar
-   outputs on Spark and on DuckDB, on points at cell edges, res 0-15.
+4. the kernel, the Spark expression encoder and DuckDB give the same cells
+   and bit-equal planar outputs on points at cell edges, res 0-15.
 """
 
 import pytest
@@ -156,38 +156,47 @@ def _bits(col) -> "np.ndarray":
 
 
 def test_spark_and_duckdb_encoders_agree_on_cell_edges(spark):
-    """The one encoder text gives the same cellids, and bit-equal planar
-    outputs, on Spark and on DuckDB at every resolution, on points exactly
-    on and one ulp either side of cell edges.
-
-    Spark's sin and ln (Java) and DuckDB's (C library) differ in the last
-    bit on some inputs, which no SQL text can change.  So the check runs
-    on the points where both engines agree on the transcendental prefix
-    of the steps (longitude in radians, sin(lat), sin of the authalic
-    latitude), and at least 95 % of the points must be such points."""
+    """The one cell-assignment formula gives the same cells on all three
+    engines — the numpy kernel (cellid and packed key), Spark (plain and
+    ``with_planar``) and DuckDB — at every resolution, on points exactly
+    on and one ulp either side of cell edges (this module's edge set and
+    the exact-lattice fixture of test_adversarial_encode), with no point
+    excluded: the steps hold no math-library call, so ``_rhp_sinb`` and
+    the planar outputs are bit-equal too."""
     import duckdb
     import numpy as np
+    import pandas as pd
 
-    pdf = _boundary_points()
+    from dggstools_spark.dggs import cells, projection
+    from dggstools_spark.dggs.config import DEFAULT_CONFIG
+    from dggstools_spark.dggs.expr import evaluate
+    from tests.test_adversarial_encode import _lattice_points
+
+    edges = _boundary_points()
+    llon, llat = _lattice_points()
+    pdf = pd.DataFrame({"id": np.arange(len(edges) + len(llon)),
+                        "lon": np.concatenate([edges["lon"], llon]),
+                        "lat": np.concatenate([edges["lat"], llat])})
+    lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
     pts = spark.createDataFrame(pdf).cache()
     con = duckdb.connect()
     con.register("pts", pdf)
-    prefix = [s for s in encode_sql.encode_steps("lon", "lat", 0)
-              if s[0] in ("_rhp_lam", "_rhp_s", "_rhp_sinb")]
-    names = [n for n, _ in prefix]
+
+    front = [s for s in encode_sql.encode_steps("lon", "lat", 0)
+             if s[0] in ("_rhp_lam", "_rhp_z", "_rhp_sinb")]
     inner, sdf = "SELECT * FROM pts", pts
-    for name, expr in prefix:
+    for name, expr in front:
         inner = f"SELECT *, {expr} AS {name} FROM ({inner})"
         sdf = sdf.withColumn(name, F.expr(expr))
-    duck_pre = con.execute(
-        f"SELECT id, {', '.join(names)} FROM ({inner}) ORDER BY id").fetchdf()
-    spark_pre = sdf.select("id", *names).toPandas().sort_values("id")
-    same = np.logical_and.reduce(
-        [_bits(duck_pre[n]) == _bits(spark_pre[n]) for n in names])
-    assert same.mean() >= 0.95, same.mean()
-    ids = set(pdf["id"][same])
+    duck_sinb = con.execute(f"SELECT _rhp_sinb FROM ({inner}) ORDER BY id").fetchdf()
+    spark_sinb = sdf.select("id", "_rhp_sinb").toPandas().sort_values("id")
+    kernel_sinb = evaluate(projection.forward_steps("lon", "lat", DEFAULT_CONFIG),
+                           {"lon": lon, "lat": lat})["_rhp_sinb"]
+    assert np.array_equal(_bits(duck_sinb["_rhp_sinb"]), kernel_sinb.view(np.int64))
+    assert np.array_equal(_bits(spark_sinb["_rhp_sinb"]), kernel_sinb.view(np.int64))
 
     planar = ["px_m", "py_m", "cx_m", "cy_m"]
+    kx, ky = projection.forward(lon, lat)
     for res in range(16):
         duck = con.execute(encode_sql.duckdb_encode_select(
             "pts", "lon", "lat", res, ["id"], with_planar=True)).fetchdf()
@@ -195,13 +204,18 @@ def test_spark_and_duckdb_encoders_agree_on_cell_edges(spark):
                 .select("id", "cellid", *planar).toPandas())
         plain = (encode_sql.spark_encode(pts, "lon", "lat", res)
                  .select("id", "cellid").toPandas())
-        duck, full, plain = (d[d["id"].isin(ids)].sort_values("id")
-                             .reset_index(drop=True)
+        duck, full, plain = (d.sort_values("id").reset_index(drop=True)
                              for d in (duck, full, plain))
-        assert len(duck) == len(full) == len(plain) == len(ids)
-        for got in (full, plain):
-            bad = (got["cellid"] != duck["cellid"]).to_numpy()
-            assert not bad.any(), (res, duck[bad].head(3).to_dict("records"))
+        assert len(duck) == len(full) == len(plain) == len(pdf)
+        kernel = pd.Series(cells.lonlat_to_cellid(lon, lat, res))
+        keyed = pd.Series(cells.cellkey_to_cellid(
+            cells.lonlat_to_cellkey(lon, lat, res), res))
+        for got in (full["cellid"], plain["cellid"], kernel, keyed):
+            bad = (got != duck["cellid"]).to_numpy()
+            assert not bad.any(), (res, pdf[bad].head(3).to_dict("records"),
+                                   got[bad].head(3).tolist())
         for c in planar:
             assert np.array_equal(_bits(full[c]), _bits(duck[c])), (res, c)
+        assert np.array_equal(_bits(duck["px_m"]), kx.view(np.int64)), res
+        assert np.array_equal(_bits(duck["py_m"]), ky.view(np.int64)), res
     pts.unpersist()
